@@ -121,22 +121,63 @@ object Extractor {
 
   /** Bounded gunzip: output capped at [[maxPayloadBytes]] so a tiny
     * decompression bomb cannot expand past the same limit raw payloads
-    * already honor; truncated/corrupt streams throw (contained upstream). */
-  private def gunzip(bytes: Array[Byte]): Array[Byte] = {
+    * already honor; truncated/corrupt streams throw (contained upstream).
+    * Inflates into one array sized from the gzip trailer's ISIZE (the last
+    * member's length mod 2^32), trusted only up to [[gunzipHintRatio]] times
+    * the compressed length, and doubled while the output outgrows it. */
+  private[graft] def gunzip(bytes: Array[Byte]): Array[Byte] = {
+    val n = bytes.length
+    val isize =
+      if (n < 18) 0L
+      else (bytes(n - 4) & 0xffL) | (bytes(n - 3) & 0xffL) << 8 |
+        (bytes(n - 2) & 0xffL) << 16 | (bytes(n - 1) & 0xffL) << 24
     val in = new java.util.zip.GZIPInputStream(
       new java.io.ByteArrayInputStream(bytes))
     try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n > 0) {
-        out.write(buf, 0, n)
-        require(out.size <= maxPayloadBytes,
-          s"gzip payload expands past cap $maxPayloadBytes")
-        n = in.read(buf)
+      var out = new Array[Byte](
+        math.max(64L, math.min(isize, math.min(gunzipHintRatio * n, maxPayloadBytes.toLong))).toInt)
+      var len = 0
+      var done = false
+      while (!done) {
+        if (len < out.length) {
+          val r = in.read(out, len, out.length - len)
+          if (r < 0) done = true else len += r
+        } else {
+          // full: one more byte means the hint was short (or the cap is hit)
+          val b = in.read()
+          if (b < 0) done = true
+          else {
+            require(len < maxPayloadBytes, s"gzip payload expands past cap $maxPayloadBytes")
+            out = java.util.Arrays.copyOf(out, math.min(2L * len, maxPayloadBytes.toLong).toInt)
+            out(len) = b.toByte
+            len += 1
+          }
+        }
       }
-      out.toByteArray
+      if (len == out.length) out else java.util.Arrays.copyOf(out, len)
     } finally in.close()
+  }
+
+  /** Largest expansion ratio the ISIZE hint is trusted for when sizing the
+    * first output array; larger outputs grow geometrically instead. */
+  private val gunzipHintRatio = 32L
+
+  /** `s.getBytes(UTF_8).length` without encoding: a lone surrogate
+    * counts 1 byte, the `?` that `getBytes` writes for it. */
+  private[graft] def utf8Length(s: String): Long = {
+    var bytes = 0L
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c < 0x80) bytes += 1
+      else if (c < 0x800) bytes += 2
+      else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
+               Character.isLowSurrogate(s.charAt(i + 1))) { bytes += 4; i += 1 }
+      else if (Character.isSurrogate(c)) bytes += 1
+      else bytes += 3
+      i += 1
+    }
+    bytes
   }
 
   /** Total variant: any parse error -> "" (the scalar-function contract);
@@ -168,7 +209,7 @@ object Extractor {
         val (fmtRefined, text) = extractByFormat(fmt, bytes)
         ExtractionResult(page.url, success = true, text = text, format_from = fmtRefined,
           original_size = bytes.length.toLong,
-          new_size = text.getBytes(StandardCharsets.UTF_8).length.toLong,
+          new_size = utf8Length(text),
           error = "", partition_id = partitionId)
       }
     }

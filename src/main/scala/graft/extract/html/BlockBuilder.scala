@@ -14,8 +14,11 @@ final case class TextBlock(text: String, numWords: Int, linkedWords: Int) {
   * anchor depth for link density.
   *
   * This is the "lightweight DOM" of the north_star — we never materialize a
-  * tree; a stack of open ignored elements plus a current-block buffer is
-  * sufficient for block segmentation.
+  * tree; a stack of open ignored elements plus the current block is
+  * sufficient for block segmentation. Each text token's source range is
+  * decoded ([[Entities.decode]]) and whitespace-normalized straight into the
+  * current block's one reused builder, so a page's text is copied once on its
+  * way into the blocks.
   */
 object BlockBuilder {
 
@@ -45,50 +48,17 @@ object BlockBuilder {
     val out = Vector.newBuilder[TextBlock]
     val ignoreStack = mutable.Stack[String]()
     var anchorDepth = 0
-    val chars = new StringBuilder
-    val flags = mutable.ArrayBuffer[Boolean]() // per-char: inside an anchor?
-
-    def flush(): Unit = {
-      if (chars.nonEmpty) {
-        // Whitespace normalization: any run of whitespace (incl. NBSP) -> one
-        // space; leading/trailing trimmed. Word linked iff any char linked.
-        val sb = new java.lang.StringBuilder(chars.length)
-        var words = 0; var linked = 0
-        var inWord = false; var wordLinked = false
-        var pendingSpace = false
-        var k = 0
-        while (k < chars.length) {
-          val c = chars.charAt(k)
-          val ws = Character.isWhitespace(c) || c == '\u00a0' || c == '\u200b' ||
-            c == '\u00ad' || c == '\ufeff' || c == '\u2009' || c == '\u2002' || c == '\u2003'
-          if (ws) {
-            if (inWord) { words += 1; if (wordLinked) linked += 1 }
-            inWord = false; wordLinked = false
-            pendingSpace = sb.length() > 0
-          } else {
-            if (pendingSpace) { sb.append(' '); pendingSpace = false }
-            if (!inWord) { inWord = true; wordLinked = false }
-            if (flags(k)) wordLinked = true
-            sb.append(c)
-          }
-          k += 1
-        }
-        if (inWord) { words += 1; if (wordLinked) linked += 1 }
-        val text = sb.toString
-        if (text.nonEmpty) out += TextBlock(text, words, linked)
-      }
-      chars.clear(); flags.clear()
-    }
+    val block = new Block
 
     while (toks.hasNext) {
       toks.next() match {
-        case Text(t, raw) =>
+        case Text(src, start, end, raw) =>
           if (ignoreStack.isEmpty && !raw) {
-            var k = 0
-            while (k < t.length) { chars.append(t.charAt(k)); flags += (anchorDepth > 0); k += 1 }
+            block.linked = anchorDepth > 0
+            Entities.decode(src, start, end, block)
           }
-        case StartTag(name, _, selfClosing) =>
-          if (blockTags.contains(name) || ignoredTags.contains(name)) flush()
+        case StartTag(name, selfClosing) =>
+          if (blockTags.contains(name) || ignoredTags.contains(name)) block.flush(out)
           if (ignoredTags.contains(name) && !selfClosing && !voidTags.contains(name))
             ignoreStack.push(name)
           if (name == "a" && !selfClosing && ignoreStack.isEmpty) anchorDepth += 1
@@ -96,12 +66,55 @@ object BlockBuilder {
           if (ignoreStack.nonEmpty && ignoreStack.contains(name)) {
             while (ignoreStack.nonEmpty && ignoreStack.pop() != name) ()
           } else if (ignoreStack.isEmpty) {
-            if (blockTags.contains(name) || ignoredTags.contains(name)) flush()
+            if (blockTags.contains(name) || ignoredTags.contains(name)) block.flush(out)
             if (name == "a") anchorDepth = math.max(0, anchorDepth - 1)
           }
       }
     }
-    flush()
+    block.flush(out)
     out.result()
+  }
+
+  /** The block being built, normalized as its characters arrive: any run of
+    * whitespace (incl. NBSP and the zero-width/typographic spaces) becomes
+    * one space, leading/trailing whitespace is dropped, and a word counts
+    * as linked iff any of its chars arrived while [[linked]] was set. One
+    * instance serves every block of a page. */
+  private final class Block extends Entities.Sink {
+    /** Whether the chars now being put sit inside an anchor. */
+    var linked = false
+    private val sb = new java.lang.StringBuilder(256)
+    private var words = 0
+    private var linkedWords = 0
+    private var inWord = false
+    private var wordLinked = false
+    private var pendingSpace = false
+
+    def put(c: Char): Unit = {
+      val ws = Character.isWhitespace(c) || c == '\u00a0' || c == '\u200b' ||
+        c == '\u00ad' || c == '\ufeff' || c == '\u2009' || c == '\u2002' || c == '\u2003'
+      if (ws) {
+        endWord()
+        pendingSpace = sb.length > 0
+      } else {
+        if (pendingSpace) { sb.append(' '); pendingSpace = false }
+        inWord = true
+        if (linked) wordLinked = true
+        sb.append(c)
+      }
+    }
+
+    private def endWord(): Unit = {
+      if (inWord) { words += 1; if (wordLinked) linkedWords += 1 }
+      inWord = false; wordLinked = false
+    }
+
+    /** Ends the block, appending it to `out` if it has visible text. */
+    def flush(out: mutable.Growable[TextBlock]): Unit = {
+      endWord()
+      if (sb.length > 0) out += TextBlock(sb.toString, words, linkedWords)
+      sb.setLength(0)
+      words = 0; linkedWords = 0; pendingSpace = false
+    }
   }
 }

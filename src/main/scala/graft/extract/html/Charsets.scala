@@ -13,55 +13,90 @@ import java.nio.ByteBuffer
   * A meta that lies (declares a charset under which the bytes don't decode)
   * falls through to steps 3-4. Mirrors is_binary probing by decode-attempt
   * in the reference (/root/reference/src/core/base_converter.py:80-87).
+  *
+  * UTF-8, US-ASCII and ISO-8859-1 build their `String` straight from the
+  * bytes, with validity decided without exceptions; other charsets go
+  * through a strict `CharsetDecoder`.
   */
 object Charsets {
 
   def decode(bytes: Array[Byte]): String = {
     val n = bytes.length
-    if (n >= 3 && bytes(0) == 0xef.toByte && bytes(1) == 0xbb.toByte && bytes(2) == 0xbf.toByte)
-      return strict(bytes, 3, StandardCharsets.UTF_8)
-        .getOrElse(new String(bytes, 3, n - 3, StandardCharsets.ISO_8859_1))
+    if (n >= 3 && bytes(0) == 0xef.toByte && bytes(1) == 0xbb.toByte && bytes(2) == 0xbf.toByte) {
+      val s = strict(bytes, 3, StandardCharsets.UTF_8)
+      return if (s != null) s else new String(bytes, 3, n - 3, StandardCharsets.ISO_8859_1)
+    }
     if (n >= 2 && bytes(0) == 0xff.toByte && bytes(1) == 0xfe.toByte)
       return new String(bytes, 2, n - 2, StandardCharsets.UTF_16LE)
     if (n >= 2 && bytes(0) == 0xfe.toByte && bytes(1) == 0xff.toByte)
       return new String(bytes, 2, n - 2, StandardCharsets.UTF_16BE)
 
-    sniffMetaCharset(bytes).foreach { cs =>
+    val declared = sniffMetaCharset(bytes) match {
       // WHATWG rule: a meta-declared UTF-16 is treated as UTF-8 (a BOM-less
       // doc whose prelude is ASCII-readable cannot actually be UTF-16).
-      val effective =
-        if (cs.name.toLowerCase.startsWith("utf-16")) StandardCharsets.UTF_8 else cs
-      strict(bytes, 0, effective) match {
-        case Some(s) => return s
-        case None => // declared charset lies; fall through
-      }
+      case Some(cs) if cs.name.regionMatches(true, 0, "utf-16", 0, 6) =>
+        strict(bytes, 0, StandardCharsets.UTF_8)
+      case Some(cs) => strict(bytes, 0, cs)
+      case None => null
     }
-    strict(bytes, 0, StandardCharsets.UTF_8)
-      .getOrElse(new String(bytes, StandardCharsets.ISO_8859_1))
+    if (declared != null) declared
+    else {
+      val s = strict(bytes, 0, StandardCharsets.UTF_8)
+      if (s != null) s else new String(bytes, StandardCharsets.ISO_8859_1)
+    }
   }
 
-  /** Scan the ASCII-compatible prelude for `charset=...`. */
+  private val charsetEq: Array[Byte] = "charset=".getBytes(StandardCharsets.US_ASCII)
+
+  /** Scan the ASCII-compatible prelude, in place, for `charset=...`
+    * (ASCII case-insensitive). */
   def sniffMetaCharset(bytes: Array[Byte]): Option[Charset] = {
     val limit = math.min(bytes.length, 1024)
-    val head = new String(bytes, 0, limit, StandardCharsets.ISO_8859_1).toLowerCase
-    val k = head.indexOf("charset=")
-    if (k < 0) return None
-    var i = k + "charset=".length
-    while (i < head.length && (head.charAt(i) == '"' || head.charAt(i) == '\'' || head.charAt(i) == ' ')) i += 1
-    val start = i
-    while (i < head.length && !"\"' ;/>".contains(head.charAt(i))) i += 1
-    val name = head.substring(start, i).trim
-    if (name.isEmpty) None
+    var k = 0
+    var found = false
+    while (!found && k <= limit - charsetEq.length) {
+      var p = 0
+      while (p < charsetEq.length && lowerAscii(bytes(k + p)) == charsetEq(p)) p += 1
+      if (p == charsetEq.length) found = true else k += 1
+    }
+    if (!found) return None
+    var i = k + charsetEq.length
+    while (i < limit && (bytes(i) == '"' || bytes(i) == '\'' || bytes(i) == ' ')) i += 1
+    var start = i
+    while (i < limit && "\"' ;/>".indexOf(bytes(i)) < 0) i += 1
+    while (start < i && (bytes(start) & 0xff) <= ' ') start += 1
+    while (i > start && (bytes(i - 1) & 0xff) <= ' ') i -= 1
+    if (i == start) None
     else
-      try Some(Charset.forName(name))
+      try Some(Charset.forName(new String(bytes, start, i - start, StandardCharsets.ISO_8859_1)))
       catch { case _: Exception => None }
   }
 
-  private def strict(bytes: Array[Byte], offset: Int, cs: Charset): Option[String] = {
+  private def lowerAscii(b: Byte): Byte =
+    if (b >= 'A' && b <= 'Z') (b + ('a' - 'A')).toByte else b
+
+  /** `bytes[offset..]` decoded under `cs`, or null when they are not valid
+    * in it. */
+  private def strict(bytes: Array[Byte], offset: Int, cs: Charset): String = {
+    val len = bytes.length - offset
+    if (cs == StandardCharsets.UTF_8) {
+      // Malformed input always decodes to at least one U+FFFD, so a result
+      // without one is the strict decoding; with one, it may be real text.
+      val s = new String(bytes, offset, len, StandardCharsets.UTF_8)
+      if (s.indexOf('\ufffd') < 0) s else strictDecoder(bytes, offset, cs)
+    } else if (cs == StandardCharsets.ISO_8859_1) new String(bytes, offset, len, cs)
+    else if (cs == StandardCharsets.US_ASCII) {
+      var p = offset
+      while (p < bytes.length && bytes(p) >= 0) p += 1
+      if (p == bytes.length) new String(bytes, offset, len, cs) else null
+    } else strictDecoder(bytes, offset, cs)
+  }
+
+  private def strictDecoder(bytes: Array[Byte], offset: Int, cs: Charset): String = {
     val dec: CharsetDecoder = cs.newDecoder()
       .onMalformedInput(CodingErrorAction.REPORT)
       .onUnmappableCharacter(CodingErrorAction.REPORT)
-    try Some(dec.decode(ByteBuffer.wrap(bytes, offset, bytes.length - offset)).toString)
-    catch { case _: java.nio.charset.CharacterCodingException => None }
+    try dec.decode(ByteBuffer.wrap(bytes, offset, bytes.length - offset)).toString
+    catch { case _: java.nio.charset.CharacterCodingException => null }
   }
 }

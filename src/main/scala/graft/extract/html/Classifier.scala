@@ -31,24 +31,45 @@ object Classifier {
     }
   }
 
-  /** Classify each block; returns the indices flagged as content. */
-  def contentIndices(blocks: IndexedSeq[TextBlock]): IndexedSeq[Int] = {
+  /** Final text assembly: content blocks joined by '\n', appended into
+    * one builder sized to fit; a lone content block is returned as is. If
+    * nothing is content, the longest block with acceptable link density
+    * (the earliest among equals), or "" when there is none. */
+  def extractText(blocks: IndexedSeq[TextBlock]): String = {
     val n = blocks.length
-    val picked = (0 until n).filter { i =>
-      val prev = if (i > 0) blocks(i - 1) else Empty
-      val next = if (i + 1 < n) blocks(i + 1) else Empty
-      isContent(prev, blocks(i), next)
+    def content(i: Int): Boolean =
+      isContent(if (i > 0) blocks(i - 1) else Empty, blocks(i), if (i + 1 < n) blocks(i + 1) else Empty)
+    var first = -1; var count = 0; var chars = 0
+    var i = 0
+    while (i < n) {
+      if (content(i)) {
+        if (first < 0) first = i
+        count += 1; chars += blocks(i).text.length
+      }
+      i += 1
     }
-    if (picked.nonEmpty) picked
-    else {
-      // Fallback: longest block with acceptable link density.
-      val cands = (0 until n).filter(i => blocks(i).numWords > 0 && blocks(i).linkDensity <= 0.333333)
-      if (cands.isEmpty) IndexedSeq.empty
-      else IndexedSeq(cands.maxBy(i => (blocks(i).numWords, -i)))
+    if (count == 1) blocks(first).text
+    else if (count > 1) {
+      val sb = new java.lang.StringBuilder(chars + count - 1)
+      i = first
+      while (i < n) {
+        if (content(i)) {
+          if (i > first) sb.append('\n')
+          sb.append(blocks(i).text)
+        }
+        i += 1
+      }
+      sb.toString
+    } else {
+      var best = -1
+      i = 0
+      while (i < n) {
+        val b = blocks(i)
+        if (b.numWords > 0 && b.linkDensity <= 0.333333 &&
+            (best < 0 || b.numWords > blocks(best).numWords)) best = i
+        i += 1
+      }
+      if (best < 0) "" else blocks(best).text
     }
   }
-
-  /** Final text assembly: content blocks joined by '\n'. */
-  def extractText(blocks: IndexedSeq[TextBlock]): String =
-    contentIndices(blocks).map(blocks(_).text).mkString("\n")
 }

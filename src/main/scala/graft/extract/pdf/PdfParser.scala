@@ -97,17 +97,18 @@ object PdfParser {
 
   private def inflate(data: Array[Byte]): Array[Byte] = {
     val inf = new Inflater()
-    inf.setInput(data)
-    val out = new java.io.ByteArrayOutputStream(data.length * 4 + 64)
-    val buf = new Array[Byte](4096)
-    while (!inf.finished()) {
-      val n = inf.inflate(buf)
-      if (n == 0 && (inf.needsInput() || inf.needsDictionary()))
-        throw new java.util.zip.DataFormatException("truncated deflate stream")
-      out.write(buf, 0, n)
-    }
-    inf.end()
-    out.toByteArray
+    try {
+      inf.setInput(data)
+      val out = new java.io.ByteArrayOutputStream(data.length * 4 + 64)
+      val buf = new Array[Byte](4096)
+      while (!inf.finished()) {
+        val n = inf.inflate(buf)
+        if (n == 0 && (inf.needsInput() || inf.needsDictionary()))
+          throw new java.util.zip.DataFormatException("truncated deflate stream")
+        out.write(buf, 0, n)
+      }
+      out.toByteArray
+    } finally inf.end()
   }
 
   // ---------- content-stream interpreter ----------

@@ -82,6 +82,37 @@ object KernelProperties extends Properties("kernels") {
       Charsets.decode(bytes) != null
     }
 
+  property("charset decode equals the strict-decoder reference on mixed valid/malformed UTF-8 under any meta") = {
+    val piece = Gen.oneOf(
+      Gen.asciiPrintableStr.map(_.getBytes(StandardCharsets.UTF_8)),
+      Gen.choose(0, 0x10ffff).filter(Character.isValidCodePoint)
+        .map(cp => new String(Character.toChars(cp)).getBytes(StandardCharsets.UTF_8)),
+      Gen.const("\ufffd".getBytes(StandardCharsets.UTF_8)),
+      Gen.containerOfN[Array, Byte](3, Gen.choose(Byte.MinValue, Byte.MaxValue)))
+    val meta = Gen.oneOf("", "<meta charset=utf-8>", "<meta charset=us-ascii>",
+      "<meta charset=\"iso-8859-1\">", "<meta charset=windows-1252>", "<meta charset=utf-16>",
+      "<meta charset=shift_jis>", "<meta charset=nope>")
+    val payload = for {
+      bom <- Gen.oneOf(Array.emptyByteArray, Array(0xef, 0xbb, 0xbf).map(_.toByte))
+      m <- meta
+      body <- Gen.listOf(piece)
+    } yield bom ++ m.getBytes(StandardCharsets.US_ASCII) ++ body.flatten
+    forAll(payload)(bytes => Charsets.decode(bytes) == HtmlPathReference.decode(bytes))
+  }
+
+  property("utf8Length equals getBytes(UTF_8).length, lone surrogates included") = {
+    // code units as Ints, so a falsifying case prints without encoding errors
+    val unit = Gen.frequency(
+      4 -> Gen.choose(0, 0x7f),
+      2 -> Gen.choose(0, 0xffff),
+      1 -> Gen.choose(0xd800, 0xdbff),
+      1 -> Gen.choose(0xdc00, 0xdfff))
+    forAll(Gen.listOf(unit)) { units =>
+      val s = units.map(_.toChar).mkString
+      Extractor.utf8Length(s) == s.getBytes(StandardCharsets.UTF_8).length
+    }
+  }
+
   property("manifest bucket is in range and platform-stable") =
     forAll(Gen.asciiPrintableStr, Gen.chooseNum(1, 512)) { (url, n) =>
       val b = ResumableRunner.bucketOf(url, n)
