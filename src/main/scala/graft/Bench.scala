@@ -1,16 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
 
 import graft.fixtures.Corpus
-import graft.pipeline.ExtractionPipeline
 
 /** Benchmark main (driver contract: ONE JSON line on stdout).
   *
   * Sections:
   *  1. per-query wall time for every SparkEntry query at local[cpus]
-  *     (cpus = SPARK_GRAFT_CPUS, default 32);
+  *     (cpus = SPARK_GRAFT_CPUS, default every available processor);
   *  2. the north-rule scaling protocol — the extraction pipeline run on the
   *     SAME amplified corpus, with the SAME partition count, at local[N]
   *     and local[4N] (the sandbox stand-in for N vs 4N executors),
@@ -24,8 +24,7 @@ import graft.pipeline.ExtractionPipeline
   *     (`scaling_pairs`) so gate-vs-hardware attribution lives in the
   *     artifact, not prose;
   *  2b. the curation FUNNEL throughput + its own 1,4 efficiency reading
-  *     (`funnel_scaling`) over an amplified documents table;
-  *  3-4. optional skew evidence (env-gated, unchanged from round 3).
+  *     (`funnel_scaling`) over an amplified documents table.
   *
   * Drift hardening (round-5): the official round-4 gate read 0.727 while
   * seven same-code reruns read 0.82-1.04 — best-of-per-level let ONE fast
@@ -35,43 +34,18 @@ import graft.pipeline.ExtractionPipeline
   * cannot set the gate number; every sample plus per-round ratios ride in
   * the JSON.
   *
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1),
+  *      SPARK_GRAFT_CPUS (default: every available processor),
   *      SPARK_GRAFT_AMPLIFY (default 240 -> 1.2M docs / ~1.9GB at sf0.1),
   *      SPARK_GRAFT_SCALING_CORES (gate pair, default "1,4"),
-  *      SPARK_GRAFT_SCALING_REPS (alternating rounds, default 4),
+  *      SPARK_GRAFT_SCALING_REPS (alternating rounds, default 5),
   *      SPARK_GRAFT_ALL_PAIRS=0 to skip the 2,8 / 8,32 hardware pairs,
   *      SPARK_GRAFT_FUNNEL_BENCH=0 to skip the funnel section,
-  *      SPARK_GRAFT_SKIP_SCALING=1 / SPARK_GRAFT_SKIP_QUERIES=1.
+  *      SPARK_GRAFT_SKIP_SCALING=1 / SPARK_GRAFT_SKIP_QUERIES=1,
+  *      SPARK_GRAFT_ONLY=a,b,c to time only the named queries,
+  *      SPARK_GRAFT_BENCH_PARTITIONS (scaling task count, default 64).
   */
 object Bench {
-
-  private def session(cores: Int): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", math.max(cores * 2, 32).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  /** One extraction pass over the cached corpus parquet; partitions is held
-    * constant across parallelism levels so only core count varies.
-    * Returns (wallSec, docs, bytesIn, failures). */
-  private def extractionPass(spark: SparkSession, corpusDir: String,
-                             partitions: Int): (Double, Long, Long, Long) = {
-    import spark.implicits._
-    val pages = spark.read.parquet(corpusDir).as[graft.model.WebPage]
-    val t0 = System.nanoTime()
-    val row = ExtractionPipeline.extract(pages, partitions, carryGolden = false).toDF()
-      .agg(count(lit(1)), sum(col("original_size")),
-        sum(when(!col("success"), 1L).otherwise(0L))).head()
-    val sec = (System.nanoTime() - t0) / 1e9
-    (sec, row.getLong(0), row.getLong(1), row.getLong(2))
-  }
 
   /** Median of the best (smallest) min(3, n) samples: robust to one
     * outlier window per level, unlike min(). For 3 kept samples this is
@@ -83,12 +57,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = LocalSpark.defaultCores
     val amplify = sys.env.getOrElse("SPARK_GRAFT_AMPLIFY", "240").toInt
     val skipScaling = sys.env.get("SPARK_GRAFT_SKIP_SCALING").contains("1")
 
     // ---- section 1: query suite (SPARK_GRAFT_SKIP_QUERIES=1 to skip) ----
-    val spark = session(cpus)
+    val spark = LocalSpark.session(cpus, s"graft-bench-$cpus",
+      "spark.sql.shuffle.partitions" -> math.max(cpus * 2, 32).toString)
     spark.sparkContext.setLogLevel("WARN")
     val results =
       if (sys.env.get("SPARK_GRAFT_SKIP_QUERIES").contains("1")) Seq.empty[(String, Double)]
@@ -144,24 +119,17 @@ object Bench {
       // both levels in absolute time and therefore only DEFLATES the
       // measured ratio (adding c to lo and hi lowers lo/hi when lo>hi).
       val benchPartitions = sys.env.getOrElse("SPARK_GRAFT_BENCH_PARTITIONS", "64")
-      // JIT warmup in this session (timings discarded)
-      extractionPass(spark, corpusDir, benchPartitions.toInt)
       spark.stop()
 
       // One CHILD JVM per measured cluster size, GC threads matched to its
       // core count — a local[N] session inside the shared bench JVM gets
       // ~all 32 cores' worth of GC threads, which inflates the small-N
       // baseline and corrupts the efficiency ratio. Each child warms up
-      // (JIT) then reports its best-of-reps pass.
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar"
-      ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+      // (JIT) then reports its best-of-reps pass. Children inherit this
+      // JVM's --add-opens flags: whoever launched it (sbt, spark-submit)
+      // had to pass them for Spark to start on JDK 17.
+      val addOpens = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+        .filter(_.startsWith("--add-opens")).toSeq
 
       def childPass(cores: Int, reps: Int, dir: String,
                     job: String): (Double, Long, Long, Long) = {
@@ -273,64 +241,7 @@ object Bench {
     }
     if (skipScaling) spark.stop()
 
-    // ---- optional section 3: skew evidence (SPARK_GRAFT_SKEW_BENCH=1) ----
-    // Hot-host corpus (50% of docs on one host): the salted pipeline vs a
-    // naive host-hash repartition, same cores, same partition count. The
-    // naive plan pins half the corpus on one task; salting spreads it.
-    val skewJson = if (!sys.env.get("SPARK_GRAFT_SKEW_BENCH").contains("1")) "" else {
-      val s = session(32)
-      s.sparkContext.setLogLevel("WARN")
-      import s.implicits._
-      val dir = Corpus.materializeAmplified(s, sfDir, math.max(amplify / 4, 1), skewHost = true)
-      def pages = s.read.parquet(dir).as[graft.model.WebPage]
-      def time(f: => Long): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      def saltedRun() =
-        time(ExtractionPipeline.extract(pages, 256, carryGolden = false).toDF().count())
-      def naiveRun() = time {
-        pages.toDF().withColumn("text", lit(""))
-          .repartition(256, regexp_extract(col("url"), "^https?://([^/]+)/", 1))
-          .as[graft.model.WebPage]
-          .mapPartitions(it => it.map(p => graft.extract.Extractor.extractOne(p, 0)))
-          .toDF().count()
-      }
-      saltedRun(); naiveRun() // JIT warmup of both paths
-      val salted = math.min(saltedRun(), saltedRun())
-      val naive = math.min(naiveRun(), naiveRun())
-      s.stop()
-      f""","skew":{"salted_sec":$salted%.2f,"naive_hosthash_sec":$naive%.2f,"speedup":${naive / salted}%.2f}"""
-    }
-
-    // ---- optional section 4: hot-shingle skew (SPARK_GRAFT_SHINGLE_BENCH=1)
-    // Every doc shares one ultra-hot shingle ("hot stop phrase" class): the
-    // inverted-index join without a DF cutoff builds an O(n²) candidate
-    // group on it; the default cutoff prunes it before the join.
-    val shingleJson = if (!sys.env.get("SPARK_GRAFT_SHINGLE_BENCH").contains("1")) "" else {
-      val s = session(32)
-      s.sparkContext.setLogLevel("WARN")
-      val docs = s.read.parquet(s"$sfDir/documents.parquet")
-        .limit(2000)
-        .select(col("doc_id").as("id"),
-          concat(lit("hot stop phrase "), col("text")).as("text"))
-        .cache()
-      docs.count()
-      def time(f: => Long): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      def cutRun() = time(graft.dedup.Dedup.ngramJaccardPairs(docs, "id", "text").count())
-      def noCutRun() = time(
-        graft.dedup.Dedup.ngramJaccardPairs(docs, "id", "text", maxDf = Long.MaxValue).count())
-      // symmetric protocol (same as the host-skew bench): warm both arms,
-      // then best-of-2 per arm
-      cutRun(); noCutRun()
-      val cut = math.min(cutRun(), cutRun())
-      val noCut = math.min(noCutRun(), noCutRun())
-      s.stop()
-      f""","shingle_skew":{"docs":2000,"cutoff_sec":$cut%.2f,"no_cutoff_sec":$noCut%.2f,"speedup":${noCut / cut}%.2f}"""
-    }
-
     val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$scalingJson$skewJson$shingleJson}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$scalingJson}""")
   }
 }

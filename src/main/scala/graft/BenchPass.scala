@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.ExtractionPipeline
@@ -24,20 +23,14 @@ object BenchPass {
     // default would crash later with an unhelpful NumberFormatException
     require(args.length >= 4, "usage: cores corpusDir partitions reps [job]")
     val Array(cores, corpusDir, partitions, reps, job) = args.padTo(5, "extract")
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-pass-$cores")
-      .config("spark.sql.shuffle.partitions", math.max(cores.toInt * 2, 32).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = LocalSpark.session(cores.toInt, s"graft-bench-pass-$cores",
+      "spark.sql.shuffle.partitions" -> math.max(cores.toInt * 2, 32).toString,
       // Shuffle spill dir on tmpfs: on a real cluster every executor brings
       // its own local disk (shuffle bandwidth scales with cluster size); on
       // this single box one shared disk would NOT scale with the simulated
       // size and would contaminate the N-vs-4N ratio with a fixed-bandwidth
       // artifact. RAM-backed local dir restores the per-executor-disk model.
-      .config("spark.local.dir", s"/dev/shm/graft_bench_local_$cores")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      "spark.local.dir" -> s"/dev/shm/graft_bench_local_$cores")
     s.sparkContext.setLogLevel("ERROR")
     import s.implicits._
 

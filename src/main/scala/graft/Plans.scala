@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.fixtures.Corpus
 import graft.pipeline.ExtractionPipeline
 
@@ -10,12 +8,8 @@ import graft.pipeline.ExtractionPipeline
   * `sbt -batch "runMain graft.Plans" > BENCH/plans.txt`). */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 4 cores, not the host's: BENCH/PLANS.md is recorded at local[4]
+    val spark = LocalSpark.session(4, "graft-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     val sfDir = "/root/testdata/sf0.001"

@@ -78,10 +78,6 @@ object OoxmlExtractor {
 
   private val slideName = "^ppt/slides/slide([0-9]+)\\.xml$".r
 
-  def extractPptx(zipBytes: Array[Byte]): String =
-    pptxFromParts(DocxExtractor.readParts(zipBytes,
-      name => slideName.pattern.matcher(name).matches()))
-
   private def pptxFromParts(parts: Seq[(String, Array[Byte])]): String = {
     val slides = parts.collect {
       case (name, bytes) if slideName.pattern.matcher(name).matches() =>
@@ -95,11 +91,6 @@ object OoxmlExtractor {
   }
 
   private val sheetName = "^xl/worksheets/sheet([0-9]+)\\.xml$".r
-
-  def extractXlsx(zipBytes: Array[Byte]): String =
-    xlsxFromParts(DocxExtractor.readParts(zipBytes, name =>
-      name == "xl/sharedStrings.xml" ||
-        sheetName.pattern.matcher(name).matches()))
 
   private def xlsxFromParts(parts: Seq[(String, Array[Byte])]): String = {
     val shared: IndexedSeq[String] = parts.collectFirst {

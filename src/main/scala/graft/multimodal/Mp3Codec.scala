@@ -26,7 +26,8 @@ import scala.collection.mutable
   *
   * Named errors (same contract as the rest of the media tier): Layer I/II
   * sample decode (header-only elsewhere), MPEG-2.5, free-format bitrate,
-  * LSF intensity stereo.
+  * LSF intensity stereo, and a granule whose part2_3_length claims more
+  * bits than the reservoir plus the frame hold.
   */
 object Mp3Codec {
   import Mp3Tables._
@@ -737,6 +738,12 @@ object Mp3Codec {
             while (ch < nch) {
               val g = grs(ch)
               val part2Start = bits.pos
+              // Bits reads unchecked; a corrupt length would otherwise run
+              // off the array (a check inside Bits would be swallowed by the
+              // count1 loop's catch)
+              if (part2Start + g.part23 > main.length * 8)
+                err(s"part2_3_length ${g.part23} exceeds the " +
+                  s"${main.length * 8 - part2Start} main-data bits left in reservoir + frame")
               val (sfl, sfs) =
                 if (hd.lsf) {
                   if (hd.mode == 1 && (hd.modeExt & 1) != 0 && ch == 1)

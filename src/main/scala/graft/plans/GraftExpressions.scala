@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -10,8 +9,6 @@ import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.Extractor
-import graft.extract.html.{Charsets, HtmlExtractor}
-import graft.extract.pdf.PdfParser
 
 /** Native Catalyst expressions for the extraction kernels (SURVEY §7.2's
   * optional tier: a codegen'd `Expression` beats a Scala UDF — no
@@ -33,21 +30,6 @@ object GraftExpressions {
 
   def sniffFormat(bytes: Array[Byte]): UTF8String =
     UTF8String.fromString(Extractor.sniffFormat(if (bytes == null) Array.emptyByteArray else bytes))
-
-  /** Register the native expressions into an existing session (the
-    * programmatic path; spark-submit path is
-    * `--conf spark.sql.extensions=graft.plans.GraftExtensions`). */
-  def install(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(
-      FunctionIdentifier("graft_extract_native"),
-      new ExpressionInfo(classOf[ExtractTextExpr].getName, "graft_extract_native"),
-      (children: Seq[Expression]) => ExtractTextExpr(children.head))
-    reg.registerFunction(
-      FunctionIdentifier("graft_sniff_native"),
-      new ExpressionInfo(classOf[SniffFormatExpr].getName, "graft_sniff_native"),
-      (children: Seq[Expression]) => SniffFormatExpr(children.head))
-  }
 }
 
 /** html/pdf/txt payload -> extracted main text; total (errors -> ""). */
@@ -86,7 +68,8 @@ case class SniffFormatExpr(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** spark-submit injection point:
+/** Registers the native expressions in a session: set by every
+  * [[graft.LocalSpark]] session, and under spark-submit by
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

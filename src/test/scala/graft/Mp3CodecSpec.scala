@@ -114,4 +114,35 @@ class Mp3CodecSpec extends AnyFunSuite {
     val e3 = intercept[IllegalArgumentException](Mp3Codec.decodeChannels(ff))
     assert(e3.getMessage.contains("free-format"))
   }
+
+  /** Overwrites `n` bits at MSB-first bit position `pos` with `v`. */
+  private def setBits(b: Array[Byte], pos: Int, n: Int, v: Int): Unit =
+    (0 until n).foreach { i =>
+      val p = pos + i
+      val mask = 0x80 >> (p & 7)
+      b(p >> 3) = (if (((v >> (n - 1 - i)) & 1) == 1) b(p >> 3) | mask
+        else b(p >> 3) & ~mask).toByte
+    }
+
+  test("a part2_3_length past the reservoir plus the frame is a named error") {
+    // lame_silence: 32-byte ID3 tag, then a 208-byte 64 kbps LSF mono frame
+    // whose side info (9 bytes, no CRC) leaves 195 bytes = 1560 main-data
+    // bits and an empty reservoir. part2_3_length follows the 8-bit
+    // main_data_begin and 1 private bit; flipping its top bit claims 2048.
+    val lsf = resource("lame_silence")
+    assert((lsf(32) & 0xff) == 0xff && lsf(36) == 0) // sync; main_data_begin 0
+    lsf(37) = (lsf(37) ^ 0x40).toByte
+    val e1 = intercept[IllegalArgumentException](Mp3Codec.decodeChannels(lsf))
+    assert(e1.getMessage.startsWith("mp3: part2_3_length 2048 exceeds"), e1.getMessage)
+
+    // m1_stereo_lr: 960-byte 320 kbps MPEG-1 stereo frames, 32 bytes of
+    // side info, 924 main-data bytes = 7392 bits. Granule 0's two
+    // part2_3_length fields (after 20 header bits, 59 bits apart) set to
+    // 4095 push granule 1 past the array end, which ran off it unchecked.
+    val st = resource("m1_stereo_lr")
+    Seq(4 * 8 + 20, 4 * 8 + 20 + 59).foreach(setBits(st, _, 12, 4095))
+    val e2 = intercept[IllegalArgumentException](
+      Mp3Codec.decodeChannels(st, allowRepaired = true))
+    assert(e2.getMessage.startsWith("mp3: part2_3_length 4095 exceeds"), e2.getMessage)
+  }
 }

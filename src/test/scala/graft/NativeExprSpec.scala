@@ -4,16 +4,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.Corpus
-import graft.plans.GraftExpressions
 
 /** Native Catalyst expression surface: same bytes as the kernel path, and
-  * the expression stays inside whole-stage codegen (no UDF boundary). */
+  * the expression stays inside whole-stage codegen (no UDF boundary). The
+  * functions come from `GraftExtensions`, which every session built by
+  * [[LocalSpark]] carries. */
 class NativeExprSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
 
   test("graft_extract_native matches the mapPartitions kernel byte-identically") {
-    GraftExpressions.install(spark)
     val pages = Corpus.materialize(spark, "/root/testdata/sf0.001").limit(100)
     pages.createOrReplaceTempView("webpages_native")
     val bad = spark.sql(
@@ -24,7 +24,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("native expression does not break whole-stage codegen") {
-    GraftExpressions.install(spark)
     val pages = Corpus.materialize(spark, "/root/testdata/sf0.001")
     pages.createOrReplaceTempView("webpages_native2")
     val df = spark.sql(

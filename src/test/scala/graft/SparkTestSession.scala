@@ -3,13 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark-backed specs (sbt forks one test
-  * JVM; SparkContext is JVM-global). */
+  * JVM; SparkContext is JVM-global). 4 cores, not the host's: PlanSpec's
+  * pinned plans are recorded at local[4]. */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSpark.session(4, "graft-test")
 }
