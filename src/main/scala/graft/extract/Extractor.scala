@@ -79,8 +79,9 @@ object Extractor {
 
   /** Per-document payload cap: documents above it yield a failure row
     * (mirrors FileTooLargeError, /root/reference/src/core/exceptions.py:28-30)
-    * instead of risking executor OOM at scale. */
-  val maxPayloadBytes: Int = 64 * 1024 * 1024
+    * instead of risking executor OOM at scale. It is the per-stream inflate
+    * cap, so an inflated payload honors the same limit as a raw one. */
+  val maxPayloadBytes: Int = graft.util.Inflate.maxStreamBytes
 
   /** Single format-dispatch point — every surface (mapPartitions kernel,
     * native Catalyst expression, SQL-registered UDF) routes through here so
@@ -119,12 +120,11 @@ object Extractor {
     case other => (other, Charsets.decode(bytes))
   }
 
-  /** Bounded gunzip: output capped at [[maxPayloadBytes]] so a tiny
-    * decompression bomb cannot expand past the same limit raw payloads
-    * already honor; truncated/corrupt streams throw (contained upstream).
-    * Inflates into one array sized from the gzip trailer's ISIZE (the last
-    * member's length mod 2^32), trusted only up to [[gunzipHintRatio]] times
-    * the compressed length, and doubled while the output outgrows it. */
+  /** Bounded gunzip through [[graft.util.Inflate.grow]]: output capped at
+    * [[maxPayloadBytes]] so a tiny decompression bomb cannot expand past the
+    * same limit raw payloads already honor; truncated/corrupt streams throw
+    * (contained upstream). The output array is first sized from the gzip
+    * trailer's ISIZE (the last member's length mod 2^32). */
   private[graft] def gunzip(bytes: Array[Byte]): Array[Byte] = {
     val n = bytes.length
     val isize =
@@ -133,34 +133,9 @@ object Extractor {
         (bytes(n - 2) & 0xffL) << 16 | (bytes(n - 1) & 0xffL) << 24
     val in = new java.util.zip.GZIPInputStream(
       new java.io.ByteArrayInputStream(bytes))
-    try {
-      var out = new Array[Byte](
-        math.max(64L, math.min(isize, math.min(gunzipHintRatio * n, maxPayloadBytes.toLong))).toInt)
-      var len = 0
-      var done = false
-      while (!done) {
-        if (len < out.length) {
-          val r = in.read(out, len, out.length - len)
-          if (r < 0) done = true else len += r
-        } else {
-          // full: one more byte means the hint was short (or the cap is hit)
-          val b = in.read()
-          if (b < 0) done = true
-          else {
-            require(len < maxPayloadBytes, s"gzip payload expands past cap $maxPayloadBytes")
-            out = java.util.Arrays.copyOf(out, math.min(2L * len, maxPayloadBytes.toLong).toInt)
-            out(len) = b.toByte
-            len += 1
-          }
-        }
-      }
-      if (len == out.length) out else java.util.Arrays.copyOf(out, len)
-    } finally in.close()
+    try graft.util.Inflate.grow(in, isize, n, 0L, "gzip payload")
+    finally in.close()
   }
-
-  /** Largest expansion ratio the ISIZE hint is trusted for when sizing the
-    * first output array; larger outputs grow geometrically instead. */
-  private val gunzipHintRatio = 32L
 
   /** `s.getBytes(UTF_8).length` without encoding: a lone surrogate
     * counts 1 byte, the `?` that `getBytes` writes for it. */

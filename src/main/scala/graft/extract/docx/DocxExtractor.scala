@@ -4,6 +4,8 @@ import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.ZipInputStream
 
+import graft.util.Inflate
+
 /** DOCX → text kernel: unzip the OOXML package, scan `word/document.xml`,
   * and join each `<w:p>` paragraph's `<w:t>` text runs; paragraphs join
   * with "\n". Pure JVM, executor-local — replaces the reference's
@@ -17,15 +19,6 @@ import java.util.zip.ZipInputStream
   * `w:t` boundaries matter; every other element is skipped structurally.
   */
 object DocxExtractor {
-
-  /** Inflated-size cap per package part — zip-bomb containment (mirrors the
-    * payload cap in graft.extract.Extractor). */
-  val maxPartBytes: Int = 64 * 1024 * 1024
-
-  /** AGGREGATE inflated-size cap across the parts one extraction reads: a
-    * bomb of many just-under-cap parts must not pass the per-part check
-    * and still exhaust the executor heap. */
-  val maxTotalBytes: Long = 256L * 1024 * 1024
 
   def extract(docx: Array[Byte]): String = {
     val xml = readPart(docx, "word/document.xml")
@@ -47,26 +40,23 @@ object DocxExtractor {
     } finally zin.close()
   }
 
-  /** Stream the zip and return one entry's bytes (bounded by maxPartBytes);
-    * stops scanning at the first match. */
-  def readPart(zipBytes: Array[Byte], name: String): Option[Array[Byte]] = {
-    val zin = new ZipInputStream(new ByteArrayInputStream(zipBytes))
-    try {
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (e.getName == name) return Some(readEntry(zin, name, maxTotalBytes))
-        e = zin.getNextEntry
-      }
-      None
-    } finally zin.close()
-  }
+  /** One entry's bytes; stops scanning at the first match. */
+  def readPart(zipBytes: Array[Byte], name: String): Option[Array[Byte]] =
+    read(zipBytes, _ == name, firstOnly = true).headOption.map(_._2)
 
   /** Stream the zip once and return every entry whose name satisfies the
-    * predicate, in archive order — each part bounded by maxPartBytes and
-    * the AGGREGATE bounded by maxTotalBytes (zip-bomb containment at both
-    * granularities). */
+    * predicate, in archive order. */
   def readParts(zipBytes: Array[Byte],
-                wanted: String => Boolean): Seq[(String, Array[Byte])] = {
+                wanted: String => Boolean): Seq[(String, Array[Byte])] =
+    read(zipBytes, wanted, firstOnly = false)
+
+  /** Each part inflates through [[graft.util.Inflate.grow]], first sized
+    * from its local-header size (8 KiB when a data descriptor defers it),
+    * a claim trusted only up to the ratio bound over the whole archive's
+    * length; under the per-stream cap and, across the parts one call reads,
+    * the per-document cap: a bomb of many just-under-cap parts fails too. */
+  private def read(zipBytes: Array[Byte], wanted: String => Boolean,
+                   firstOnly: Boolean): Seq[(String, Array[Byte])] = {
     val zin = new ZipInputStream(new ByteArrayInputStream(zipBytes))
     val acc = Seq.newBuilder[(String, Array[Byte])]
     var total = 0L
@@ -74,29 +64,16 @@ object DocxExtractor {
       var e = zin.getNextEntry
       while (e != null) {
         if (wanted(e.getName)) {
-          val bytes = readEntry(zin, e.getName, maxTotalBytes - total)
+          val bytes = Inflate.grow(zin, if (e.getSize >= 0) e.getSize else 8192,
+            zipBytes.length, total, e.getName)
           total += bytes.length
           acc += e.getName -> bytes
+          if (firstOnly) return acc.result()
         }
         e = zin.getNextEntry
       }
       acc.result()
     } finally zin.close()
-  }
-
-  private def readEntry(zin: ZipInputStream, name: String, budget: Long): Array[Byte] = {
-    val cap = math.min(maxPartBytes.toLong, budget)
-    val out = new java.io.ByteArrayOutputStream(8192)
-    val buf = new Array[Byte](8192)
-    var n = zin.read(buf)
-    while (n >= 0) {
-      out.write(buf, 0, n)
-      if (out.size() > cap)
-        throw new IllegalArgumentException(
-          s"$name inflates past the ${if (cap < maxPartBytes) "aggregate" else "per-part"} cap ($cap bytes)")
-      n = zin.read(buf)
-    }
-    out.toByteArray
   }
 
   /** Single-pass scan of document.xml: text inside `<w:t>` accumulates into

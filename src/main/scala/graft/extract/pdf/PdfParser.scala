@@ -1,16 +1,18 @@
 package graft.extract.pdf
 
 import java.nio.charset.StandardCharsets
-import java.util.zip.Inflater
 import scala.collection.mutable
+
+import graft.util.Inflate
 
 /** Minimal pure-JVM PDF text extractor (north_star: "a PDF layout parser —
   * glyph clustering into lines/blocks by y/x coordinates — handles binary
   * payloads"). Replaces the reference's LibreOffice PDF import
   * (/root/reference/src/converters/document_converters.py:100-111).
   *
-  * Pipeline: object scan -> content-stream extraction (FlateDecode via
-  * java.util.zip.Inflater, or raw) -> text-operator interpretation
+  * Pipeline: object scan -> content-stream extraction (FlateDecode through
+  * [[graft.util.Inflate]], bounded per stream and across the document's
+  * streams, or raw) -> text-operator interpretation
   * (BT/ET, Tf, TL, Td/TD/Tm/T*, Tj/TJ/'/") -> positioned text runs ->
   * cluster runs into lines by y (tolerance 0.5pt), lines into columns by
   * x-start (gap > 100pt), lines into blocks by y-gap (> 18pt) ->
@@ -42,6 +44,7 @@ object PdfParser {
     val s = new String(pdf, StandardCharsets.ISO_8859_1)
     val runs = Vector.newBuilder[Run]
     var page = 0
+    var inflated = 0L // across the document's Flate streams
     var i = s.indexOf("stream", 0)
     while (i >= 0) {
       // reject "endstream" matches
@@ -54,13 +57,15 @@ object PdfParser {
         var dataStart = i + "stream".length
         if (dataStart < s.length && s.charAt(dataStart) == '\r') dataStart += 1
         if (dataStart < s.length && s.charAt(dataStart) == '\n') dataStart += 1
+        // a missing /Length, or one that overruns the payload, falls back
+        // to the endstream keyword
         val len = parseLength(dict)
-        val dataEnd = len match {
-          case Some(l) if dataStart + l <= pdf.length => dataStart + l
-          case _ =>
+        val dataEnd =
+          if (len >= 0 && len <= pdf.length - dataStart) dataStart + len.toInt
+          else {
             val e = s.indexOf("endstream", dataStart)
             if (e < 0) pdf.length else e
-        }
+          }
         // PDF 1.5+ structural streams: a cross-reference stream's binary
         // rows or an object stream's packed dicts can contain the bytes
         // "BT" by coincidence — they are never page content (ISO 32000-1
@@ -69,9 +74,12 @@ object PdfParser {
         // Recognize and skip them by /Type instead of risking garbage runs.
         val structural = dict.contains("/ObjStm") || dict.contains("/XRef")
         if (!structural) {
-          val raw = java.util.Arrays.copyOfRange(pdf, dataStart, dataEnd)
-          val body = if (dict.contains("/FlateDecode")) inflate(raw) else raw
-          val content = new String(body, StandardCharsets.ISO_8859_1)
+          val content =
+            if (dict.contains("/FlateDecode")) {
+              val body = Inflate.grow(pdf, dataStart, dataEnd - dataStart, inflated, "PDF Flate stream")
+              inflated += body.length
+              new String(body, StandardCharsets.ISO_8859_1)
+            } else s.substring(dataStart, dataEnd)
           if (content.contains("BT")) {
             interpret(content, page, runs)
             page += 1
@@ -85,31 +93,13 @@ object PdfParser {
     (runs.result(), page)
   }
 
-  private def parseLength(dict: String): Option[Int] = {
-    val k = dict.indexOf("/Length")
-    if (k < 0) return None
-    var j = k + "/Length".length
-    while (j < dict.length && dict.charAt(j) == ' ') j += 1
-    val st = j
-    while (j < dict.length && dict.charAt(j).isDigit) j += 1
-    if (j > st) Some(dict.substring(st, j).toInt) else None
-  }
+  /** The dict's direct `/Length`, or -1 when it has none; one with more
+    * digits than a Long holds reads as Long.MaxValue, past any payload. */
+  private def parseLength(dict: String): Long =
+    LengthRe.findFirstMatchIn(dict).map(_.group(1)).fold(-1L)(d =>
+      if (d.isEmpty) -1L else if (d.length > 18) Long.MaxValue else d.toLong)
 
-  private def inflate(data: Array[Byte]): Array[Byte] = {
-    val inf = new Inflater()
-    try {
-      inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(data.length * 4 + 64)
-      val buf = new Array[Byte](4096)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary()))
-          throw new java.util.zip.DataFormatException("truncated deflate stream")
-        out.write(buf, 0, n)
-      }
-      out.toByteArray
-    } finally inf.end()
-  }
+  private val LengthRe = "/Length *([0-9]*)".r
 
   // ---------- content-stream interpreter ----------
 

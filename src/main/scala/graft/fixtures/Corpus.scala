@@ -110,21 +110,25 @@ object Corpus {
     * (offset 1M per replica — disjoint from real ids), so the bench input is
     * `factor`× the docs with the same payload-size/format/host distribution.
     * Replica 0 is the original corpus bit-for-bit. */
-  def materializeAmplified(spark: SparkSession, sfDir: String, factor: Int,
-                           skewHost: Boolean = false): String = {
+  def materializeAmplified(spark: SparkSession, sfDir: String, factor: Int): String = {
     import spark.implicits._
-    val key = sfDir.replaceAll("[^a-zA-Z0-9.]", "_") + s"_x$factor" +
-      (if (skewHost) "_skew" else "") + s"_$fixtureVersion"
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_webpages_$key"
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
+    cached("graft_webpages", sfDir, s"_x$factor") { dir =>
       spark.read.parquet(s"$sfDir/documents.parquet")
         .selectExpr("doc_id", "text", "lang", "source", "n_chars")
         .repartition(256)
         .as[Doc]
         .flatMap(d => (0 until factor).iterator.map(i =>
-          buildPage(d.copy(doc_id = d.doc_id + 1000000L * i), skewHost)))
+          buildPage(d.copy(doc_id = d.doc_id + 1000000L * i), skewHost = false)))
         .write.mode("overwrite").parquet(dir)
     }
+  }
+
+  /** `java.io.tmpdir/<prefix>_<sfDir><suffix>_<fixtureVersion>`, written by
+    * `write` unless a finished copy is already there. */
+  private def cached(prefix: String, sfDir: String, suffix: String)(write: String => Unit): String = {
+    val dir = s"${sys.props("java.io.tmpdir")}/${prefix}_" +
+      sfDir.replaceAll("[^a-zA-Z0-9.]", "_") + s"${suffix}_$fixtureVersion"
+    if (!new java.io.File(dir, "_SUCCESS").exists()) write(dir)
     dir
   }
 
@@ -138,18 +142,10 @@ object Corpus {
 
   /** Same cache as [[materialize]] but returns the parquet DIRECTORY — the
     * input shape the streaming file source needs. */
-  def materializedDir(spark: SparkSession, sfDir: String, skewHost: Boolean = false): String = {
-    val key = sfDir.replaceAll("[^a-zA-Z0-9.]", "_") +
-      (if (skewHost) "_skew" else "") + s"_$fixtureVersion"
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_webpages_$key"
-    val success = new java.io.File(dir, "_SUCCESS")
-    if (!success.exists()) {
-      synthesize(spark, sfDir, skewHost)
-        .repartition(32)
-        .write.mode("overwrite").parquet(dir)
+  def materializedDir(spark: SparkSession, sfDir: String, skewHost: Boolean = false): String =
+    cached("graft_webpages", sfDir, if (skewHost) "_skew" else "") { dir =>
+      synthesize(spark, sfDir, skewHost).repartition(32).write.mode("overwrite").parquet(dir)
     }
-    dir
-  }
 
   /** Amplified DOCUMENTS table (doc_id, text, lang) for curation-tier
     * benchmarks: the same deterministic replication rule as
@@ -158,9 +154,7 @@ object Corpus {
     * (sfDir, factor) under java.io.tmpdir. */
   def materializeAmplifiedDocs(spark: SparkSession, sfDir: String, factor: Int): String = {
     import org.apache.spark.sql.functions._
-    val key = sfDir.replaceAll("[^a-zA-Z0-9.]", "_") + s"_docs_x${factor}_$fixtureVersion"
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_docs_$key"
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
+    cached("graft_docs", sfDir, s"_docs_x$factor") { dir =>
       spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text"), col("lang"))
         .withColumn("rep", explode(sequence(lit(0), lit(factor - 1))))
@@ -169,6 +163,5 @@ object Corpus {
         .repartition(64)
         .write.mode("overwrite").parquet(dir)
     }
-    dir
   }
 }

@@ -476,13 +476,6 @@ object MediaFixtures {
         y += 1
       }
     }
-    // deflate
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(filtered.toByteArray); defl.finish()
-    val zipped = new java.io.ByteArrayOutputStream()
-    val tmp = new Array[Byte](4096)
-    while (!defl.finished()) zipped.write(tmp, 0, defl.deflate(tmp))
-    defl.end()
 
     val out = new java.io.ByteArrayOutputStream()
     out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
@@ -508,7 +501,7 @@ object MediaFixtures {
       chunk("PLTE", plte)
     }
     // split the stream across two IDAT chunks: decoders must concatenate
-    val z = zipped.toByteArray
+    val z = graft.util.Inflate.deflate(filtered.toByteArray)
     val cut = z.length / 2
     chunk("IDAT", java.util.Arrays.copyOfRange(z, 0, cut))
     chunk("IDAT", java.util.Arrays.copyOfRange(z, cut, z.length))

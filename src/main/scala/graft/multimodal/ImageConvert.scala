@@ -576,7 +576,7 @@ object ImageConvert {
       val content = s"q ${b.width} 0 0 ${b.height} 0 0 cm /Im$i Do Q"
       beginObj()
       w(s"$contN 0 obj\n<< /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n")
-      val data = deflateBytes(b.data, java.util.zip.Deflater.DEFAULT_COMPRESSION)
+      val data = graft.util.Inflate.deflate(b.data)
       val cs = if (b.mode == "L") "/DeviceGray" else "/DeviceRGB"
       beginObj()
       w(s"$imgN 0 obj\n<< /Type /XObject /Subtype /Image /Width ${b.width} " +
@@ -637,22 +637,13 @@ object ImageConvert {
           val height = intField("/Height")
           val gray = dict.contains("/DeviceGray")
           require(dict.contains("/FlateDecode"), "unsupported image filter")
-          val inflater = new java.util.zip.Inflater()
-          inflater.setInput(bytes, dataStart, len)
           val channels = if (gray) 1 else 3
           // same 64 MiB bomb cap as every other decode path — also keeps
           // width*height*channels out of Int-overflow territory (65536²
           // gray wraps to 0 and would be accepted as an empty raster)
           MediaCodecs.PixelBuf.checkCap(if (gray) "L" else "RGB", width, height)
           val raw = new Array[Byte](width * height * channels)
-          var got = 0
-          while (got < raw.length && !inflater.finished()) {
-            val n = inflater.inflate(raw, got, raw.length - got)
-            require(n > 0 || inflater.finished(), "truncated image samples")
-            got += n
-          }
-          inflater.end()
-          require(got == raw.length, s"image samples short: $got of ${raw.length}")
+          graft.util.Inflate.fill(bytes, Iterator(dataStart -> len), raw, "image samples")
           var sum = 0L
           var i = 0
           while (i < raw.length) { sum += raw(i) & 0xff; i += 1 }
@@ -706,19 +697,6 @@ object ImageConvert {
         s"unsupported image output format .$o (whitelist: ${encodeFormats.mkString(", ")})")
     }
 
-  /** One complete zlib stream at the given level (the drain idiom shared
-    * by the PNG IDAT and PDF image-XObject writers). */
-  private def deflateBytes(data: Array[Byte], level: Int): Array[Byte] = {
-    val deflater = new java.util.zip.Deflater(level)
-    deflater.setInput(data)
-    deflater.finish()
-    val z = new ByteArrayOutputStream(data.length / 2 + 64)
-    val tmp = new Array[Byte](8192)
-    while (!deflater.finished()) z.write(tmp, 0, deflater.deflate(tmp))
-    deflater.end()
-    z.toByteArray
-  }
-
   /** PNG: color type from mode, filter 0 everywhere, one zlib stream.
     * `compressLevel` 0-9 is the reference's png `compress_level` save
     * kwarg (image_converters.py:119-121) — a pure speed/size dial on the
@@ -758,7 +736,7 @@ object ImageConvert {
       requirePalette(buf)
       chunk("PLTE", buf.palette.clone())
     }
-    chunk("IDAT", deflateBytes(raw, compressLevel))
+    chunk("IDAT", graft.util.Inflate.deflate(raw, compressLevel))
     chunk("IEND", Array.emptyByteArray)
     out.toByteArray
   }

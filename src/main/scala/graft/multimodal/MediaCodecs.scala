@@ -320,10 +320,9 @@ object MediaCodecs {
     (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
 
   /** PNG, the first COMPRESSED codec with a real decoder: chunk walk with
-    * CRC-32 verification, IDAT streams concatenated and inflated
-    * (`java.util.zip.Inflater` — zlib, the same DEFLATE the format
-    * specifies), then per-scanline unfiltering (all five filter types:
-    * None/Sub/Up/Average/Paeth). Supported: 8-bit depth, interlace 0 or
+    * CRC-32 verification, IDAT chunks inflated in order as one zlib stream
+    * ([[graft.util.Inflate.fill]]), then per-scanline unfiltering (all five
+    * filter types: None/Sub/Up/Average/Paeth). Supported: 8-bit depth, interlace 0 or
     * Adam7 (each of the 7 passes is an independently-filtered sub-image;
     * the passes partition the pixels, so summing reconstructed pass bytes
     * IS the image pixelSum), color types 0 (gray → "L"), 2 ("RGB"),
@@ -340,7 +339,7 @@ object MediaCodecs {
     var height = 0
     var colorType = -1
     var interlace = 0
-    val idat = new java.io.ByteArrayOutputStream()
+    val idat = scala.collection.mutable.ArrayBuffer[(Int, Int)]() // (offset, length)
     var sawEnd = false
     while (!sawEnd && i + 8 <= bytes.length) {
       val len = ((bytes(i) & 0xff) << 24) | ((bytes(i + 1) & 0xff) << 16) |
@@ -365,7 +364,7 @@ object MediaCodecs {
           require(bitDepth == 8, s"unsupported PNG bit depth $bitDepth")
           require(interlace == 0 || interlace == 1, s"bad PNG interlace method $interlace")
           require(width > 0 && height > 0, s"bad PNG geometry ${width}x$height")
-        case "IDAT" => idat.write(bytes, i + 8, len)
+        case "IDAT" => idat += ((i + 8, len))
         case "IEND" => sawEnd = true
         case "PLTE" if sink != null =>
           require(len % 3 == 0 && len <= 768, s"bad PLTE length $len")
@@ -410,16 +409,7 @@ object MediaCodecs {
     require(rawLen <= (1L << 27), s"PNG filtered stream $rawLen exceeds cap")
     // inflate the filtered scanlines: per pass, rows of [filterByte][bytes]
     val raw = new Array[Byte](rawLen.toInt)
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    var got = 0
-    while (got < raw.length && !inf.finished()) {
-      val n = inf.inflate(raw, got, raw.length - got)
-      require(n > 0 || inf.finished(), "PNG IDAT stream truncated or needs dictionary")
-      got += n
-    }
-    inf.end()
-    require(got == raw.length, s"PNG pixel data short: $got of ${raw.length}")
+    graft.util.Inflate.fill(bytes, idat.iterator, raw, "PNG pixel data")
     // unfilter each pass independently, summing reconstructed bytes
     if (sink != null) sink.init(mode, width, height)
     var sum = 0L
@@ -1834,11 +1824,8 @@ object MediaCodecs {
           try {
             val in = new java.util.zip.GZIPInputStream(
               new java.io.ByteArrayInputStream(bytes), 4096)
-            val out = new java.io.ByteArrayOutputStream()
-            val tmp = new Array[Byte](4096)
-            var n = in.read(tmp)
-            while (n > 0 && out.size < 8192) { out.write(tmp, 0, n); n = in.read(tmp) }
-            new String(out.toByteArray, java.nio.charset.StandardCharsets.ISO_8859_1)
+            try new String(in.readNBytes(8192), java.nio.charset.StandardCharsets.ISO_8859_1)
+            finally in.close()
           } catch { case _: java.io.IOException => "" }
         } else new String(bytes, 0, math.min(bytes.length, 4096),
           java.nio.charset.StandardCharsets.ISO_8859_1)

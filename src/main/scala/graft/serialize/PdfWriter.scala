@@ -2,7 +2,8 @@ package graft.serialize
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
-import java.util.zip.Deflater
+
+import graft.util.Inflate.deflate
 
 /** Minimal deterministic PDF generator for the golden-fixture corpus
   * (SURVEY §5.2 / FIXTURES.md §3). Produces PDF 1.4 with Helvetica, valid
@@ -165,16 +166,6 @@ object PdfWriter {
     }
     sb.append("ET\n")
     sb.toString
-  }
-
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new Deflater()
-    d.setInput(data); d.finish()
-    val out = new ByteArrayOutputStream(data.length / 2 + 64)
-    val buf = new Array[Byte](4096)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
   }
 
   /** Generate a complete PDF for the given paragraphs.
