@@ -2,9 +2,12 @@ package graft.pipeline
 
 import java.security.MessageDigest
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.AccumulatorV2
 
 import graft.extract.Extractor
 import graft.model.{ExtractionResult, ManifestEntry, WebPage}
@@ -23,10 +26,22 @@ import graft.model.{ExtractionResult, ManifestEntry, WebPage}
   * Scale properties: no driver-side per-document state — the only driver
   * materialization is the manifest, O(numBuckets). All filesystem access
   * goes through the Hadoop FileSystem API (works on HDFS/S3A, not just
-  * file://), and the post-commit manifest is derived by reading back ONLY
-  * the buckets this run wrote, unioned with the prior manifest rows — a
-  * resumed run never re-reads finished buckets' output (previously an
-  * O(total output) re-scan per run).
+  * file://). A run is one extraction job plus an O(numBuckets) manifest
+  * write; it never reads `results/` back, so a fresh run costs no O(docs)
+  * re-scan and a resumed one never touches finished buckets' output.
+  *
+  * Exactly-once counts: the per-bucket docs and failures come from a
+  * [[BucketCounts]] accumulator fed by the kernel inside the write job.
+  * That kernel runs in the write's result stage. Spark merges a result
+  * task's accumulator update only for the first successful attempt of each
+  * partition, and drops the updates of failed attempts, so a retried or
+  * speculative task is counted once and the counts match the committed
+  * rows. If the job fails, `run` throws before the manifest is written.
+  * The new manifest is the prior rows plus one row per bucket that had
+  * rows in this run. Edge: a stale `partition_id=` dir under `results/`
+  * (left by a crash before its manifest row was written) whose bucket has
+  * no rows in this run is not marked done; any bucket with rows is
+  * rewritten by the dynamic overwrite and marked done.
   */
 object ResumableRunner {
 
@@ -74,6 +89,32 @@ object ResumableRunner {
     }
   }
 
+  /** Docs and failures per bucket of the rows the write job's kernel emits
+    * (exactly once per committed row; see the object doc). */
+  final class BucketCounts extends AccumulatorV2[ExtractionResult, Map[Int, (Long, Long)]] {
+    private val counts = mutable.HashMap.empty[Int, Array[Long]] // bucket -> [docs, failures]
+    private def slot(bucket: Int): Array[Long] = counts.getOrElseUpdate(bucket, new Array[Long](2))
+    override def isZero: Boolean = counts.isEmpty
+    override def copy(): BucketCounts = { val c = new BucketCounts; c.merge(this); c }
+    override def reset(): Unit = counts.clear()
+    override def add(r: ExtractionResult): Unit = {
+      val c = slot(r.partition_id)
+      c(0) += 1
+      if (!r.success) c(1) += 1
+    }
+    override def merge(other: AccumulatorV2[ExtractionResult, Map[Int, (Long, Long)]]): Unit =
+      other match {
+        case o: BucketCounts => o.counts.foreach { case (b, oc) =>
+          val c = slot(b); c(0) += oc(0); c(1) += oc(1)
+        }
+        case _ => throw new UnsupportedOperationException(s"cannot merge ${other.getClass}")
+      }
+    override def value: Map[Int, (Long, Long)] =
+      counts.iterator.map { case (b, c) => b -> ((c(0), c(1))) }.toMap
+  }
+
+  private val manifestSchema = Encoders.product[ManifestEntry].schema
+
   def run(spark: SparkSession, pages: Dataset[WebPage], outDir: String,
           runId: String, numBuckets: Int): RunSummary = {
     import spark.implicits._
@@ -85,18 +126,22 @@ object ResumableRunner {
 
     // Prior manifest rows, collected eagerly: (a) O(numBuckets), never
     // O(docs), so the driver holds it at any scale; (b) the manifest path
-    // is overwritten below — a lazy plan would re-read deleted files.
+    // is overwritten below — a lazy plan would re-read deleted files. The
+    // schema is known, so no footer-inference job runs.
     val manifestPath = new Path(manifestDir)
     val prior: Array[ManifestEntry] =
       if (fs.exists(manifestPath) &&
           fs.listStatus(manifestPath).exists(_.getPath.getName.endsWith(".parquet"))) {
-        spark.read.parquet(manifestDir)
+        spark.read.schema(manifestSchema).parquet(manifestDir)
           .filter(col("status") === "done").as[ManifestEntry].collect()
       } else Array.empty[ManifestEntry]
     val doneBuckets: Set[Int] = prior.map(_.partition_id).toSet
 
     val bucketed = pages.withColumn("bucket", bucketCol(col("url"), numBuckets))
     val remaining = remainingAfterManifest(bucketed, doneBuckets)
+
+    val counts = new BucketCounts
+    spark.sparkContext.register(counts, s"graft bucket counts $runId")
 
     // golden `text` is blanked before the shuffle — the kernel reads only
     // `html`; verification joins the source table by url afterwards
@@ -107,7 +152,9 @@ object ResumableRunner {
       .as[BucketedPage]
       .mapPartitions { it =>
         it.map { p =>
-          Extractor.extractOne(WebPage(p.url, p.warc_ts, p.html, p.text, p.lang), p.bucket)
+          val r = Extractor.extractOne(WebPage(p.url, p.warc_ts, p.html, p.text, p.lang), p.bucket)
+          counts.add(r)
+          r
         }
       }
 
@@ -118,33 +165,16 @@ object ResumableRunner {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("partition_id").parquet(resultsDir)
 
-    // Post-commit lineage: read back ONLY the bucket dirs this run wrote
-    // (incremental — finished buckets' output stays untouched on disk).
-    val resultsPath = new Path(resultsDir)
-    val ranDirs: Array[String] =
-      if (!fs.exists(resultsPath)) Array.empty
-      else fs.listStatus(resultsPath).iterator
-        .map(_.getPath)
-        .filter(_.getName.startsWith("partition_id="))
-        .filter(p => !doneBuckets.contains(p.getName.stripPrefix("partition_id=").toInt))
-        .map(_.toString).toArray
-
-    val fresh: Array[(Int, Long, Long)] =
-      if (ranDirs.isEmpty) Array.empty
-      else spark.read.option("basePath", resultsDir).parquet(ranDirs.toIndexedSeq: _*)
-        .groupBy(col("partition_id").cast("int").as("partition_id"))
-        .agg(count(lit(1)).as("docs"),
-          sum(when(!col("success"), 1L).otherwise(0L)).as("failures"))
-        .as[(Int, Long, Long)].collect()
-
+    val fresh: Seq[(Int, (Long, Long))] = counts.value.toSeq.sortBy(_._1)
     val manifest: Seq[ManifestEntry] =
-      prior.toSeq ++ fresh.map { case (b, docs, _) => ManifestEntry(runId, b, "done", docs) }
-    manifest.toDS().write.mode(SaveMode.Overwrite).parquet(manifestDir)
+      prior.toSeq ++ fresh.map { case (b, (docs, _)) => ManifestEntry(runId, b, "done", docs) }
+    // O(numBuckets) rows: one task, one file
+    manifest.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestDir)
 
     RunSummary(runId, numBuckets,
-      bucketsRun = fresh.length,
-      docs = fresh.map(_._2).sum,
-      failures = fresh.map(_._3).sum,
+      bucketsRun = fresh.size,
+      docs = fresh.map(_._2._1).sum,
+      failures = fresh.map(_._2._2).sum,
       docsTotal = manifest.map(_.docs).sum)
   }
 }

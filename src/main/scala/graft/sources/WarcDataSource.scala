@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -12,6 +13,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 connector over [[WarcSource.parseStream]] — the idiomatic
   * Spark read surface for WARC/1.1 segments (ISO 28500, the Common Crawl
@@ -27,6 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * FS through the one-record-at-a-time parser (O(one record) heap; a
   * multi-GB segment never materializes). Column pruning is pushed down:
   * a `select(url)` over a crawl does not copy payload bytes into rows.
+  * The driver's Hadoop conf reaches the readers as one broadcast per scan,
+  * as in Spark's own file scans, so each task ships only its segment path
+  * and the pruned schema, and each executor deserializes the conf once.
   *
   * Error semantics are FAILFAST like Spark's file sources: malformed
   * framing fails the task with the parser's NAMED error. The extraction
@@ -128,26 +133,26 @@ private[sources] class WarcScan(options: CaseInsensitiveStringMap,
   override def description(): String = "graft WARC segments (one partition per object)"
 
   // driver-side only (plan time): the active session's Hadoop conf
-  private def driverHadoopConf: org.apache.hadoop.conf.Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
+  private def sparkContext = org.apache.spark.sql.SparkSession.active.sparkContext
 
   override def planInputPartitions(): Array[InputPartition] =
-    WarcDataSource.resolvePaths(options, driverHadoopConf)
+    WarcDataSource.resolvePaths(options, sparkContext.hadoopConfiguration)
       .map(WarcInputPartition(_): InputPartition).toArray
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(new WarcSource.SerializableHadoopConf(driverHadoopConf), required)
+  // one broadcast per scan, as Spark's own file scans do: the factory is
+  // serialized into every task, the conf (~100 KB) is fetched once per executor
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val sc = sparkContext
+    new WarcReaderFactory(sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)), required)
+  }
 }
 
-private[sources] class WarcReaderFactory(conf: WarcSource.SerializableHadoopConf,
+private[sources] class WarcReaderFactory(conf: Broadcast[SerializableConfiguration],
                                          required: StructType)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new WarcPartitionReader(partition.asInstanceOf[WarcInputPartition].path,
-      conf.value, required)
+      conf.value.value, required)
 }
 
 /** Streams one segment's response records as InternalRows, projecting only

@@ -6,6 +6,7 @@ import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum, when}
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.model.{ExtractionResult, WebPage}
 
@@ -27,9 +28,12 @@ import graft.model.{ExtractionResult, WebPage}
   *    response payloads with status / Content-Type.
   *
   * Scale shape: in production each task reads ONE ~1 GB .warc.gz object
-  * (spark.read.format("binaryFile") or a manifest of ranges) and streams
-  * records out of it — file-per-task is the right granularity because
-  * record-gzip members are not independently seekable without an index.
+  * (`spark.read.format("warc")`, [[WarcDataSource]], or
+  * [[extractFromWarcFiles]]) and streams records out of it — file-per-task
+  * is the right granularity because record-gzip members are not
+  * independently seekable without an index. Both read paths open the
+  * object through a broadcast Hadoop conf, so a task's closure stays a few
+  * KB however large the cluster's conf is.
   * `parseStream` holds only the CURRENT record in memory (one record body
   * at a time, never the inflated file), so a multi-GB segment costs one
   * record's worth of heap per task; a single record larger than ~2 GiB is
@@ -327,20 +331,6 @@ object WarcSource {
       .orderBy("format_from")
   }
 
-  /** Hadoop Configuration is not Serializable; the standard write/readFields
-    * envelope ships the driver's conf (fs.* credentials etc.) to executors. */
-  private[sources] class SerializableHadoopConf(
-      @transient var value: org.apache.hadoop.conf.Configuration) extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
   /** PRODUCTION ingest entry: stream-extract every HTTP response record of
     * every listed .warc(.gz) object. One task per file — the right
     * granularity because per-record gzip members are not independently
@@ -350,15 +340,19 @@ object WarcSource {
     * cost one record's worth of memory. A malformed segment — unreadable
     * path, framing error, truncated gzip member, bad HTTP block — is
     * CONTAINED as one failure row naming the file: one rotten object in a
-    * 100k-segment crawl must not kill the job. */
+    * 100k-segment crawl must not kill the job. The driver's Hadoop conf
+    * (fs.* credentials etc.) reaches the tasks as one broadcast, as in
+    * Spark's own file scans: each executor fetches and deserializes it
+    * once, instead of every task closure carrying ~100 KB of conf. */
   def extractFromWarcFiles(spark: SparkSession, paths: Seq[String]): Dataset[ExtractionResult] = {
     import spark.implicits._
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
     spark.createDataset(paths)
       .repartition(math.max(paths.size, 1))
       .mapPartitions { files =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        files.flatMap(p => containedFileRecords(p, pid, conf.value))
+        files.flatMap(p => containedFileRecords(p, pid, conf.value.value))
       }
   }
 

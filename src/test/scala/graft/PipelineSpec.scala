@@ -83,6 +83,86 @@ class PipelineSpec extends AnyFunSuite {
     assert(manifest == 16)
   }
 
+  test("manifest docs and RunSummary counts equal a recount of results/, failures included") {
+    val out = Files.createTempDirectory("graft_counts").toString
+    val ts = new java.sql.Timestamp(0)
+    val poisoned = (1 to 6).map { i =>
+      graft.model.WebPage(s"https://p.example.org/en/doc$i",
+        ts, s"%PDF-1.4 then garbage $i".getBytes("ISO-8859-1"), "", "en")
+    }
+    val pages = Corpus.materialize(spark, sfDir).unionByName(poisoned.toDS())
+
+    def recount(): Map[Int, (Long, Long)] =
+      spark.read.parquet(s"$out/results")
+        .groupBy(col("partition_id").cast("int"))
+        .agg(count(lit(1)), sum(when(!col("success"), 1L).otherwise(0L)))
+        .as[(Int, Long, Long)].collect().map { case (b, d, f) => b -> ((d, f)) }.toMap
+    def manifest(): Map[Int, Long] =
+      spark.read.parquet(s"$out/manifest").select(col("partition_id"), col("docs"))
+        .as[(Int, Long)].collect().toMap
+
+    val s1 = ResumableRunner.run(spark, pages, out, "c1", numBuckets = 16)
+    val all = recount()
+    assert(s1.failures > 0, s"poisoned payloads must fail: $s1")
+    assert(s1.failures == all.values.map(_._2).sum && s1.docs == all.values.map(_._1).sum, s"$s1")
+    assert(s1.bucketsRun == all.size && s1.docsTotal == s1.docs)
+    assert(manifest() == all.map { case (b, (d, _)) => b -> d })
+
+    // resume half the buckets: the redone ones are counted again, the rest
+    // carried forward from the prior manifest
+    val schema = spark.read.parquet(s"$out/manifest").schema
+    val kept = spark.read.parquet(s"$out/manifest").filter(col("partition_id") < 8).collect()
+    spark.createDataFrame(spark.sparkContext.parallelize(kept.toSeq), schema)
+      .write.mode("overwrite").parquet(s"$out/manifest")
+    val s2 = ResumableRunner.run(spark, pages, out, "c2", numBuckets = 16)
+    val redone = recount().filter(_._1 >= 8)
+    assert(s2.bucketsRun == redone.size && s2.docs == redone.values.map(_._1).sum &&
+      s2.failures == redone.values.map(_._2).sum, s"$s2 vs $redone")
+    assert(s2.docsTotal == s1.docs)
+    assert(manifest() == recount().map { case (b, (d, _)) => b -> d })
+  }
+
+  test("a fresh run never scans results/: one extraction job plus the manifest write") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.datasources.v2.FileScan
+    val out = Files.createTempDirectory("graft_noscan").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = plans.add(qe.executedPlan)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ResumableRunner.run(spark, Corpus.materialize(spark, sfDir), out, "n1", numBuckets = 16)
+      // listener events arrive in order: once the manifest write is seen,
+      // every query the run executed has been seen
+      val manifestWrite = s"InsertIntoHadoopFsRelationCommand file:$out/manifest"
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!plans.toArray.exists(_.toString.contains(manifestWrite)) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val seen = plans.toArray(Array.empty[SparkPlan]).toSeq
+      assert(seen.exists(_.toString.contains(manifestWrite)), seen.mkString("\n\n"))
+      assert(seen.exists(_.toString.contains(s"InsertIntoHadoopFsRelationCommand file:$out/results")))
+
+      val helper = new AdaptiveSparkPlanHelper {}
+      val scanned: Seq[String] = seen.flatMap { p =>
+        helper.collectWithSubqueries(p) {
+          case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+          case b: BatchScanExec => b.scan match {
+            case f: FileScan => f.fileIndex.rootPaths.map(_.toString)
+            case _ => Nil
+          }
+        }.flatten
+      }
+      val underResults = scanned.filter(_.contains(s"$out/results"))
+      assert(underResults.isEmpty, s"fresh run scanned its own output: ${underResults.take(4)}")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("skewed hot host is spread across shuffle partitions by salting") {
     val pages = Corpus.materialize(spark, sfDir, skewHost = true)
     val parts = 8

@@ -53,6 +53,21 @@ class WarcDataSourceSpec extends AnyFunSuite {
       (0L until 12L).map(WarcSource.targetUri).toSet)
   }
 
+  test("the reader factory every task deserializes carries the Hadoop conf by broadcast (< 16 KiB)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_factory").toFile
+    writeSegments(dir)
+    val df = spark.read.format("warc").load(dir.getAbsolutePath)
+    val scan = df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.head
+    val bytes = new java.io.ByteArrayOutputStream()
+    val oos = new java.io.ObjectOutputStream(bytes)
+    oos.writeObject(scan.readerFactory)
+    oos.close()
+    assert(bytes.size < 16 * 1024, s"serialized reader factory is ${bytes.size} bytes")
+    assert(df.count() == 12)
+  }
+
   test("glob paths and multi-path load resolve deterministically") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_glob").toFile
     writeSegments(dir)
