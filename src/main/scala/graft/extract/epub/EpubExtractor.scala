@@ -22,10 +22,6 @@ object EpubExtractor {
 
   val mimetype = "application/epub+zip"
 
-  def isEpub(zipBytes: Array[Byte]): Boolean =
-    DocxExtractor.readPart(zipBytes, "mimetype")
-      .exists(b => new String(b, StandardCharsets.UTF_8).trim == mimetype)
-
   def extract(zipBytes: Array[Byte]): String = {
     val chapters = spinePaths(zipBytes) match {
       case Some(paths) if paths.nonEmpty =>

@@ -2,6 +2,8 @@ package graft.fixtures
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import graft.util.MsbWriter
+
 /** Deterministic media payload generators for the real pure-JVM codecs
   * ([[graft.multimodal.MediaCodecs]]): BMP (8/24/32 bpp BI_RGB, or 8-bpp
   * BI_RLE8), binary PNM (P6 RGB / P5 gray), PNG (plain or Adam7), GIF
@@ -113,24 +115,14 @@ object MediaFixtures {
     * final flush mirrors the decoder's lagging dictionary so EOI is
     * written at the width the decoder will read it with). */
   def tiffLzwEncode(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    var bitBuf = 0L
-    var bitCnt = 0
+    val out = new MsbWriter
     var width = 9
-    def put(code: Int): Unit = {
-      bitBuf = (bitBuf << width) | code
-      bitCnt += width
-      while (bitCnt >= 8) {
-        out.write(((bitBuf >>> (bitCnt - 8)) & 0xff).toInt)
-        bitCnt -= 8
-      }
-    }
+    def put(code: Int): Unit = out.put(code, width)
     val Clear = 256
     val Eoi = 257
     if (data.isEmpty) { // empty strip (odd-height second strip): Clear + EOI
       put(Clear); put(Eoi)
-      if (bitCnt > 0) out.write(((bitBuf << (8 - bitCnt)) & 0xff).toInt)
-      return out.toByteArray
+      return out.toBytes
     }
     var dict = scala.collection.mutable.HashMap.empty[(Int, Int), Int]
     var nextCode = 258
@@ -167,8 +159,7 @@ object MediaFixtures {
     // then holds nextCode entries — grow when that hits the boundary
     if (nextCode == (1 << width) - 1 && width < 12) width += 1
     put(Eoi)
-    if (bitCnt > 0) out.write(((bitBuf << (8 - bitCnt)) & 0xff).toInt)
-    out.toByteArray
+    out.toBytes
   }
 
   /** Minimal ISO-BMFF movie: ftyp + moov(mvhd + trak(tkhd)) + empty mdat.

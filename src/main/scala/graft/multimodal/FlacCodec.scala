@@ -3,6 +3,7 @@ package graft.multimodal
 import java.io.ByteArrayOutputStream
 
 import graft.multimodal.AudioConvert.AudioBuf
+import graft.util.{BitReader, Crc, MsbReader, MsbWriter}
 
 /** FLAC codec — the `.flac` arm of the reference's audio output whitelist
   * (/root/reference/src/converters/audio_converters.py:45-47 and the
@@ -42,91 +43,26 @@ object FlacCodec {
 
   private val BlockSize = 4096
 
-  // ---- CRCs (FLAC frame polynomials) ----------------------------------------
+  // ---- FLAC's codes on top of the shared MSB-first bit IO --------------------
 
-  private val Crc8Table: Array[Int] = Array.tabulate(256) { b =>
-    var r = b
-    for (_ <- 0 until 8) r = if ((r & 0x80) != 0) ((r << 1) ^ 0x07) & 0xff else (r << 1) & 0xff
-    r
-  }
-  private val Crc16Table: Array[Int] = Array.tabulate(256) { b =>
-    var r = b << 8
-    for (_ <- 0 until 8)
-      r = if ((r & 0x8000) != 0) ((r << 1) ^ 0x8005) & 0xffff else (r << 1) & 0xffff
-    r
-  }
-  private[graft] def crc8(b: Array[Byte], from: Int, until: Int): Int = {
-    var r = 0
-    var i = from
-    while (i < until) { r = Crc8Table(r ^ (b(i) & 0xff)); i += 1 }
-    r
-  }
-  private[graft] def crc16(b: Array[Byte], from: Int, until: Int): Int = {
-    var r = 0
-    var i = from
-    while (i < until) { r = Crc16Table(((r >> 8) ^ (b(i) & 0xff)) & 0xff) ^ ((r << 8) & 0xffff); i += 1 }
-    r
-  }
+  private val truncated = BitReader.requireFailed("FLAC stream truncated")
 
-  // ---- MSB-first bit IO (FLAC is big-endian bit-packed) ----------------------
-
-  private[graft] final class MsbWriter {
-    private val out = new ByteArrayOutputStream()
-    private var acc = 0L
-    private var n = 0
-    def put(v: Long, bits: Int): Unit = {
-      require(bits >= 0 && bits <= 57, s"bit run $bits")
-      if (bits > 0) {
-        acc = (acc << bits) | (v & ((1L << bits) - 1))
-        n += bits
-        while (n >= 8) { out.write(((acc >>> (n - 8)) & 0xff).toInt); n -= 8 }
-      }
-    }
-    def putSigned(v: Int, bits: Int): Unit = put(v.toLong & ((1L << bits) - 1), bits)
-    /** Rice: unary quotient (q zeros, then 1) + k LSBs of the folded value. */
-    def putRice(residual: Int, k: Int): Unit = {
-      val fold = ((residual.toLong << 1) ^ (residual.toLong >> 63))
-      val q = (fold >>> k).toInt
-      var left = q
-      while (left >= 32) { put(0, 32); left -= 32 }
-      put(1, left + 1) // `left` zeros then the terminating 1
-      put(fold, k)
-    }
-    def alignByte(): Unit = if (n > 0) put(0, 8 - n)
-    def toBytes: Array[Byte] = { alignByte(); out.toByteArray }
+  /** Rice: unary quotient (q zeros, then 1) + k LSBs of the folded value. */
+  private[graft] def putRice(w: MsbWriter, residual: Int, k: Int): Unit = {
+    val fold = ((residual.toLong << 1) ^ (residual.toLong >> 63))
+    var left = (fold >>> k).toInt
+    while (left >= 32) { w.put(0, 32); left -= 32 }
+    w.put(1, left + 1) // `left` zeros then the terminating 1
+    w.put(fold & ((1L << k) - 1), k)
   }
-
-  private final class MsbReader(b: Array[Byte], start: Int) {
-    var pos: Int = start
-    private var bit = 0
-    def byteAligned: Boolean = bit == 0
-    def alignByte(): Unit = if (bit != 0) { bit = 0; pos += 1 }
-    def nextBit(): Int = {
-      require(pos < b.length, "FLAC stream truncated")
-      val r = (b(pos) >> (7 - bit)) & 1
-      bit += 1
-      if (bit == 8) { bit = 0; pos += 1 }
-      r
-    }
-    def read(bits: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < bits) { v = (v << 1) | nextBit(); i += 1 }
-      v
-    }
-    def readSigned(bits: Int): Int = {
-      val v = read(bits)
-      (v << (64 - bits) >> (64 - bits)).toInt
-    }
-    def readUnary(): Int = {
-      var q = 0
-      while (nextBit() == 0) { q += 1; require(q < (1 << 24), "runaway unary") }
-      q
-    }
-    def readRice(k: Int): Int = {
-      val fold = (readUnary().toLong << k) | read(k)
-      ((fold >>> 1) ^ -(fold & 1)).toInt
-    }
+  private def readUnary(in: MsbReader): Int = {
+    var q = 0
+    while (in.bit() == 0) { q += 1; require(q < (1 << 24), "runaway unary") }
+    q
+  }
+  private def readRice(in: MsbReader, k: Int): Int = {
+    val fold = (readUnary(in).toLong << k) | in.readLong(k)
+    ((fold >>> 1) ^ -(fold & 1)).toInt
   }
 
   // ---- shared small pieces ---------------------------------------------------
@@ -143,7 +79,7 @@ object FlacCodec {
     }
   }
   private def utf8Decode(in: MsbReader): Long = {
-    val first = in.read(8).toInt
+    val first = in.read(8)
     if ((first & 0x80) == 0) first.toLong
     else {
       var bytes = 0
@@ -152,7 +88,7 @@ object FlacCodec {
       require(bytes >= 1 && bytes <= 6, "bad UTF-8 frame number")
       var v = (first & (mask - 1)).toLong
       for (_ <- 0 until bytes) {
-        val cont = in.read(8).toInt
+        val cont = in.read(8)
         require((cont & 0xc0) == 0x80, "bad UTF-8 continuation in frame number")
         v = (v << 6) | (cont & 0x3f)
       }
@@ -307,7 +243,7 @@ object FlacCodec {
       val headBytes = w.toBytes // byte-aligned by construction
       val frame = new MsbWriter
       for (b <- headBytes) frame.put(b & 0xff, 8)
-      frame.put(crc8(headBytes, 0, headBytes.length), 8)
+      frame.put(Crc.flac8(headBytes, 0, headBytes.length), 8)
 
       var c = 0
       while (c < ch) {
@@ -317,7 +253,7 @@ object FlacCodec {
       frame.alignByte()
       val body = frame.toBytes
       out.write(body, 0, body.length)
-      val c16 = crc16(body, 0, body.length)
+      val c16 = Crc.flac16(body, 0, body.length)
       out.write((c16 >> 8) & 0xff); out.write(c16 & 0xff)
       done += n
       frameIdx += 1
@@ -379,7 +315,7 @@ object FlacCodec {
       w.put(0, 4)       // partition order 0
       w.put(plan.k, 4)
       j = order
-      while (j < n) { w.putRice(plan.res(j), plan.k); j += 1 }
+      while (j < n) { putRice(w, plan.res(j), plan.k); j += 1 }
     }
   }
 
@@ -416,18 +352,18 @@ object FlacCodec {
     val samples = new Array[Int](total.toInt * ch)
     var done = 0L
     while (done < total) {
-      val in = new MsbReader(bytes, at)
+      val in = new MsbReader(bytes, at, bytes.length, truncated)
       require(in.read(14) == 0x3ffe, s"lost FLAC frame sync at byte $at")
       require(in.read(1) == 0, "reserved frame-header bit set")
       in.read(1) // blocking strategy: frame vs sample number, both fine
-      val bsCode = in.read(4).toInt
-      val srCode = in.read(4).toInt
-      val chCode = in.read(4).toInt
+      val bsCode = in.read(4)
+      val srCode = in.read(4)
+      val chCode = in.read(4)
       require(chCode <= 10, s"reserved channel assignment $chCode")
       val decorrelated = chCode >= 8
       val frameCh = if (decorrelated) 2 else chCode + 1
       require(frameCh == ch, s"frame channels $frameCh != STREAMINFO $ch")
-      val ssCode = in.read(3).toInt
+      val ssCode = in.read(3)
       val frameBps = ssCode match {
         case 0 => bps
         case 1 => 8
@@ -442,8 +378,8 @@ object FlacCodec {
         case 0 => throw new IllegalArgumentException("reserved blocksize code")
         case 1 => 192
         case c if c <= 5 => 576 << (c - 2)
-        case 6 => in.read(8).toInt + 1
-        case 7 => in.read(16).toInt + 1
+        case 6 => in.read(8) + 1
+        case 7 => in.read(16) + 1
         case c => 256 << (c - 8)
       }
       srCode match {
@@ -452,9 +388,9 @@ object FlacCodec {
         case 15 => throw new IllegalArgumentException("invalid sample-rate code")
         case _ => () // table / from-STREAMINFO codes carry no payload
       }
-      val headEnd = in.pos // header is byte-aligned before the CRC byte
-      require(in.byteAligned, "FLAC frame header not byte-aligned")
-      require(in.read(8).toInt == crc8(bytes, at, headEnd), "FLAC header CRC-8 mismatch")
+      require((in.bitPos & 7) == 0, "FLAC frame header not byte-aligned")
+      val headEnd = in.bitPos >> 3 // header is byte-aligned before the CRC byte
+      require(in.read(8) == Crc.flac8(bytes, at, headEnd), "FLAC header CRC-8 mismatch")
       require(done + blockSize <= total, "FLAC frames overrun STREAMINFO total")
       // the side channel of a decorrelated pair is one bit deeper (it
       // carries l-r); which subframe is the side one depends on the code
@@ -494,9 +430,9 @@ object FlacCodec {
         }
       }
       in.alignByte()
-      val bodyEnd = in.pos
-      require(in.read(16).toInt == crc16(bytes, at, bodyEnd), "FLAC frame CRC-16 mismatch")
-      at = in.pos
+      val bodyEnd = in.bitPos >> 3
+      require(in.read(16) == Crc.flac16(bytes, at, bodyEnd), "FLAC frame CRC-16 mismatch")
+      at = in.bitPos >> 3
       done += blockSize
     }
     val want = new Array[Byte](16)
@@ -517,10 +453,10 @@ object FlacCodec {
 
   private def readSubframe(in: MsbReader, n: Int, fullBps: Int): Array[Int] = {
     require(in.read(1) == 0, "subframe padding bit set")
-    val tpe = in.read(6).toInt
+    val tpe = in.read(6)
     // wasted bits: samples are stored shifted right by `wasted` (the flag
     // is followed by unary-coded wasted-1) and shifted back after decode
-    val wasted = if (in.read(1) == 1) in.readUnary() + 1 else 0
+    val wasted = if (in.read(1) == 1) readUnary(in) + 1 else 0
     require(wasted < fullBps, s"$wasted wasted bits leave no sample bits")
     val bps = fullBps - wasted
     val x: Array[Int] = if (tpe == 0) {
@@ -542,7 +478,7 @@ object FlacCodec {
       val (qlp, shift) =
         if (tpe < 32) (FixedCoefs(order), 0)
         else {
-          val precision = in.read(4).toInt + 1
+          val precision = in.read(4) + 1
           require(precision <= 15, "invalid LPC coefficient precision 16")
           val sh = in.readSigned(5)
           require(sh >= 0, s"negative LPC shift $sh")
@@ -571,11 +507,11 @@ object FlacCodec {
 
   private def readResiduals(in: MsbReader, n: Int, order: Int,
                             res: Array[Int]): Unit = {
-    val method = in.read(2).toInt
+    val method = in.read(2)
     require(method <= 1, s"reserved residual method $method")
     val paramBits = if (method == 0) 4 else 5
     val escape = (1 << paramBits) - 1
-    val partOrder = in.read(4).toInt
+    val partOrder = in.read(4)
     val parts = 1 << partOrder
     require(n % parts == 0, "blocksize not divisible by partition count")
     val perPart = n / parts
@@ -584,14 +520,14 @@ object FlacCodec {
     var i = order
     while (p < parts) {
       val count = if (p == 0) perPart - order else perPart
-      val k = in.read(paramBits).toInt
+      val k = in.read(paramBits)
       if (k == escape) {
-        val raw = in.read(5).toInt
+        val raw = in.read(5)
         var j = 0
         while (j < count) { res(i) = if (raw == 0) 0 else in.readSigned(raw); i += 1; j += 1 }
       } else {
         var j = 0
-        while (j < count) { res(i) = in.readRice(k); i += 1; j += 1 }
+        while (j < count) { res(i) = readRice(in, k); i += 1; j += 1 }
       }
       p += 1
     }

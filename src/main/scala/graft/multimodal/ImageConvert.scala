@@ -3,6 +3,7 @@ package graft.multimodal
 import java.io.ByteArrayOutputStream
 
 import graft.multimodal.MediaCodecs.{ImageMeta, PixelBuf}
+import graft.util.LsbWriter
 
 /** Production image CONVERT surface — the reference's image direction
   * (/root/reference/src/converters/image_converters.py:118-137: open with
@@ -1144,15 +1145,9 @@ object ImageConvert {
     * emits Clear WITHOUT defining a 4096th entry. */
   private[graft] def gifLzwEncode(indices: Array[Byte]): Array[Byte] = {
     val minCodeSize = 8
-    val lzw = new ByteArrayOutputStream(indices.length / 2 + 64)
-    var bitBuf = 0
-    var bitCnt = 0
+    val lzw = new LsbWriter(indices.length / 2 + 64)
     var codeWidth = minCodeSize + 1
-    def put(code: Int): Unit = {
-      bitBuf |= code << bitCnt
-      bitCnt += codeWidth
-      while (bitCnt >= 8) { lzw.write(bitBuf & 0xff); bitBuf >>>= 8; bitCnt -= 8 }
-    }
+    def put(code: Int): Unit = lzw.put(code, codeWidth)
     val Clear = 1 << minCodeSize
     val Eoi = Clear + 1
     // dictionary: (prefix code << 8 | next byte) -> code
@@ -1194,7 +1189,6 @@ object ImageConvert {
     // boundary the decoder reads Eoi one bit wider
     if (nextCode == (1 << codeWidth) && codeWidth < 12) codeWidth += 1
     put(Eoi)
-    if (bitCnt > 0) lzw.write(bitBuf & 0xff)
-    lzw.toByteArray
+    lzw.toBytes
   }
 }

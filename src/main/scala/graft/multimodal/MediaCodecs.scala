@@ -19,6 +19,7 @@ package graft.multimodal
 object MediaCodecs {
 
   import graft.util.LittleEndian.{i32, u16}
+  import graft.util.{BigEndian, BitReader, LsbReader, MsbReader}
 
   /** `frames` > 1 for animated GIF and animated WebP. `pixelSum` covers
     * the FIRST frame (the Pillow convert-current-frame contract) for
@@ -470,6 +471,8 @@ object MediaCodecs {
     b.length >= 6 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8' &&
       (b(4) == '7' || b(4) == '9') && b(5) == 'a'
 
+  private val gifCodesEnd = BitReader.requireFailed("LZW stream exhausted mid-code")
+
   /** GIF87a/89a, the second compressed codec with a real decoder — and a
     * completely different decompressor than PNG's DEFLATE: variable-width
     * LSB-first LZW (9→12 bits, clear-code reset, KwKwK self-reference).
@@ -563,22 +566,7 @@ object MediaCodecs {
     val lastOf = new Array[Byte](4096)
     var nextCode = Eoi + 1
     var codeWidth = minCodeSize + 1
-    var bitPos = 0
-    def readCode(): Int = {
-      var v = 0
-      var got = 0
-      while (got < codeWidth) {
-        val byteAt = bitPos >>> 3
-        require(byteAt < lzw.length, "LZW stream exhausted mid-code")
-        val avail = 8 - (bitPos & 7)
-        val take = math.min(avail, codeWidth - got)
-        val chunk = ((lzw(byteAt) & 0xff) >>> (bitPos & 7)) & ((1 << take) - 1)
-        v |= chunk << got
-        got += take
-        bitPos += take
-      }
-      v
-    }
+    val codes = new LsbReader(lzw, 0, lzw.length, gifCodesEnd)
     // expand `code` into pixels (reversed chain), return its FIRST byte
     val stack = new Array[Byte](4096)
     def emit(code: Int): Byte = {
@@ -595,7 +583,7 @@ object MediaCodecs {
     var prev = -1
     var done = false
     while (!done) {
-      val code = readCode()
+      val code = codes.read(codeWidth)
       if (code == Eoi) done = true
       else if (code == Clear) { nextCode = Eoi + 1; codeWidth = minCodeSize + 1; prev = -1 }
       else if (prev < 0) { // first code after clear: must be a literal
@@ -686,6 +674,8 @@ object MediaCodecs {
     b.length >= 8 && ((b(0) == 'I' && b(1) == 'I' && b(2) == 42 && b(3) == 0) ||
       (b(0) == 'M' && b(1) == 'M' && b(2) == 0 && b(3) == 42))
 
+  private val tiffCodesEnd = BitReader.requireFailed("TIFF LZW stream exhausted mid-code")
+
   /** TIFF §13 LZW strip decode (MSB-first bit packing, EarlyChange):
     * 9→12-bit codes, Clear=256, EOI=257. The ONLY differences from the
     * GIF LZW in [[decodeGif]] are the bit order and the one-code-earlier
@@ -703,23 +693,7 @@ object MediaCodecs {
     val stack = new Array[Byte](4096)
     var nextCode = Eoi + 1
     var width = 9
-    var bitPos = from.toLong * 8
-    val bitEnd = until.toLong * 8
-    def readCode(): Int = {
-      require(bitPos + width <= bitEnd, "TIFF LZW stream exhausted mid-code")
-      var v = 0
-      var got = 0
-      while (got < width) {
-        val byteAt = (bitPos >>> 3).toInt
-        val avail = 8 - (bitPos & 7).toInt
-        val take = math.min(avail, width - got)
-        val chunk = ((bytes(byteAt) & 0xff) >>> (avail - take)) & ((1 << take) - 1)
-        v = (v << take) | chunk
-        got += take
-        bitPos += take
-      }
-      v
-    }
+    val codes = new MsbReader(bytes, from, until, tiffCodesEnd)
     var sum = 0L
     var out = 0L
     // expand `code` (reversed chain), return its FIRST byte
@@ -741,7 +715,7 @@ object MediaCodecs {
     var prev = -1
     var done = false
     while (!done) {
-      val code = readCode()
+      val code = codes.read(width)
       if (code == Eoi) done = true
       else if (code == Clear) { nextCode = Eoi + 1; width = 9; prev = -1 }
       else if (prev < 0) { // first code after clear: must be a literal
@@ -1213,19 +1187,17 @@ object MediaCodecs {
     * (movie duration/timescale, version 0 and 1 layouts) and `trak` →
     * `tkhd` (16.16 fixed-point presentation dimensions). Container
     * METADATA only — sample decode would need the actual video codecs. */
-  /** Shared ISO-BMFF primitives (parseMp4 AND parseHeif walk the same
-    * box grammar): big-endian reads with bounds checks, and the size +
-    * fourcc box walk incl. 64-bit largesize and size-0 to-enclosure-end. */
-  private def bmffU32(bytes: Array[Byte], i: Int): Long = be32(bytes, i)
-  private def bmffU16(bytes: Array[Byte], i: Int): Int = be16(bytes, i)
+  /** Shared ISO-BMFF box walk (parseMp4 AND parseHeif walk the same box
+    * grammar): size + fourcc headers incl. 64-bit largesize and size-0
+    * to-enclosure-end, read with the bounds-checked [[BigEndian]]. */
   private def bmffWalk(bytes: Array[Byte], from: Int, until: Int)
                       (f: (String, Int, Int) => Unit): Unit = {
     var i = from
     while (i + 8 <= until) {
-      var size = bmffU32(bytes, i)
+      var size = BigEndian.u32(bytes, i)
       val tpe = new String(bytes, i + 4, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
       var hdr = 8L
-      if (size == 1) { size = (bmffU32(bytes, i + 8) << 32) | bmffU32(bytes, i + 12); hdr = 16 }
+      if (size == 1) { size = (BigEndian.u32(bytes, i + 8) << 32) | BigEndian.u32(bytes, i + 12); hdr = 16 }
       else if (size == 0) size = until - i // box extends to the enclosure end
       require(size >= hdr && i + size <= until, s"ISO-BMFF box $tpe overruns enclosure")
       f(tpe, (i + hdr).toInt, (i + size).toInt)
@@ -1235,7 +1207,7 @@ object MediaCodecs {
 
   def parseMp4(bytes: Array[Byte]): Mp4Meta = {
     require(isMp4(bytes), "not an ISO-BMFF payload")
-    def u32(i: Int): Long = bmffU32(bytes, i)
+    def u32(i: Int): Long = BigEndian.u32(bytes, i)
     def u64(i: Int): Long = (u32(i) << 32) | u32(i + 4)
     def walk(from: Int, until: Int)(f: (String, Int, Int) => Unit): Unit =
       bmffWalk(bytes, from, until)(f)
@@ -1336,18 +1308,18 @@ object MediaCodecs {
         case ("pitm", ps, pe) =>
           val ver = bytes(ps) & 0xff
           require(pe - ps >= (if (ver == 0) 6 else 8), "pitm box too short")
-          primary = if (ver == 0) bmffU16(bytes, ps + 4) else bmffU32(bytes, ps + 4)
+          primary = if (ver == 0) BigEndian.u16(bytes, ps + 4) else BigEndian.u32(bytes, ps + 4)
         case ("iinf", is, ie) =>
           val ver = bytes(is) & 0xff
           require(ie - is >= (if (ver == 0) 6 else 8), "iinf box too short")
-          items = (if (ver == 0) bmffU16(bytes, is + 4) else bmffU32(bytes, is + 4)).toInt
+          items = (if (ver == 0) BigEndian.u16(bytes, is + 4) else BigEndian.u32(bytes, is + 4)).toInt
         case ("iprp", is, ie) => bmffWalk(bytes, is, ie) {
           case ("ipco", cs, ce) => bmffWalk(bytes, cs, ce) { (t, s2, e2) =>
             propTypes += t
             if (t == "ispe") {
               require(e2 - s2 >= 12, "ispe box too short")
-              val w = bmffU32(bytes, s2 + 4)
-              val h = bmffU32(bytes, s2 + 8)
+              val w = BigEndian.u32(bytes, s2 + 4)
+              val h = BigEndian.u32(bytes, s2 + 8)
               require(w > 0 && h > 0 && w <= 0x7fffffffL && h <= 0x7fffffffL,
                 s"bad ispe dimensions ${w}x$h")
               ispeDims(propTypes.length) = (w.toInt, h.toInt)
@@ -1357,7 +1329,7 @@ object MediaCodecs {
             require(ae - as0 >= 8, "ipma box too short")
             val ver = bytes(as0) & 0xff
             val wideIdx = (bytes(as0 + 3) & 0x01) != 0 // flags bit 0: 15-bit indices
-            val entries = bmffU32(bytes, as0 + 4)
+            val entries = BigEndian.u32(bytes, as0 + 4)
             var p = as0 + 8
             var e = 0L
             while (e < entries) {
@@ -1366,8 +1338,8 @@ object MediaCodecs {
               // bytes as associations (and maybe a thumbnail's property)
               val idWidth = if (ver < 1) 2 else 4
               require(p + idWidth + 1 <= ae, "ipma truncated (entry_count overruns box)")
-              val itemId = if (ver < 1) { val v = bmffU16(bytes, p); p += 2; v.toLong }
-                           else { val v = bmffU32(bytes, p); p += 4; v }
+              val itemId = if (ver < 1) { val v = BigEndian.u16(bytes, p); p += 2; v.toLong }
+                           else { val v = BigEndian.u32(bytes, p); p += 4; v }
               val n = bytes(p) & 0xff
               p += 1
               require(p + n * (if (wideIdx) 2 else 1) <= ae,
@@ -1376,7 +1348,7 @@ object MediaCodecs {
                 scala.collection.mutable.ArrayBuffer[Int]())
               var a = 0
               while (a < n) {
-                val idx = if (wideIdx) { val v = bmffU16(bytes, p) & 0x7fff; p += 2; v }
+                val idx = if (wideIdx) { val v = BigEndian.u16(bytes, p) & 0x7fff; p += 2; v }
                           else { val v = bytes(p) & 0x7f; p += 1; v }
                 props += idx
                 a += 1
@@ -1739,8 +1711,8 @@ object MediaCodecs {
   }
 
   def imageHeader(bytes: Array[Byte]): Option[HeaderMeta] = {
-    def u16be(i: Int) = bmffU16(bytes, i)
-    def u32be(i: Int) = bmffU32(bytes, i)
+    def u16be(i: Int) = BigEndian.u16(bytes, i)
+    def u32be(i: Int) = BigEndian.u32(bytes, i)
     def u16le(i: Int) = (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
     if (asciiAt(bytes, 0, "8BPS") && bytes.length >= 26 && u16be(4) == 1) {
       // PSD: height then width, u32be, at 14/18
@@ -1960,17 +1932,6 @@ object MediaCodecs {
   // decoded here; CRCs are not verified.
   // ==========================================================================
 
-  private def be16(b: Array[Byte], i: Int): Int = {
-    require(i >= 0 && i + 2 <= b.length, s"big-endian u16 read at $i out of bounds")
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  }
-  private def be32(b: Array[Byte], i: Int): Long = {
-    require(i >= 0 && i + 4 <= b.length, s"big-endian u32 read at $i out of bounds")
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-  }
-  private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
   // bounds-checked wrappers over the shared little-endian readers
   // (graft.util.LittleEndian owns the decoding in one copy)
   private def le32(b: Array[Byte], i: Int): Long = {
@@ -1982,22 +1943,9 @@ object MediaCodecs {
     graft.util.LittleEndian.i64(b, i)
   }
 
-  /** MSB-first bit cursor over a byte range — the framed-audio headers
-    * (AC-3/E-AC-3/DTS) pack fields at bit granularity. */
-  private final class BitCursor(b: Array[Byte], startByte: Int) {
-    private var pos = startByte * 8
-    def bits(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) {
-        val by = pos >> 3
-        require(by < b.length, "bitfield read past end of payload")
-        v = (v << 1) | ((b(by) >> (7 - (pos & 7))) & 1)
-        pos += 1; k += 1
-      }
-      v
-    }
-  }
+  /** End of data for the framed-audio header bit walks (AC-3/E-AC-3/DTS
+    * pack fields at bit granularity). */
+  private val headerBitsEnd = BitReader.requireFailed("bitfield read past end of payload")
 
   /** One header-metadata shape for the whole sweep. `channels == 0` means
     * the layout was NOT parsed (MLP/TrueHD channel assignment needs the
@@ -2023,11 +1971,11 @@ object MediaCodecs {
     * variants are named errors), sample rate, channels. */
   def parseAu(bytes: Array[Byte]): AuMeta = {
     require(isAu(bytes), "not a .au payload")
-    val off = be32(bytes, 4)
-    val size = be32(bytes, 8)
-    val enc = be32(bytes, 12).toInt
-    val rate = be32(bytes, 16).toInt
-    val ch = be32(bytes, 20).toInt
+    val off = BigEndian.u32(bytes, 4)
+    val size = BigEndian.u32(bytes, 8)
+    val enc = BigEndian.u32(bytes, 12).toInt
+    val rate = BigEndian.u32(bytes, 16).toInt
+    val ch = BigEndian.u32(bytes, 20).toInt
     require(off >= 24 && off <= bytes.length, s"AU data offset $off out of range")
     val data = if (size == 0xffffffffL) bytes.length - off else size
     require(data >= 0 && off + data <= bytes.length, "AU data size overruns payload")
@@ -2078,7 +2026,7 @@ object MediaCodecs {
 
   def isCaf(b: Array[Byte]): Boolean =
     b.length >= 8 && b(0) == 'c' && b(1) == 'a' && b(2) == 'f' && b(3) == 'f' &&
-      be16(b, 4) == 1 && be16(b, 6) == 0
+      BigEndian.u16(b, 4) == 1 && BigEndian.u16(b, 6) == 0
 
   /** CAF chunk walk: `desc` (f64be sample rate, 'lpcm' fourcc, format
     * flags — bit0 float, bit1 little-endian — and the packet/channel/bit
@@ -2093,25 +2041,25 @@ object MediaCodecs {
     while (i + 12 <= bytes.length && (channels == 0 || dataBytes < 0)) {
       val at = i.toInt
       val tpe = new String(bytes, at, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-      val size = be64(bytes, at + 4)
+      val size = BigEndian.i64(bytes, at + 4)
       require(size >= -1L, s"bad CAF chunk size $size")
       val bodyAt = i + 12
       if (tpe == "desc") {
         require(size >= 32 && bodyAt + 32 <= bytes.length, "CAF desc chunk truncated")
-        val rateBits = be64(bytes, at + 12)
+        val rateBits = BigEndian.i64(bytes, at + 12)
         val rateD = java.lang.Double.longBitsToDouble(rateBits)
         require(rateD > 0 && rateD <= 768000 && rateD == math.rint(rateD),
           s"bad CAF sample rate $rateD")
         rate = rateD.toInt
         val fmt = new String(bytes, at + 20, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
         require(fmt == "lpcm", s"CAF format '$fmt' unsupported (lpcm only)")
-        val flags = be32(bytes, at + 24)
+        val flags = BigEndian.u32(bytes, at + 24)
         require((flags & 1L) == 0, "CAF float LPCM unsupported")
         little = (flags & 2L) != 0
-        val bytesPerPacket = be32(bytes, at + 28)
-        val framesPerPacket = be32(bytes, at + 32)
-        channels = be32(bytes, at + 36).toInt
-        bits = be32(bytes, at + 40).toInt
+        val bytesPerPacket = BigEndian.u32(bytes, at + 28)
+        val framesPerPacket = BigEndian.u32(bytes, at + 32)
+        channels = BigEndian.u32(bytes, at + 36).toInt
+        bits = BigEndian.u32(bytes, at + 40).toInt
         require(channels >= 1 && channels <= 64, s"bad CAF channel count $channels")
         require(bits == 8 || bits == 16, s"CAF $bits-bit LPCM unsupported (8/16)")
         require(framesPerPacket == 1 && bytesPerPacket == channels.toLong * (bits / 8),
@@ -2413,12 +2361,12 @@ object MediaCodecs {
     require(fscod0 < 3, "bad AC-3 fscod")
     val rate = Ac3Rates(fscod0)
     // acmod + the acmod-dependent mix-level fields, then lfeon (bit walk)
-    val bc = new BitCursor(bytes, 6)
-    val acmod = bc.bits(3)
-    if ((acmod & 1) != 0 && acmod != 1) bc.bits(2) // cmixlev
-    if ((acmod & 4) != 0) bc.bits(2) // surmixlev
-    if (acmod == 2) bc.bits(2) // dsurmod
-    val lfeon = bc.bits(1)
+    val bc = new MsbReader(bytes, 6, bytes.length, headerBitsEnd)
+    val acmod = bc.read(3)
+    if ((acmod & 1) != 0 && acmod != 1) bc.read(2) // cmixlev
+    if ((acmod & 4) != 0) bc.read(2) // surmixlev
+    if (acmod == 2) bc.read(2) // dsurmod
+    val lfeon = bc.read(1)
     val channels = Ac3FullBw(acmod) + lfeon
     var frames = 0L
     var i = 0
@@ -2486,14 +2434,14 @@ object MediaCodecs {
   def parseDts(bytes: Array[Byte]): AudioHeaderMeta = {
     require(isDts(bytes), "not a DTS core payload")
     def header(i: Int): (Int, Int, Int, Int) = {
-      val bc = new BitCursor(bytes, i + 4)
-      bc.bits(1) // frame type
-      bc.bits(5) // deficit sample count
-      bc.bits(1) // crc present
-      val nblks = bc.bits(7)
-      val fsize = bc.bits(14)
-      val amode = bc.bits(6)
-      val sfreq = bc.bits(4)
+      val bc = new MsbReader(bytes, i + 4, bytes.length, headerBitsEnd)
+      bc.read(1) // frame type
+      bc.read(5) // deficit sample count
+      bc.read(1) // crc present
+      val nblks = bc.read(7)
+      val fsize = bc.read(14)
+      val amode = bc.read(6)
+      val sfreq = bc.read(4)
       require(fsize >= 95, s"bad DTS frame size ${fsize + 1}")
       (nblks, fsize + 1, amode, sfreq)
     }
@@ -2656,8 +2604,8 @@ object MediaCodecs {
       v
     }
     def floatAt(i: Int, len: Int): Double = len match {
-      case 4 => java.lang.Float.intBitsToFloat(be32(bytes, i).toInt).toDouble
-      case 8 => java.lang.Double.longBitsToDouble(be64(bytes, i))
+      case 4 => java.lang.Float.intBitsToFloat(BigEndian.u32(bytes, i).toInt).toDouble
+      case 8 => java.lang.Double.longBitsToDouble(BigEndian.i64(bytes, i))
       case n => throw new IllegalArgumentException(s"EBML float of width $n")
     }
     var docType = "matroska" // the EBML default when DocType is absent

@@ -2,6 +2,8 @@ package graft.multimodal
 
 import scala.collection.mutable
 
+import graft.util.MsbReader
+
 /** From-scratch MPEG-1/2 Layer III (mp3) sample decoder.
   *
   * Closes the largest remaining pydub-parity gap (the reference loads mp3
@@ -32,26 +34,11 @@ import scala.collection.mutable
 object Mp3Codec {
   import Mp3Tables._
 
-  // ---- bit reader (MSB first) ----
-  private final class Bits(val b: Array[Byte], var pos: Int) {
-    def get(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        val byte = b(pos >> 3)
-        v = (v << 1) | ((byte >> (7 - (pos & 7))) & 1)
-        pos += 1
-        i += 1
-      }
-      v
-    }
-    def get1(): Int = {
-      val byte = b(pos >> 3)
-      val v = (byte >> (7 - (pos & 7))) & 1
-      pos += 1
-      v
-    }
-  }
+  // Bit reads (MSB-first) are bounded only by the array. A read past it is
+  // an index error, never an IllegalArgumentException that the count1
+  // loop's catch would swallow.
+  private val pastArray: () => Nothing =
+    () => throw new ArrayIndexOutOfBoundsException("mp3 bit read past end of data")
 
   private def err(msg: String): Nothing = throw new IllegalArgumentException("mp3: " + msg)
 
@@ -115,20 +102,20 @@ object Mp3Codec {
                                val scfsi: Array[Array[Int]],
                                val granules: Array[Array[Gran]])
 
-  private def parseSideInfo(hd: Hdr, bits: Bits): SideInfo = {
+  private def parseSideInfo(hd: Hdr, bits: MsbReader): SideInfo = {
     val nch = hd.channels
     var mdb = 0
     var scfsi: Array[Array[Int]] = null
     var ngr = 0
     if (hd.lsf) {
-      mdb = bits.get(8)
-      bits.get(if (nch == 1) 1 else 2)
+      mdb = bits.read(8)
+      bits.read(if (nch == 1) 1 else 2)
       ngr = 1
       scfsi = Array.fill(nch)(Array(0, 0, 0, 0))
     } else {
-      mdb = bits.get(9)
-      bits.get(if (nch == 1) 5 else 3)
-      scfsi = Array.fill(nch)(Array.fill(4)(bits.get1()))
+      mdb = bits.read(9)
+      bits.read(if (nch == 1) 5 else 3)
+      scfsi = Array.fill(nch)(Array.fill(4)(bits.bit()))
       ngr = 2
     }
     val grs = Array.ofDim[Gran](ngr, nch)
@@ -137,33 +124,33 @@ object Mp3Codec {
       var c = 0
       while (c < nch) {
         val g = new Gran
-        g.part23 = bits.get(12)
-        g.bigValues = bits.get(9)
+        g.part23 = bits.read(12)
+        g.bigValues = bits.read(9)
         if (g.bigValues > 288) err(s"big_values ${g.bigValues} > 288")
-        g.globalGain = bits.get(8)
-        g.scalefacCompress = bits.get(if (hd.lsf) 9 else 4)
-        g.windowSwitching = bits.get1() == 1
+        g.globalGain = bits.read(8)
+        g.scalefacCompress = bits.read(if (hd.lsf) 9 else 4)
+        g.windowSwitching = bits.bit() == 1
         if (g.windowSwitching) {
-          g.blockType = bits.get(2)
+          g.blockType = bits.read(2)
           if (g.blockType == 0) err("window_switching with block_type 0 is forbidden")
-          g.mixed = bits.get1()
-          g.tableSelect(0) = bits.get(5)
-          g.tableSelect(1) = bits.get(5)
+          g.mixed = bits.bit()
+          g.tableSelect(0) = bits.read(5)
+          g.tableSelect(1) = bits.read(5)
           var w = 0
-          while (w < 3) { g.subblockGain(w) = bits.get(3); w += 1 }
+          while (w < 3) { g.subblockGain(w) = bits.read(3); w += 1 }
           g.region0Count = 7
           g.region1Count = 36
         } else {
           g.blockType = 0
           g.mixed = 0
           var r = 0
-          while (r < 3) { g.tableSelect(r) = bits.get(5); r += 1 }
-          g.region0Count = bits.get(4)
-          g.region1Count = bits.get(3)
+          while (r < 3) { g.tableSelect(r) = bits.read(5); r += 1 }
+          g.region0Count = bits.read(4)
+          g.region1Count = bits.read(3)
         }
-        g.preflag = if (hd.lsf) 0 else bits.get1()
-        g.scalefacScale = bits.get1()
-        g.count1Table = bits.get1()
+        g.preflag = if (hd.lsf) 0 else bits.bit()
+        g.scalefacScale = bits.bit()
+        g.count1Table = bits.bit()
         grs(g0)(c) = g
         c += 1
       }
@@ -173,7 +160,7 @@ object Mp3Codec {
   }
 
   // ---- scalefactors ----
-  private def readScalefacsMpeg1(bits: Bits, g: Gran, scfsi: Array[Int],
+  private def readScalefacsMpeg1(bits: MsbReader, g: Gran, scfsi: Array[Int],
                                  gr: Int, prev: Array[Int]): (Array[Int], Array[Array[Int]]) = {
     val sl1 = slen1(g.scalefacCompress)
     val sl2 = slen2(g.scalefacCompress)
@@ -182,28 +169,28 @@ object Mp3Codec {
     if (g.windowSwitching && g.blockType == 2) {
       if (g.mixed == 1) {
         var sfb = 0
-        while (sfb < 8) { sfl(sfb) = bits.get(sl1); sfb += 1 }
+        while (sfb < 8) { sfl(sfb) = bits.read(sl1); sfb += 1 }
         sfb = 3
         while (sfb < 6) {
           var w = 0
-          while (w < 3) { sfs(sfb)(w) = bits.get(sl1); w += 1 }
+          while (w < 3) { sfs(sfb)(w) = bits.read(sl1); w += 1 }
           sfb += 1
         }
         while (sfb < 12) {
           var w = 0
-          while (w < 3) { sfs(sfb)(w) = bits.get(sl2); w += 1 }
+          while (w < 3) { sfs(sfb)(w) = bits.read(sl2); w += 1 }
           sfb += 1
         }
       } else {
         var sfb = 0
         while (sfb < 6) {
           var w = 0
-          while (w < 3) { sfs(sfb)(w) = bits.get(sl1); w += 1 }
+          while (w < 3) { sfs(sfb)(w) = bits.read(sl1); w += 1 }
           sfb += 1
         }
         while (sfb < 12) {
           var w = 0
-          while (w < 3) { sfs(sfb)(w) = bits.get(sl2); w += 1 }
+          while (w < 3) { sfs(sfb)(w) = bits.read(sl2); w += 1 }
           sfb += 1
         }
       }
@@ -219,7 +206,7 @@ object Mp3Codec {
           while (sfb < hi(gi)) { sfl(sfb) = prev(sfb); sfb += 1 }
         } else {
           var sfb = lo(gi)
-          while (sfb < hi(gi)) { sfl(sfb) = bits.get(sl(gi)); sfb += 1 }
+          while (sfb < hi(gi)) { sfl(sfb) = bits.read(sl(gi)); sfb += 1 }
         }
         gi += 1
       }
@@ -227,7 +214,7 @@ object Mp3Codec {
     (sfl, sfs)
   }
 
-  private def readScalefacsLsf(bits: Bits, g: Gran): (Array[Int], Array[Array[Int]]) = {
+  private def readScalefacsLsf(bits: MsbReader, g: Gran): (Array[Int], Array[Array[Int]]) = {
     val sc = g.scalefacCompress
     var blk = 0
     val slen = new Array[Int](4)
@@ -256,7 +243,7 @@ object Mp3Codec {
     var part = 0
     while (part < 4) {
       var i = 0
-      while (i < nr(part)) { raw += bits.get(slen(part)); i += 1 }
+      while (i < nr(part)) { raw += bits.read(slen(part)); i += 1 }
       part += 1
     }
     val sfl = new Array[Int](22)
@@ -320,12 +307,12 @@ object Mp3Codec {
   }
 
   /** bit-serial codeword match; returns (x << 8 | y). */
-  private def decodeCodeword(bits: Bits, idx: java.util.HashMap[Integer, Integer], limit: Int): Int = {
+  private def decodeCodeword(bits: MsbReader, idx: java.util.HashMap[Integer, Integer], limit: Int): Int = {
     var code = 0
     var length = 0
     while (true) {
-      if (bits.pos >= limit) err("huffman codeword ran past part2_3_length")
-      code = (code << 1) | bits.get1()
+      if (bits.bitPos >= limit) err("huffman codeword ran past part2_3_length")
+      code = (code << 1) | bits.bit()
       length += 1
       val hit = idx.getOrDefault((length << 24) | code, 0)
       if (hit != 0) return hit - 1
@@ -347,7 +334,7 @@ object Mp3Codec {
   }
 
   /** returns (ix, zeroBound). */
-  private def readHuffman(bits: Bits, hd: Hdr, g: Gran, part2Start: Int,
+  private def readHuffman(bits: MsbReader, hd: Hdr, g: Gran, part2Start: Int,
                           allowRepaired: Boolean): (Array[Int], Int) = {
     val limit = part2Start + g.part23
     val ix = new Array[Int](576)
@@ -373,10 +360,10 @@ object Mp3Codec {
         val xy = decodeCodeword(bits, pairIndex(lens, codes), limit)
         var x = xy >> 8
         var y = xy & 0xff
-        if (x == 15 && linbits > 0) x += bits.get(linbits)
-        if (x != 0 && bits.get1() == 1) x = -x
-        if (y == 15 && linbits > 0) y += bits.get(linbits)
-        if (y != 0 && bits.get1() == 1) y = -y
+        if (x == 15 && linbits > 0) x += bits.read(linbits)
+        if (x != 0 && bits.bit() == 1) x = -x
+        if (y == 15 && linbits > 0) y += bits.read(linbits)
+        if (y != 0 && bits.bit() == 1) y = -y
         ix(i) = x
         ix(i + 1) = y
         i += 2
@@ -387,24 +374,24 @@ object Mp3Codec {
     val c1Codes = if (g.count1Table == 1) Array(count1BCodes) else Array(count1ACodes)
     val c1Idx = pairIndex(c1Lens, c1Codes)
     var break = false
-    while (!break && bits.pos < limit && i <= 572) {
-      val mark = bits.pos
+    while (!break && bits.bitPos < limit && i <= 572) {
+      val mark = bits.bitPos
       var v = -1
       try v = decodeCodeword(bits, c1Idx, limit) & 0xff
-      catch { case _: IllegalArgumentException => bits.pos = mark; break = true }
+      catch { case _: IllegalArgumentException => bits.bitPos = mark; break = true }
       if (!break) {
         val vals = Array((v >> 3) & 1, (v >> 2) & 1, (v >> 1) & 1, v & 1)
         var ok = true
         var q = 0
         while (ok && q < 4) {
           if (vals(q) != 0) {
-            if (bits.pos >= limit) ok = false
-            else if (bits.get1() == 1) vals(q) = -1
+            if (bits.bitPos >= limit) ok = false
+            else if (bits.bit() == 1) vals(q) = -1
           }
           q += 1
         }
-        if (!ok || bits.pos > limit) {
-          bits.pos = mark
+        if (!ok || bits.bitPos > limit) {
+          bits.bitPos = mark
           break = true
         } else {
           var q2 = 0
@@ -413,7 +400,7 @@ object Mp3Codec {
         }
       }
     }
-    bits.pos = limit
+    bits.bitPos = limit
     (ix, i)
   }
 
@@ -719,7 +706,7 @@ object Mp3Codec {
           err("sample rate / channel change mid-stream")
         val sideLen = if (hd.lsf) (if (nch == 1) 9 else 17) else (if (nch == 1) 17 else 32)
         val off = pos + 4 + (if (hd.crc) 2 else 0)
-        val si = parseSideInfo(hd, new Bits(data, off * 8))
+        val si = parseSideInfo(hd, new MsbReader(data, off, data.length, pastArray))
         val mainThis = java.util.Arrays.copyOfRange(data, off + sideLen, pos + hd.frameLen)
         val mdb = si.mainDataBegin
         val res = reservoir.toByteArray
@@ -727,7 +714,7 @@ object Mp3Codec {
           val main = new Array[Byte](mdb + mainThis.length)
           System.arraycopy(res, res.length - mdb, main, 0, mdb)
           System.arraycopy(mainThis, 0, main, mdb, mainThis.length)
-          val bits = new Bits(main, 0)
+          val bits = new MsbReader(main, 0, main.length, pastArray)
           val ngr = if (hd.lsf) 1 else 2
           var gr = 0
           while (gr < ngr) {
@@ -737,10 +724,11 @@ object Mp3Codec {
             var ch = 0
             while (ch < nch) {
               val g = grs(ch)
-              val part2Start = bits.pos
-              // Bits reads unchecked; a corrupt length would otherwise run
-              // off the array (a check inside Bits would be swallowed by the
-              // count1 loop's catch)
+              val part2Start = bits.bitPos
+              // bit reads are bounded only by the array, so a corrupt length
+              // is named here (a bounds error raised as an
+              // IllegalArgumentException would be swallowed by the count1
+              // loop's catch)
               if (part2Start + g.part23 > main.length * 8)
                 err(s"part2_3_length ${g.part23} exceeds the " +
                   s"${main.length * 8 - part2Start} main-data bits left in reservoir + frame")

@@ -2,6 +2,8 @@ package graft.multimodal
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import graft.util.{Crc, LittleEndian, LsbReader}
+
 /** Pure-JVM Ogg Vorbis DECODER (Vorbis I + RFC 3533 Ogg framing).
   *
   * The reference converter loads ogg payloads through pydub/ffmpeg
@@ -112,42 +114,13 @@ object VorbisCodec {
   }
 
   // -------------------------------------------------------------- bits --
-  /** Vorbis bitpacker convention: LSb-first within each byte; Huffman
-    * codewords are the one MSb-first entity (spec 2 / 3.2.1). */
-  private[multimodal] final class BitReader(data: Array[Byte]) {
-    var pos: Int = 0
-    private val nbits = data.length * 8
-    def read(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        if (pos >= nbits) throw new Eop
-        val bit = (data(pos >> 3) >> (pos & 7)) & 1
-        v |= bit << i
-        pos += 1
-        i += 1
-      }
-      v
-    }
-    def readLong(n: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        if (pos >= nbits) throw new Eop
-        val bit = ((data(pos >> 3) >> (pos & 7)) & 1).toLong
-        v |= bit << i
-        pos += 1
-        i += 1
-      }
-      v
-    }
-    def readBit(): Int = {
-      if (pos >= nbits) throw new Eop
-      val bit = (data(pos >> 3) >> (pos & 7)) & 1
-      pos += 1
-      bit
-    }
-  }
+  private val endOfPacket: () => Nothing = () => throw new Eop
+
+  /** Vorbis bitpacker convention (spec 2): LSb-first within each byte;
+    * Huffman codewords are the one MSb-first entity, read bit by bit. A
+    * read past the packet's end is [[Eop]]. */
+  private[multimodal] def packetBits(p: Array[Byte]): LsbReader =
+    new LsbReader(p, 0, p.length, endOfPacket)
 
   /** spec 9.2.1. */
   private[multimodal] def ilog(x0: Int): Int = {
@@ -175,46 +148,11 @@ object VorbisCodec {
   }
 
   // --------------------------------------------------------------- ogg --
-  private val crcTable: Array[Int] = {
-    val tab = new Array[Int](256)
-    var i = 0
-    while (i < 256) {
-      var r = i << 24
-      var k = 0
-      while (k < 8) {
-        r = if ((r & 0x80000000) != 0) (r << 1) ^ 0x04C11DB7 else r << 1
-        k += 1
-      }
-      tab(i) = r
-      i += 1
-    }
-    tab
-  }
-
-  private[multimodal] def oggCrc(data: Array[Byte], from: Int, until: Int,
-                     zeroCrcField: Int): Int = {
-    var r = 0
-    var i = from
-    while (i < until) {
-      // the 4 CRC bytes participate as zeros (RFC 3533)
-      val b = if (i >= zeroCrcField && i < zeroCrcField + 4) 0
-              else data(i) & 0xFF
-      r = (r << 8) ^ crcTable(((r >>> 24) & 0xFF) ^ b)
-      i += 1
-    }
-    r
-  }
-
-  private def le32(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8) |
-      ((b(at + 2) & 0xFF) << 16) | ((b(at + 3) & 0xFF) << 24)
-
-  private def le64(b: Array[Byte], at: Int): Long =
-    (le32(b, at).toLong & 0xFFFFFFFFL) | (le32(b, at + 4).toLong << 32)
+  private val ZeroCrcField = new Array[Byte](4)
 
   /** RFC 3533 page walk of the FIRST logical stream: reassembled
     * packets + (packetIndex, granule) per completing page. */
-  private def oggPackets(data: Array[Byte])
+  private[graft] def oggPackets(data: Array[Byte])
       : (Vector[Array[Byte]], Vector[(Int, Long)]) = {
     val packets = Vector.newBuilder[Array[Byte]]
     var npackets = 0
@@ -233,10 +171,10 @@ object VorbisCodec {
         "ogg: capture pattern missing")
       need(data(pos + 4) == 0, "ogg: stream structure version != 0")
       val htype = data(pos + 5) & 0xFF
-      val granule = le64(data, pos + 6)
-      val ser = le32(data, pos + 14)
-      val seq = le32(data, pos + 18)
-      val crc = le32(data, pos + 22)
+      val granule = LittleEndian.i64(data, pos + 6)
+      val ser = LittleEndian.i32(data, pos + 14)
+      val seq = LittleEndian.i32(data, pos + 18)
+      val crc = LittleEndian.i32(data, pos + 22)
       val nsegs = data(pos + 26) & 0xFF
       need(pos + 27 + nsegs <= data.length, "ogg: segment table truncated")
       var bodyLen = 0
@@ -247,7 +185,9 @@ object VorbisCodec {
       }
       val bodyAt = pos + 27 + nsegs
       need(bodyAt + bodyLen <= data.length, "ogg: page body truncated")
-      need(oggCrc(data, pos, bodyAt + bodyLen, pos + 22) == crc,
+      // the 4 CRC bytes participate as zeros (RFC 3533)
+      val headCrc = Crc.ogg.update(Crc.ogg(data, pos, pos + 22), ZeroCrcField, 0, 4)
+      need(Crc.ogg.update(headCrc, data, pos + 26, bodyAt + bodyLen) == crc,
         "ogg: page CRC mismatch")
       if (!haveSerial) {
         need((htype & 0x02) != 0, "ogg: first page lacks BOS flag")
@@ -325,19 +265,19 @@ object VorbisCodec {
   }
 
   // ------------------------------------------------------------ codebook --
-  private[multimodal] final class Codebook(br: BitReader) {
+  private[multimodal] final class Codebook(br: LsbReader) {
     need(br.read(24) == 0x564342, "codebook sync pattern missing")
     val dims: Int = br.read(16)
     val entries: Int = br.read(24)
     need(dims > 0, "codebook with zero dimensions")
     need(entries > 0, "codebook with zero entries")
     val lengths: Array[Int] = new Array[Int](entries)
-    if (br.readBit() == 0) {
-      val sparse = br.readBit()
+    if (br.bit() == 0) {
+      val sparse = br.bit()
       var e = 0
       while (e < entries) {
         if (sparse == 1) {
-          if (br.readBit() == 1) lengths(e) = br.read(5) + 1
+          if (br.bit() == 1) lengths(e) = br.read(5) + 1
         } else lengths(e) = br.read(5) + 1
         e += 1
       }
@@ -392,7 +332,7 @@ object VorbisCodec {
       minv = float32Unpack(br.readLong(32))
       delta = float32Unpack(br.readLong(32))
       val vbits = br.read(4) + 1
-      seqP = br.readBit() == 1
+      seqP = br.bit() == 1
       quantvals =
         if (lookup == 1) lookup1Values(entries, dims) else entries * dims
       mult = new Array[Int](quantvals)
@@ -400,16 +340,16 @@ object VorbisCodec {
       while (q < quantvals) { mult(q) = br.read(vbits); q += 1 }
     }
 
-    def decodeScalar(br: BitReader): Int = {
+    def decodeScalar(br: LsbReader): Int = {
       if (single >= 0) {
         var i = 0
-        while (i < lengths(single)) { br.readBit(); i += 1 }
+        while (i < lengths(single)) { br.bit(); i += 1 }
         return single
       }
       var code = 0L
       var ln = 0
       while (ln <= maxlen) {
-        code = (code << 1) | br.readBit()
+        code = (code << 1) | br.bit()
         ln += 1
         val e = dec.get((ln.toLong << 32) | code)
         if (e != null) return e.intValue()
@@ -506,7 +446,7 @@ object VorbisCodec {
     }
   }
 
-  private[multimodal] final class Floor1(br: BitReader, books: Array[Codebook]) {
+  private[multimodal] final class Floor1(br: LsbReader, books: Array[Codebook]) {
     val partitions: Int = br.read(5)
     val classList: Array[Int] =
       Array.fill(partitions)(br.read(4))
@@ -559,8 +499,8 @@ object VorbisCodec {
     val range: Int = Array(256, 128, 86, 64)(multiplier - 1)
 
     /** spec 7.2.3: the transmitted post vals, or null (unused). */
-    def decode(br: BitReader, books: Array[Codebook]): Array[Int] = {
-      if (br.readBit() == 0) return null
+    def decode(br: LsbReader, books: Array[Codebook]): Array[Int] = {
+      if (br.bit() == 0) return null
       val rbits = ilog(range - 1)
       val ys = new Array[Int](xs.length)
       ys(0) = br.read(rbits)
@@ -652,7 +592,7 @@ object VorbisCodec {
   }
 
   // -------------------------------------------------------------- residue --
-  private final class Residue(br: BitReader, val rtype: Int,
+  private final class Residue(br: LsbReader, val rtype: Int,
                               books: Array[Codebook]) {
     val begin: Int = br.read(24)
     val end: Int = br.read(24)
@@ -662,7 +602,7 @@ object VorbisCodec {
     need(classbook < books.length, "residue classbook out of range")
     val cascade: Array[Int] = Array.fill(classifications) {
       val low = br.read(3)
-      val high = if (br.readBit() == 1) br.read(5) else 0
+      val high = if (br.bit() == 1) br.read(5) else 0
       (high << 3) | low
     }
     val booksMtx: Array[Array[Int]] = Array.tabulate(classifications) { c =>
@@ -683,7 +623,7 @@ object VorbisCodec {
     }
 
     /** spec 8.6.2; vectors per channel, each of length n. */
-    def decode(br: BitReader, books: Array[Codebook],
+    def decode(br: LsbReader, books: Array[Codebook],
                doNotDecode: Array[Boolean], n: Int): Array[Array[Double]] = {
       val ch = doNotDecode.length
       if (rtype == 2) {
@@ -706,7 +646,7 @@ object VorbisCodec {
       }
     }
 
-    private def decodeCore(br: BitReader, books: Array[Codebook],
+    private def decodeCore(br: LsbReader, books: Array[Codebook],
                            doNotDecode: Array[Boolean], n: Int,
                            vectors: Array[Array[Double]]): Unit = {
       val limitBegin = math.min(begin, n)
@@ -728,7 +668,7 @@ object VorbisCodec {
       }
     }
 
-    private def passes(br: BitReader, books: Array[Codebook],
+    private def passes(br: LsbReader, books: Array[Codebook],
                        doNotDecode: Array[Boolean], cb: Codebook,
                        classwords: Int, parts: Int,
                        cls: Array[Array[Int]],
@@ -783,7 +723,7 @@ object VorbisCodec {
       }
     }
 
-    private def partition(br: BitReader, book: Codebook,
+    private def partition(br: LsbReader, book: Codebook,
                           vec: Array[Double], offset: Int, fmt0: Boolean,
                           tmp: Array[Double]): Unit = {
       val dim = book.dims
@@ -820,12 +760,12 @@ object VorbisCodec {
   }
 
   // -------------------------------------------------------------- mapping --
-  private final class Mapping(br: BitReader, channels: Int, nfloors: Int,
+  private final class Mapping(br: LsbReader, channels: Int, nfloors: Int,
                               nresidues: Int) {
     need(br.read(16) == 0, "reserved mapping type")
-    val submaps: Int = if (br.readBit() == 1) br.read(4) + 1 else 1
+    val submaps: Int = if (br.bit() == 1) br.read(4) + 1 else 1
     val coupling: Array[(Int, Int)] =
-      if (br.readBit() == 1) {
+      if (br.bit() == 1) {
         val steps = br.read(8) + 1
         val bits = ilog(channels - 1)
         Array.fill(steps) {
@@ -966,10 +906,10 @@ object VorbisCodec {
     var n1 = 0
     locally {
       val p = packets(0)
-      val br = new BitReader(p)
+      val br = packetBits(p)
       need(br.read(8) == 1, "first packet is not an ident header")
       need(hasMagic(p), "ident header magic missing")
-      br.pos = 7 * 8
+      br.bitPos = 7 * 8
       need(br.readLong(32) == 0L, "vorbis_version != 0")
       channels = br.read(8)
       rate = br.readLong(32).toInt
@@ -983,7 +923,7 @@ object VorbisCodec {
       n1 = 1 << b1
       need(n0 >= 64 && n1 <= 8192, "blocksize outside [64, 8192]")
       need(n0 <= n1, "blocksize_0 > blocksize_1")
-      need(br.readBit() == 1, "ident framing bit unset")
+      need(br.bit() == 1, "ident framing bit unset")
     }
     private def hasMagic(p: Array[Byte]): Boolean =
       p.length >= 7 && p(1) == 'v' && p(2) == 'o' && p(3) == 'r' &&
@@ -993,28 +933,28 @@ object VorbisCodec {
     var comments: Vector[String] = Vector.empty
     locally {
       val p = packets(1)
-      val br = new BitReader(p)
+      val br = packetBits(p)
       need(br.read(8) == 3, "second packet is not a comment header")
       need(hasMagic(p), "comment header magic missing")
-      br.pos = 7 * 8
+      br.bitPos = 7 * 8
       val vlen = br.readLong(32).toInt
       need(vlen >= 0 && 11 + vlen <= p.length, "comment vendor overruns")
       vendor = new String(p, 11, vlen, "UTF-8")
-      br.pos = (11 + vlen) * 8
+      br.bitPos = (11 + vlen) * 8
       val ncom = br.readLong(32).toInt
       need(ncom >= 0, "negative comment count")
       val b = Vector.newBuilder[String]
       var i = 0
       while (i < ncom) {
         val ln = br.readLong(32).toInt
-        val at = br.pos / 8
+        val at = br.bitPos / 8
         need(ln >= 0 && at + ln <= p.length, "comment overruns packet")
         b += new String(p, at, ln, "UTF-8")
-        br.pos = (at + ln) * 8
+        br.bitPos = (at + ln) * 8
         i += 1
       }
       comments = b.result()
-      need(br.readBit() == 1, "comment framing bit unset")
+      need(br.bit() == 1, "comment framing bit unset")
     }
     // setup (spec 4.2.4)
     var books: Array[Codebook] = null
@@ -1024,10 +964,10 @@ object VorbisCodec {
     var modes: Array[(Int, Int)] = null
     locally {
       val p = packets(2)
-      val br = new BitReader(p)
+      val br = packetBits(p)
       need(br.read(8) == 5, "third packet is not a setup header")
       need(hasMagic(p), "setup header magic missing")
-      br.pos = 7 * 8
+      br.bitPos = 7 * 8
       books = Array.fill(br.read(8) + 1)(new Codebook(br))
       var t = br.read(6) + 1
       while (t > 0) {
@@ -1051,14 +991,14 @@ object VorbisCodec {
       mappings = Array.fill(br.read(6) + 1)(
         new Mapping(br, channels, floors.length, residues.length))
       modes = Array.fill(br.read(6) + 1) {
-        val blockflag = br.readBit()
+        val blockflag = br.bit()
         need(br.read(16) == 0, "nonzero mode window type")
         need(br.read(16) == 0, "nonzero mode transform type")
         val mapping = br.read(8)
         need(mapping < mappings.length, "mode mapping out of range")
         (blockflag, mapping)
       }
-      need(br.readBit() == 1, "setup framing bit unset")
+      need(br.bit() == 1, "setup framing bit unset")
     }
     val audio: Vector[Array[Byte]] = packets.drop(3)
     val granules: Map[Int, Long] =
@@ -1082,8 +1022,8 @@ object VorbisCodec {
       if (p.length == 0) {
         // zero-length packet: spec 1.1.4 no-op
       } else {
-        val br = new BitReader(p)
-        need(br.readBit() == 0, "audio packet type bit set")
+        val br = packetBits(p)
+        need(br.bit() == 0, "audio packet type bit set")
         val modeI = br.read(ilog(st.modes.length - 1))
         need(modeI < st.modes.length, "mode number out of range")
         val (blockflag, mapI) = st.modes(modeI)
@@ -1091,8 +1031,8 @@ object VorbisCodec {
         var prevFlag = 1
         var nextFlag = 1
         if (blockflag == 1) {
-          prevFlag = br.readBit()
-          nextFlag = br.readBit()
+          prevFlag = br.bit()
+          nextFlag = br.bit()
         }
         val spectra = decodeSpectra(st, br, mapI, n)
         val n2 = n / 2
@@ -1186,7 +1126,7 @@ object VorbisCodec {
       st.comments)
   }
 
-  private def decodeSpectra(st: Stream, br: BitReader, mapI: Int,
+  private def decodeSpectra(st: Stream, br: LsbReader, mapI: Int,
                             n: Int): Array[Array[Double]] = {
     val mp = st.mappings(mapI)
     val ch = st.channels

@@ -1,7 +1,9 @@
 package graft.multimodal
 
-import VorbisCodec.{BitReader, Codebook, Floor1, Tables, assignCodewords,
-  dct4, highNeighbor, ilog, lookup1Values, lowNeighbor, oggCrc, renderPoint}
+import graft.util.{Crc, LsbWriter}
+
+import VorbisCodec.{Codebook, Floor1, Tables, assignCodewords, dct4,
+  highNeighbor, ilog, lookup1Values, lowNeighbor, packetBits, renderPoint}
 
 /** Pure-JVM Ogg Vorbis ENCODER (Vorbis I + RFC 3533 Ogg framing).
   *
@@ -56,37 +58,9 @@ object VorbisEncoder {
     34, 43, 55, 71, 90, 115, 146, 187, 238, 304, 387, 493, 629, 802, 1023)
   private val SERIAL = 0x67726166 // "graf"
 
-  // -------------------------------------------------------------- bits --
-  /** Vorbis bitpacker (spec 2): LSb-first within each byte; Huffman
-    * codewords are the one MSb-first entity. Mirror of common.py
-    * BitWriter. */
-  private[multimodal] final class BitWriter {
-    private var buf = new Array[Byte](256)
-    private var nbits = 0
-    def write(value: Int, n: Int): Unit = {
-      require(n >= 0 && n <= 31 && (value >>> math.max(n, 1)) == 0,
-        s"bitwriter: $value does not fit in $n bits")
-      var i = 0
-      while (i < n) {
-        val idx = nbits >> 3
-        if (idx >= buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-        if (((value >> i) & 1) != 0)
-          buf(idx) = (buf(idx) | (1 << (nbits & 7))).toByte
-        nbits += 1
-        i += 1
-      }
-    }
-    def write32(value: Long): Unit = {
-      write((value & 0xFFFF).toInt, 16)
-      write(((value >>> 16) & 0xFFFF).toInt, 16)
-    }
-    def writeHuff(code: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { write((code >> i) & 1, 1); i -= 1 }
-    }
-    def toBytes: Array[Byte] =
-      java.util.Arrays.copyOf(buf, (nbits + 7) >> 3)
-  }
+  // Packets go through the shared LSB-first LsbWriter (spec 2; the bit
+  // order of scripts/vorbisref/common.py BitWriter); Huffman codewords,
+  // the one MSb-first entity, through its putCode.
 
   /** spec 9.2.2 inverse for small integers: 21-bit mantissa, exponent
     * biased 788 (2^0), sign bit — [[VorbisCodec]] float32Unpack maps it
@@ -120,28 +94,28 @@ object VorbisEncoder {
       require(lookup1Values(entries, dims) == quantvals,
         s"lattice book $entries^(1/$dims) != $quantvals")
 
-    def write(bw: BitWriter): Unit = {
-      bw.write(0x564342, 24)
-      bw.write(dims, 16)
-      bw.write(entries, 24)
-      bw.write(0, 1) // not ordered
-      bw.write(0, 1) // not sparse
+    def write(bw: LsbWriter): Unit = {
+      bw.put(0x564342, 24)
+      bw.put(dims, 16)
+      bw.put(entries, 24)
+      bw.put(0, 1) // not ordered
+      bw.put(0, 1) // not sparse
       var e = 0
-      while (e < entries) { bw.write(lengths(e) - 1, 5); e += 1 }
-      bw.write(lookup, 4)
+      while (e < entries) { bw.put(lengths(e) - 1, 5); e += 1 }
+      bw.put(lookup, 4)
       if (lookup == 1) {
-        bw.write32(float32Pack(minv))
-        bw.write32(float32Pack(1)) // delta
+        bw.put(float32Pack(minv), 32)
+        bw.put(float32Pack(1), 32) // delta
         val vbits = math.max(ilog(quantvals - 1), 1)
-        bw.write(vbits - 1, 4)
-        bw.write(0, 1) // sequence_p
+        bw.put(vbits - 1, 4)
+        bw.put(0, 1) // sequence_p
         var q = 0
-        while (q < quantvals) { bw.write(q, vbits); q += 1 }
+        while (q < quantvals) { bw.put(q, vbits); q += 1 }
       }
     }
 
-    def put(bw: BitWriter, entry: Int): Unit =
-      bw.writeHuff(codes(entry), lengths(entry))
+    def put(bw: LsbWriter, entry: Int): Unit =
+      bw.putCode(codes(entry), lengths(entry))
   }
 
   private def scalarBook(dims: Int, entries: Int) =
@@ -165,26 +139,26 @@ object VorbisEncoder {
   /** Floor config bits AFTER the 16-bit type field (what
     * [[VorbisCodec.Floor1]]'s constructor parses). One class, dim 8,
     * no subclasses, 3 partitions. */
-  private def floorConfigBits(bw: BitWriter): Unit = {
-    bw.write(3, 5) // partitions
+  private def floorConfigBits(bw: LsbWriter): Unit = {
+    bw.put(3, 5) // partitions
     var p = 0
-    while (p < 3) { bw.write(0, 4); p += 1 } // class list
-    bw.write(8 - 1, 3) // class 0 dims
-    bw.write(0, 2) // subclasses
-    bw.write(FLOOR_BOOK + 1, 8) // the single subclass book
-    bw.write(2 - 1, 2) // multiplier 2 -> range 128
-    bw.write(RANGEBITS, 4)
+    while (p < 3) { bw.put(0, 4); p += 1 } // class list
+    bw.put(8 - 1, 3) // class 0 dims
+    bw.put(0, 2) // subclasses
+    bw.put(FLOOR_BOOK + 1, 8) // the single subclass book
+    bw.put(2 - 1, 2) // multiplier 2 -> range 128
+    bw.put(RANGEBITS, 4)
     var i = 0
-    while (i < XS_TAIL.length) { bw.write(XS_TAIL(i), RANGEBITS); i += 1 }
+    while (i < XS_TAIL.length) { bw.put(XS_TAIL(i), RANGEBITS); i += 1 }
   }
 
   /** The decoder's own Floor1 parsed back from the emitted bits — the
     * achieved-curve twin (its books array is only length-checked by the
     * constructor since this profile has no subclasses/masterbooks). */
   private val decoderFloor: Floor1 = {
-    val bw = new BitWriter
+    val bw = new LsbWriter
     floorConfigBits(bw)
-    new Floor1(new BitReader(bw.toBytes), new Array[Codebook](books.length))
+    new Floor1(packetBits(bw.toBytes), new Array[Codebook](books.length))
   }
   private val floorRange = decoderFloor.range // 128
   private val floorXs = decoderFloor.xs
@@ -294,15 +268,15 @@ object VorbisEncoder {
   /** Write one channel's floor packet section; returns the achieved
     * curve (what the decoder will multiply residues by), or null for a
     * silent channel. */
-  private def encodeFloor(bw: BitWriter, spectrum: Array[Double],
+  private def encodeFloor(bw: LsbWriter, spectrum: Array[Double],
                           silent: Boolean): Array[Double] = {
-    if (silent) { bw.write(0, 1); return null }
-    bw.write(1, 1)
+    if (silent) { bw.put(0, 1); return null }
+    bw.put(1, 1)
     val ys = fitFloor(spectrum)
     val vals = floorVals(ys)
     val rbits = ilog(floorRange - 1)
-    bw.write(vals(0), rbits)
-    bw.write(vals(1), rbits)
+    bw.put(vals(0), rbits)
+    bw.put(vals(1), rbits)
     // 3 partitions x class 0 (dim 8, no subclasses): plain book writes
     var i = 2
     while (i < vals.length) {
@@ -313,15 +287,15 @@ object VorbisEncoder {
   }
 
   // ---------------------------------------------------------- residue --
-  private def residueConfigBits(bw: BitWriter, ch: Int): Unit = {
-    bw.write(0, 24) // begin
-    bw.write(N2 * ch, 24) // end
-    bw.write(PSIZE - 1, 24)
-    bw.write(2 - 1, 6) // classifications
-    bw.write(CLASSBOOK, 8)
-    bw.write(0, 3); bw.write(0, 1) // class 0 cascade: silent
-    bw.write(1, 3); bw.write(0, 1) // class 1 cascade: one pass
-    bw.write(RES_BOOK, 8) // class 1, pass 0
+  private def residueConfigBits(bw: LsbWriter, ch: Int): Unit = {
+    bw.put(0, 24) // begin
+    bw.put(N2 * ch, 24) // end
+    bw.put(PSIZE - 1, 24)
+    bw.put(2 - 1, 6) // classifications
+    bw.put(CLASSBOOK, 8)
+    bw.put(0, 3); bw.put(0, 1) // class 0 cascade: silent
+    bw.put(1, 3); bw.put(0, 1) // class 1 cascade: one pass
+    bw.put(RES_BOOK, 8) // class 1, pass 0
   }
 
   private def clampRound(x: Double): Int = {
@@ -333,7 +307,7 @@ object VorbisEncoder {
     * (silent / coded), greedy lattice quantize, emit in the decoder's
     * pass/classword order (spec 8.6.2). Channels whose floor was
     * silent contribute zero lanes, exactly as the decoder expects. */
-  private def encodeResidue(bw: BitWriter, targets: Array[Array[Double]],
+  private def encodeResidue(bw: LsbWriter, targets: Array[Array[Double]],
                             anyUsed: Boolean): Unit = {
     if (!anyUsed) return // decoder reads nothing when all-silent
     val ch = targets.length
@@ -417,58 +391,58 @@ object VorbisEncoder {
 
   // ---------------------------------------------------------- headers --
   private def identPacket(channels: Int, rate: Int): Array[Byte] = {
-    val bw = new BitWriter
-    bw.write(1, 8)
-    "vorbis".foreach(c => bw.write(c.toInt, 8))
-    bw.write32(0L) // version
-    bw.write(channels, 8)
-    bw.write32(rate.toLong)
-    bw.write32(0L); bw.write32(0L); bw.write32(0L) // bitrates
-    bw.write(ilog(N) - 1, 4) // blocksize_0 = 2048
-    bw.write(ilog(N) - 1, 4) // blocksize_1 = 2048
-    bw.write(1, 1)
+    val bw = new LsbWriter
+    bw.put(1, 8)
+    "vorbis".foreach(c => bw.put(c.toInt, 8))
+    bw.put(0L, 32) // version
+    bw.put(channels, 8)
+    bw.put(rate.toLong, 32)
+    bw.put(0L, 32); bw.put(0L, 32); bw.put(0L, 32) // bitrates
+    bw.put(ilog(N) - 1, 4) // blocksize_0 = 2048
+    bw.put(ilog(N) - 1, 4) // blocksize_1 = 2048
+    bw.put(1, 1)
     bw.toBytes
   }
 
   private def commentPacket(): Array[Byte] = {
-    val bw = new BitWriter
-    bw.write(3, 8)
-    "vorbis".foreach(c => bw.write(c.toInt, 8))
+    val bw = new LsbWriter
+    bw.put(3, 8)
+    "vorbis".foreach(c => bw.put(c.toInt, 8))
     val vendor = "graft vorbis encoder".getBytes("UTF-8")
-    bw.write32(vendor.length.toLong)
-    vendor.foreach(b => bw.write(b & 0xFF, 8))
-    bw.write32(0L) // no comments
-    bw.write(1, 1)
+    bw.put(vendor.length.toLong, 32)
+    vendor.foreach(b => bw.put(b & 0xFF, 8))
+    bw.put(0L, 32) // no comments
+    bw.put(1, 1)
     bw.toBytes
   }
 
   private def setupPacket(channels: Int): Array[Byte] = {
-    val bw = new BitWriter
-    bw.write(5, 8)
-    "vorbis".foreach(c => bw.write(c.toInt, 8))
-    bw.write(books.length - 1, 8)
+    val bw = new LsbWriter
+    bw.put(5, 8)
+    "vorbis".foreach(c => bw.put(c.toInt, 8))
+    bw.put(books.length - 1, 8)
     books.foreach(_.write(bw))
-    bw.write(0, 6) // one time transform
-    bw.write(0, 16)
-    bw.write(0, 6) // one floor
-    bw.write(1, 16) // floor type 1
+    bw.put(0, 6) // one time transform
+    bw.put(0, 16)
+    bw.put(0, 6) // one floor
+    bw.put(1, 16) // floor type 1
     floorConfigBits(bw)
-    bw.write(0, 6) // one residue
-    bw.write(2, 16) // residue type 2
+    bw.put(0, 6) // one residue
+    bw.put(2, 16) // residue type 2
     residueConfigBits(bw, channels)
-    bw.write(0, 6) // one mapping
-    bw.write(0, 16) // mapping type 0
-    bw.write(0, 1) // one submap
-    bw.write(0, 1) // no coupling
-    bw.write(0, 2) // reserved
-    bw.write(0, 8) // submap time (unused)
-    bw.write(0, 8) // floor 0
-    bw.write(0, 8) // residue 0
-    bw.write(0, 6) // one mode
-    bw.write(0, 1) // blockflag 0
-    bw.write(0, 16); bw.write(0, 16) // window/transform type
-    bw.write(0, 8) // mapping 0
-    bw.write(1, 1)
+    bw.put(0, 6) // one mapping
+    bw.put(0, 16) // mapping type 0
+    bw.put(0, 1) // one submap
+    bw.put(0, 1) // no coupling
+    bw.put(0, 2) // reserved
+    bw.put(0, 8) // submap time (unused)
+    bw.put(0, 8) // floor 0
+    bw.put(0, 8) // residue 0
+    bw.put(0, 6) // one mode
+    bw.put(0, 1) // blockflag 0
+    bw.put(0, 16); bw.put(0, 16) // window/transform type
+    bw.put(0, 8) // mapping 0
+    bw.put(1, 1)
     bw.toBytes
   }
 
@@ -517,7 +491,7 @@ object VorbisEncoder {
     chunks.foreach { c =>
       System.arraycopy(c, 0, page, off, c.length); off += c.length
     }
-    le32At(page, 22, oggCrc(page, 0, page.length, 22))
+    le32At(page, 22, Crc.ogg(page, 0, page.length))
     page
   }
 
@@ -526,9 +500,9 @@ object VorbisEncoder {
     * the continuation flag as needed; each audio packet ends a page
     * carrying the cumulative granule (spanning first if >= 255*255
     * bytes); final page flagged EOS. */
-  private def paginate(ident: Array[Byte], comment: Array[Byte],
-                       setup: Array[Byte], audio: Seq[Array[Byte]],
-                       granules: Seq[Long]): Array[Byte] = {
+  private[graft] def paginate(ident: Array[Byte], comment: Array[Byte],
+                              setup: Array[Byte], audio: Seq[Array[Byte]],
+                              granules: Seq[Long]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     var seq = 0
     def emit(chunks: Seq[Array[Byte]], granule: Long, flags: Int,
@@ -558,10 +532,13 @@ object VorbisEncoder {
             segs += avail
             off += take
           }
-          emit(chunks, -1L, if (cont) 0x01 else 0x00, lastComplete = false)
+          // a full page with no room left ends on the previous packet's
+          // final chunk, which is complete
+          val ended = avail == 0
+          emit(chunks, -1L, if (cont) 0x01 else 0x00, lastComplete = ended)
           chunks = Vector.empty
           segs = 0
-          cont = true
+          cont = !ended
         }
       }
     }
@@ -612,8 +589,8 @@ object VorbisEncoder {
     var b = 0
     while (b < nframes) {
       val base = (b - 1) * N2
-      val bw = new BitWriter
-      bw.write(0, 1) // audio packet
+      val bw = new LsbWriter
+      bw.put(0, 1) // audio packet
       // mode number: ilog(modes-1) = 0 bits; blockflag 0: no window flags
       val targets = new Array[Array[Double]](ch)
       var anyUsed = false

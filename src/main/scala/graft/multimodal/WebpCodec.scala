@@ -3,6 +3,7 @@ package graft.multimodal
 import java.io.ByteArrayOutputStream
 
 import graft.multimodal.MediaCodecs.{ImageMeta, PixelBuf}
+import graft.util.{BitReader, LsbReader, LsbWriter}
 
 /** WebP VP8L (lossless) codec — the `.webp` arm of the reference's image
   * output whitelist (/root/reference/src/converters/image_converters.py:50-52
@@ -32,8 +33,9 @@ import graft.multimodal.MediaCodecs.{ImageMeta, PixelBuf}
   * [[MediaCodecs.parseWebp]] header path.
   *
   * Bit conventions (WebP Lossless Bitstream Specification): the stream is
-  * read LSB-first; canonical prefix codes are transmitted bit-reversed and
-  * matched MSB-of-code-first, exactly DEFLATE's duality. Pinned against
+  * read LSB-first (the shared [[graft.util.LsbReader]]/[[graft.util.LsbWriter]]);
+  * canonical prefix codes are transmitted bit-reversed and matched
+  * MSB-of-code-first, exactly DEFLATE's duality. Pinned against
   * hand-derived spec bytes in WebpCodecSpec, not just round-trip.
   */
 object WebpCodec {
@@ -43,47 +45,7 @@ object WebpCodec {
   private val ClOrder: Array[Int] =
     Array(17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
-  // ---- LSB-first bit IO -------------------------------------------------
-
-  private[graft] final class LsbWriter {
-    private val out = new ByteArrayOutputStream()
-    private var acc = 0
-    private var n = 0
-    /** Write the low `bits` bits of `v`, LSB first. */
-    def put(v: Int, bits: Int): Unit = {
-      if (bits > 0) {
-        acc |= (v & ((1 << bits) - 1)) << n
-        n += bits
-        while (n >= 8) { out.write(acc & 0xff); acc >>>= 8; n -= 8 }
-      }
-    }
-    /** Write a canonical prefix code: bit-reversed, so the stream carries
-      * the code MSB-first (the decoder descends bit by bit). */
-    def putCode(code: Int, len: Int): Unit =
-      if (len > 0) put(Integer.reverse(code) >>> (32 - len), len)
-    def toBytes: Array[Byte] = {
-      if (n > 0) { out.write(acc & 0xff); acc = 0; n = 0 }
-      out.toByteArray
-    }
-  }
-
-  private final class LsbReader(b: Array[Byte], start: Int, end: Int) {
-    private var pos = start
-    private var bit = 0
-    def nextBit(): Int = {
-      require(pos < end, "VP8L stream truncated")
-      val r = (b(pos) >> bit) & 1
-      bit += 1
-      if (bit == 8) { bit = 0; pos += 1 }
-      r
-    }
-    def read(bits: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < bits) { v |= nextBit() << i; i += 1 }
-      v
-    }
-  }
+  private val truncated = BitReader.requireFailed("VP8L stream truncated")
 
   // ---- canonical prefix codes --------------------------------------------
 
@@ -129,7 +91,7 @@ object WebpCodec {
         var code = 0
         var len = 0
         while (true) {
-          code = (code << 1) | in.nextBit()
+          code = (code << 1) | in.bit()
           len += 1
           require(len <= MaxLen, "prefix code walk exceeded 15 bits")
           if (count(len) > 0 && code - firstCode(len) < count(len) && code >= firstCode(len))
@@ -667,7 +629,7 @@ object WebpCodec {
         require(end - at - 1 >= w * h, "raw ALPH plane shorter than the canvas")
         java.util.Arrays.copyOfRange(bytes, at + 1, at + 1 + w * h)
       case 1 =>
-        val pix = decodeArgbBody(new LsbReader(bytes, at + 1, end), w, h)
+        val pix = decodeArgbBody(new LsbReader(bytes, at + 1, end, truncated), w, h)
         val out = new Array[Byte](w * h)
         var i = 0
         while (i < out.length) { out(i) = ((pix(i) >>> 8) & 0xff).toByte; i += 1 }
@@ -783,7 +745,7 @@ object WebpCodec {
       return ImageMeta("webp", frame.width, frame.height, mode, sum)
     }
     require(at >= 0, "WebP has no VP8L or VP8 image chunk")
-    val in = new LsbReader(bytes, at, end)
+    val in = new LsbReader(bytes, at, end, truncated)
     require(in.read(8) == 0x2f, "bad VP8L signature")
     val w = in.read(14) + 1
     val h = in.read(14) + 1
@@ -966,7 +928,7 @@ object WebpCodec {
         // decode the frame to an RGBA raster at exactly (fw, fh)
         val frame = new Array[Byte](fw * fh * 4)
         if (vp8lAt >= 0) {
-          val in = new LsbReader(bytes, vp8lAt, vp8lEnd)
+          val in = new LsbReader(bytes, vp8lAt, vp8lEnd, truncated)
           require(in.read(8) == 0x2f, "bad VP8L signature in ANMF frame")
           val w = in.read(14) + 1
           val h = in.read(14) + 1
@@ -1103,7 +1065,7 @@ object WebpCodec {
     // dims read from whatever bytes follow it
     val size = graft.util.LittleEndian.i32(bytes, 16)
     if (size < 5) return true // malformed — let decode name it
-    val in = new LsbReader(bytes, 20, 25) // VP8L chunk data starts at 20
+    val in = new LsbReader(bytes, 20, 25, truncated) // VP8L chunk data starts at 20
     if (in.read(8) != 0x2f) return true
     val w = in.read(14) + 1
     val h = in.read(14) + 1

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.extract.Extractor
@@ -47,16 +47,19 @@ object ExtractionPipeline {
       .as[WebPage]
   }
 
-  /** Run the kernel; one result row per input document. */
+  /** Balance, then run the kernel; one result row per input document. */
   def extract(pages: Dataset[WebPage], parallelism: Int,
-              carryGolden: Boolean = true): Dataset[ExtractionResult] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    prepare(pages, parallelism, carryGolden).mapPartitions { it =>
+              carryGolden: Boolean = true): Dataset[ExtractionResult] =
+    kernel(prepare(pages, parallelism, carryGolden))
+
+  /** The extraction kernel on a batch or streaming Dataset: one result row
+    * per page, tagged with the partition it ran in. [[extract]] and
+    * [[graft.streaming.StreamingExtraction.run]] share this one body. */
+  def kernel(pages: Dataset[WebPage]): Dataset[ExtractionResult] =
+    pages.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       it.map(p => Extractor.extractOne(p, pid))
-    }
-  }
+    }(Encoders.product[ExtractionResult])
 
   /** Per-partition lineage + metrics rollup (north_rule: docs, bytes,
     * failures) — map-side combinable built-in aggregates. */

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.extract.Extractor
-import graft.model.{ExtractionResult, WebPage}
+import graft.model.WebPage
+import graft.pipeline.ExtractionPipeline
 
 /** Structured Streaming surface (SURVEY §2.8): the reference's watch-service
   * and pipeline processors are 0-byte stubs (/root/reference/src/processors/
@@ -25,16 +24,6 @@ import graft.model.{ExtractionResult, WebPage}
   */
 object StreamingExtraction {
 
-  /** The batch kernel, unchanged, on a (possibly streaming) Dataset —
-    * identical per-document semantics in both modes. */
-  def extractStream(pages: Dataset[WebPage]): Dataset[ExtractionResult] = {
-    implicit val enc = Encoders.product[ExtractionResult]
-    pages.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      it.map(p => Extractor.extractOne(p, pid))
-    }
-  }
-
   /** Continuous extraction job over a webpages directory. AvailableNow
     * drains everything present then stops — the batch-equivalent trigger;
     * pass ProcessingTime for a long-running tail. */
@@ -45,7 +34,7 @@ object StreamingExtraction {
       .schema(Encoders.product[WebPage].schema)
       .parquet(inDir)
       .as(Encoders.product[WebPage])
-    extractStream(pages).writeStream
+    ExtractionPipeline.kernel(pages).writeStream
       .format("parquet")
       .option("path", s"$outDir/results")
       .option("checkpointLocation", checkpointDir)

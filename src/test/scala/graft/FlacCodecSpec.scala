@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.{AudioConvert, FlacCodec, MediaCodecs}
 import graft.multimodal.AudioConvert.AudioBuf
+import graft.util.{Crc, MsbWriter}
 
 class FlacCodecSpec extends AnyFunSuite {
 
@@ -21,17 +22,17 @@ class FlacCodecSpec extends AnyFunSuite {
     * foreign-shape vector scaffolding shared by the conformance tests. */
   private def handStream(channels: Int, total: Int, chAssign: Int,
                          blockSize: Int)(
-      subframes: FlacCodec.MsbWriter => Unit): Array[Byte] = {
+      subframes: MsbWriter => Unit): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     out.write("fLaC".getBytes("ISO-8859-1"))
-    val si = new FlacCodec.MsbWriter
+    val si = new MsbWriter
     si.put(16, 16); si.put(16, 16); si.put(0, 24); si.put(0, 24)
     si.put(8000, 20); si.put(channels - 1, 3); si.put(15, 5); si.put(total, 36)
     val sib = si.toBytes
     out.write(0x80); out.write(0); out.write(0); out.write(34)
     out.write(sib, 0, sib.length)
     out.write(new Array[Byte](16), 0, 16)
-    val w = new FlacCodec.MsbWriter
+    val w = new MsbWriter
     w.put(0x3ffe, 14); w.put(0, 1); w.put(0, 1)
     w.put(6, 4)                 // blocksize: 8-bit value at end of header
     w.put(0, 4)                 // rate from STREAMINFO
@@ -40,14 +41,14 @@ class FlacCodecSpec extends AnyFunSuite {
     w.put(0, 8)                 // UTF-8 frame number 0
     w.put(blockSize - 1, 8)
     val head = w.toBytes
-    val frame = new FlacCodec.MsbWriter
+    val frame = new MsbWriter
     for (b <- head) frame.put(b & 0xff, 8)
-    frame.put(FlacCodec.crc8(head, 0, head.length), 8)
+    frame.put(Crc.flac8(head, 0, head.length), 8)
     subframes(frame)
     frame.alignByte()
     val body = frame.toBytes
     out.write(body, 0, body.length)
-    val c16 = FlacCodec.crc16(body, 0, body.length)
+    val c16 = Crc.flac16(body, 0, body.length)
     out.write((c16 >> 8) & 0xff); out.write(c16 & 0xff)
     out.toByteArray
   }
@@ -201,7 +202,7 @@ class FlacCodecSpec extends AnyFunSuite {
       frame.putSigned(1, 5)  // shift 1
       frame.putSigned(3, 4); frame.putSigned(-2, 4)      // most recent first
       frame.put(0, 2); frame.put(0, 4); frame.put(0, 4)  // rice, 1 partition, k=0
-      frame.putRice(1, 0); frame.putRice(-1, 0)
+      FlacCodec.putRice(frame, 1, 0); FlacCodec.putRice(frame, -1, 0)
     }
     assert(FlacCodec.decodeSamples(flac).samples.toSeq == Seq(10, 20, 21, 10))
     // reserved subframe types stay named errors
@@ -225,7 +226,7 @@ class FlacCodecSpec extends AnyFunSuite {
       frame.put(1, 2)  // residual method 1: 5-bit params
       frame.put(1, 4)  // partition order 1 (2 partitions of 4)
       frame.put(2, 5)  // partition 0: rice k=2 (4-1=3 residuals)
-      for (r <- Seq(2, 1, 2)) frame.putRice(r, 2)
+      for (r <- Seq(2, 1, 2)) FlacCodec.putRice(frame, r, 2)
       frame.put(31, 5) // partition 1: escape
       frame.put(4, 5)  // raw width 4
       for (r <- Seq(-1, -2, -3, -4)) frame.putSigned(r, 4)

@@ -134,7 +134,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("streaming extraction kernel adds no shuffle over the source scan") {
     val pages = Corpus.materialize(spark, sfDir)
-    val df = graft.streaming.StreamingExtraction.extractStream(pages).toDF()
+    val df = graft.pipeline.ExtractionPipeline.kernel(pages).toDF()
     assert(countShuffles(df) == 0, planString(df))
   }
 

@@ -6,6 +6,7 @@ import graft.fixtures.MediaFixtures
 import graft.multimodal.{ImageConvert, WebpCodec}
 import graft.multimodal.MediaCodecs
 import graft.multimodal.MediaCodecs.PixelBuf
+import graft.util.LsbWriter
 
 class WebpCodecSpec extends AnyFunSuite {
 
@@ -89,7 +90,7 @@ class WebpCodecSpec extends AnyFunSuite {
     // single-symbol red code, a blue code whose lengths use CL symbol 16
     // (repeat previous nonzero), and a simple TWO-symbol alpha code.
     // Pixels: (r,g,b,a) = (7,10,5,200), (7,20,8,255).
-    val w = new WebpCodec.LsbWriter
+    val w = new LsbWriter
     w.put(0x2f, 8)
     w.put(1, 14); w.put(0, 14) // 2x1
     w.put(1, 1)                // alpha used
