@@ -1,10 +1,8 @@
 package graft.extract.docx
 
-import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
-import java.util.zip.ZipInputStream
 
-import graft.util.Inflate
+import graft.util.ZipReader
 
 /** DOCX → text kernel: unzip the OOXML package, scan `word/document.xml`,
   * and join each `<w:p>` paragraph's `<w:t>` text runs; paragraphs join
@@ -21,59 +19,10 @@ import graft.util.Inflate
 object DocxExtractor {
 
   def extract(docx: Array[Byte]): String = {
-    val xml = readPart(docx, "word/document.xml")
+    val xml = ZipReader(docx).read("word/document.xml")
       .getOrElse(throw new IllegalArgumentException(
         "zip has no word/document.xml — not a DOCX package"))
     extractDocumentXml(new String(xml, StandardCharsets.UTF_8))
-  }
-
-  /** Entry NAMES only — no inflation; the cheap probe container sniffing
-    * uses (enumerating central headers costs bytes-of-archive, not
-    * bytes-inflated). */
-  def entryNames(zipBytes: Array[Byte]): Set[String] = {
-    val zin = new ZipInputStream(new ByteArrayInputStream(zipBytes))
-    val names = Set.newBuilder[String]
-    try {
-      var e = zin.getNextEntry
-      while (e != null) { names += e.getName; e = zin.getNextEntry }
-      names.result()
-    } finally zin.close()
-  }
-
-  /** One entry's bytes; stops scanning at the first match. */
-  def readPart(zipBytes: Array[Byte], name: String): Option[Array[Byte]] =
-    read(zipBytes, _ == name, firstOnly = true).headOption.map(_._2)
-
-  /** Stream the zip once and return every entry whose name satisfies the
-    * predicate, in archive order. */
-  def readParts(zipBytes: Array[Byte],
-                wanted: String => Boolean): Seq[(String, Array[Byte])] =
-    read(zipBytes, wanted, firstOnly = false)
-
-  /** Each part inflates through [[graft.util.Inflate.grow]], first sized
-    * from its local-header size (8 KiB when a data descriptor defers it),
-    * a claim trusted only up to the ratio bound over the whole archive's
-    * length; under the per-stream cap and, across the parts one call reads,
-    * the per-document cap: a bomb of many just-under-cap parts fails too. */
-  private def read(zipBytes: Array[Byte], wanted: String => Boolean,
-                   firstOnly: Boolean): Seq[(String, Array[Byte])] = {
-    val zin = new ZipInputStream(new ByteArrayInputStream(zipBytes))
-    val acc = Seq.newBuilder[(String, Array[Byte])]
-    var total = 0L
-    try {
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (wanted(e.getName)) {
-          val bytes = Inflate.grow(zin, if (e.getSize >= 0) e.getSize else 8192,
-            zipBytes.length, total, e.getName)
-          total += bytes.length
-          acc += e.getName -> bytes
-          if (firstOnly) return acc.result()
-        }
-        e = zin.getNextEntry
-      }
-      acc.result()
-    } finally zin.close()
   }
 
   /** Single-pass scan of document.xml: text inside `<w:t>` accumulates into

@@ -2,8 +2,8 @@ package graft.extract.epub
 
 import java.nio.charset.StandardCharsets
 
-import graft.extract.docx.DocxExtractor
 import graft.util.XmlAttr.attr
+import graft.util.ZipReader
 import graft.extract.html.HtmlExtractor
 
 /** EPUB → text kernel — the reference whitelist's .epub input
@@ -16,19 +16,21 @@ import graft.extract.html.HtmlExtractor
   * reading order — publisher-named chapter files extract correctly, no
   * filename convention assumed. Non-spine parts (nav/opf/css) contribute
   * nothing. A numeric `OEBPS/chapterN.xhtml` fallback covers packages with
-  * a missing/unparseable OPF.
+  * a missing/unparseable OPF. The dispatcher hands over its
+  * [[graft.util.ZipReader]], so the package is indexed once and each part
+  * (container.xml, the OPF, each chapter) is inflated once.
   */
 object EpubExtractor {
 
   val mimetype = "application/epub+zip"
 
-  def extract(zipBytes: Array[Byte]): String = {
-    val chapters = spinePaths(zipBytes) match {
+  def extract(zip: ZipReader): String = {
+    val chapters = spinePaths(zip) match {
       case Some(paths) if paths.nonEmpty =>
-        // one archive pass for all chapters, then re-ordered by spine
-        val byName = DocxExtractor.readParts(zipBytes, paths.toSet).toMap
+        // a chapter the spine lists twice is still read once
+        val byName = paths.distinct.flatMap(p => zip.read(p).map(p -> _)).toMap
         paths.flatMap(byName.get)
-      case _ => conventionChapters(zipBytes)
+      case _ => conventionChapters(zip)
     }
     require(chapters.nonEmpty,
       "epub has no spine-referenced xhtml chapters (and no OEBPS/chapterN.xhtml fallback)")
@@ -37,12 +39,12 @@ object EpubExtractor {
 
   /** Chapter archive paths in reading order, from container.xml → OPF
     * manifest + spine. None when the package route is absent/unparseable. */
-  def spinePaths(zipBytes: Array[Byte]): Option[Seq[String]] =
+  def spinePaths(zip: ZipReader): Option[Seq[String]] =
     for {
-      container <- DocxExtractor.readPart(zipBytes, "META-INF/container.xml")
+      container <- zip.read("META-INF/container.xml")
         .map(new String(_, StandardCharsets.UTF_8))
       opfPath <- tags(container, "rootfile").flatMap(attr(_, "full-path")).headOption
-      opfXml <- DocxExtractor.readPart(zipBytes, opfPath)
+      opfXml <- zip.read(opfPath)
         .map(new String(_, StandardCharsets.UTF_8))
     } yield {
       val base = opfPath.lastIndexOf('/') match {
@@ -62,15 +64,10 @@ object EpubExtractor {
   private val chapterName = "^OEBPS/chapter([0-9]+)\\.xhtml$".r
 
   /** Fallback: numeric `OEBPS/chapterN.xhtml` order (the pre-OPF layout). */
-  private def conventionChapters(zipBytes: Array[Byte]): Seq[Array[Byte]] =
-    DocxExtractor.readParts(zipBytes,
-        name => chapterName.pattern.matcher(name).matches())
-      .map { case (name, bytes) =>
-        val chapterName(num) = name: @unchecked
-        (num.toInt, bytes)
-      }
+  private def conventionChapters(zip: ZipReader): Seq[Array[Byte]] =
+    zip.names.collect { case name @ chapterName(num) => (num.toInt, name) }.toSeq
       .sortBy(_._1)
-      .map(_._2)
+      .flatMap { case (_, name) => zip.read(name) }
 
   /** All `<name ...>` (and self-closing) tag bodies, in document order. */
   private def tags(xml: String, name: String): Seq[String] = {

@@ -2,7 +2,6 @@ package graft.extract.ooxml
 
 import java.nio.charset.StandardCharsets
 
-import graft.extract.docx.DocxExtractor
 import graft.util.XmlAttr.attr
 
 /** OpenDocument (ODF) text kernels — the reference whitelist's .odt/.odp/
@@ -42,30 +41,8 @@ object OdfExtractor {
 
   def kindOfMimetype(mime: String): Option[String] = kinds.get(mime)
 
-  /** Identify the ODF kind from the package's `mimetype` entry. */
-  def sniffKind(zipBytes: Array[Byte]): Option[String] =
-    DocxExtractor.readPart(zipBytes, "mimetype")
-      .map(b => new String(b, StandardCharsets.UTF_8).trim)
-      .flatMap(kinds.get)
-
-  /** Dispatch by mimetype; returns (kind, text). */
-  def extract(zipBytes: Array[Byte]): (String, String) = {
-    val kind = sniffKind(zipBytes).getOrElse(
-      throw new IllegalArgumentException("zip has no recognized ODF mimetype entry"))
-    (kind, extractKind(zipBytes, kind))
-  }
-
-  /** Extraction for an already-identified kind (the dispatcher reads the
-    * mimetype once and passes the kind down). */
-  def extractKind(zipBytes: Array[Byte], kind: String): String = {
-    val xml = DocxExtractor.readPart(zipBytes, "content.xml")
-      .map(new String(_, StandardCharsets.UTF_8))
-      .getOrElse(throw new IllegalArgumentException("ODF package has no content.xml"))
-    extractContent(xml, kind)
-  }
-
-  /** Extraction over already-read content XML (the single-pass dispatcher
-    * hands the inflated bytes straight over — no second archive pass). */
+  /** Extraction over the package's content XML, once the dispatcher has
+    * read the kind from its `mimetype` entry. */
   def extractContent(xml: String, kind: String): String =
     if (kind == "ods" || kind == "ots") extractSpreadsheet(xml)
     else extractParagraphs(xml)

@@ -3,6 +3,8 @@ package graft.extract.ooxml
 import java.nio.charset.StandardCharsets
 
 import graft.extract.docx.DocxExtractor
+import graft.extract.epub.EpubExtractor
+import graft.util.ZipReader
 
 /** OOXML container dispatch + the PPTX/XLSX text kernels — the remaining
   * Office flagship inputs of the reference's conversion whitelist
@@ -22,88 +24,67 @@ import graft.extract.docx.DocxExtractor
   */
 object OoxmlExtractor {
 
-  /** Identify the OOXML kind by package content (docx | pptx | xlsx) —
-    * entry-name enumeration only, nothing inflated. */
-  def sniffKind(zipBytes: Array[Byte]): Option[String] = {
-    val names = DocxExtractor.entryNames(zipBytes)
-    if (names.contains("word/document.xml")) Some("docx")
-    else if (names.contains("ppt/presentation.xml")) Some("pptx")
-    else if (names.contains("xl/workbook.xml")) Some("xlsx")
+  /** The OOXML kind (docx | pptx | xlsx) by package content: the index's
+    * entry names alone, nothing inflated. */
+  def ooxmlKind(zip: ZipReader): Option[String] =
+    if (zip.contains("word/document.xml")) Some("docx")
+    else if (zip.contains("ppt/presentation.xml")) Some("pptx")
+    else if (zip.contains("xl/workbook.xml")) Some("xlsx")
     else None
-  }
 
-  /** Every part any container kind can need — the predicate of the ONE
-    * streaming pass [[extract]] makes. */
-  private def isDispatchPart(name: String): Boolean =
-    name == "mimetype" || name == "word/document.xml" ||
-      name == "ppt/presentation.xml" || name == "xl/workbook.xml" ||
-      name == "xl/sharedStrings.xml" || name == "content.xml" ||
-      slideName.pattern.matcher(name).matches() ||
-      sheetName.pattern.matcher(name).matches()
+  def extract(zipBytes: Array[Byte]): (String, String) = extract(ZipReader(zipBytes))
 
-  /** Dispatch on package content; returns (kind, text). ODF packages
-    * (odt/odp/ods) and EPUBs share the zip magic but declare themselves in
-    * a `mimetype` entry. Everything happens in ONE streaming pass over the
-    * archive: java.util.zip inflates every entry it merely skips, so a
-    * separate sniff/enumeration pass would DOUBLE the per-document
-    * inflation work (and Inflater churn) at scale — the kind decision is
-    * made from the collected parts instead. EPUB is the one exception
-    * (chapter names are only known after reading the OPF) and takes its
-    * own passes. */
-  def extract(zipBytes: Array[Byte]): (String, String) = {
-    val parts = DocxExtractor.readParts(zipBytes, isDispatchPart)
-    def part(name: String): Option[Array[Byte]] =
-      parts.collectFirst { case (n, b) if n == name => b }
-    if (part("word/document.xml").isDefined)
-      ("docx", DocxExtractor.extractDocumentXml(
-        new String(part("word/document.xml").get, StandardCharsets.UTF_8)))
-    else if (part("ppt/presentation.xml").isDefined) ("pptx", pptxFromParts(parts))
-    else if (part("xl/workbook.xml").isDefined) ("xlsx", xlsxFromParts(parts))
-    else {
-      val mime = part("mimetype").map(b => new String(b, StandardCharsets.UTF_8).trim)
+  /** Dispatch on package content; returns (kind, text). OOXML kinds route
+    * by entry name; ODF packages (odt/odp/ods) and EPUBs share the zip
+    * magic but declare themselves in a `mimetype` entry. The one reader
+    * serves the whole document: each kernel inflates only the parts it
+    * needs, once each, under one per-document total. */
+  def extract(zip: ZipReader): (String, String) = ooxmlKind(zip) match {
+    case Some("docx") =>
+      ("docx", DocxExtractor.extractDocumentXml(utf8(zip.read("word/document.xml").get)))
+    case Some("pptx") => ("pptx", pptx(zip))
+    case Some(_) => ("xlsx", xlsx(zip))
+    case None =>
+      val mime = zip.read("mimetype").map(utf8(_).trim)
       mime.flatMap(OdfExtractor.kindOfMimetype) match {
         case Some(odfKind) =>
-          val xml = part("content.xml")
-            .map(new String(_, StandardCharsets.UTF_8))
+          val xml = zip.read("content.xml").map(utf8)
             .getOrElse(throw new IllegalArgumentException("ODF package has no content.xml"))
           (odfKind, OdfExtractor.extractContent(xml, odfKind))
-        case None if mime.contains(graft.extract.epub.EpubExtractor.mimetype) =>
-          ("epub", graft.extract.epub.EpubExtractor.extract(zipBytes))
+        case None if mime.contains(EpubExtractor.mimetype) => ("epub", EpubExtractor.extract(zip))
         case _ => throw new IllegalArgumentException(
           "zip is not a recognized OOXML/ODF/EPUB package (no word/document.xml, " +
             "ppt/presentation.xml, xl/workbook.xml, or known mimetype)")
       }
-    }
   }
+
+  private def utf8(b: Array[Byte]): String = new String(b, StandardCharsets.UTF_8)
+
+  /** The XML of the parts whose names match `pattern`, in the numeric order
+    * of its one group (not archive or lexicographic order). */
+  private def numbered(zip: ZipReader, pattern: scala.util.matching.Regex): Seq[String] =
+    zip.names.collect {
+      case name @ pattern(num) => (num.toInt, name)
+    }.toSeq.sortBy(_._1).map { case (_, name) => utf8(zip.read(name).get) }
 
   private val slideName = "^ppt/slides/slide([0-9]+)\\.xml$".r
 
-  private def pptxFromParts(parts: Seq[(String, Array[Byte])]): String = {
-    val slides = parts.collect {
-      case (name, bytes) if slideName.pattern.matcher(name).matches() =>
-        val slideName(num) = name: @unchecked
-        (num.toInt, new String(bytes, StandardCharsets.UTF_8))
-    }.sortBy(_._1) // numeric slide order, not archive or lexicographic order
+  private def pptx(zip: ZipReader): String = {
+    val slides = numbered(zip, slideName)
     require(slides.nonEmpty, "pptx has no ppt/slides/slideN.xml parts")
-    slides.map { case (_, xml) => DocxExtractor.extractRuns(xml, "a:p", "a:t") }
+    slides.map(DocxExtractor.extractRuns(_, "a:p", "a:t"))
       .filter(_.nonEmpty)
       .mkString("\n")
   }
 
   private val sheetName = "^xl/worksheets/sheet([0-9]+)\\.xml$".r
 
-  private def xlsxFromParts(parts: Seq[(String, Array[Byte])]): String = {
-    val shared: IndexedSeq[String] = parts.collectFirst {
-      case ("xl/sharedStrings.xml", bytes) =>
-        parseSharedStrings(new String(bytes, StandardCharsets.UTF_8))
-    }.getOrElse(IndexedSeq.empty)
-    val sheets = parts.collect {
-      case (name, bytes) if sheetName.pattern.matcher(name).matches() =>
-        val sheetName(num) = name: @unchecked
-        (num.toInt, new String(bytes, StandardCharsets.UTF_8))
-    }.sortBy(_._1)
+  private def xlsx(zip: ZipReader): String = {
+    val shared: IndexedSeq[String] = zip.read("xl/sharedStrings.xml")
+      .map(b => parseSharedStrings(utf8(b))).getOrElse(IndexedSeq.empty)
+    val sheets = numbered(zip, sheetName)
     require(sheets.nonEmpty, "xlsx has no xl/worksheets/sheetN.xml parts")
-    sheets.map { case (_, xml) => extractSheet(xml, shared) }
+    sheets.map(extractSheet(_, shared))
       .filter(_.nonEmpty)
       .mkString("\n")
   }

@@ -3,6 +3,8 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.nio.charset.CodingErrorAction
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -136,15 +138,18 @@ object DocFunctions {
     }
   }
 
+  /** One reader per payload: the OOXML kind from its index, else the
+    * `mimetype` entry. */
   private def zipMime(bytes: Array[Byte]): String =
     try {
-      graft.extract.ooxml.OoxmlExtractor.sniffKind(bytes).map(ooxmlMimes)
-        .orElse(graft.extract.docx.DocxExtractor.readPart(bytes, "mimetype")
+      val zip = graft.util.ZipReader(bytes)
+      graft.extract.ooxml.OoxmlExtractor.ooxmlKind(zip).map(ooxmlMimes)
+        .orElse(zip.read("mimetype")
           .map(m => new String(m, StandardCharsets.UTF_8).trim)
           .filter(m => graft.extract.ooxml.OdfExtractor.kindOfMimetype(m).isDefined ||
             m == graft.extract.epub.EpubExtractor.mimetype))
         .getOrElse("application/zip")
-    } catch { case _: Throwable => "application/zip" }
+    } catch { case NonFatal(_) => "application/zip" }
 
   /** Column wrapper over [[mimeGuessBytes]] (a kernel probe, not a prefix
     * expression — container refinement needs the archive directory). */

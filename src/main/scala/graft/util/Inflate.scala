@@ -5,11 +5,12 @@ import java.util.zip.{Deflater, Inflater}
 
 /** The one bounded DEFLATE decoder. Every inflate that builds a buffer
   * (gzip payloads, zip parts, PDF Flate streams, PNG and PDF image samples)
-  * goes through [[grow]] (output of unknown size) or [[fill]] (output sized
-  * by the caller's own geometry cap). Raw zlib bodies drive `Inflater`
-  * directly: on JDK 17 `InflaterInputStream.read` returns -1 on a
-  * preset-dictionary stream instead of failing. The writers' zlib encoder,
-  * [[deflate]], lives here too. */
+  * goes through [[grow]] (output of unknown size; [[growRaw]] for the raw
+  * DEFLATE data of a zip part) or [[fill]] (output sized by the caller's own
+  * geometry cap). Raw zlib bodies drive `Inflater` directly: on JDK 17
+  * `InflaterInputStream.read` returns -1 on a preset-dictionary stream
+  * instead of failing. The writers' zlib encoder, [[deflate]], lives here
+  * too. */
 object Inflate {
 
   /** Inflated bytes one stream may produce (also the raw payload cap). */
@@ -29,7 +30,7 @@ object Inflate {
            what: String): Array[Byte] = {
     val limit = math.max(0L, math.min(maxStreamBytes.toLong, maxDocumentBytes - inflated))
     var out = new Array[Byte](
-      math.min(math.max(64L, math.min(hint, hintRatio * compressed)), limit).toInt)
+      math.min(math.max(0L, math.min(hint, hintRatio * compressed)), limit).toInt)
     var len = 0
     var done = false
     while (!done) {
@@ -44,7 +45,7 @@ object Inflate {
           require(len < limit,
             if (limit == maxStreamBytes) s"$what expands past cap $maxStreamBytes"
             else s"$what expands past document cap $maxDocumentBytes ($inflated bytes before it)")
-          out = java.util.Arrays.copyOf(out, math.min(2L * len, limit).toInt)
+          out = java.util.Arrays.copyOf(out, math.min(math.max(64L, 2L * len), limit).toInt)
           out(len) = b.toByte
           len += 1
         }
@@ -57,19 +58,35 @@ object Inflate {
     * length; bytes after the end of the stream are ignored. */
   def grow(src: Array[Byte], off: Int, len: Int, inflated: Long, what: String): Array[Byte] = {
     val inf = new Inflater()
-    try {
-      inf.setInput(src, off, len)
-      val in = new InputStream {
-        private val one = new Array[Byte](1)
-        override def read(b: Array[Byte], o: Int, n: Int): Int = {
-          val got = if (inf.finished()) 0 else inf.inflate(b, o, n)
-          require(got > 0 || inf.finished(), truncated(what))
-          if (got == 0) -1 else got
-        }
-        def read(): Int = if (read(one, 0, 1) < 0) -1 else one(0) & 0xff
+    try grow(inf, src, off, len, 4L * len + 64, inflated, what) finally inf.end()
+  }
+
+  /** [[grow]] over the raw DEFLATE data `src[off, off + len)` (no zlib
+    * header or trailer, as a zip part stores it), sized at `hint`. A
+    * document's parts are small and many, so each thread reuses one raw
+    * `Inflater`, reset after every part, rather than setting up zlib's
+    * state and window per part. */
+  def growRaw(src: Array[Byte], off: Int, len: Int, hint: Long, inflated: Long,
+              what: String): Array[Byte] = {
+    val inf = rawInflater.get
+    try grow(inf, src, off, len, hint, inflated, what) finally inf.reset()
+  }
+
+  private val rawInflater = ThreadLocal.withInitial[Inflater](() => new Inflater(true))
+
+  private def grow(inf: Inflater, src: Array[Byte], off: Int, len: Int, hint: Long,
+                   inflated: Long, what: String): Array[Byte] = {
+    inf.setInput(src, off, len)
+    val in = new InputStream {
+      private val one = new Array[Byte](1)
+      override def read(b: Array[Byte], o: Int, n: Int): Int = {
+        val got = if (inf.finished()) 0 else inf.inflate(b, o, n)
+        require(got > 0 || inf.finished(), truncated(what))
+        if (got == 0) -1 else got
       }
-      grow(in, 4L * len + 64, len, inflated, what)
-    } finally inf.end()
+      def read(): Int = if (read(one, 0, 1) < 0) -1 else one(0) & 0xff
+    }
+    grow(in, hint, len, inflated, what)
   }
 
   /** Inflates the zlib stream stored in `src` at the (offset, length)

@@ -85,7 +85,7 @@ class DispatchMediaSpec extends AnyFunSuite {
 
   test("epub spine order wins over filename order (publisher-named variant)") {
     val bytes = EpubWriter.generate(paras, 4)
-    val spine = graft.extract.epub.EpubExtractor.spinePaths(bytes).get
+    val spine = graft.extract.epub.EpubExtractor.spinePaths(graft.util.ZipReader(bytes)).get
     assert(spine.length == paras.length)
     assert(spine.forall(_.startsWith("OEBPS/text/sec")), spine.toString)
     // filenames are numbered descending: lexicographic order would reverse
@@ -98,9 +98,9 @@ class DispatchMediaSpec extends AnyFunSuite {
   test("epub without container.xml falls back to the chapterN convention") {
     val full = EpubWriter.generate(paras, 0)
     // rebuild the archive minus META-INF/container.xml
-    val names = graft.extract.docx.DocxExtractor.entryNames(full)
-    val parts = graft.extract.docx.DocxExtractor.readParts(full,
-      n => n != "META-INF/container.xml")
+    val zip = graft.util.ZipReader(full)
+    val names = zip.names.toSet
+    val parts = zip.names.filter(n => n != "META-INF/container.xml").map(n => n -> zip.read(n).get).toSeq
     val rebuilt = graft.serialize.OoxmlZip.write(
       parts.map { case (n, b) => n -> new String(b, "UTF-8") }, store = false)
     assert(names.contains("META-INF/container.xml"))

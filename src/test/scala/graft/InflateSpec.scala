@@ -149,6 +149,22 @@ class InflateSpec extends AnyFunSuite {
     assert(cutOff.getMessage == "requirement failed: s truncated or needs a preset dictionary")
   }
 
+  test("raw DEFLATE growRaw ignores bytes after the stream, and a truncated stream leaves the next one intact") {
+    val data = Array.tabulate[Byte](5000)(i => (i * 7 % 251).toByte)
+    val d = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
+    d.setInput(data)
+    d.finish()
+    val buf = new Array[Byte](8192)
+    val raw = buf.take(d.deflate(buf))
+    d.end()
+    val padded = raw ++ Array.fill[Byte](9)(0x55)
+    assert(Inflate.growRaw(padded, 0, padded.length, data.length, 0L, "p").toSeq == data.toSeq)
+    val cut = intercept[IllegalArgumentException](Inflate.growRaw(raw, 0, raw.length / 2, data.length, 0L, "p"))
+    assert(cut.getMessage == "requirement failed: p truncated or needs a preset dictionary")
+    // a 1-byte hint still yields the exact bytes
+    assert(Inflate.growRaw(raw, 0, raw.length, 1, 0L, "p").toSeq == data.toSeq)
+  }
+
   test("a /Length past the Int or Long range falls back to the endstream scan and extracts the same text") {
     val paras = Seq("First paragraph of the stream.", "Second one, a little longer than the first.")
     for (v <- 0 until PdfWriter.numVariants; length <- Seq("2147483600", "9" * 25)) {

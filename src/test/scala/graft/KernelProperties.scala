@@ -77,6 +77,53 @@ object KernelProperties extends Properties("kernels") {
     }
   }
 
+  property("zip mutants (cut, flipped header byte, overwritten size field) yield a row, never an index, size or memory error") = {
+    import graft.serialize.{DocxWriter, EpubWriter, OdfWriter, PptxWriter, XlsxWriter}
+    val seed = for {
+      ps <- Gen.chooseNum(1, 6).flatMap(n => Gen.listOfN(n, text))
+      v <- Gen.chooseNum(0, 3)
+      doc <- Gen.oneOf[() => Array[Byte]](() => DocxWriter.generate(ps, v),
+        () => PptxWriter.generate(ps, v), () => XlsxWriter.generate(ps, v),
+        () => OdfWriter.generate("odt", ps, v), () => OdfWriter.generate("ods", ps, v),
+        () => EpubWriter.generate(ps, v), () => EpubWriter.generate(ps, 4))
+    } yield doc()
+    // header signature -> offset of its first of two 4-byte size fields:
+    // local header (sizes), central header (sizes), end record (directory
+    // size and offset)
+    val sizeField = Map(0x04034b50 -> 18, 0x02014b50 -> 20, 0x06054b50 -> 12)
+    def headers(z: Array[Byte]): IndexedSeq[(Int, Int)] =
+      (0 to z.length - 4).flatMap(i => sizeField.get(graft.util.LittleEndian.i32(z, i)).map(i -> _))
+    val mutant = for {
+      z <- seed
+      how <- Gen.chooseNum(0, 2)
+      r1 <- Gen.chooseNum(0, Int.MaxValue)
+      r2 <- Gen.chooseNum(0, Int.MaxValue)
+      value <- Gen.oneOf(Gen.const(-1), Gen.const(0), Gen.const(60 << 20),
+        Gen.chooseNum(0, 1 << 16), Gen.chooseNum(Int.MinValue, Int.MaxValue))
+    } yield {
+      val m = z.clone()
+      val hs = headers(m)
+      val (h, size) = hs(r1 % hs.length)
+      how match {
+        case 0 => m.take(r1 % (m.length + 1))
+        case 1 =>
+          val at = math.min(m.length - 1, h + r2 % 46)
+          m(at) = (m(at) ^ (1 + r2 % 255)).toByte
+          m
+        case _ =>
+          val at = h + size + 4 * (r2 % 2)
+          if (at + 4 <= m.length)
+            java.nio.ByteBuffer.wrap(m).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(at, value)
+          m
+      }
+    }
+    forAll(mutant) { bytes =>
+      val r = Extractor.extractOne(WebPage("u", ts, bytes, "", "en"), 0)
+      r != null && (r.success || r.error.nonEmpty) &&
+        !Seq("ArrayIndexOutOfBounds", "NegativeArraySize", "OutOfMemory").exists(r.error.contains)
+    }
+  }
+
   property("charset decode is total on arbitrary bytes") =
     forAll(Gen.containerOf[Array, Byte](Gen.choose(Byte.MinValue, Byte.MaxValue))) { bytes =>
       Charsets.decode(bytes) != null

@@ -59,7 +59,7 @@ class OdfSpec extends AnyFunSuite {
   test("the sxw fixture really carries the legacy OOo-1.x namespace URIs") {
     val bytes = OdfWriter.generate("sxw", paras, 0)
     val xml = new String(
-      graft.extract.docx.DocxExtractor.readPart(bytes, "content.xml").get,
+      graft.util.ZipReader(bytes).read("content.xml").get,
       java.nio.charset.StandardCharsets.UTF_8)
     assert(xml.contains("http://openoffice.org/2000/text"))
     assert(!xml.contains("urn:oasis:names"))
