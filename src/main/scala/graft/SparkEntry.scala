@@ -163,6 +163,22 @@ object SparkEntry {
     first.unionByName(recrawl)
   }
 
+  /** Per-document extraction queries: `payload(doc_id, text)` writes each
+    * source document in one format, `extractOne` reads it back, and the row
+    * is (doc_id, refined format_from, success, text with '\n' respaced),
+    * plus `has_error` when `withError`. */
+  private def extractEach(s: SparkSession, dir: String, withError: Boolean = false)(
+      payload: (Long, String) => Array[Byte]): DataFrame = {
+    import s.implicits._
+    val rows = docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
+      .map { case (id, t) =>
+        val r = graft.extract.Extractor.extractOne(
+          graft.model.WebPage(s"doc$id", new java.sql.Timestamp(0), payload(id, t), "", "en"), 0)
+        (id, r.format_from, r.success, r.text.replace('\n', ' '), r.error.nonEmpty)
+      }.toDF("doc_id", "format_from", "success", "text", "has_error")
+    (if (withError) rows else rows.drop("has_error")).orderBy("doc_id")
+  }
+
   // --------------------------------------------------------------------------
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -182,172 +198,84 @@ object SparkEntry {
     // PPTX/XLSX byte-identity: payloads synthesized per doc inside the
     // query (corpus routing stays docx), extracted, refined kind asserted,
     // newline-respaced text must equal the source document exactly
-    "extract_pptx" -> ((s, dir) => {
-      import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val paras = graft.fixtures.HtmlTemplates.paragraphize(t)
-          val bytes = graft.serialize.PptxWriter.generate(
-            paras, (id % graft.serialize.PptxWriter.numVariants).toInt)
-          val r = graft.extract.Extractor.extractOne(
-            graft.model.WebPage(s"pptx$id", new java.sql.Timestamp(0), bytes, "", "en"), 0)
-          (id, r.format_from, r.success, r.text.replace('\n', ' '))
-        }.toDF("doc_id", "format_from", "success", "text")
-        .orderBy("doc_id")
+    "extract_pptx" -> ((s, dir) => extractEach(s, dir) { (id, t) =>
+      val paras = graft.fixtures.HtmlTemplates.paragraphize(t)
+      graft.serialize.PptxWriter.generate(
+        paras, (id % graft.serialize.PptxWriter.numVariants).toInt)
     }),
-    "extract_xlsx" -> ((s, dir) => {
-      import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val paras = graft.fixtures.HtmlTemplates.paragraphize(t)
-          // variants 0 (shared strings) and 2 (inline, stored archive):
-          // the ones whose cell layout reproduces the paragraphs verbatim
-          val bytes = graft.serialize.XlsxWriter.generate(paras, (id % 2).toInt * 2)
-          val r = graft.extract.Extractor.extractOne(
-            graft.model.WebPage(s"xlsx$id", new java.sql.Timestamp(0), bytes, "", "en"), 0)
-          (id, r.format_from, r.success, r.text.replace('\n', ' '))
-        }.toDF("doc_id", "format_from", "success", "text")
-        .orderBy("doc_id")
+    "extract_xlsx" -> ((s, dir) => extractEach(s, dir) { (id, t) =>
+      val paras = graft.fixtures.HtmlTemplates.paragraphize(t)
+      // variants 0 (shared strings) and 2 (inline, stored archive):
+      // the ones whose cell layout reproduces the paragraphs verbatim
+      graft.serialize.XlsxWriter.generate(paras, (id % 2).toInt * 2)
     }),
 
-    "extract_rtf" -> ((s, dir) => {
-      import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val bytes = graft.serialize.RtfWriter.generate(
-            graft.fixtures.HtmlTemplates.paragraphize(t),
-            (id % graft.serialize.RtfWriter.numVariants).toInt)
-          val r = graft.extract.Extractor.extractOne(
-            graft.model.WebPage(s"rtf$id", new java.sql.Timestamp(0), bytes, "", "en"), 0)
-          (id, r.format_from, r.success, r.text.replace('\n', ' '))
-        }.toDF("doc_id", "format_from", "success", "text")
-        .orderBy("doc_id")
+    "extract_rtf" -> ((s, dir) => extractEach(s, dir) { (id, t) =>
+      graft.serialize.RtfWriter.generate(
+        graft.fixtures.HtmlTemplates.paragraphize(t),
+        (id % graft.serialize.RtfWriter.numVariants).toInt)
     }),
-    "extract_odf" -> ((s, dir) => {
-      import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val kind = Seq("odt", "odp", "ods")((id % 3).toInt)
-          // variants 0-2 preserve the paragraph layout for every kind
-          val bytes = graft.serialize.OdfWriter.generate(
-            kind, graft.fixtures.HtmlTemplates.paragraphize(t), ((id / 3) % 3).toInt)
-          val r = graft.extract.Extractor.extractOne(
-            graft.model.WebPage(s"odf$id", new java.sql.Timestamp(0), bytes, "", "en"), 0)
-          (id, r.format_from, r.success, r.text.replace('\n', ' '))
-        }.toDF("doc_id", "format_from", "success", "text")
-        .orderBy("doc_id")
+    "extract_odf" -> ((s, dir) => extractEach(s, dir) { (id, t) =>
+      val kind = Seq("odt", "odp", "ods")((id % 3).toInt)
+      // variants 0-2 preserve the paragraph layout for every kind
+      graft.serialize.OdfWriter.generate(
+        kind, graft.fixtures.HtmlTemplates.paragraphize(t), ((id / 3) % 3).toInt)
     }),
 
     // ODF TEMPLATE kinds (.ott/.otp/.ots) and StarOffice .sxw — whitelisted
     // inputs sharing the content.xml grammar: templates differ only in
     // mimetype, sxw carries the legacy OOo-1.x namespace URIs. Variants 0-2
     // preserve the paragraph layout for every kind (as in extract_odf).
-    "extract_odf_templates" -> ((s, dir) => {
-      import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val kind = Seq("ott", "otp", "ots", "sxw")((id % 4).toInt)
-          val bytes = graft.serialize.OdfWriter.generate(
-            kind, graft.fixtures.HtmlTemplates.paragraphize(t), ((id / 4) % 3).toInt)
-          val r = graft.extract.Extractor.extractOne(
-            graft.model.WebPage(s"odft$id", new java.sql.Timestamp(0), bytes, "", "en"), 0)
-          (id, r.format_from, r.success, r.text.replace('\n', ' '))
-        }.toDF("doc_id", "format_from", "success", "text")
-        .orderBy("doc_id")
+    "extract_odf_templates" -> ((s, dir) => extractEach(s, dir) { (id, t) =>
+      val kind = Seq("ott", "otp", "ots", "sxw")((id % 4).toInt)
+      graft.serialize.OdfWriter.generate(
+        kind, graft.fixtures.HtmlTemplates.paragraphize(t), ((id / 4) % 3).toInt)
     }),
 
     // flat-ODF single-file XML (.fodt/.fodp/.fods) — same content grammar,
     // no zip; variant 2 omits office:mimetype to hit the body-element
     // fallback. Byte-identity vs the source document, like extract_odf.
-    "extract_fodf" -> ((s, dir) => {
-      import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val kind = Seq("odt", "odp", "ods")((id % 3).toInt)
-          val bytes = graft.serialize.OdfWriter.generateFlat(
-            kind, graft.fixtures.HtmlTemplates.paragraphize(t), ((id / 3) % 3).toInt)
-          val r = graft.extract.Extractor.extractOne(
-            graft.model.WebPage(s"fodf$id", new java.sql.Timestamp(0), bytes, "", "en"), 0)
-          (id, r.format_from, r.success, r.text.replace('\n', ' '))
-        }.toDF("doc_id", "format_from", "success", "text")
-        .orderBy("doc_id")
+    "extract_fodf" -> ((s, dir) => extractEach(s, dir) { (id, t) =>
+      val kind = Seq("odt", "odp", "ods")((id % 3).toInt)
+      graft.serialize.OdfWriter.generateFlat(
+        kind, graft.fixtures.HtmlTemplates.paragraphize(t), ((id / 3) % 3).toInt)
     }),
 
     // EPUB with real OPF-spine ordering — variant 4's chapter files are
     // publisher-named DESCENDING, so only parsing content.opf's <spine>
     // (not any filename convention) reproduces the document
-    "extract_epub" -> ((s, dir) => {
-      import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val bytes = graft.serialize.EpubWriter.generate(
-            graft.fixtures.HtmlTemplates.paragraphize(t),
-            (id % graft.serialize.EpubWriter.numVariants).toInt)
-          val r = graft.extract.Extractor.extractOne(
-            graft.model.WebPage(s"epub$id", new java.sql.Timestamp(0), bytes, "", "en"), 0)
-          (id, r.format_from, r.success, r.text.replace('\n', ' '))
-        }.toDF("doc_id", "format_from", "success", "text")
-        .orderBy("doc_id")
+    "extract_epub" -> ((s, dir) => extractEach(s, dir) { (id, t) =>
+      graft.serialize.EpubWriter.generate(
+        graft.fixtures.HtmlTemplates.paragraphize(t),
+        (id % graft.serialize.EpubWriter.numVariants).toInt)
     }),
 
     // Legacy binary Office (.doc/.xls/.ppt in CFB): real piece-table /
     // BIFF8 / record-tree kernels — per-document byte-identity like the
     // OOXML family
-    "extract_doc" -> ((s, dir) => {
-      import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val bytes = graft.serialize.LegacyOfficeWriters.DocWriter.generate(
-            graft.fixtures.HtmlTemplates.paragraphize(t),
-            (id % graft.serialize.LegacyOfficeWriters.DocWriter.numVariants).toInt)
-          val r = graft.extract.Extractor.extractOne(
-            graft.model.WebPage(s"doc$id", new java.sql.Timestamp(0), bytes, "", "en"), 0)
-          (id, r.format_from, r.success, r.text.replace('\n', ' '))
-        }.toDF("doc_id", "format_from", "success", "text")
-        .orderBy("doc_id")
+    "extract_doc" -> ((s, dir) => extractEach(s, dir) { (id, t) =>
+      graft.serialize.LegacyOfficeWriters.DocWriter.generate(
+        graft.fixtures.HtmlTemplates.paragraphize(t),
+        (id % graft.serialize.LegacyOfficeWriters.DocWriter.numVariants).toInt)
     }),
-    "extract_xls" -> ((s, dir) => {
-      import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          // variants 0 (latin shared strings), 2 (wide) and 3 (SST split
-          // across Continue records): the paragraph-per-row layouts that
-          // reproduce the source verbatim
-          val vv = graft.serialize.LegacyOfficeWriters.XlsWriter.verbatimVariants
-          val bytes = graft.serialize.LegacyOfficeWriters.XlsWriter.generate(
-            graft.fixtures.HtmlTemplates.paragraphize(t), vv((id % vv.length).toInt))
-          val r = graft.extract.Extractor.extractOne(
-            graft.model.WebPage(s"xls$id", new java.sql.Timestamp(0), bytes, "", "en"), 0)
-          (id, r.format_from, r.success, r.text.replace('\n', ' '))
-        }.toDF("doc_id", "format_from", "success", "text")
-        .orderBy("doc_id")
+    "extract_xls" -> ((s, dir) => extractEach(s, dir) { (id, t) =>
+      // variants 0 (latin shared strings), 2 (wide) and 3 (SST split
+      // across Continue records): the paragraph-per-row layouts that
+      // reproduce the source verbatim
+      val vv = graft.serialize.LegacyOfficeWriters.XlsWriter.verbatimVariants
+      graft.serialize.LegacyOfficeWriters.XlsWriter.generate(
+        graft.fixtures.HtmlTemplates.paragraphize(t), vv((id % vv.length).toInt))
     }),
-    "extract_ppt" -> ((s, dir) => {
-      import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val bytes = graft.serialize.LegacyOfficeWriters.PptWriter.generate(
-            graft.fixtures.HtmlTemplates.paragraphize(t),
-            (id % graft.serialize.LegacyOfficeWriters.PptWriter.numVariants).toInt)
-          val r = graft.extract.Extractor.extractOne(
-            graft.model.WebPage(s"ppt$id", new java.sql.Timestamp(0), bytes, "", "en"), 0)
-          (id, r.format_from, r.success, r.text.replace('\n', ' '))
-        }.toDF("doc_id", "format_from", "success", "text")
-        .orderBy("doc_id")
+    "extract_ppt" -> ((s, dir) => extractEach(s, dir) { (id, t) =>
+      graft.serialize.LegacyOfficeWriters.PptWriter.generate(
+        graft.fixtures.HtmlTemplates.paragraphize(t),
+        (id % graft.serialize.LegacyOfficeWriters.PptWriter.numVariants).toInt)
     }),
 
-    "extract_pub" -> ((s, dir) => {
-      import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val bytes = graft.serialize.LegacyOfficeWriters.PubWriter.generate(
-            graft.fixtures.HtmlTemplates.paragraphize(t),
-            (id % graft.serialize.LegacyOfficeWriters.PubWriter.numVariants).toInt)
-          val r = graft.extract.Extractor.extractOne(
-            graft.model.WebPage(s"pub$id", new java.sql.Timestamp(0), bytes, "", "en"), 0)
-          (id, r.format_from, r.success, r.text.replace('\n', ' '))
-        }.toDF("doc_id", "format_from", "success", "text")
-        .orderBy("doc_id")
+    "extract_pub" -> ((s, dir) => extractEach(s, dir) { (id, t) =>
+      graft.serialize.LegacyOfficeWriters.PubWriter.generate(
+        graft.fixtures.HtmlTemplates.paragraphize(t),
+        (id % graft.serialize.LegacyOfficeWriters.PubWriter.numVariants).toInt)
     }),
 
     // Dispatch containment: HOLLOW legacy CFB containers (marker stream
@@ -356,31 +284,23 @@ object SparkEntry {
     // while flat-ODF and txt payloads extract.
     // (Well-formed doc/xls/ppt/pub succeed:
     // extract_doc/extract_xls/extract_ppt/extract_pub.)
-    "extract_dispatch" -> ((s, dir) => {
-      import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val bytes: Array[Byte] = (id % 9) match {
-            case 0 => graft.serialize.CfbWriter.generate("doc")
-            case 1 => graft.serialize.CfbWriter.generate("xls")
-            case 2 => graft.serialize.CfbWriter.generate("ppt")
-            case 3 => graft.serialize.CfbWriter.generate("raw")
-            case 4 => graft.serialize.OdfWriter.generateFlat(
-              "odt", graft.fixtures.HtmlTemplates.paragraphize(t), 0)
-            case 5 => graft.serialize.CfbWriter.generate("pub")
-            case 6 => t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            case 7 => // gzip transport wrapper: transparently inflated
-              graft.fixtures.Corpus.gzipBytes(
-                t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            case _ => // gzip magic with a corrupt body: failure, not garbage
-              Array[Byte](0x1f.toByte, 0x8b.toByte, 8) ++
-                "not really deflate".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          }
-          val r = graft.extract.Extractor.extractOne(
-            graft.model.WebPage(s"disp$id", new java.sql.Timestamp(0), bytes, "", "en"), 0)
-          (id, r.format_from, r.success, r.text.replace('\n', ' '), r.error.nonEmpty)
-        }.toDF("doc_id", "format_from", "success", "text", "has_error")
-        .orderBy("doc_id")
+    "extract_dispatch" -> ((s, dir) => extractEach(s, dir, withError = true) { (id, t) =>
+      (id % 9) match {
+        case 0 => graft.serialize.CfbWriter.generate("doc")
+        case 1 => graft.serialize.CfbWriter.generate("xls")
+        case 2 => graft.serialize.CfbWriter.generate("ppt")
+        case 3 => graft.serialize.CfbWriter.generate("raw")
+        case 4 => graft.serialize.OdfWriter.generateFlat(
+          "odt", graft.fixtures.HtmlTemplates.paragraphize(t), 0)
+        case 5 => graft.serialize.CfbWriter.generate("pub")
+        case 6 => t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        case 7 => // gzip transport wrapper: transparently inflated
+          graft.fixtures.Corpus.gzipBytes(
+            t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        case _ => // gzip magic with a corrupt body: failure, not garbage
+          Array[Byte](0x1f.toByte, 0x8b.toByte, 8) ++
+            "not really deflate".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      }
     }),
 
     // ---- structured-data conversion (K4, S5-S12, F1-F4, P1-P4) -------------

@@ -120,6 +120,15 @@ object Extractor {
     case other => (other, Charsets.decode(bytes))
   }
 
+  /** A container kernel's failure once the package kind is known (from its
+    * entry names or `mimetype`): [[extractOne]]'s failure row carries `kind`,
+    * not the sniff token, and describes `cause`. */
+  private[extract] final class KindFailure(val kind: String, cause: Throwable) extends RuntimeException(cause)
+
+  /** Runs `body`, rethrowing a non-fatal failure as a [[KindFailure]] of `kind`. */
+  private[extract] def failingAs[A](kind: String)(body: => A): A =
+    try body catch { case scala.util.control.NonFatal(e) => throw new KindFailure(kind, e) }
+
   /** Bounded gunzip through [[graft.util.Inflate.grow]]: output capped at
     * [[maxPayloadBytes]] so a tiny decompression bomb cannot expand past the
     * same limit raw payloads already honor; truncated/corrupt streams throw
@@ -171,10 +180,15 @@ object Extractor {
   def extractOne(page: WebPage, partitionId: Int): ExtractionResult = {
     val bytes = if (page.html == null) Array.emptyByteArray else page.html
     val fmt = sniffFormat(bytes)
-    graft.util.Containment.contained[ExtractionResult](e =>
-      ExtractionResult(page.url, success = false, text = "", format_from = fmt,
+    graft.util.Containment.contained[ExtractionResult] { e =>
+      val (kind, cause) = e match {
+        case k: KindFailure => (k.kind, k.getCause)
+        case _ => (fmt, e)
+      }
+      ExtractionResult(page.url, success = false, text = "", format_from = kind,
         original_size = bytes.length.toLong, new_size = 0L,
-        error = graft.util.Containment.describe(e), partition_id = partitionId)) {
+        error = graft.util.Containment.describe(cause), partition_id = partitionId)
+    } {
       if (bytes.length > maxPayloadBytes)
         ExtractionResult(page.url, success = false, text = "", format_from = fmt,
           original_size = bytes.length.toLong, new_size = 0L,

@@ -2,7 +2,7 @@ package graft.extract.docx
 
 import java.nio.charset.StandardCharsets
 
-import graft.util.ZipReader
+import graft.util.{XmlCursor, ZipReader}
 
 /** DOCX → text kernel: unzip the OOXML package, scan `word/document.xml`,
   * and join each `<w:p>` paragraph's `<w:t>` text runs; paragraphs join
@@ -35,88 +35,32 @@ object DocxExtractor {
     * (w:p, w:t), DrawingML slides (a:p, a:t); same grammar, different
     * names. */
   def extractRuns(xml: String, pTag: String, tTag: String): String = {
-    val out = new StringBuilder
-    val para = new StringBuilder
-    val closeT = "/" + tTag // hoisted: the scan loop runs per tag, and an
-    val closeP = "/" + pTag // interpolation there would allocate per tag
+    val out = new java.lang.StringBuilder
+    val para = new java.lang.StringBuilder
     var paraHasRun = false
     var inT = false
-    var i = 0
-    val n = xml.length
 
     def endParagraph(): Unit = {
       if (paraHasRun) {
-        if (out.nonEmpty) out.append('\n')
+        if (out.length > 0) out.append('\n')
         out.append(para)
       }
       para.setLength(0)
       paraHasRun = false
     }
 
-    def isTag(tag: String, name: String): Boolean =
-      tag.startsWith(name) && (tag.length == name.length || !isNameChar(tag.charAt(name.length)))
-
-    while (i < n) {
-      val c = xml.charAt(i)
-      if (c == '<') {
-        val close = xml.indexOf('>', i)
-        if (close < 0) { i = n } // truncated tag: stop
-        else {
-          val tag = xml.substring(i + 1, close)
-          if (isTag(tag, tTag)) {
-            if (tag.endsWith("/")) () // empty <w:t/>: no text run
-            else {
-              inT = true
-              // an open/close <w:t></w:t> pair IS a (zero-char) text run:
-              // the paragraph must still emit its (empty) line, so that an
-              // empty source paragraph round-trips instead of vanishing
-              paraHasRun = true
-            }
-          } else if (tag == closeT) {
-            inT = false
-          } else if (isTag(tag, pTag)) {
-            if (tag.endsWith("/")) endParagraph() // self-closing <w:p/>
-          } else if (tag == closeP) {
-            endParagraph()
-          }
-          i = close + 1
-        }
-      } else if (inT) {
-        if (c == '&') {
-          val (decoded, next) = entity(xml, i)
-          para.append(decoded)
-          i = next
-        } else {
-          para.append(c)
-          i += 1
-        }
-      } else i += 1
+    val c = new XmlCursor(xml)
+    while (c.next()) {
+      if (inT) c.appendText(para)
+      if (c.isOpen(tTag)) {
+        // an open/close <w:t></w:t> pair IS a (zero-char) text run: the
+        // paragraph must still emit its (empty) line, so that an empty
+        // source paragraph round-trips instead of vanishing; <w:t/> is none
+        if (!c.selfClosing) { inT = true; paraHasRun = true }
+      } else if (c.isClose(tTag)) inT = false
+      else if (c.isOpen(pTag)) { if (c.selfClosing) endParagraph() }
+      else if (c.isClose(pTag)) endParagraph()
     }
     out.toString
-  }
-
-  private def isNameChar(c: Char): Boolean =
-    Character.isLetterOrDigit(c) || c == ':' || c == '-' || c == '_' || c == '.'
-
-  /** XML's five predefined entities + numeric refs; a bare '&' (invalid XML,
-    * defensive) passes through literally. Returns (text, index-after). */
-  private def entity(s: String, start: Int): (String, Int) = {
-    val semi = s.indexOf(';', start)
-    if (semi < 0 || semi - start > 12) return ("&", start + 1)
-    val name = s.substring(start + 1, semi)
-    name match {
-      case "amp" => ("&", semi + 1)
-      case "lt" => ("<", semi + 1)
-      case "gt" => (">", semi + 1)
-      case "quot" => ("\"", semi + 1)
-      case "apos" => ("'", semi + 1)
-      case _ if name.startsWith("#x") || name.startsWith("#X") =>
-        try (new String(Character.toChars(Integer.parseInt(name.drop(2), 16))), semi + 1)
-        catch { case _: Exception => ("&", start + 1) }
-      case _ if name.startsWith("#") =>
-        try (new String(Character.toChars(Integer.parseInt(name.drop(1)))), semi + 1)
-        catch { case _: Exception => ("&", start + 1) }
-      case _ => ("&", start + 1)
-    }
   }
 }

@@ -2,8 +2,7 @@ package graft.extract.epub
 
 import java.nio.charset.StandardCharsets
 
-import graft.util.XmlAttr.attr
-import graft.util.ZipReader
+import graft.util.{XmlCursor, ZipReader}
 import graft.extract.html.HtmlExtractor
 
 /** EPUB → text kernel — the reference whitelist's .epub input
@@ -42,24 +41,38 @@ object EpubExtractor {
   def spinePaths(zip: ZipReader): Option[Seq[String]] =
     for {
       container <- zip.read("META-INF/container.xml")
-        .map(new String(_, StandardCharsets.UTF_8))
-      opfPath <- tags(container, "rootfile").flatMap(attr(_, "full-path")).headOption
-      opfXml <- zip.read(opfPath)
-        .map(new String(_, StandardCharsets.UTF_8))
-    } yield {
-      val base = opfPath.lastIndexOf('/') match {
-        case -1 => ""
-        case i => opfPath.substring(0, i + 1)
-      }
-      val items: Map[String, (String, String)] = tags(opfXml, "item").flatMap { t =>
-        for (id <- attr(t, "id"); href <- attr(t, "href"))
-          yield id -> (href, attr(t, "media-type").getOrElse(""))
-      }.toMap
-      tags(opfXml, "itemref")
-        .flatMap(attr(_, "idref"))
-        .flatMap(items.get)
-        .collect { case (href, mt) if mt == "application/xhtml+xml" => resolve(base, href) }
+      opfPath <- firstAttr(new String(container, StandardCharsets.UTF_8), "rootfile", "full-path")
+      opf <- zip.read(opfPath)
+    } yield spine(new String(opf, StandardCharsets.UTF_8), opfPath)
+
+  /** The `name` attribute of the first `<tag>` that has one. */
+  private def firstAttr(xml: String, tag: String, name: String): Option[String] = {
+    val c = new XmlCursor(xml)
+    while (c.next()) if (c.isOpen(tag)) {
+      val v = c.attr(name)
+      if (v.isDefined) return v
     }
+    None
+  }
+
+  /** The OPF's spine: each `<itemref idref>` in order, looked up in the
+    * `<manifest>` items, XHTML items only, resolved against the OPF's
+    * directory. */
+  private[graft] def spine(opf: String, opfPath: String): Seq[String] = {
+    val base = opfPath.substring(0, opfPath.lastIndexOf('/') + 1)
+    val items = Map.newBuilder[String, (String, String)]
+    val refs = Seq.newBuilder[String]
+    val c = new XmlCursor(opf)
+    while (c.next()) {
+      if (c.isOpen("item"))
+        for (id <- c.attr("id"); href <- c.attr("href"))
+          items += id -> (href, c.attr("media-type").getOrElse(""))
+      else if (c.isOpen("itemref")) refs ++= c.attr("idref")
+    }
+    val byId = items.result()
+    refs.result().flatMap(byId.get)
+      .collect { case (href, mt) if mt == "application/xhtml+xml" => resolve(base, href) }
+  }
 
   private val chapterName = "^OEBPS/chapter([0-9]+)\\.xhtml$".r
 
@@ -68,23 +81,6 @@ object EpubExtractor {
     zip.names.collect { case name @ chapterName(num) => (num.toInt, name) }.toSeq
       .sortBy(_._1)
       .flatMap { case (_, name) => zip.read(name) }
-
-  /** All `<name ...>` (and self-closing) tag bodies, in document order. */
-  private def tags(xml: String, name: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val open = "<" + name
-    var i = xml.indexOf(open)
-    while (i >= 0) {
-      val after = i + open.length
-      // require a name boundary so "<item" does not match "<itemref"
-      if (after < xml.length && !Character.isLetterOrDigit(xml.charAt(after))) {
-        val close = xml.indexOf('>', i)
-        if (close > 0) out += xml.substring(i + 1, close)
-      }
-      i = xml.indexOf(open, after)
-    }
-    out.result()
-  }
 
   /** Resolve an href against the OPF's directory, normalizing `.`/`..`. */
   private def resolve(base: String, href: String): String = {

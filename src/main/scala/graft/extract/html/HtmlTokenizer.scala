@@ -102,7 +102,7 @@ object HtmlTokenizer {
 
     private def isNameStart(c: Char) =
       (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-    private def isNameChar(c: Char) =
+    private def isTagChar(c: Char) =
       isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
 
     private def advance(): Unit = {
@@ -181,7 +181,7 @@ object HtmlTokenizer {
     private def parseEndTag(): Unit = {
       var j = i + 2
       val start = j
-      while (j < n && isNameChar(s.charAt(j))) j += 1
+      while (j < n && isTagChar(s.charAt(j))) j += 1
       val ix = knownIndex(s, start, j)
       pending = if (ix >= 0) ends(ix) else EndTag(lowerName(s, start, j))
       while (j < n && s.charAt(j) != '>') j += 1
@@ -191,7 +191,7 @@ object HtmlTokenizer {
     private def parseStartTag(): Unit = {
       var j = i + 1
       val start = j
-      while (j < n && isNameChar(s.charAt(j))) j += 1
+      while (j < n && isTagChar(s.charAt(j))) j += 1
       val nameEnd = j
       var selfClosing = false
       var done = false

@@ -2,7 +2,7 @@ package graft.extract.ooxml
 
 import java.nio.charset.StandardCharsets
 
-import graft.util.XmlAttr.attr
+import graft.util.XmlCursor
 
 /** OpenDocument (ODF) text kernels — the reference whitelist's .odt/.odp/
   * .ods family (/root/reference/src/converters/document_converters.py:16-26).
@@ -61,21 +61,21 @@ object OdfExtractor {
     (kind, text)
   }
 
-  /** Kind of a flat document: the office:mimetype root attribute, with a
-    * body-element fallback for files that omit it. */
+  /** Kind of a flat document: the office:mimetype attribute of its
+    * `office:document` root, with a body-element fallback for files that
+    * omit it. */
   def flatKind(xml: String): Option[String] = {
-    val rootAt = xml.indexOf("<office:document")
-    if (rootAt < 0) return None
-    val close = xml.indexOf('>', rootAt)
-    if (close < 0) return None
-    val tag = xml.substring(rootAt + 1, close)
-    attr(tag, "office:mimetype").flatMap(baseKinds.get).map("f" + _)
-      .orElse {
-        if (xml.contains("<office:spreadsheet")) Some("fods")
-        else if (xml.contains("<office:presentation")) Some("fodp")
-        else if (xml.contains("<office:text")) Some("fodt")
-        else None
-      }
+    val c = new XmlCursor(xml)
+    while (c.next()) if (c.isOpen("office:document")) {
+      return c.attr("office:mimetype").flatMap(baseKinds.get).map("f" + _)
+        .orElse {
+          if (xml.contains("<office:spreadsheet")) Some("fods")
+          else if (xml.contains("<office:presentation")) Some("fodp")
+          else if (xml.contains("<office:text")) Some("fodt")
+          else None
+        }
+    }
+    None
   }
 
   /** All `text:p` paragraphs in document order, joined by "\n". */
@@ -111,73 +111,33 @@ object OdfExtractor {
 
   /** Single pass over content.xml. Captures character data inside text:p
     * (at any span depth), expands text:s / text:tab / text:line-break, and
-    * fires the row/cell callbacks on table boundaries. Entities decode via
-    * the shared XML entity table. */
+    * fires the row/cell callbacks on table boundaries. */
   private def scan(xml: String, onParagraph: String => Unit,
                    onCellEnd: () => Unit, onRowEnd: () => Unit): Unit = {
-    val para = new StringBuilder
+    val para = new java.lang.StringBuilder
     var pDepth = 0 // text:p may nest via spans; only the outer one delimits
-    var i = 0
-    val n = xml.length
-    while (i < n) {
-      val c = xml.charAt(i)
-      if (c == '<') {
-        val close = xml.indexOf('>', i)
-        if (close < 0) { i = n }
-        else {
-          val tag = xml.substring(i + 1, close)
-          def is(name: String): Boolean =
-            tag.startsWith(name) &&
-              (tag.length == name.length || !isNameChar(tag.charAt(name.length)))
-          if (is("text:p")) {
-            if (tag.endsWith("/")) { if (pDepth == 0) onParagraph("") }
-            else pDepth += 1
-          } else if (tag == "/text:p") {
-            pDepth -= 1
-            if (pDepth == 0) { onParagraph(para.toString); para.setLength(0) }
-          } else if (pDepth > 0 && is("text:s")) {
-            val count = attr(tag, "text:c").map(_.toInt).getOrElse(1)
-            para.append(" " * count)
-          } else if (pDepth > 0 && is("text:tab")) {
-            para.append('\t')
-          } else if (pDepth > 0 && is("text:line-break")) {
-            para.append('\n')
-          } else if (tag == "/table:table-cell") {
-            onCellEnd()
-          } else if (is("table:table-cell") && tag.endsWith("/")) {
-            onCellEnd() // empty covered/blank cell
-          } else if (tag == "/table:table-row") {
-            onRowEnd()
-          }
-          i = close + 1
-        }
-      } else if (pDepth > 0) {
-        if (c == '&') {
-          val semi = xml.indexOf(';', i)
-          if (semi > 0 && semi - i <= 12) {
-            para.append(decodeEntity(xml.substring(i + 1, semi)))
-            i = semi + 1
-          } else { para.append('&'); i += 1 }
-        } else { para.append(c); i += 1 }
-      } else i += 1
+    val c = new XmlCursor(xml)
+    while (c.next()) {
+      if (pDepth > 0) c.appendText(para)
+      if (c.isOpen("text:p")) {
+        if (!c.selfClosing) pDepth += 1
+        else if (pDepth == 0) onParagraph("")
+      } else if (c.isClose("text:p")) {
+        pDepth -= 1
+        if (pDepth == 0) { onParagraph(para.toString); para.setLength(0) }
+      } else if (pDepth > 0 && c.isOpen("text:s")) {
+        val count = c.attr("text:c").map(_.toInt).getOrElse(1)
+        for (_ <- 0 until count) para.append(' ')
+      } else if (pDepth > 0 && c.isOpen("text:tab")) {
+        para.append('\t')
+      } else if (pDepth > 0 && c.isOpen("text:line-break")) {
+        para.append('\n')
+      } else if (c.isClose("table:table-cell") ||
+                 (c.isOpen("table:table-cell") && c.selfClosing)) {
+        onCellEnd() // a self-closing cell is an empty covered/blank cell
+      } else if (c.isClose("table:table-row")) {
+        onRowEnd()
+      }
     }
-  }
-
-  private def isNameChar(c: Char): Boolean =
-    Character.isLetterOrDigit(c) || c == ':' || c == '-' || c == '_' || c == '.'
-
-  private def decodeEntity(name: String): String = name match {
-    case "amp" => "&"
-    case "lt" => "<"
-    case "gt" => ">"
-    case "quot" => "\""
-    case "apos" => "'"
-    case _ if name.startsWith("#x") || name.startsWith("#X") =>
-      try new String(Character.toChars(Integer.parseInt(name.drop(2), 16)))
-      catch { case _: Exception => "&" + name + ";" }
-    case _ if name.startsWith("#") =>
-      try new String(Character.toChars(Integer.parseInt(name.drop(1))))
-      catch { case _: Exception => "&" + name + ";" }
-    case _ => "&" + name + ";"
   }
 }

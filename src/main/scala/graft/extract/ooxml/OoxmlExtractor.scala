@@ -2,9 +2,10 @@ package graft.extract.ooxml
 
 import java.nio.charset.StandardCharsets
 
+import graft.extract.Extractor
 import graft.extract.docx.DocxExtractor
 import graft.extract.epub.EpubExtractor
-import graft.util.ZipReader
+import graft.util.{XmlCursor, ZipReader}
 
 /** OOXML container dispatch + the PPTX/XLSX text kernels — the remaining
   * Office flagship inputs of the reference's conversion whitelist
@@ -38,24 +39,29 @@ object OoxmlExtractor {
     * by entry name; ODF packages (odt/odp/ods) and EPUBs share the zip
     * magic but declare themselves in a `mimetype` entry. The one reader
     * serves the whole document: each kernel inflates only the parts it
-    * needs, once each, under one per-document total. */
-  def extract(zip: ZipReader): (String, String) = ooxmlKind(zip) match {
-    case Some("docx") =>
-      ("docx", DocxExtractor.extractDocumentXml(utf8(zip.read("word/document.xml").get)))
-    case Some("pptx") => ("pptx", pptx(zip))
-    case Some(_) => ("xlsx", xlsx(zip))
-    case None =>
+    * needs, once each, under one per-document total. A failure after the
+    * kind is known is thrown as [[graft.extract.Extractor.KindFailure]], so
+    * its row carries that kind. */
+  def extract(zip: ZipReader): (String, String) = {
+    val kind = ooxmlKind(zip).orElse {
       val mime = zip.read("mimetype").map(utf8(_).trim)
-      mime.flatMap(OdfExtractor.kindOfMimetype) match {
-        case Some(odfKind) =>
+      mime.flatMap(OdfExtractor.kindOfMimetype)
+        .orElse(mime.filter(_ == EpubExtractor.mimetype).map(_ => "epub"))
+    }.getOrElse(throw new IllegalArgumentException(
+      "zip is not a recognized OOXML/ODF/EPUB package (no word/document.xml, " +
+        "ppt/presentation.xml, xl/workbook.xml, or known mimetype)"))
+    (kind, Extractor.failingAs(kind) {
+      kind match {
+        case "docx" => DocxExtractor.extractDocumentXml(utf8(zip.read("word/document.xml").get))
+        case "pptx" => pptx(zip)
+        case "xlsx" => xlsx(zip)
+        case "epub" => EpubExtractor.extract(zip)
+        case odf =>
           val xml = zip.read("content.xml").map(utf8)
             .getOrElse(throw new IllegalArgumentException("ODF package has no content.xml"))
-          (odfKind, OdfExtractor.extractContent(xml, odfKind))
-        case None if mime.contains(EpubExtractor.mimetype) => ("epub", EpubExtractor.extract(zip))
-        case _ => throw new IllegalArgumentException(
-          "zip is not a recognized OOXML/ODF/EPUB package (no word/document.xml, " +
-            "ppt/presentation.xml, xl/workbook.xml, or known mimetype)")
+          OdfExtractor.extractContent(xml, odf)
       }
+    })
   }
 
   private def utf8(b: Array[Byte]): String = new String(b, StandardCharsets.UTF_8)
@@ -93,82 +99,87 @@ object OoxmlExtractor {
     * of its `<t>` runs (plain `<si><t>` or rich `<si><r><t>`). */
   def parseSharedStrings(xml: String): IndexedSeq[String] = {
     val items = IndexedSeq.newBuilder[String]
-    var i = 0
-    while (true) {
-      val start = xml.indexOf("<si>", i)
-      if (start < 0) return items.result()
-      val end = xml.indexOf("</si>", start)
-      val body = if (end < 0) xml.substring(start) else xml.substring(start, end)
-      // reuse the run scanner with a never-matching paragraph tag: the final
-      // (unterminated) paragraph is flushed by the artificial close below
-      items += DocxExtractor.extractRuns(body + "</zz:never>", "zz:never", "t")
-      i = if (end < 0) xml.length else end + 5
-      if (i >= xml.length) return items.result()
+    val item = new java.lang.StringBuilder
+    val c = new XmlCursor(xml)
+    while (c.next()) if (c.isOpen("si")) {
+      item.setLength(0)
+      if (!c.selfClosing) richText(c, "si", item)
+      items += item.toString
     }
     items.result()
   }
 
+  /** Appends the `<t>` runs of a rich-text string (`<si>` or `<is>`, plain
+    * or split into `<r>` runs) and leaves `c` on its `</end>` tag, or at the
+    * end of the part when there is none. */
+  private def richText(c: XmlCursor, end: String, out: java.lang.StringBuilder): Unit = {
+    var inT = false
+    while (c.next()) {
+      if (inT) c.appendText(out)
+      if (c.isClose(end)) return
+      if (c.isOpen("t")) inT = !c.selfClosing
+      else if (c.isClose("t")) inT = false
+    }
+  }
+
   /** One worksheet: rows -> lines; cells -> tab-joined. Cell value is the
     * shared-string lookup for `t="s"`, the inline `<is><t>` text, or the
-    * raw `<v>` body otherwise (numbers stay as written). Valueless cells
-    * (`<c r="B2"/>` or `<c></c>` — how real spreadsheets encode blanks)
-    * contribute an EMPTY string, preserving the tab-join column alignment
-    * of later cells in the row. */
+    * entity-decoded `<v>` text otherwise (numbers stay as written).
+    * Valueless cells (`<c r="B2"/>` or `<c></c>` — how real spreadsheets
+    * encode blanks) contribute an EMPTY string, preserving the tab-join
+    * column alignment of later cells in the row. */
   def extractSheet(xml: String, shared: IndexedSeq[String]): String = {
-    val rows = Vector.newBuilder[String]
-    var i = 0
-    val n = xml.length
-    var cells = Vector.newBuilder[String]
+    val out = new java.lang.StringBuilder
+    val row = new java.lang.StringBuilder
+    val value = new java.lang.StringBuilder
+    var rows = 0
+    var cells = 0
     var inRow = false
-    var cellIsShared = false
-    var cellIsInline = false
+    var inV = false
+    var cellType: Option[String] = None
     var cellEmitted = true // no cell open yet
-    while (i < n) {
-      val lt = xml.indexOf('<', i)
-      if (lt < 0) { i = n }
-      else {
-        val close = xml.indexOf('>', lt)
-        if (close < 0) { i = n }
-        else {
-          val tag = xml.substring(lt + 1, close)
-          if (tag.startsWith("row")) { inRow = true; cells = Vector.newBuilder[String] }
-          else if (tag == "/row") {
-            if (inRow) rows += cells.result().mkString("\t")
-            inRow = false
-          } else if (tag == "c/" || (tag.startsWith("c ") && tag.endsWith("/"))) {
-            if (inRow) cells += "" // self-closing blank cell
-          } else if (tag.startsWith("c ") || tag == "c") {
-            cellIsShared = tag.contains("t=\"s\"")
-            cellIsInline = tag.contains("t=\"inlineStr\"")
-            cellEmitted = false
-          } else if (tag == "/c") {
-            if (inRow && !cellEmitted) cells += "" // open/close pair, no value
-            cellEmitted = true
-          } else if (tag.startsWith("v") && !tag.startsWith("v/") && tag.length <= 1) {
-            val vEnd = xml.indexOf("</v>", close)
-            if (vEnd > 0) {
-              val raw = xml.substring(close + 1, vEnd)
-              cells += (if (cellIsShared) {
-                val idx = raw.trim.toInt
-                require(idx >= 0 && idx < shared.length, s"shared string $idx out of range")
-                shared(idx)
-              } else raw)
-              cellEmitted = true
-              i = vEnd + 4
-            }
-          } else if (tag.startsWith("is") && (tag.length == 2 || !tag.charAt(2).isLetter)) {
-            val isEnd = xml.indexOf("</is>", close)
-            if (isEnd > 0 && cellIsInline) {
-              cells += DocxExtractor.extractRuns(
-                xml.substring(close + 1, isEnd) + "</zz:never>", "zz:never", "t")
-              cellEmitted = true
-              i = isEnd + 5
-            }
-          }
-          if (i <= close) i = close + 1
+
+    def cell(text: CharSequence): Unit = if (inRow) {
+      if (cells > 0) row.append('\t')
+      row.append(text)
+      cells += 1
+    }
+
+    val c = new XmlCursor(xml)
+    while (c.next()) {
+      if (inV) c.appendText(value)
+      if (c.isOpen("row")) { inRow = true; row.setLength(0); cells = 0 }
+      else if (c.isClose("row")) {
+        if (inRow) {
+          if (rows > 0) out.append('\n')
+          out.append(row)
+          rows += 1
         }
+        inRow = false
+      } else if (c.isOpen("c")) {
+        if (c.selfClosing) cell("") // self-closing blank cell
+        else { cellType = c.attr("t"); cellEmitted = false }
+      } else if (c.isClose("c")) {
+        if (!cellEmitted) cell("") // open/close pair, no value
+        cellEmitted = true
+      } else if (c.isOpen("v")) {
+        inV = !c.selfClosing
+        value.setLength(0)
+      } else if (c.isClose("v") && inV) {
+        inV = false
+        if (cellType.contains("s")) {
+          val idx = value.toString.trim.toInt
+          require(idx >= 0 && idx < shared.length, s"shared string $idx out of range")
+          cell(shared(idx))
+        } else cell(value)
+        cellEmitted = true
+      } else if (c.isOpen("is") && !c.selfClosing && cellType.contains("inlineStr")) {
+        value.setLength(0)
+        richText(c, "is", value)
+        cell(value)
+        cellEmitted = true
       }
     }
-    rows.result().mkString("\n")
+    out.toString
   }
 }

@@ -46,7 +46,7 @@ object DocxWriter {
     case 2 =>
       // split mid-word-ish: fixed-width 11-char fragments regardless of
       // spaces; an empty paragraph still gets its one (empty) run
-      val frags = if (paragraph.isEmpty) Seq("") else paragraph.grouped(11).toSeq
+      val frags = if (paragraph.isEmpty) Seq("") else OoxmlZip.fragments(paragraph, 11)
       frags.map(f => s"<w:r>${wt(f)}</w:r>")
     case _ => throw new IllegalArgumentException(s"variant $variant")
   }

@@ -24,6 +24,21 @@ object OoxmlZip {
     sb.toString
   }
 
+  /** `s` cut every `n` chars, like `grouped(n)`, except that a cut that
+    * would split a surrogate pair moves one char later: no run of a
+    * mid-word split carries half a supplementary-plane character. */
+  def fragments(s: String, n: Int): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var i = 0
+    while (i < s.length) {
+      var end = math.min(i + n, s.length)
+      if (end < s.length && Character.isLowSurrogate(s.charAt(end))) end += 1
+      out += s.substring(i, end)
+      i = end
+    }
+    out.result()
+  }
+
   def write(entries: Seq[(String, String)], store: Boolean): Array[Byte] = {
     val out = new ByteArrayOutputStream(4096)
     val zip = new ZipOutputStream(out)

@@ -36,7 +36,7 @@ object PptxWriter {
           run((if (i == 0) "" else " ") + g.mkString(" "), props = i % 2 == 1)
         }.mkString
       case 2 =>
-        (if (p.isEmpty) Seq("") else p.grouped(9).toSeq).map(run(_, props = false)).mkString
+        (if (p.isEmpty) Seq("") else OoxmlZip.fragments(p, 9)).map(run(_, props = false)).mkString
       case _ => run(p, props = false)
     }
     s"<a:p><a:pPr/>$runs</a:p>"

@@ -30,18 +30,3 @@ object BigEndian {
   }
   def i64(b: Array[Byte], i: Int): Long = (u32(b, i) << 32) | u32(b, i + 4)
 }
-
-/** Minimal XML tag-attribute scanner shared by the XML-ish kernels
-  * (ODF content scan, EPUB container/OPF). Double-quoted values only — the
-  * form every in-scope producer emits. */
-object XmlAttr {
-  def attr(tag: String, name: String): Option[String] = {
-    val k = name + "=\""
-    val s = tag.indexOf(k)
-    if (s < 0) None
-    else {
-      val e = tag.indexOf('"', s + k.length)
-      if (e < 0) None else Some(tag.substring(s + k.length, e))
-    }
-  }
-}

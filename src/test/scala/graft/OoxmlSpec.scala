@@ -38,6 +38,14 @@ class OoxmlSpec extends AnyFunSuite {
     assert(OoxmlExtractor.extractSheet(sheet, shared) == "aa\tbc\ninline text\n42.5")
   }
 
+  test("a non-shared <v> value is entity-decoded (formula-string cell)") {
+    val sheet = "<worksheet><sheetData>" +
+      """<row r="1"><c r="A1" t="str"><f>CONCAT("A","&amp;B")</f><v>A&amp;B &lt;x&gt;</v></c>""" +
+      """<c r="B1"><v>3</v></c></row>""" +
+      "</sheetData></worksheet>"
+    assert(OoxmlExtractor.extractSheet(sheet, IndexedSeq.empty) == "A&B <x>\t3")
+  }
+
   test("blank cells keep their column slot so later cells stay tab-aligned") {
     val shared = IndexedSeq("x", "y")
     // real spreadsheets encode blanks as <c r="B1"/> (self-closing, often
