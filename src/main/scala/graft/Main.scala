@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.fixtures.Corpus
 import graft.pipeline.{ExtractionPipeline, ResumableRunner}
+import graft.util.NioLocalFileSystem
 
 /** spark-submit entry point for the extraction job.
   *
@@ -45,7 +46,8 @@ object Main {
     // metrics table (per-partition lineage)
     val metrics = ExtractionPipeline.metrics(
       results.as[graft.model.ExtractionResult], runId)
-    metrics.write.mode("overwrite").parquet(s"$outDir/metrics")
+    metrics.write.mode("overwrite").options(NioLocalFileSystem.writeOptions)
+      .parquet(s"$outDir/metrics")
     val m = spark.read.parquet(s"$outDir/metrics")
       .agg(sum("docs"), sum("bytes_in"), sum("failures")).head()
     println(s"[main] metrics total: docs=${m.get(0)} bytes_in=${m.get(1)} failures=${m.get(2)}")

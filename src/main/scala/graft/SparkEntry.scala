@@ -12,6 +12,7 @@ import graft.pipeline.ExtractionPipeline
 import graft.similarity.Similarity
 import graft.sources.WarcSource
 import graft.textops.{LangId, TextAnalysis}
+import graft.util.NioLocalFileSystem
 
 /** Driver contract: one `queries` entry per implemented operator family
   * (SURVEY.md §2), with a DuckDB-equivalent oracle SQL wherever the
@@ -1729,7 +1730,7 @@ object SparkEntry {
       def writeBatch(df: org.apache.spark.sql.DataFrame, name: String,
                      mtime: Long): Unit = {
         val stage = s"$tmp/stage_$name"
-        df.coalesce(1).write.parquet(stage)
+        df.coalesce(1).write.options(NioLocalFileSystem.writeOptions).parquet(stage)
         val part = new java.io.File(stage).listFiles()
           .find(_.getName.endsWith(".parquet")).get
         val dest = new java.io.File(in, s"$name.parquet")

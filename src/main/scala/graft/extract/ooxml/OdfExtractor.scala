@@ -2,7 +2,7 @@ package graft.extract.ooxml
 
 import java.nio.charset.StandardCharsets
 
-import graft.util.XmlCursor
+import graft.util.{Inflate, XmlCursor}
 
 /** OpenDocument (ODF) text kernels — the reference whitelist's .odt/.odp/
   * .ods family (/root/reference/src/converters/document_converters.py:16-26).
@@ -111,11 +111,13 @@ object OdfExtractor {
 
   /** Single pass over content.xml. Captures character data inside text:p
     * (at any span depth), expands text:s / text:tab / text:line-break, and
-    * fires the row/cell callbacks on table boundaries. */
+    * fires the row/cell callbacks on table boundaries. The spaces text:s
+    * expands to are capped per document at `Inflate.maxStreamBytes`. */
   private def scan(xml: String, onParagraph: String => Unit,
                    onCellEnd: () => Unit, onRowEnd: () => Unit): Unit = {
     val para = new java.lang.StringBuilder
     var pDepth = 0 // text:p may nest via spans; only the outer one delimits
+    var spaces = 0 // expanded by text:s so far; one short tag may ask for 2^31 - 1
     val c = new XmlCursor(xml)
     while (c.next()) {
       if (pDepth > 0) c.appendText(para)
@@ -127,7 +129,9 @@ object OdfExtractor {
         if (pDepth == 0) { onParagraph(para.toString); para.setLength(0) }
       } else if (pDepth > 0 && c.isOpen("text:s")) {
         val count = c.attr("text:c").map(_.toInt).getOrElse(1)
-        for (_ <- 0 until count) para.append(' ')
+        require(count <= Inflate.maxStreamBytes - spaces,
+          s"ODF text:s runs expand past ${Inflate.maxStreamBytes} spaces")
+        if (count > 0) { spaces += count; for (_ <- 0 until count) para.append(' ') }
       } else if (pDepth > 0 && c.isOpen("text:tab")) {
         para.append('\t')
       } else if (pDepth > 0 && c.isOpen("text:line-break")) {

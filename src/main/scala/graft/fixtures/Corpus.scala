@@ -6,6 +6,7 @@ import java.time.Instant
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.model.WebPage
 import graft.serialize.{CfbWriter => _, OoxmlZip => _, _}
+import graft.util.NioLocalFileSystem
 
 /** Deterministic synthesis of the Common-Crawl-style webpages table
   * (BASELINE.json input_hint) from the driver's documents.parquet.
@@ -119,7 +120,7 @@ object Corpus {
         .as[Doc]
         .flatMap(d => (0 until factor).iterator.map(i =>
           buildPage(d.copy(doc_id = d.doc_id + 1000000L * i), skewHost = false)))
-        .write.mode("overwrite").parquet(dir)
+        .write.mode("overwrite").options(NioLocalFileSystem.writeOptions).parquet(dir)
     }
   }
 
@@ -144,7 +145,8 @@ object Corpus {
     * input shape the streaming file source needs. */
   def materializedDir(spark: SparkSession, sfDir: String, skewHost: Boolean = false): String =
     cached("graft_webpages", sfDir, if (skewHost) "_skew" else "") { dir =>
-      synthesize(spark, sfDir, skewHost).repartition(32).write.mode("overwrite").parquet(dir)
+      synthesize(spark, sfDir, skewHost).repartition(32).write.mode("overwrite")
+        .options(NioLocalFileSystem.writeOptions).parquet(dir)
     }
 
   /** Amplified DOCUMENTS table (doc_id, text, lang) for curation-tier
@@ -161,7 +163,7 @@ object Corpus {
         .select((col("doc_id") + col("rep").cast("long") * 1000000L).as("doc_id"),
           col("text"), col("lang"))
         .repartition(64)
-        .write.mode("overwrite").parquet(dir)
+        .write.mode("overwrite").options(NioLocalFileSystem.writeOptions).parquet(dir)
     }
   }
 }

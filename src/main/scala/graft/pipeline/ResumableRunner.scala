@@ -11,6 +11,7 @@ import org.apache.spark.util.AccumulatorV2
 
 import graft.extract.Extractor
 import graft.model.{ExtractionResult, ManifestEntry, WebPage}
+import graft.util.NioLocalFileSystem
 
 /** Checkpoint/resumable extraction at partition granularity (north_rule:
   * "resumable from checkpoint with per-partition lineage + metrics").
@@ -28,7 +29,9 @@ import graft.model.{ExtractionResult, ManifestEntry, WebPage}
   * goes through the Hadoop FileSystem API (works on HDFS/S3A, not just
   * file://). A run is one extraction job plus an O(numBuckets) manifest
   * write; it never reads `results/` back, so a fresh run costs no O(docs)
-  * re-scan and a resumed one never touches finished buckets' output.
+  * re-scan and a resumed one never touches finished buckets' output. Both
+  * writes carry [[NioLocalFileSystem.writeOptions]], so a `file:` output
+  * starts no `chmod` process per file.
   *
   * Exactly-once counts: the per-bucket docs and failures come from a
   * [[BucketCounts]] accumulator fed by the kernel inside the write job.
@@ -116,7 +119,14 @@ object ResumableRunner {
   private val manifestSchema = Encoders.product[ManifestEntry].schema
 
   def run(spark: SparkSession, pages: Dataset[WebPage], outDir: String,
-          runId: String, numBuckets: Int): RunSummary = {
+          runId: String, numBuckets: Int): RunSummary =
+    run(spark, pages, outDir, runId, numBuckets, NioLocalFileSystem.writeOptions)
+
+  /** [[run]] with the results and manifest writes given `writeOptions` (the
+    * tests compare [[NioLocalFileSystem.writeOptions]] with none). */
+  private[graft] def run(spark: SparkSession, pages: Dataset[WebPage], outDir: String,
+                         runId: String, numBuckets: Int,
+                         writeOptions: Map[String, String]): RunSummary = {
     import spark.implicits._
 
     val manifestDir = s"$outDir/manifest"
@@ -161,7 +171,7 @@ object ResumableRunner {
     // per-WRITE dynamic overwrite (only the buckets this run produced are
     // replaced) — scoped to this writer, not a session-wide conf mutation
     // that would silently change overwrite semantics for caller code
-    results.write.mode(SaveMode.Overwrite)
+    results.write.mode(SaveMode.Overwrite).options(writeOptions)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("partition_id").parquet(resultsDir)
 
@@ -169,7 +179,8 @@ object ResumableRunner {
     val manifest: Seq[ManifestEntry] =
       prior.toSeq ++ fresh.map { case (b, (docs, _)) => ManifestEntry(runId, b, "done", docs) }
     // O(numBuckets) rows: one task, one file
-    manifest.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestDir)
+    manifest.toDS().coalesce(1).write.mode(SaveMode.Overwrite).options(writeOptions)
+      .parquet(manifestDir)
 
     RunSummary(runId, numBuckets,
       bucketsRun = fresh.size,

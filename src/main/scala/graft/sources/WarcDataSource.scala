@@ -196,5 +196,5 @@ private[sources] class WarcPartitionReader(path: String,
     row
   }
 
-  override def close(): Unit = stream.close()
+  override def close(): Unit = records.close() // the stream and the inflater
 }

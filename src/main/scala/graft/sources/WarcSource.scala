@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream, PushbackInputStream}
+import java.io.{BufferedInputStream, ByteArrayInputStream, ByteArrayOutputStream, Closeable, InputStream,
+  PushbackInputStream}
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
@@ -133,12 +134,21 @@ object WarcSource {
     -1
   }
 
-  private def parseHeaders(block: String): Map[String, String] =
-    block.split(CRLF).drop(1).iterator.map { line =>
+  /** The `Name: value` lines after a block's first line (version or status
+    * line). Blocks end before their CRLFCRLF, so no line is empty. */
+  private def parseHeaders(block: String): Map[String, String] = {
+    val out = Map.newBuilder[String, String]
+    var at = block.indexOf(CRLF)
+    while (at >= 0) {
+      val from = at + 2
+      at = block.indexOf(CRLF, from)
+      val line = block.substring(from, if (at < 0) block.length else at)
       val c = line.indexOf(':')
       require(c > 0, s"malformed WARC header line: $line")
-      line.substring(0, c).trim -> line.substring(c + 1).trim
-    }.toMap
+      out += line.substring(0, c).trim -> line.substring(c + 1).trim
+    }
+    out.result()
+  }
 
   private def readFully(in: InputStream, n: Int, what: String): Array[Byte] = {
     val buf = new Array[Byte](n)
@@ -152,8 +162,9 @@ object WarcSource {
   }
 
   /** Bytes up to (excluding) the first CRLFCRLF, or null at a clean EOF on
-    * a record boundary. Reads byte-at-a-time off the (buffered gzip/
-    * pushback) stream — the header block is tiny and capped. */
+    * a record boundary. Reads byte-at-a-time off a buffered stream (the
+    * caller's buffer, or the one over the inflater) — the header block is
+    * tiny and capped. */
   private def readHeaderBlock(in: InputStream): Array[Byte] = {
     var c = in.read()
     if (c < 0) return null
@@ -180,17 +191,23 @@ object WarcSource {
     * Memory is O(one record); malformed framing — bad version line, missing
     * or non-numeric Content-Length, truncation, a trailer that is not
     * CRLFCRLF, a malformed HTTP status line — throws a NAMED error,
-    * contained per-file upstream. */
-  def parseStream(raw: InputStream): Iterator[ParsedResponse] = {
+    * contained per-file upstream. Closing the iterator closes `raw` and,
+    * on a .warc.gz, ends the inflater's native zlib state at once. */
+  def parseStream(raw: InputStream): Iterator[ParsedResponse] with Closeable = {
     val pb = new PushbackInputStream(raw, 2)
     val b0 = pb.read()
     val b1 = if (b0 < 0) -1 else pb.read()
     if (b1 >= 0) pb.unread(b1)
     if (b0 >= 0) pb.unread(b0)
+    // header bytes are read one at a time: buffered, one inflate call serves
+    // many of them
     val in: InputStream =
-      if (b0 == 0x1f && b1 == 0x8b) new GZIPInputStream(pb, 64 * 1024) else pb
+      if (b0 == 0x1f && b1 == 0x8b) new BufferedInputStream(new GZIPInputStream(pb, 64 * 1024))
+      else pb
 
-    new Iterator[ParsedResponse] {
+    new Iterator[ParsedResponse] with Closeable {
+      def close(): Unit = in.close()
+
       private var pending: Option[ParsedResponse] = None
       private var eof = b0 < 0
 
@@ -234,7 +251,8 @@ object WarcSource {
     val httpHdrEnd = indexOfCrlfCrlf(body, 0)
     require(httpHdrEnd >= 0, "HTTP response block has no header terminator")
     val httpHead = new String(body, 0, httpHdrEnd, ISO_8859_1)
-    val statusLine = httpHead.split(CRLF).head
+    val eol = httpHead.indexOf(CRLF)
+    val statusLine = if (eol < 0) httpHead else httpHead.substring(0, eol)
     val parts = statusLine.split(" ")
     require(parts.length >= 2 && parts(0).startsWith("HTTP/") &&
       parts(1).nonEmpty && parts(1).forall(_.isDigit),
@@ -368,33 +386,37 @@ object WarcSource {
       url = s"warc:$p", success = false, text = "", format_from = "warc",
       original_size = 0L, new_size = 0L,
       error = s"WARC segment unreadable: ${e.getMessage}", partition_id = pid)
-    var stream: java.io.InputStream = null
+    // the file stream, then the record iterator over it (which also ends
+    // the inflater)
+    var open: Closeable = null
+    def closeQuietly(): Unit =
+      try { if (open != null) open.close() } catch { case NonFatal(_) => () }
     // a task that stops pulling early (limit/take, kill, downstream throw)
     // never drains the iterator, so hasNext's close-on-exhaustion path
     // would leak the fd/S3A connection — close at task end regardless
     // (the DSV2 path gets this from Spark calling PartitionReader.close())
     Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] {
-      _ => try { if (stream != null) stream.close() } catch { case NonFatal(_) => () }
+      _ => closeQuietly()
     })
     val underlying: Iterator[ExtractionResult] =
       try {
         val path = new org.apache.hadoop.fs.Path(p)
-        stream = new java.io.BufferedInputStream(
-          path.getFileSystem(conf).open(path), 64 * 1024)
-        parseStream(stream).map { r =>
+        val stream = new BufferedInputStream(path.getFileSystem(conf).open(path), 64 * 1024)
+        open = stream
+        val records = parseStream(stream)
+        open = records
+        records.map { r =>
           graft.extract.Extractor.extractOne(
             WebPage(r.url, new java.sql.Timestamp(0L), r.payload, "", ""), pid)
         }
       } catch {
         case NonFatal(e) =>
-          if (stream != null) stream.close()
+          closeQuietly()
           return Iterator.single(failRow(e))
       }
     new Iterator[ExtractionResult] {
       private var pendingFail: Option[ExtractionResult] = None
       private var done = false
-      private def closeQuietly(): Unit =
-        try { if (stream != null) stream.close() } catch { case NonFatal(_) => () }
       def hasNext: Boolean = pendingFail.isDefined || (!done && {
         val h = try underlying.hasNext catch {
           case NonFatal(e) => pendingFail = Some(failRow(e)); true

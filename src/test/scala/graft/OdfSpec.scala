@@ -76,4 +76,25 @@ class OdfSpec extends AnyFunSuite {
       assert(!r.success && r.error.nonEmpty, s"case $i: $r")
     }
   }
+
+  test("a text:s count past the space cap is a named failure row, not an OOM (< 1 MiB allocated)") {
+    def flat(body: String) = graft.model.WebPage("u-fodt", new java.sql.Timestamp(0),
+      ("<office:document office:mimetype=\"application/vnd.oasis.opendocument.text\">" +
+        s"<office:body><office:text>$body</office:text></office:body></office:document>")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8), "", "en")
+    val bomb = flat("<text:p>a<text:s text:c=\"400000000\"/>b</text:p>")
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    Extractor.extractOne(bomb, 0) // load classes outside the measurement
+    val before = mx.getCurrentThreadAllocatedBytes
+    val r = Extractor.extractOne(bomb, 0)
+    val allocated = mx.getCurrentThreadAllocatedBytes - before
+    assert(!r.success && r.error ==
+      "IllegalArgumentException: requirement failed: ODF text:s runs expand past 67108864 spaces", r)
+    assert(allocated < (1L << 20), s"allocated $allocated bytes")
+    // counts under the cap expand, negative ones expand to nothing, as before
+    val ok = Extractor.extractOne(flat(
+      "<text:p>a<text:s text:c=\"3\"/>b<text:s text:c=\"-2\"/>c</text:p>"), 0)
+    assert(ok.success && ok.text == "a   bc", ok)
+  }
 }
