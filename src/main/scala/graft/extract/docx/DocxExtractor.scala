@@ -34,32 +34,47 @@ object DocxExtractor {
   /** The generalized paragraph/run scanner — WordprocessingML uses
     * (w:p, w:t), DrawingML slides (a:p, a:t); same grammar, different
     * names. */
-  def extractRuns(xml: String, pTag: String, tTag: String): String = {
+  def extractRuns(xml: String, pTag: String, tTag: String): String =
+    extractRuns(Seq(xml), pTag, tTag)
+
+  /** The same scanner over several parts in order (a deck's slides): the
+    * paragraphs of every part join with "\n", so an empty paragraph keeps
+    * its line wherever it falls. A paragraph left open at a part's end is
+    * dropped. */
+  def extractRuns(parts: Seq[String], pTag: String, tTag: String): String = {
     val out = new java.lang.StringBuilder
     val para = new java.lang.StringBuilder
+    var emitted = false
     var paraHasRun = false
     var inT = false
 
     def endParagraph(): Unit = {
       if (paraHasRun) {
-        if (out.length > 0) out.append('\n')
+        if (emitted) out.append('\n')
         out.append(para)
+        emitted = true
       }
       para.setLength(0)
       paraHasRun = false
     }
 
-    val c = new XmlCursor(xml)
-    while (c.next()) {
-      if (inT) c.appendText(para)
-      if (c.isOpen(tTag)) {
-        // an open/close <w:t></w:t> pair IS a (zero-char) text run: the
-        // paragraph must still emit its (empty) line, so that an empty
-        // source paragraph round-trips instead of vanishing; <w:t/> is none
-        if (!c.selfClosing) { inT = true; paraHasRun = true }
-      } else if (c.isClose(tTag)) inT = false
-      else if (c.isOpen(pTag)) { if (c.selfClosing) endParagraph() }
-      else if (c.isClose(pTag)) endParagraph()
+    val xmls = parts.iterator
+    while (xmls.hasNext) {
+      val c = new XmlCursor(xmls.next())
+      while (c.next()) {
+        if (inT) c.appendText(para)
+        if (c.isOpen(tTag)) {
+          // an open/close <w:t></w:t> pair IS a (zero-char) text run: the
+          // paragraph must still emit its (empty) line, so that an empty
+          // source paragraph round-trips instead of vanishing; <w:t/> is none
+          if (!c.selfClosing) { inT = true; paraHasRun = true }
+        } else if (c.isClose(tTag)) inT = false
+        else if (c.isOpen(pTag)) { if (c.selfClosing) endParagraph() }
+        else if (c.isClose(pTag)) endParagraph()
+      }
+      para.setLength(0)
+      paraHasRun = false
+      inT = false
     }
     out.toString
   }

@@ -81,10 +81,12 @@ object OdfExtractor {
   /** All `text:p` paragraphs in document order, joined by "\n". */
   def extractParagraphs(xml: String): String = {
     val out = new StringBuilder
+    var emitted = false
     scan(xml,
       onParagraph = p => {
-        if (out.nonEmpty) out.append('\n')
+        if (emitted) out.append('\n')
         out.append(p)
+        emitted = true
       },
       onRowEnd = () => (), onCellEnd = () => ())
     out.toString

@@ -78,9 +78,7 @@ object OoxmlExtractor {
   private def pptx(zip: ZipReader): String = {
     val slides = numbered(zip, slideName)
     require(slides.nonEmpty, "pptx has no ppt/slides/slideN.xml parts")
-    slides.map(DocxExtractor.extractRuns(_, "a:p", "a:t"))
-      .filter(_.nonEmpty)
-      .mkString("\n")
+    DocxExtractor.extractRuns(slides, "a:p", "a:t")
   }
 
   private val sheetName = "^xl/worksheets/sheet([0-9]+)\\.xml$".r

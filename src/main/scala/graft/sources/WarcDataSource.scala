@@ -1,14 +1,21 @@
 package graft.sources
 
+import java.io.{Closeable, IOException}
 import java.util
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.FileStatus
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.classic.ClassicConversions
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -23,22 +30,27 @@ import org.apache.spark.util.SerializableConfiguration
   *   spark.read.format("warc").load("s3a://crawl/segments/")   // dir or glob
   * }}}
   *
-  * One InputPartition per .warc(.gz) OBJECT — the correct granularity
-  * because per-record gzip members are not independently seekable without
-  * an external index — and each partition streams records off the Hadoop
-  * FS through the one-record-at-a-time parser (O(one record) heap; a
-  * multi-GB segment never materializes). Column pruning is pushed down:
-  * a `select(url)` over a crawl does not copy payload bytes into rows.
+  * Whole .warc(.gz) objects are packed into scan partitions by the rule
+  * Spark's own file sources use ([[WarcDataSource.planSegments]]): a
+  * segment is never split — per-record gzip members are not independently
+  * seekable without an external index — but small segments share a task,
+  * so a directory of many small segments does not cost one task (and one
+  * set of shuffle files) per object, while a ~1 GB Common Crawl segment
+  * still plans alone. Each partition streams its segments one after
+  * another off the Hadoop FS through the one-record-at-a-time parser
+  * (O(one record) heap, one segment open at a time; a multi-GB segment
+  * never materializes). Column pruning is pushed down: a `select(url)`
+  * over a crawl does not copy payload bytes into rows.
   * The driver's Hadoop conf reaches the readers as one broadcast per scan,
-  * as in Spark's own file scans, so each task ships only its segment path
+  * as in Spark's own file scans, so each task ships only its segment paths
   * and the pruned schema, and each executor deserializes the conf once.
   *
   * Error semantics are FAILFAST like Spark's file sources: malformed
-  * framing fails the task with the parser's NAMED error. The extraction
-  * pipeline's per-file CONTAINMENT path (one failure row per rotten
-  * segment, job survives) is [[WarcSource.extractFromWarcFiles]] — use
-  * that for production ingest; this connector is the queryable relational
-  * view of raw segments.
+  * framing fails the task with the parser's NAMED error, rethrown with the
+  * failing segment's path. The extraction pipeline's per-file CONTAINMENT
+  * path (one failure row per rotten segment, job survives) is
+  * [[WarcSource.extractFromWarcFiles]] — use that for production ingest;
+  * this connector is the queryable relational view of raw segments.
   */
 class WarcDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "warc"
@@ -62,12 +74,13 @@ object WarcDataSource {
     StructField("payload", BinaryType, nullable = false)))
 
   /** Expand the `path`/`paths` read options through the Hadoop FS (glob-
-    * aware, directory-expanding), deterministic order. `paths` arrives as
+    * aware, directory-expanding) into the listed segments' statuses,
+    * deterministic order by path. `paths` arrives as
     * the JSON array DataFrameReader.load(p*) encodes; the values are
     * framework-authored (no escapes beyond \" and \\ in practice), parsed
     * here without a JSON library dependency. */
   def resolvePaths(options: CaseInsensitiveStringMap,
-                   conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
+                   conf: org.apache.hadoop.conf.Configuration): Seq[FileStatus] = {
     val raw: Seq[String] =
       Option(options.get("paths")).map(parseJsonStringArray).getOrElse(Seq.empty) ++
         Option(options.get("path")).toSeq
@@ -80,8 +93,52 @@ object WarcDataSource {
       matches.flatMap { st =>
         if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
         else Seq(st)
-      }.map(_.getPath.toString)
-    }.distinct.sorted
+      }
+    }.distinctBy(_.getPath.toString).sortBy(_.getPath.toString)
+  }
+
+  /** Whole segments packed into scan partitions, by the rule Spark's file
+    * sources apply to small files, with the confs they read:
+    * `maxSplitBytes = min(spark.sql.files.maxPartitionBytes,
+    * max(openCostInBytes, (total bytes + n * openCostInBytes) / p))`, where
+    * p is `spark.sql.files.minPartitionNum`, else the leaf-node default
+    * parallelism (`spark.sql.leafNodeDefaultParallelism`, else the
+    * context's). Segments, as (path, length), go largest first (path
+    * breaks ties) into next-fit partitions, each counting its length plus
+    * the open cost. A segment is never split, so one past `maxSplitBytes`
+    * plans alone. Both WARC read paths plan here. */
+  def planSegments(spark: SparkSession, segments: Seq[(String, Long)]): Seq[Seq[String]] = {
+    val session = ClassicConversions.castToImpl(spark)
+    val conf = session.sessionState.conf
+    val openCost = conf.filesOpenCostInBytes
+    val parallelism = conf.filesMinPartitionNum.getOrElse(
+      conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+        .getOrElse(session.sparkContext.defaultParallelism))
+    val totalBytes = segments.map(_._2 + openCost).sum
+    val maxSplitBytes = math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, totalBytes / parallelism))
+    pack(segments, maxSplitBytes, openCost)
+  }
+
+  /** Next-fit packing of (path, length) segments, largest first: a
+    * partition closes when the next segment's length would take it past
+    * `maxSplitBytes`; every segment counts its length plus `openCost`. */
+  private def pack(segments: Seq[(String, Long)], maxSplitBytes: Long,
+                   openCost: Long): Seq[Seq[String]] = {
+    val partitions = Seq.newBuilder[Seq[String]]
+    var current = Vector.empty[String]
+    var currentSize = 0L
+    segments.sortBy { case (path, len) => (-len, path) }.foreach { case (path, len) =>
+      if (current.nonEmpty && currentSize + len > maxSplitBytes) {
+        partitions += current
+        current = Vector.empty
+        currentSize = 0L
+      }
+      current :+= path
+      currentSize += len + openCost
+    }
+    if (current.nonEmpty) partitions += current
+    partitions.result()
   }
 
   private def parseJsonStringArray(s: String): Seq[String] = {
@@ -124,25 +181,29 @@ private[sources] class WarcScanBuilder(options: CaseInsensitiveStringMap)
   override def build(): Scan = new WarcScan(options, required)
 }
 
-private[sources] case class WarcInputPartition(path: String) extends InputPartition
+/** The segments one scan task reads, in order. */
+private[sources] case class WarcInputPartition(paths: Seq[String]) extends InputPartition
 
 private[sources] class WarcScan(options: CaseInsensitiveStringMap,
                                 required: StructType) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def description(): String = "graft WARC segments (one partition per object)"
+  override def description(): String =
+    "graft WARC segments (whole segments packed into size-balanced partitions)"
 
-  // driver-side only (plan time): the active session's Hadoop conf
-  private def sparkContext = org.apache.spark.sql.SparkSession.active.sparkContext
+  // driver-side only (plan time): the active session and its Hadoop conf
+  private def session = SparkSession.active
 
-  override def planInputPartitions(): Array[InputPartition] =
-    WarcDataSource.resolvePaths(options, sparkContext.hadoopConfiguration)
+  override def planInputPartitions(): Array[InputPartition] = {
+    val segments = WarcDataSource.resolvePaths(options, session.sparkContext.hadoopConfiguration)
+    WarcDataSource.planSegments(session, segments.map(s => s.getPath.toString -> s.getLen))
       .map(WarcInputPartition(_): InputPartition).toArray
+  }
 
   // one broadcast per scan, as Spark's own file scans do: the factory is
   // serialized into every task, the conf (~100 KB) is fetched once per executor
   override def createReaderFactory(): PartitionReaderFactory = {
-    val sc = sparkContext
+    val sc = session.sparkContext
     new WarcReaderFactory(sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)), required)
   }
 }
@@ -151,22 +212,23 @@ private[sources] class WarcReaderFactory(conf: Broadcast[SerializableConfigurati
                                          required: StructType)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new WarcPartitionReader(partition.asInstanceOf[WarcInputPartition].path,
+    new WarcPartitionReader(partition.asInstanceOf[WarcInputPartition].paths,
       conf.value.value, required)
 }
 
-/** Streams one segment's response records as InternalRows, projecting only
-  * the pruned columns (an unselected payload column is never copied). */
-private[sources] class WarcPartitionReader(path: String,
+/** Streams the response records of a partition's segments, one segment
+  * after another, projecting only the pruned columns (an unselected payload
+  * column is never copied). One segment is open at a time, closed before
+  * the next opens; a failure is rethrown naming the segment it came from. */
+private[sources] class WarcPartitionReader(paths: Seq[String],
                                            conf: org.apache.hadoop.conf.Configuration,
                                            required: StructType)
     extends PartitionReader[InternalRow] {
 
-  private val hp = new org.apache.hadoop.fs.Path(path)
-  private val stream = new java.io.BufferedInputStream(
-    hp.getFileSystem(conf).open(hp), 64 * 1024)
-  private val records = WarcSource.parseStream(stream)
-  private val fileUtf8 = UTF8String.fromString(path)
+  private val pending = paths.iterator
+  private var path: String = _
+  private var fileUtf8: UTF8String = _
+  private var records: Iterator[WarcSource.ParsedResponse] with Closeable = _
   // column extractors bound once per reader, in required-schema order
   private val getters: Array[WarcSource.ParsedResponse => Any] =
     required.fields.map[WarcSource.ParsedResponse => Any] { f =>
@@ -185,9 +247,22 @@ private[sources] class WarcPartitionReader(path: String,
   private val row =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(getters.length)
 
+  /** `body`, with a failure rethrown naming the current segment. */
+  private def inSegment[T](body: => T): T =
+    try body catch {
+      case NonFatal(e) => throw new IOException(s"WARC segment $path: ${e.getMessage}", e)
+    }
+
   override def next(): Boolean = {
-    if (records.hasNext) { current = records.next(); true }
-    else false
+    while (records == null || !inSegment(records.hasNext)) {
+      close()
+      if (!pending.hasNext) return false
+      path = pending.next()
+      fileUtf8 = UTF8String.fromString(path)
+      records = inSegment(WarcSource.openSegment(path, conf))
+    }
+    current = inSegment(records.next())
+    true
   }
 
   override def get(): InternalRow = {
@@ -196,5 +271,10 @@ private[sources] class WarcPartitionReader(path: String,
     row
   }
 
-  override def close(): Unit = records.close() // the stream and the inflater
+  // the open segment's stream and inflater
+  override def close(): Unit = if (records != null) {
+    val open = records
+    records = null
+    open.close()
+  }
 }

@@ -5,6 +5,8 @@ import java.io.{BufferedInputStream, ByteArrayInputStream, ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum, when}
 import org.apache.spark.util.SerializableConfiguration
@@ -30,11 +32,12 @@ import graft.model.{ExtractionResult, WebPage}
   *
   * Scale shape: in production each task reads ONE ~1 GB .warc.gz object
   * (`spark.read.format("warc")`, [[WarcDataSource]], or
-  * [[extractFromWarcFiles]]) and streams records out of it — file-per-task
-  * is the right granularity because record-gzip members are not
-  * independently seekable without an index. Both read paths open the
-  * object through a broadcast Hadoop conf, so a task's closure stays a few
-  * KB however large the cluster's conf is.
+  * [[extractFromWarcFiles]]) and streams records out of it — a segment is
+  * never split, because record-gzip members are not independently
+  * seekable without an index; smaller segments are packed several to a
+  * task by one size-balanced plan ([[WarcDataSource.planSegments]]). Both
+  * read paths open objects through a broadcast Hadoop conf, so a task's
+  * closure stays a few KB however large the cluster's conf is.
   * `parseStream` holds only the CURRENT record in memory (one record body
   * at a time, never the inflated file), so a multi-GB segment costs one
   * record's worth of heap per task; a single record larger than ~2 GiB is
@@ -349,29 +352,52 @@ object WarcSource {
       .orderBy("format_from")
   }
 
+  /** One segment off the Hadoop FS as a record iterator over a 64 KiB
+    * buffer (works on HDFS/S3A, not just file://). Closing the iterator
+    * closes the stream and the inflater; a failure while opening closes
+    * the stream before it propagates. */
+  private[sources] def openSegment(path: String, conf: org.apache.hadoop.conf.Configuration)
+      : Iterator[ParsedResponse] with Closeable = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val stream = new BufferedInputStream(hp.getFileSystem(conf).open(hp), 64 * 1024)
+    try parseStream(stream)
+    catch {
+      case NonFatal(e) =>
+        try stream.close() catch { case NonFatal(c) => e.addSuppressed(c) }
+        throw e
+    }
+  }
+
   /** PRODUCTION ingest entry: stream-extract every HTTP response record of
-    * every listed .warc(.gz) object. One task per file — the right
-    * granularity because per-record gzip members are not independently
-    * seekable — with O(one record) heap: each object is consumed as a
-    * Hadoop FS stream through [[parseStream]] (works on HDFS/S3A, not just
-    * file://), NEVER materialized as one byte array, so multi-GB segments
-    * cost one record's worth of memory. A malformed segment — unreadable
-    * path, framing error, truncated gzip member, bad HTTP block — is
-    * CONTAINED as one failure row naming the file: one rotten object in a
-    * 100k-segment crawl must not kill the job. The driver's Hadoop conf
-    * (fs.* credentials etc.) reaches the tasks as one broadcast, as in
+    * every listed .warc(.gz) object. Tasks take whole segments, grouped by
+    * the same size-balanced plan as the `format("warc")` scan
+    * ([[WarcDataSource.planSegments]]; a segment is never split, because
+    * per-record gzip members are not independently seekable), with no
+    * shuffle, and stream their segments one after another with O(one
+    * record) heap: each object is consumed as a Hadoop FS stream through
+    * [[parseStream]], NEVER materialized as one byte array, so multi-GB
+    * segments cost one record's worth of memory. A malformed segment —
+    * unreadable path, framing error, truncated gzip member, bad HTTP block
+    * — is CONTAINED as one failure row naming the file: one rotten object
+    * in a 100k-segment crawl must not kill the job. The driver's Hadoop
+    * conf (fs.* credentials etc.) reaches the tasks as one broadcast, as in
     * Spark's own file scans: each executor fetches and deserializes it
     * once, instead of every task closure carrying ~100 KB of conf. */
   def extractFromWarcFiles(spark: SparkSession, paths: Seq[String]): Dataset[ExtractionResult] = {
     import spark.implicits._
     val sc = spark.sparkContext
+    // a path that cannot be listed plans as empty; its task names the error
+    val segments = paths.map { p =>
+      val hp = new org.apache.hadoop.fs.Path(p)
+      p -> (try hp.getFileSystem(sc.hadoopConfiguration).getFileStatus(hp).getLen
+            catch { case NonFatal(_) => 0L })
+    }
+    val groups = WarcDataSource.planSegments(spark, segments)
     val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
-    spark.createDataset(paths)
-      .repartition(math.max(paths.size, 1))
-      .mapPartitions { files =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        files.flatMap(p => containedFileRecords(p, pid, conf.value.value))
-      }
+    spark.createDataset(sc.parallelize(groups, math.max(groups.size, 1)).mapPartitions { group =>
+      val pid = org.apache.spark.TaskContext.getPartitionId()
+      group.flatMap(_.iterator.flatMap(p => containedFileRecords(p, pid, conf.value.value)))
+    })
   }
 
   /** Extraction iterator over one WARC object with per-FILE containment:
@@ -381,13 +407,11 @@ object WarcSource {
     * failure rows.) */
   private def containedFileRecords(p: String, pid: Int,
       conf: org.apache.hadoop.conf.Configuration): Iterator[ExtractionResult] = {
-    import scala.util.control.NonFatal
     def failRow(e: Throwable) = ExtractionResult(
       url = s"warc:$p", success = false, text = "", format_from = "warc",
       original_size = 0L, new_size = 0L,
       error = s"WARC segment unreadable: ${e.getMessage}", partition_id = pid)
-    // the file stream, then the record iterator over it (which also ends
-    // the inflater)
+    // the record iterator, which closes the file stream and the inflater
     var open: Closeable = null
     def closeQuietly(): Unit =
       try { if (open != null) open.close() } catch { case NonFatal(_) => () }
@@ -400,19 +424,14 @@ object WarcSource {
     })
     val underlying: Iterator[ExtractionResult] =
       try {
-        val path = new org.apache.hadoop.fs.Path(p)
-        val stream = new BufferedInputStream(path.getFileSystem(conf).open(path), 64 * 1024)
-        open = stream
-        val records = parseStream(stream)
+        val records = openSegment(p, conf)
         open = records
         records.map { r =>
           graft.extract.Extractor.extractOne(
             WebPage(r.url, new java.sql.Timestamp(0L), r.payload, "", ""), pid)
         }
       } catch {
-        case NonFatal(e) =>
-          closeQuietly()
-          return Iterator.single(failRow(e))
+        case NonFatal(e) => return Iterator.single(failRow(e))
       }
     new Iterator[ExtractionResult] {
       private var pendingFail: Option[ExtractionResult] = None

@@ -67,6 +67,13 @@ class DocxSpec extends AnyFunSuite {
     }
   }
 
+  test("a leading empty paragraph keeps its line (every variant)") {
+    for (v <- 0 until DocxWriter.numVariants) {
+      val got = DocxExtractor.extract(DocxWriter.generate(Seq("", "a"), v))
+      assert(got == "\na", s"variant $v: ${got.replace("\n", "\\n")}")
+    }
+  }
+
   test("writer output is byte-deterministic") {
     val paras = Vector("one two three", "four five six")
     for (v <- 0 until DocxWriter.numVariants) {

@@ -37,7 +37,9 @@ object KernelProperties extends Properties("kernels") {
     }
 
   property("docx writer/extractor roundtrip over arbitrary paragraphs x all variants") = {
-    val paragraphs = Gen.chooseNum(1, 8).flatMap(n => Gen.listOfN(n, text))
+    // empty paragraphs included, leading ones too
+    val paragraphs = Gen.chooseNum(1, 8).flatMap(n =>
+      Gen.listOfN(n, Gen.frequency(4 -> text, 1 -> Gen.const(""))))
     val variant = Gen.chooseNum(0, graft.serialize.DocxWriter.numVariants - 1)
     forAll(paragraphs, variant) { (ps, v) =>
       val bytes = graft.serialize.DocxWriter.generate(ps, v)

@@ -25,6 +25,15 @@ class OdfSpec extends AnyFunSuite {
       "one two three\na   b\tc\nd & e\n")
   }
 
+  test("a leading empty paragraph keeps its line, written or self-closed") {
+    assert(OdfExtractor.extractParagraphs("<text:p/><text:p>a</text:p>") == "\na")
+    assert(OdfExtractor.extractParagraphs("<text:p></text:p><text:p>a</text:p>") == "\na")
+    for (kind <- Seq("odt", "odp"); v <- 0 to 2) {
+      val (_, got) = graft.extract.ooxml.OoxmlExtractor.extract(OdfWriter.generate(kind, Seq("", "a"), v))
+      assert(got == "\na", s"$kind variant $v: ${got.replace("\n", "\\n")}")
+    }
+  }
+
   test("hand-authored spreadsheet: cells tab-join, rows newline-join, empty cells skipped") {
     val xml = "<office:spreadsheet><table:table>" +
       "<table:table-row><table:table-cell><text:p>a1</text:p></table:table-cell>" +

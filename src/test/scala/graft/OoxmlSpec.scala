@@ -71,6 +71,13 @@ class OoxmlSpec extends AnyFunSuite {
     }
   }
 
+  test("pptx empty paragraphs keep their lines, a leading one and a slide of one included") {
+    for (v <- 0 until PptxWriter.numVariants; paras <- Seq(Seq("", "a"), Seq("a", "", "b"))) {
+      val (_, got) = OoxmlExtractor.extract(PptxWriter.generate(paras, v))
+      assert(got == paras.mkString("\n"), s"variant $v: ${got.replace("\n", "\\n")}")
+    }
+  }
+
   test("pptx numeric slide order beats archive/lexicographic order") {
     val many = (1 to 12).map(i => s"slide number $i content").toVector
     val (_, got) = OoxmlExtractor.extract(PptxWriter.generate(many, 3))

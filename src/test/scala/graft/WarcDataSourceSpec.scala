@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{WarcDataSource, WarcSource}
 
 /** DataSource V2 WARC connector: spark.read.format("warc") over segment
-  * objects — schema, per-file partitioning, column pruning pushdown, glob
-  * resolution, FAILFAST on malformed framing. */
+  * objects — schema, size-balanced packing of whole segments into
+  * partitions, column pruning pushdown, glob resolution, FAILFAST on
+  * malformed framing. */
 class WarcDataSourceSpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
@@ -35,7 +36,7 @@ class WarcDataSourceSpec extends AnyFunSuite {
     assert(rows.count(_._1.endsWith("seg1.warc.gz")) == 5)
     val r0 = rows.find(_._2 == WarcSource.targetUri(0)).get
     assert(new String(r0._5, java.nio.charset.StandardCharsets.UTF_8) == "alpha doc 0")
-    // one partition per segment object
+    // two tiny segments: each counts the 4 MB open cost, so they plan apart
     assert(df.rdd.getNumPartitions == 2)
   }
 
@@ -94,5 +95,80 @@ class WarcDataSourceSpec extends AnyFunSuite {
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("truncated")), messages(e).mkString(" | "))
+  }
+
+  /** Runs `body` with session confs set, restoring their previous values. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Segment files `fileIds`, five records each, every id and text the same
+    * width, so segments with same-width file ids are the same size. */
+  private def writeEqualSegments(dir: java.io.File, fileIds: Seq[Long]): Seq[java.io.File] =
+    fileIds.map { f =>
+      val file = new java.io.File(dir, f"seg$f%03d.warc")
+      val pages = (0L until 5L).map(j => (f * 10 + j, s"page ${f * 10 + j}"))
+      java.nio.file.Files.write(file.toPath, WarcSource.buildFile(f, pages, gzipPerRecord = false))
+      file
+    }
+
+  test("32 equal small segments plan 4 partitions of 8; each segment in one, each record read once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_pack").toFile
+    val files = writeEqualSegments(dir, 10L until 42L)
+    assert(files.map(_.length).distinct.size == 1, files.map(_.length))
+    val df = spark.read.format("warc").load(dir.getAbsolutePath)
+    assert(df.rdd.getNumPartitions == 4)
+    val rows = df.select(org.apache.spark.sql.functions.spark_partition_id(), $"file", $"url")
+      .as[(Int, String, String)].collect()
+    val partitionOf = rows.groupBy(_._2).map { case (f, rs) => f -> rs.map(_._1).distinct.toSeq }
+    assert(partitionOf.size == 32)
+    assert(partitionOf.values.forall(_.size == 1), partitionOf)
+    assert(partitionOf.values.map(_.head).groupBy(identity).values.map(_.size).toSeq == Seq(8, 8, 8, 8),
+      partitionOf)
+    assert(rows.length == 160)
+    assert(rows.map(_._3).distinct.length == 160)
+  }
+
+  test("a segment larger than spark.sql.files.maxPartitionBytes plans alone; small ones still pack") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_big").toFile
+    val small = writeEqualSegments(dir, 10L until 16L)
+    val big = new java.io.File(dir, "big.warc")
+    java.nio.file.Files.write(big.toPath, WarcSource.buildFile(99L,
+      (0L until 40L).map(i => (i, "x" * 2000)), gzipPerRecord = false))
+    val maxBytes = big.length / 2
+    assert(small.map(_.length).sum + small.size * 1024L < maxBytes)
+    withConf("spark.sql.files.maxPartitionBytes" -> maxBytes.toString,
+      "spark.sql.files.openCostInBytes" -> "1024") {
+      val df = spark.read.format("warc").load(dir.getAbsolutePath)
+      assert(df.rdd.getNumPartitions == 2)
+      val namesPerPartition = df.select(org.apache.spark.sql.functions.spark_partition_id(), $"file")
+        .distinct().as[(Int, String)].collect().groupBy(_._1).values
+        .map(_.map(r => r._2.substring(r._2.lastIndexOf('/') + 1)).toSet).toSet
+      assert(namesPerPartition == Set(Set(big.getName), small.map(_.getName).toSet), namesPerPartition)
+      assert(df.count() == 40 + 6 * 5)
+    }
+  }
+
+  test("a framing error in a packed partition names the failing segment") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_packed_bad").toFile
+    java.nio.file.Files.write(new java.io.File(dir, "good.warc").toPath,
+      WarcSource.buildFile(0, (0L until 6L).map(i => (i, s"doc $i")), gzipPerRecord = false))
+    val full = WarcSource.buildFile(1, Seq((9L, "doc nine")), gzipPerRecord = false)
+    java.nio.file.Files.write(new java.io.File(dir, "rotten.warc").toPath, full.take(full.length - 3))
+    withConf("spark.sql.files.minPartitionNum" -> "1") {
+      val df = spark.read.format("warc").load(dir.getAbsolutePath)
+      assert(df.rdd.getNumPartitions == 1)
+      val e = intercept[Exception](df.count())
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+      assert(messages(e).exists(m => m.contains("truncated") && m.contains("rotten.warc")),
+        messages(e).mkString(" | "))
+    }
   }
 }

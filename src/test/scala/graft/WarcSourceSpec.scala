@@ -117,6 +117,31 @@ class WarcSourceSpec extends AnyFunSuite {
       failed.head.error.contains("WARC segment unreadable"), failed.head.toString)
   }
 
+  test("extractFromWarcFiles takes its tasks from the segment plan, with no shuffle") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_warcplan").toFile
+    val paths = (10L until 18L).map { f =>
+      val file = new java.io.File(dir, s"seg$f.warc")
+      val pages = (0L until 5L).map(j => (f * 10 + j, s"page ${f * 10 + j}"))
+      java.nio.file.Files.write(file.toPath, WarcSource.buildFile(f, pages, gzipPerRecord = false))
+      file.getAbsolutePath
+    }
+    val ds = WarcSource.extractFromWarcFiles(spark, paths)
+    // 8 equal small segments at 4 cores: 4 tasks of 2, as format("warc") plans them
+    assert(ds.rdd.getNumPartitions == 4)
+    assert(spark.read.format("warc").load(paths: _*).rdd.getNumPartitions == 4)
+    assert(!ds.queryExecution.executedPlan.toString.contains("Exchange"),
+      ds.queryExecution.executedPlan.toString)
+    val out = ds.collect()
+    assert(out.length == 40 && out.forall(_.success))
+    assert(out.map(_.url).toSet == (10L until 18L).flatMap(f => (0L until 5L).map(j => WarcSource.targetUri(f * 10 + j))).toSet)
+    assert(out.map(_.partition_id).distinct.length == 4)
+    // a path that cannot even be listed still plans, and is one failure row
+    val missing = new java.io.File(dir, "missing.warc").getAbsolutePath
+    val failed = WarcSource.extractFromWarcFiles(spark, Seq(missing)).collect()
+    assert(failed.length == 1 && !failed.head.success && failed.head.url == s"warc:$missing",
+      failed.mkString("\n"))
+  }
+
   test("roundTrip surfaces every doc once with the parsed fields recomputable from text") {
     import spark.implicits._
     val docs = (0L until 120L).map(i => (i, s"document $i body " + ("x" * (i % 7).toInt)))
