@@ -42,13 +42,6 @@ object FormatCodecs {
   def parseNdjsonLine(line: Column, schema: StructType): Column =
     from_json(line, schema)
 
-  /** A whole NDJSON document column → array of structs (blank lines skipped,
-    * /root/reference/formatParsers.js:76-86). */
-  def parseNdjsonDoc(doc: Column, schema: StructType): Column =
-    transform(
-      filter(split(doc, "\r?\n"), l => trim(l) =!= ""),
-      l => from_json(l, schema))
-
   // ---- key=value (S8 parse / S12 serialize / F13 first-`=` split) ----------
 
   /** Parse a key=value document to a map: per line trim; skip blank,

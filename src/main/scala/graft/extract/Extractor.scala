@@ -136,10 +136,7 @@ object Extractor {
     * trailer's ISIZE (the last member's length mod 2^32). */
   private[graft] def gunzip(bytes: Array[Byte]): Array[Byte] = {
     val n = bytes.length
-    val isize =
-      if (n < 18) 0L
-      else (bytes(n - 4) & 0xffL) | (bytes(n - 3) & 0xffL) << 8 |
-        (bytes(n - 2) & 0xffL) << 16 | (bytes(n - 1) & 0xffL) << 24
+    val isize = if (n < 18) 0L else graft.util.ByteCursor(bytes).u32le(n - 4)
     val in = new java.util.zip.GZIPInputStream(
       new java.io.ByteArrayInputStream(bytes))
     try graft.util.Inflate.grow(in, isize, n, 0L, "gzip payload")

@@ -2,6 +2,8 @@ package graft.extract.cfb
 
 import java.nio.charset.StandardCharsets
 
+import graft.util.ByteCursor
+
 /** Compound File Binary (OLE2) container reader — the structured storage
   * behind the reference whitelist's legacy .doc/.xls/.ppt inputs
   * (/root/reference/src/converters/document_converters.py:16-26). Pure JVM,
@@ -11,7 +13,8 @@ import java.nio.charset.StandardCharsets
   * ([MS-CFB] §2.2-2.6).
   *
   * Bounded: sector chains are capped at the file's sector count, so a
-  * corrupt cyclic FAT terminates with an error instead of looping.
+  * corrupt cyclic FAT terminates with an error instead of looping, and a
+  * sector id outside the file or the FAT is a named error.
   */
 object CfbParser {
   final case class DirEntry(name: String, entryType: Int, startSector: Int, size: Long,
@@ -22,14 +25,15 @@ final class CfbParser(bytes: Array[Byte]) {
 
   require(CfbSniffer.isCfb(bytes), "not a CFB container")
 
-  private def u16(i: Int): Int = graft.util.LittleEndian.u16(bytes, i)
-  private def i32(i: Int): Int = graft.util.LittleEndian.i32(bytes, i)
+  private val c = ByteCursor(bytes)
 
-  private val sectorShift = u16(30)
+  private val sectorShift = c.u16le(30)
   require(sectorShift == 9 || sectorShift == 12, s"bad sector shift $sectorShift")
   private val sectorSize = 1 << sectorShift
-  private val miniSectorSize = 1 << u16(32)
-  private val miniCutoff = i32(56)
+  private val miniSectorShift = c.u16le(32)
+  require(miniSectorShift == 6, s"bad mini sector shift $miniSectorShift")
+  private val miniSectorSize = 1 << miniSectorShift
+  private val miniCutoff = c.i32le(56)
   private val maxSectors = (bytes.length / sectorSize) + 1
 
   private val ENDOFCHAIN = 0xfffffffe
@@ -38,33 +42,36 @@ final class CfbParser(bytes: Array[Byte]) {
   // sector 0 begins after ONE sector's worth of header ([MS-CFB] §2.2: the
   // 512-byte header is zero-padded to the sector size in v4 files), so the
   // offset is (sector+1)*sectorSize for both v3 and v4
-  private def sectorOffset(sector: Int): Int = (sector + 1) * sectorSize
+  private def sectorOffset(sector: Int): Int = {
+    require(sector >= 0 && sector < maxSectors, s"CFB sector $sector out of bounds")
+    (sector + 1) * sectorSize
+  }
 
   // ---- FAT (via the header DIFAT + any DIFAT chain sectors) ----------------
 
   private val fatSectors: IndexedSeq[Int] = {
-    val numFat = i32(44)
+    val numFat = c.i32le(44)
     val out = IndexedSeq.newBuilder[Int]
     var taken = 0
     var i = 76
     while (taken < numFat && i < 512) {
-      val s = i32(i)
+      val s = c.i32le(i)
       if (s != FREESECT) { out += s; taken += 1 }
       i += 4
     }
     // DIFAT continuation sectors (files > ~6.8 MB)
-    var difat = i32(68)
+    var difat = c.i32le(68)
     var guard = 0
     while (taken < numFat && difat != ENDOFCHAIN && difat != FREESECT && guard < maxSectors) {
       val base = sectorOffset(difat)
       val perSector = sectorSize / 4 - 1
       var k = 0
       while (taken < numFat && k < perSector) {
-        val s = i32(base + k * 4)
+        val s = c.i32le(base + k * 4)
         if (s != FREESECT) { out += s; taken += 1 }
         k += 1
       }
-      difat = i32(base + perSector * 4)
+      difat = c.i32le(base + perSector * 4)
       guard += 1
     }
     out.result()
@@ -72,13 +79,14 @@ final class CfbParser(bytes: Array[Byte]) {
 
   private def fatEntry(sector: Int): Int = {
     val perSector = sectorSize / 4
-    val fs = fatSectors(sector / perSector)
-    i32(sectorOffset(fs) + (sector % perSector) * 4)
+    val k = sector / perSector
+    require(k < fatSectors.length, s"CFB sector $sector has no FAT entry")
+    c.i32le(sectorOffset(fatSectors(k)) + (sector % perSector) * 4)
   }
 
   /** Read a whole regular-sector chain, truncated to `size`. */
   private def readChain(start: Int, size: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(math.min(size, 1 << 24).toInt max 64)
+    val out = new java.io.ByteArrayOutputStream(math.min(size, bytes.length.toLong).toInt max 64)
     var s = start
     var guard = 0
     while (s != ENDOFCHAIN && s != FREESECT && guard < maxSectors) {
@@ -101,19 +109,17 @@ final class CfbParser(bytes: Array[Byte]) {
   /** Every directory slot by stream id (None = free slot) — ids are the
     * sibling/child pointer space, so the raw indexing must be preserved. */
   private val slots: IndexedSeq[Option[DirEntry]] = {
-    val dirBytes = readChain(i32(48), -1L)
+    val dirBytes = readChain(c.i32le(48), -1L)
+    val d = ByteCursor(dirBytes)
     val out = IndexedSeq.newBuilder[Option[DirEntry]]
     var at = 0
     while (at + 128 <= dirBytes.length) {
-      def du16(i: Int) = (dirBytes(at + i) & 0xff) | ((dirBytes(at + i + 1) & 0xff) << 8)
-      def di32(i: Int) = (dirBytes(at + i) & 0xff) | ((dirBytes(at + i + 1) & 0xff) << 8) |
-        ((dirBytes(at + i + 2) & 0xff) << 16) | ((dirBytes(at + i + 3) & 0xff) << 24)
-      val nameLen = du16(64)
-      val tpe = dirBytes(at + 66) & 0xff
+      val nameLen = d.u16le(at + 64)
+      val tpe = d.u8(at + 66)
       out += (if (tpe != 0 && nameLen >= 2 && nameLen <= 64)
         Some(DirEntry(new String(dirBytes, at, nameLen - 2, StandardCharsets.UTF_16LE),
-          tpe, di32(116), di32(120).toLong & 0xffffffffL,
-          di32(68), di32(72), di32(76)))
+          tpe, d.i32le(at + 116), d.u32le(at + 120),
+          d.i32le(at + 68), d.i32le(at + 72), d.i32le(at + 76)))
       else None)
       at += 128
     }
@@ -154,22 +160,18 @@ final class CfbParser(bytes: Array[Byte]) {
   val rootEntries: IndexedSeq[DirEntry] = siblingTree(root.child)
 
   // mini FAT + the root's mini stream (lazy: many files have none)
-  private lazy val miniFat: Array[Byte] = readChain(i32(60), -1L)
+  private lazy val miniFat = ByteCursor(readChain(c.i32le(60), -1L))
   private lazy val miniStream: Array[Byte] = readChain(root.startSector, root.size)
 
-  private def miniFatEntry(sector: Int): Int = {
-    val i = sector * 4
-    require(i + 4 <= miniFat.length, s"mini FAT entry $sector out of bounds")
-    (miniFat(i) & 0xff) | ((miniFat(i + 1) & 0xff) << 8) |
-      ((miniFat(i + 2) & 0xff) << 16) | ((miniFat(i + 3) & 0xff) << 24)
-  }
+  private def miniFatEntry(sector: Int): Int = miniFat.i32le(sector * 4)
 
   private def readMiniChain(start: Int, size: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(size.toInt max 64)
+    val out = new java.io.ByteArrayOutputStream(math.min(size, miniStream.length.toLong).toInt max 64)
     var s = start
     var guard = 0
     val maxMini = miniStream.length / miniSectorSize + 1
     while (s != ENDOFCHAIN && s != FREESECT && guard < maxMini) {
+      require(s >= 0 && s < maxMini, s"CFB mini chain sector $s out of bounds")
       val off = s * miniSectorSize
       val n = math.min(miniSectorSize, miniStream.length - off)
       require(n > 0, s"CFB mini chain sector $s out of bounds")

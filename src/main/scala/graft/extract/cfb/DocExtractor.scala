@@ -3,7 +3,7 @@ package graft.extract.cfb
 import java.nio.charset.Charset
 import java.nio.charset.StandardCharsets
 
-import graft.util.LittleEndian.{i32, u16}
+import graft.util.ByteCursor
 
 /** Word 97-2003 binary (.doc) → text kernel — a reference whitelist input
   * (/root/reference/src/converters/document_converters.py:16-26) the
@@ -24,27 +24,28 @@ object DocExtractor {
     val word = cfb.stream("WordDocument")
       .getOrElse(throw new IllegalArgumentException("CFB has no WordDocument stream"))
     require(word.length >= 512, "WordDocument stream truncated")
-    require(u16(word, 0) == 0xa5ec, f"bad FIB magic 0x${u16(word, 0)}%04x")
-    val fWhichTblStm = (u16(word, 0x000a) & 0x0200) != 0
+    val w = ByteCursor(word)
+    require(w.u16le(0) == 0xa5ec, f"bad FIB magic 0x${w.u16le(0)}%04x")
+    val fWhichTblStm = (w.u16le(0x000a) & 0x0200) != 0
     val tableName = if (fWhichTblStm) "1Table" else "0Table"
-    val table = cfb.stream(tableName)
-      .getOrElse(throw new IllegalArgumentException(s"CFB has no $tableName stream"))
-    val fcClx = i32(word, 0x01a2)
-    val lcbClx = i32(word, 0x01a6)
-    require(fcClx >= 0 && lcbClx > 0 && fcClx + lcbClx <= table.length,
+    val table = ByteCursor(cfb.stream(tableName)
+      .getOrElse(throw new IllegalArgumentException(s"CFB has no $tableName stream")))
+    val fcClx = w.i32le(0x01a2)
+    val lcbClx = w.i32le(0x01a6)
+    require(fcClx >= 0 && lcbClx > 0 && fcClx.toLong + lcbClx <= table.length,
       s"Clx [$fcClx,+$lcbClx) outside $tableName (${table.length})")
 
     // Clx: skip Prc entries (clxt=1: u8 + i16 cb + grpprl) to the Pcdt (clxt=2)
     var at = fcClx
     val end = fcClx + lcbClx
-    while (at < end && table(at) == 0x01) {
-      val cb = u16(table, at + 1)
+    while (at < end && table.u8(at) == 0x01) {
+      val cb = table.u16le(at + 1)
       at += 3 + cb
     }
-    require(at < end && table(at) == 0x02, "Clx has no Pcdt")
-    val lcbPlc = i32(table, at + 1)
+    require(at < end && table.u8(at) == 0x02, "Clx has no Pcdt")
+    val lcbPlc = table.i32le(at + 1)
     val plc = at + 5
-    require(plc + lcbPlc <= end, "PlcPcd overruns Clx")
+    require(plc.toLong + lcbPlc <= end, "PlcPcd overruns Clx")
     // PlcPcd with n pieces: (n+1) CPs (u32) + n PCDs (8 bytes)
     val n = (lcbPlc - 4) / 12
     require(n >= 1 && (n + 1) * 4 + n * 8 == lcbPlc, s"bad PlcPcd size $lcbPlc")
@@ -52,14 +53,14 @@ object DocExtractor {
     val sb = new StringBuilder
     var p = 0
     while (p < n) {
-      val cpStart = i32(table, plc + p * 4)
-      val cpEnd = i32(table, plc + (p + 1) * 4)
+      val cpStart = table.i32le(plc + p * 4)
+      val cpEnd = table.i32le(plc + (p + 1) * 4)
       val chars = cpEnd - cpStart
       // cp/fc come from attacker-controlled bytes: containment checks in
       // Long (and chars >= 0) so a corrupt PlcPcd cannot overflow Int
       // negative, pass the bound, and die in new String instead of here
       require(chars >= 0, s"negative piece length $chars")
-      val fcRaw = i32(table, plc + (n + 1) * 4 + p * 8 + 2)
+      val fcRaw = table.i32le(plc + (n + 1) * 4 + p * 8 + 2)
       val compressed = (fcRaw & 0x40000000) != 0
       if (compressed) {
         val fc = (fcRaw & 0x3fffffff) / 2

@@ -3,7 +3,7 @@ package graft.extract.cfb
 import java.nio.charset.Charset
 import java.nio.charset.StandardCharsets
 
-import graft.util.LittleEndian.{i32, u16}
+import graft.util.ByteCursor
 
 /** PowerPoint 97-2003 binary (.ppt) → text kernel — a reference whitelist
   * input (/root/reference/src/converters/document_converters.py:16-26). The
@@ -38,21 +38,21 @@ object PptExtractor {
 
   def extract(bytes: Array[Byte]): String = {
     val cfb = new CfbParser(bytes)
-    val ppt = cfb.stream("PowerPoint Document")
-      .getOrElse(throw new IllegalArgumentException("CFB has no PowerPoint Document stream"))
+    val ppt = ByteCursor(cfb.stream("PowerPoint Document")
+      .getOrElse(throw new IllegalArgumentException("CFB has no PowerPoint Document stream")))
     cfb.stream("Current User") match {
-      case Some(cu) => viaPersistDirectory(ppt, cu)
+      case Some(cu) => viaPersistDirectory(ppt, ByteCursor(cu))
       case None => streamOrder(ppt)
     }
   }
 
   /** Validated record header at `at`: (verInst, recType, bodyLen). */
-  private def header(s: Array[Byte], at: Int, what: String): (Int, Int, Int) = {
-    require(at >= 0 && at + 8 <= s.length, s"PPT $what header at $at out of bounds")
-    val verInst = u16(s, at)
-    val recType = u16(s, at + 2)
-    val len = i32(s, at + 4)
-    require(len >= 0 && at + 8 + len <= s.length, s"PPT record $recType overruns stream")
+  private def header(s: ByteCursor, at: Int, what: String): (Int, Int, Int) = {
+    require(at >= 0 && at + 8L <= s.length, s"PPT $what header at $at out of bounds")
+    val verInst = s.u16le(at)
+    val recType = s.u16le(at + 2)
+    val len = s.i32le(at + 4)
+    require(len >= 0 && at + 8L + len <= s.length, s"PPT record $recType overruns stream")
     (verInst, recType, len)
   }
 
@@ -62,7 +62,7 @@ object PptExtractor {
     * reference order. A "Current User" stream that is present but
     * malformed is an ERROR (failure row), not a fallback — silently
     * stream-walking an incremental file would emit stale text. */
-  private def viaPersistDirectory(ppt: Array[Byte], cu: Array[Byte]): String = {
+  private def viaPersistDirectory(ppt: ByteCursor, cu: ByteCursor): String = {
     val (_, cuType, cuLen) = header(cu, 0, "CurrentUserAtom")
     require(cuType == CurrentUserAtom && cuLen >= 12,
       s"Current User stream leads with record $cuType/$cuLen, not a CurrentUserAtom")
@@ -70,10 +70,10 @@ object PptExtractor {
     // headerToken 0xE391C05F = plaintext; 0xF3D1C4DF = encrypted ([MS-PPT]
     // §2.3.2) — the edit chain itself is stored unencrypted, so without
     // this check an encrypted deck would "resolve" into ciphertext text.
-    val headerToken = i32(cu, 12) & 0xffffffffL
+    val headerToken = cu.u32le(12)
     require(headerToken == 0xE391C05FL,
       f"encrypted or unknown .ppt variant (CurrentUserAtom headerToken 0x$headerToken%08X)")
-    var editOff = i32(cu, 16)
+    var editOff = cu.i32le(16)
     val persist = scala.collection.mutable.HashMap.empty[Long, Int]
     var docPersistIdRef = -1L
     while (editOff != 0) {
@@ -83,9 +83,9 @@ object PptExtractor {
       val body = editOff + 8
       // body: lastSlideIdRef(4) version(2) minor(1) major(1)
       //       offsetLastEdit(4) offsetPersistDirectory(4) docPersistIdRef(4) ...
-      val offsetLastEdit = i32(ppt, body + 8)
-      val dirOff = i32(ppt, body + 12)
-      if (docPersistIdRef < 0) docPersistIdRef = i32(ppt, body + 16) & 0xffffffffL
+      val offsetLastEdit = ppt.i32le(body + 8)
+      val dirOff = ppt.i32le(body + 12)
+      if (docPersistIdRef < 0) docPersistIdRef = ppt.u32le(body + 16)
       val (_, pdType, pdLen) = header(ppt, dirOff, "PersistDirectoryAtom")
       require(pdType == PersistDirectoryAtom,
         s"record $pdType at persist-directory offset $dirOff is not a PersistDirectoryAtom")
@@ -93,13 +93,13 @@ object PptExtractor {
       val pdEnd = at + pdLen
       while (at < pdEnd) {
         require(at + 4 <= pdEnd, "PersistDirectoryAtom entry header overruns")
-        val h = i32(ppt, at); at += 4
+        val h = ppt.i32le(at); at += 4
         val id0 = h & 0xfffff
         val count = (h >>> 20) & 0xfff
         require(at + 4L * count <= pdEnd, "PersistDirectoryAtom offsets overrun")
         var k = 0
         while (k < count) {
-          val off = i32(ppt, at); at += 4
+          val off = ppt.i32le(at); at += 4
           val id = (id0 + k).toLong
           if (!persist.contains(id)) persist(id) = off // newest edit wins
           k += 1
@@ -126,7 +126,7 @@ object PptExtractor {
 
   /** Walk the ONE record at `at` (containers recurse), collecting text
     * atoms and SlidePersistAtom references in document order. */
-  private def walkRecord(ppt: Array[Byte], at: Int,
+  private def walkRecord(ppt: ByteCursor, at: Int,
                          texts: scala.collection.mutable.Builder[String, Vector[String]],
                          refs: scala.collection.mutable.Builder[Long, Vector[Long]]): Unit = {
     val (verInst, recType, len) = header(ppt, at, "record")
@@ -136,42 +136,42 @@ object PptExtractor {
       while (p + 8 <= body + len) {
         // children must END inside this container too — a corrupt child
         // length must not read into stale post-container stream regions
-        val childLen = i32(ppt, p + 4)
-        require(childLen >= 0 && p + 8 + childLen <= body + len,
+        val childLen = ppt.i32le(p + 4)
+        require(childLen >= 0 && p + 8L + childLen <= body + len,
           s"PPT child record at $p overruns its container")
         walkRecord(ppt, p, texts, refs)
         p = p + 8 + childLen
       }
     } else if (recType == TextCharsAtom) {
-      texts += new String(ppt, body, len, StandardCharsets.UTF_16LE)
+      texts += ppt.string(body, len, StandardCharsets.UTF_16LE)
     } else if (recType == TextBytesAtom) {
-      texts += new String(ppt, body, len, cp1252)
+      texts += ppt.string(body, len, cp1252)
     } else if (recType == SlidePersistAtom && len >= 4) {
-      refs += i32(ppt, body) & 0xffffffffL
+      refs += ppt.u32le(body)
     }
   }
 
   /** Flat walk in stream order — single-save files with no "Current User"
     * stream (fixture-grade and converter-emitted documents). */
-  private def streamOrder(ppt: Array[Byte]): String = {
+  private def streamOrder(ppt: ByteCursor): String = {
     val out = Vector.newBuilder[String]
     var sawRecord = false
 
     def walk(at0: Int, end: Int): Unit = {
       var at = at0
       while (at + 8 <= end) {
-        val verInst = u16(ppt, at)
-        val recType = u16(ppt, at + 2)
-        val len = i32(ppt, at + 4)
-        require(len >= 0 && at + 8 + len <= end, s"PPT record $recType overruns stream")
+        val verInst = ppt.u16le(at)
+        val recType = ppt.u16le(at + 2)
+        val len = ppt.i32le(at + 4)
+        require(len >= 0 && at + 8L + len <= end, s"PPT record $recType overruns stream")
         sawRecord = true
         val body = at + 8
         if ((verInst & 0xf) == 0xf) {
           walk(body, body + len) // container: descend
         } else if (recType == TextCharsAtom) {
-          out += new String(ppt, body, len, StandardCharsets.UTF_16LE)
+          out += ppt.string(body, len, StandardCharsets.UTF_16LE)
         } else if (recType == TextBytesAtom) {
-          out += new String(ppt, body, len, cp1252)
+          out += ppt.string(body, len, cp1252)
         }
         at = body + len
       }

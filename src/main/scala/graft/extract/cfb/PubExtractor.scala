@@ -2,7 +2,7 @@ package graft.extract.cfb
 
 import java.nio.charset.StandardCharsets
 
-import graft.util.LittleEndian.{i32, u16}
+import graft.util.ByteCursor
 
 /** Microsoft Publisher (.pub) → text kernel — a reference whitelist input
   * (/root/reference/src/converters/document_converters.py:16-26) the
@@ -29,26 +29,26 @@ object PubExtractor {
 
   def extract(bytes: Array[Byte]): String = {
     val cfb = new CfbParser(bytes)
-    val contents = cfb.streamAtPath(Seq("Quill", "QuillSub", "CONTENTS"))
+    val contents = ByteCursor(cfb.streamAtPath(Seq("Quill", "QuillSub", "CONTENTS"))
       .getOrElse(throw new IllegalArgumentException(
-        "Publisher CFB has no Quill/QuillSub/CONTENTS stream"))
+        "Publisher CFB has no Quill/QuillSub/CONTENTS stream")))
     require(contents.length >= tableAt + 4, "Quill CONTENTS truncated")
-    val magic = new String(contents, 0, 8, StandardCharsets.US_ASCII)
+    val magic = contents.string(0, 8, StandardCharsets.US_ASCII)
     require(magic == "CHNKINK ", s"bad Quill magic '$magic'")
 
     // chunk-reference table: u16 reserved, u16 numChunks, then numChunks
     // 0x20-byte refs {u32, tag(4), u32, u16 id, u16, tag(4), u32 offset,
     // u32 length, u32}
-    val numChunks = u16(contents, tableAt + 2)
+    val numChunks = contents.u16le(tableAt + 2)
     val entriesAt = tableAt + 4
     require(numChunks >= 1 && entriesAt + numChunks * refBytes <= contents.length,
       s"Quill chunk table ($numChunks entries) overruns stream")
     def tagOf(i: Int): String =
-      new String(contents, entriesAt + i * refBytes + 4, 4, StandardCharsets.US_ASCII)
+      contents.string(entriesAt + i * refBytes + 4, 4, StandardCharsets.US_ASCII)
     def spanOf(i: Int): (Int, Int) = {
       val base = entriesAt + i * refBytes
-      val off = i32(contents, base + 0x14)
-      val len = i32(contents, base + 0x18)
+      val off = contents.i32le(base + 0x14)
+      val len = contents.i32le(base + 0x18)
       // attacker-controlled: Long containment so off+len cannot wrap
       require(off >= 0 && len >= 0 && off.toLong + len.toLong <= contents.length,
         s"Quill chunk ${tagOf(i)} [$off,+$len) outside stream (${contents.length})")
@@ -60,7 +60,7 @@ object PubExtractor {
     require(textIdx >= 0, "Quill store has no TEXT chunk")
     val (textOff, textLen) = spanOf(textIdx)
     require(textLen % 2 == 0, s"odd UTF-16 TEXT chunk length $textLen")
-    val text = new String(contents, textOff, textLen, StandardCharsets.UTF_16LE)
+    val text = contents.string(textOff, textLen, StandardCharsets.UTF_16LE)
 
     // STRS (optional): the text-block table must account for every char —
     // a mismatch means the table and text disagree and the parse is wrong
@@ -68,10 +68,10 @@ object PubExtractor {
     if (strsIdx >= 0) {
       val (off, len) = spanOf(strsIdx)
       require(len >= 4, s"STRS chunk of $len bytes too short")
-      val nBlocks = i32(contents, off)
+      val nBlocks = contents.i32le(off)
       require(nBlocks >= 0 && 4 + nBlocks.toLong * 4 <= len,
         s"STRS block table ($nBlocks blocks) overruns chunk")
-      val lastEnd = if (nBlocks == 0) 0 else i32(contents, off + nBlocks * 4)
+      val lastEnd = if (nBlocks == 0) 0 else contents.i32le(off + nBlocks * 4)
       require(lastEnd == text.length,
         s"STRS accounts for $lastEnd chars, TEXT has ${text.length}")
     }

@@ -1,6 +1,6 @@
 package graft.extract.cfb
 
-import graft.util.LittleEndian.{i32, i64, u16}
+import graft.util.ByteCursor
 
 /** Excel 97-2003 binary (.xls, BIFF8) → text kernel — a reference whitelist
   * input (/root/reference/src/converters/document_converters.py:16-26). The
@@ -23,14 +23,14 @@ object XlsExtractor {
 
   def extract(bytes: Array[Byte]): String = {
     val cfb = new CfbParser(bytes)
-    val wb = cfb.stream("Workbook").orElse(cfb.stream("Book"))
-      .getOrElse(throw new IllegalArgumentException("CFB has no Workbook stream"))
+    val wb = ByteCursor(cfb.stream("Workbook").orElse(cfb.stream("Book"))
+      .getOrElse(throw new IllegalArgumentException("CFB has no Workbook stream")))
     // first pass: record directory (type, bodyStart, len)
     val recs = Vector.newBuilder[(Int, Int, Int)]
     var at = 0
     while (at + 4 <= wb.length) {
-      val recType = u16(wb, at)
-      val len = u16(wb, at + 2)
+      val recType = wb.u16le(at)
+      val len = wb.u16le(at + 2)
       require(at + 4 + len <= wb.length, s"BIFF record $recType overruns stream")
       recs += ((recType, at + 4, len))
       at = at + 4 + len
@@ -55,14 +55,14 @@ object XlsExtractor {
     val cells = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
     for ((recType, body, _) <- records) recType match {
       case 0x00fd => // LABELSST: row, col, ixfe, isst
-        val isst = i32(wb, body + 6)
+        val isst = wb.i32le(body + 6)
         require(isst >= 0 && isst < sst.length, s"SST index $isst out of range")
-        cells += ((u16(wb, body), u16(wb, body + 2), sst(isst)))
+        cells += ((wb.u16le(body), wb.u16le(body + 2), sst(isst)))
       case 0x0203 => // NUMBER: row, col, ixfe, Xnum (f64)
-        cells += ((u16(wb, body), u16(wb, body + 2),
-          formatNum(java.lang.Double.longBitsToDouble(i64(wb, body + 6)))))
+        cells += ((wb.u16le(body), wb.u16le(body + 2),
+          formatNum(java.lang.Double.longBitsToDouble(wb.u64le(body + 6)))))
       case 0x027e => // RK: row, col, ixfe, RkNumber
-        cells += ((u16(wb, body), u16(wb, body + 2), formatNum(rkValue(i32(wb, body + 6)))))
+        cells += ((wb.u16le(body), wb.u16le(body + 2), formatNum(rkValue(wb.i32le(body + 6)))))
       case _ => ()
     }
     cells.groupBy(_._1).toSeq.sortBy(_._1)
@@ -77,73 +77,68 @@ object XlsExtractor {
     * cstUnique u32, then XLUnicodeRichExtendedStrings (cch u16; flags u8:
     * 0x01 fHighByte, 0x04 fExtSt, 0x08 fRichSt; optional cRun u16 /
     * cbExtRst u32; character data; rgRun/ExtRst skipped). */
-  private def parseSst(b: Array[Byte], segs: IndexedSeq[(Int, Int)]): IndexedSeq[String] = {
+  private def parseSst(b: ByteCursor, segs: IndexedSeq[(Int, Int)]): IndexedSeq[String] = {
     var si = 0
-    var pos = segs(0)._1
+    b.seek(segs(0)._1)
     var end = segs(0)._1 + segs(0)._2
     def nextSeg(): Unit = {
       require(si + 1 < segs.length, "SST truncated mid-structure")
-      si += 1; pos = segs(si)._1; end = pos + segs(si)._2
+      si += 1; b.seek(segs(si)._1); end = segs(si)._1 + segs(si)._2
     }
     // fixed-size fields never straddle a record boundary (Excel's own rule);
     // advance past boundary (and any empty Continue bodies) until it fits —
     // a field that truly straddles fails contained, never misreads into the
     // next record's header bytes
-    def align(n: Int): Unit =
-      while (pos + n > end) {
-        require(pos == end, "SST header straddles a Continue boundary")
+    def aligned(n: Int): ByteCursor = {
+      while (b.position + n > end) {
+        require(b.position == end, "SST header straddles a Continue boundary")
         nextSeg()
       }
-    def rdU16(): Int = { align(2); val v = u16(b, pos); pos += 2; v }
-    def rdU8(): Int = { align(1); val v = b(pos) & 0xff; pos += 1; v }
-    def rdI32(): Int = { align(4); val v = i32(b, pos); pos += 4; v }
+      b
+    }
 
-    rdI32() // cstTotal
-    val unique = rdI32()
+    aligned(4).i32le() // cstTotal
+    val unique = aligned(4).i32le()
     val out = IndexedSeq.newBuilder[String]
     var k = 0
     while (k < unique) {
-      val cch = rdU16()
-      val flags = rdU8()
+      val cch = aligned(2).u16le()
+      val flags = aligned(1).u8()
       val rich = (flags & 0x08) != 0
       val ext = (flags & 0x04) != 0
-      val cRun = if (rich) rdU16() else 0
-      val cbExt = if (ext) rdI32() else 0
+      val cRun = if (rich) aligned(2).u16le() else 0
+      val cbExt = if (ext) aligned(4).i32le() else 0
       var wide = (flags & 0x01) != 0
       val sb = new java.lang.StringBuilder(cch)
       var remaining = cch
       while (remaining > 0) {
-        if (pos >= end) {
+        if (b.position >= end) {
           // character data resuming in a Continue record carries a fresh
           // option-flags byte — the width can CHANGE at the boundary; a
           // zero-length Continue body must not make us read the NEXT
           // record's header byte as the flags byte
-          while (pos >= end) nextSeg()
-          wide = (b(pos) & 0x01) != 0
-          pos += 1
+          while (b.position >= end) nextSeg()
+          wide = (b.u8() & 0x01) != 0
         }
         val width = if (wide) 2 else 1
-        val avail = (end - pos) / width
+        val avail = (end - b.position) / width
         val take = math.min(avail, remaining)
         require(take > 0, "SST continuation split mid-character")
         // append raw UTF-16 code units (not a per-chunk String decode) so a
         // surrogate pair split across Continue records still reassembles
         var t = 0
         while (t < take) {
-          sb.append(
-            if (wide) ((b(pos + 2 * t) & 0xff) | ((b(pos + 2 * t + 1) & 0xff) << 8)).toChar
-            else (b(pos + t) & 0xff).toChar)
+          sb.append((if (wide) b.u16le() else b.u8()).toChar)
           t += 1
         }
-        pos += take * width
         remaining -= take
       }
       // rgRun/ExtRst bytes continue across records WITHOUT a flags byte
       var skip = cRun * 4 + cbExt
       while (skip > 0) {
-        if (pos >= end) nextSeg()
-        val t = math.min(skip, end - pos)
-        pos += t; skip -= t
+        if (b.position >= end) nextSeg()
+        val t = math.min(skip, end - b.position)
+        b.skip(t); skip -= t
       }
       out += sb.toString
       k += 1

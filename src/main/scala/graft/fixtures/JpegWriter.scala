@@ -1,6 +1,7 @@
 package graft.fixtures
 
 import graft.multimodal.JpegCodec
+import graft.util.ByteSink
 
 /** Baseline-sequential JPEG writer (fixture side of
   * [[graft.multimodal.JpegCodec]]): real entropy coding — canonical Huffman
@@ -104,29 +105,28 @@ object JpegWriter {
       else ((width + 7) / 8) * ((height + 7) / 8) * comps
     require(blocks.length == expectedBlocks,
       s"${blocks.length} blocks for ${width}x$height x$comps (want $expectedBlocks)")
-    val out = new java.io.ByteArrayOutputStream()
-    def u16be(v: Int): Unit = { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
+    val out = new ByteSink()
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
 
     marker(0xd8) // SOI
     marker(0xe0) // APP0 / JFIF
-    u16be(16)
+    out.u16be(16)
     out.write("JFIF".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
     out.write(0)
     out.write(1); out.write(1) // version 1.1
     out.write(0) // no density units
-    u16be(1); u16be(1)
+    out.u16be(1); out.u16be(1)
     out.write(0); out.write(0) // no thumbnail
 
     marker(0xdb) // DQT, table 0, zigzag order (flat -> order-invariant)
-    u16be(2 + 1 + 64)
+    out.u16be(2 + 1 + 64)
     out.write(0x00)
     for (_ <- 0 until 64) out.write(QuantStep)
 
     marker(0xc0) // SOF0: 8-bit; sampling 4:4:4, or 4:2:0 (Y at 2x2)
-    u16be(2 + 6 + 3 * comps)
+    out.u16be(2 + 6 + 3 * comps)
     out.write(8)
-    u16be(height); u16be(width)
+    out.u16be(height); out.u16be(width)
     out.write(comps)
     for (c <- 1 to comps) {
       out.write(c)
@@ -136,7 +136,7 @@ object JpegWriter {
 
     def dht(tcTh: Int, counts: Array[Int], vals: Array[Int]): Unit = {
       marker(0xc4)
-      u16be(2 + 1 + 16 + vals.length)
+      out.u16be(2 + 1 + 16 + vals.length)
       out.write(tcTh)
       counts.foreach(out.write)
       vals.foreach(out.write)
@@ -146,12 +146,12 @@ object JpegWriter {
 
     if (restartInterval > 0) { // DRI
       marker(0xdd)
-      u16be(4)
-      u16be(restartInterval)
+      out.u16be(4)
+      out.u16be(restartInterval)
     }
 
     marker(0xda) // SOS: all components, each on DC 0 / AC 0
-    u16be(2 + 1 + 2 * comps + 3)
+    out.u16be(2 + 1 + 2 * comps + 3)
     out.write(comps)
     for (c <- 1 to comps) { out.write(c); out.write(0x00) }
     out.write(0); out.write(63); out.write(0) // Ss/Se/AhAl
@@ -308,20 +308,19 @@ object JpegWriter {
       }
     }
 
-    val out = new java.io.ByteArrayOutputStream()
-    def u16be(v: Int): Unit = { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
+    val out = new ByteSink()
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
 
     marker(0xd8) // SOI
     marker(0xdb) // DQT, table 0 (flat -> zigzag-order-invariant)
-    u16be(2 + 1 + 64)
+    out.u16be(2 + 1 + 64)
     out.write(0x00)
     for (_ <- 0 until 64) out.write(QuantStep)
 
     marker(0xc2) // SOF2
-    u16be(2 + 6 + 3 * comps)
+    out.u16be(2 + 6 + 3 * comps)
     out.write(8)
-    u16be(height); u16be(width)
+    out.u16be(height); out.u16be(width)
     out.write(comps)
     for (c <- 1 to comps) {
       out.write(c)
@@ -331,7 +330,7 @@ object JpegWriter {
 
     def dht(tcTh: Int, counts: Array[Int], vals: Array[Int]): Unit = {
       marker(0xc4)
-      u16be(2 + 1 + 16 + vals.length)
+      out.u16be(2 + 1 + 16 + vals.length)
       out.write(tcTh)
       counts.foreach(out.write)
       vals.foreach(out.write)
@@ -341,8 +340,8 @@ object JpegWriter {
 
     if (restartInterval > 0) {
       marker(0xdd)
-      u16be(4)
-      u16be(restartInterval)
+      out.u16be(4)
+      out.u16be(restartInterval)
     }
 
     val dcCodes = JpegCodec.encodeTable(JpegCodec.StdDcCounts, JpegCodec.StdDcVals)
@@ -358,7 +357,7 @@ object JpegWriter {
       val isDc = scan.ss == 0
       require(isDc || ns == 1, "AC scans must be single-component")
       marker(0xda) // SOS
-      u16be(2 + 1 + 2 * ns + 3)
+      out.u16be(2 + 1 + 2 * ns + 3)
       out.write(ns)
       for (c <- scan.comps) { out.write(c + 1); out.write(0x00) }
       out.write(scan.ss); out.write(scan.se)

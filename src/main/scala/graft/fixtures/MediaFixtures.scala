@@ -2,7 +2,7 @@ package graft.fixtures
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import graft.util.MsbWriter
+import graft.util.{ByteSink, MsbWriter}
 
 /** Deterministic media payload generators for the real pure-JVM codecs
   * ([[graft.multimodal.MediaCodecs]]): BMP (8/24/32 bpp BI_RGB, or 8-bpp
@@ -222,13 +222,11 @@ object MediaFixtures {
     * block flagged last; no audio frames (metadata-only fixture). */
   def flac(sampleRate: Int, channels: Int, bitsPerSample: Int,
            totalSamples: Long, tags: Seq[(String, String)]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new ByteSink()
     out.write("fLaC".getBytes)
     def block(tpe: Int, last: Boolean, body: Array[Byte]): Unit = {
       out.write((if (last) 0x80 else 0) | tpe)
-      out.write((body.length >>> 16) & 0xff)
-      out.write((body.length >>> 8) & 0xff)
-      out.write(body.length & 0xff)
+      out.u24be(body.length)
       out.write(body)
     }
     val si = ByteBuffer.allocate(34).order(ByteOrder.BIG_ENDIAN)
@@ -241,17 +239,13 @@ object MediaFixtures {
     si.putLong(packed)
     si.put(new Array[Byte](16)) // md5 of unencoded audio (zero here)
     block(0, last = false, si.array())
-    val vc = new java.io.ByteArrayOutputStream()
-    def u32le(v: Int): Unit = {
-      vc.write(v & 0xff); vc.write((v >>> 8) & 0xff)
-      vc.write((v >>> 16) & 0xff); vc.write((v >>> 24) & 0xff)
-    }
+    val vc = new ByteSink()
     val vendor = "graft".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    u32le(vendor.length); vc.write(vendor)
-    u32le(tags.length)
+    vc.u32le(vendor.length); vc.write(vendor)
+    vc.u32le(tags.length)
     for ((k, v) <- tags) {
       val entry = s"$k=$v".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      u32le(entry.length); vc.write(entry)
+      vc.u32le(entry.length); vc.write(entry)
     }
     block(4, last = false, vc.toByteArray)
     block(1, last = true, new Array[Byte](8)) // padding
@@ -271,13 +265,13 @@ object MediaFixtures {
                 data: Array[Byte]): Array[Byte] = {
       require(lacings.length <= 255, "fixture page overflow")
       require(lacings.sum == data.length, "lacing/data mismatch")
-      val out = new java.io.ByteArrayOutputStream()
+      val out = new ByteSink()
       out.write("OggS".getBytes)
       out.write(0) // version
       out.write(headerType)
       for (_ <- 0 until 8) out.write(0) // granule position
       out.write(Array[Byte](7, 7, 7, 7)) // serial
-      out.write(seq); out.write(0); out.write(0); out.write(0) // page sequence LE
+      out.u32le(seq) // page sequence
       for (_ <- 0 until 4) out.write(0) // crc (unverified)
       out.write(lacings.length)
       lacings.foreach(out.write)
@@ -299,18 +293,14 @@ object MediaFixtures {
     id.putInt(0) // bitrate_minimum
     id.put(0xb8.toByte) // blocksizes
     id.put(1.toByte) // framing
-    val vc = new java.io.ByteArrayOutputStream()
+    val vc = new ByteSink()
     vc.write(3); vc.write("vorbis".getBytes)
-    def u32le(v: Int): Unit = {
-      vc.write(v & 0xff); vc.write((v >>> 8) & 0xff)
-      vc.write((v >>> 16) & 0xff); vc.write((v >>> 24) & 0xff)
-    }
     val vendor = "graft".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    u32le(vendor.length); vc.write(vendor)
-    u32le(tags.length)
+    vc.u32le(vendor.length); vc.write(vendor)
+    vc.u32le(tags.length)
     for ((k, v) <- tags) {
       val entry = s"$k=$v".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      u32le(entry.length); vc.write(entry)
+      vc.u32le(entry.length); vc.write(entry)
     }
     vc.write(1) // framing bit
     val setup = Array[Byte](5) ++ "vorbis".getBytes // stub setup header
@@ -334,7 +324,7 @@ object MediaFixtures {
     * (encoding 0, the only single-byte encoding v2.3 defines) — BOTH
     * divergences the parser must get right. */
   def mp3Id3(frames: Seq[(String, String)], v24: Boolean = true): Array[Byte] = {
-    val body = new java.io.ByteArrayOutputStream()
+    val body = new ByteSink()
     for ((id, text) <- frames) {
       require(id.length == 4, s"frame id $id")
       body.write(id.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
@@ -345,10 +335,7 @@ object MediaFixtures {
       if (v24) {
         body.write((size >>> 21) & 0x7f); body.write((size >>> 14) & 0x7f)
         body.write((size >>> 7) & 0x7f); body.write(size & 0x7f)
-      } else {
-        body.write((size >>> 24) & 0xff); body.write((size >>> 16) & 0xff)
-        body.write((size >>> 8) & 0xff); body.write(size & 0xff)
-      }
+      } else body.u32be(size)
       body.write(0); body.write(0) // frame flags
       body.write(if (v24) 3 else 0) // UTF-8 / ISO-8859-1
       body.write(payload)
@@ -468,17 +455,15 @@ object MediaFixtures {
       }
     }
 
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new ByteSink()
     out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
     def chunk(tpe: String, data: Array[Byte]): Unit = {
-      def be32(v: Long): Array[Byte] = Array(
-        (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-      out.write(be32(data.length.toLong))
+      out.u32be(data.length)
       val body = tpe.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ data
       out.write(body)
       val crc = new java.util.zip.CRC32
       crc.update(body)
-      out.write(be32(crc.getValue))
+      out.u32be(crc.getValue)
     }
     val ihdr = ByteBuffer.allocate(13)
     ihdr.putInt(width).putInt(height) // big-endian by default
@@ -525,19 +510,18 @@ object MediaFixtures {
     // in ONE place: the production encoder
     val lzw = graft.multimodal.ImageConvert.gifLzwEncode(pixels)
 
-    val buf = new java.io.ByteArrayOutputStream()
+    val buf = new ByteSink()
     buf.write("GIF87a".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    def u16le(v: Int): Unit = { buf.write(v & 0xff); buf.write((v >>> 8) & 0xff) }
     // the logical screen may exceed the frame rect (sub-rect-frame arm);
     // the canvas outside it is the background color index
-    u16le(frameLeft + width + screenPadRight)
-    u16le(frameTop + height + screenPadBottom)
+    buf.u16le(frameLeft + width + screenPadRight)
+    buf.u16le(frameTop + height + screenPadBottom)
     buf.write(0xf7) // GCT present, color res 8, GCT size 256
     buf.write(bgIndex); buf.write(0)
     for (v <- 0 until 256; _ <- 0 until 3) buf.write(v) // grayscale palette
     for (_ <- 0 until frames) { // extra frames repeat the same payload
       buf.write(0x2c) // image descriptor
-      u16le(frameLeft); u16le(frameTop); u16le(width); u16le(height)
+      buf.u16le(frameLeft); buf.u16le(frameTop); buf.u16le(width); buf.u16le(height)
       buf.write(if (interlace) 0x40 else 0) // no local table
       buf.write(8) // LZW min code size
       var off = 0
@@ -740,11 +724,11 @@ object MediaFixtures {
     }
     def fullBox(tpe: String, body: Array[Byte]): Array[Byte] =
       box(tpe, new Array[Byte](4) ++ body) // version 0, flags 0
-    def u16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def u32(v: Int): Array[Byte] =
-      Array((v >>> 24).toByte, ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        (v & 0xff).toByte)
-    def ispe(w: Int, h: Int): Array[Byte] = fullBox("ispe", u32(w) ++ u32(h))
+    def ispe(w: Int, h: Int): Array[Byte] = {
+      val dims = new ByteSink(8)
+      dims.u32be(w); dims.u32be(h)
+      fullBox("ispe", dims.toByteArray)
+    }
     val nItems = if (thumb.isDefined) 2 else 1
     val primaryIspe = ispe(width, height)
     val ipcoChildren = thumb match {
@@ -756,18 +740,18 @@ object MediaFixtures {
     val thumbIdx = if (thumbFirst) 1 else 2
     // ipma ver 0 flags 0: u32 entry_count; per entry u16 itemId, u8 count,
     // then 1-byte associations (essential bit 0x80 off)
-    val ipmaBody = u32(nItems) ++
-      (u16(1) ++ Array(1.toByte, primaryIdx.toByte)) ++
-      (if (thumb.isDefined) u16(2) ++ Array(1.toByte, thumbIdx.toByte)
-       else Array.emptyByteArray)
-    val iprp = box("iprp", box("ipco", ipcoChildren) ++ fullBox("ipma", ipmaBody))
-    val pitm = fullBox("pitm", u16(1))
-    val iinf = fullBox("iinf", u16(nItems))
+    val ipma = new ByteSink()
+    ipma.u32be(nItems)
+    ipma.u16be(1); ipma.write(1); ipma.write(primaryIdx)
+    if (thumb.isDefined) { ipma.u16be(2); ipma.write(1); ipma.write(thumbIdx) }
+    val iprp = box("iprp", box("ipco", ipcoChildren) ++ fullBox("ipma", ipma.toByteArray))
+    val pitm = fullBox("pitm", Array[Byte](0, 1))
+    val iinf = fullBox("iinf", Array[Byte](0, nItems.toByte))
     // ISO 14496-12 imposes no child order inside meta: pitmLast exercises
     // the legal ordering where the parser sees ipma BEFORE pitm
     val meta = fullBox("meta",
       if (pitmLast) iinf ++ iprp ++ pitm else pitm ++ iinf ++ iprp)
-    val ftyp = box("ftyp", brand.getBytes("ISO-8859-1") ++ u32(0))
+    val ftyp = box("ftyp", brand.getBytes("ISO-8859-1") ++ new Array[Byte](4))
     ftyp ++ meta
   }
 
@@ -870,14 +854,12 @@ object MediaFixtures {
   def webp(width: Int, height: Int, variant: Int, frames: Int = 1,
            seed: Int = 0): Array[Byte] = {
     require(width >= 1 && height >= 1 && width <= 0x3fff && height <= 0x3fff)
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new ByteSink()
     def chunk(fourcc: String, body: Array[Byte]): Unit = {
       out.write(fourcc.getBytes, 0, 4)
-      val s = body.length
-      out.write(s & 0xff); out.write((s >>> 8) & 0xff)
-      out.write((s >>> 16) & 0xff); out.write((s >>> 24) & 0xff)
+      out.u32le(body.length)
       out.write(body, 0, body.length)
-      if ((s & 1) == 1) out.write(0) // RIFF 2-byte alignment
+      if ((body.length & 1) == 1) out.write(0) // RIFF 2-byte alignment
     }
     def junk(n: Int): Array[Byte] =
       Array.tabulate(n)(i => ((seed + i * 31) & 0xff).toByte)
@@ -898,15 +880,11 @@ object MediaFixtures {
         b.put(junk(16))
         chunk("VP8L", b.array())
       case _ =>
-        val b = ByteBuffer.allocate(10)
-        b.put((if (frames > 1) 0x02 else 0x00).toByte) // animation flag
-        b.put(0.toByte).put(0.toByte).put(0.toByte)    // reserved
-        def u24(v: Int): Unit = {
-          b.put((v & 0xff).toByte).put(((v >>> 8) & 0xff).toByte)
-          b.put(((v >>> 16) & 0xff).toByte)
-        }
-        u24(width - 1); u24(height - 1)
-        chunk("VP8X", b.array())
+        val b = new ByteSink(10)
+        b.write(if (frames > 1) 0x02 else 0x00) // animation flag
+        b.write(0); b.write(0); b.write(0)      // reserved
+        b.u24le(width - 1); b.u24le(height - 1)
+        chunk("VP8X", b.toByteArray)
         if (frames > 1) {
           var k = 0
           while (k < frames) { chunk("ANMF", junk(24)); k += 1 }
@@ -1318,8 +1296,9 @@ object MediaFixtures {
       (1 to n).map(k => ((v >> (8 * (n - k))) & 0xff).toByte).toArray
     }
     def f32(v: Float): Array[Byte] = {
-      val b = java.lang.Float.floatToIntBits(v)
-      Array((b >> 24).toByte, (b >> 16).toByte, (b >> 8).toByte, b.toByte)
+      val b = new ByteSink(4)
+      b.u32be(java.lang.Float.floatToIntBits(v))
+      b.toByteArray
     }
     val ebmlHdr = el(Array(0x1a, 0x45, 0xdf, 0xa3),
       el(Array(0x42, 0x82), docType.getBytes("ISO-8859-1")))

@@ -1,9 +1,7 @@
 package graft.multimodal
 
-import java.io.ByteArrayOutputStream
-
 import graft.multimodal.AudioConvert.AudioBuf
-import graft.util.{BitReader, Crc, MsbReader, MsbWriter}
+import graft.util.{BitReader, ByteSink, Crc, MsbReader, MsbWriter}
 
 /** FLAC codec — the `.flac` arm of the reference's audio output whitelist
   * (/root/reference/src/converters/audio_converters.py:45-47 and the
@@ -151,7 +149,7 @@ object FlacCodec {
     val maxOrder = math.min(level, 4)
     val bps = buf.bits
 
-    val out = new ByteArrayOutputStream()
+    val out = new ByteSink()
     out.write("fLaC".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
     // STREAMINFO (34 bytes), last-block flag set iff no tags follow.
     // The declared blocksize must sit in the spec's 16-65535 range even
@@ -167,28 +165,22 @@ object FlacCodec {
     si.put(frames, 36)
     val siBytes = si.toBytes
     out.write(if (tags.isEmpty) 0x80 else 0x00)
-    out.write(0); out.write(0); out.write(34)
+    out.u24be(34)
     out.write(siBytes, 0, siBytes.length)
     out.write(md5Pcm(buf.samples, bps), 0, 16)
     if (tags.nonEmpty) {
       // VORBIS_COMMENT: little-endian length prefixes (the one LE island)
-      val vc = new ByteArrayOutputStream()
-      def le32(v: Int): Unit = {
-        vc.write(v & 0xff); vc.write((v >> 8) & 0xff)
-        vc.write((v >> 16) & 0xff); vc.write((v >> 24) & 0xff)
-      }
+      val vc = new ByteSink()
       val vendor = "graft".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      le32(vendor.length); vc.write(vendor, 0, vendor.length)
-      le32(tags.length)
+      vc.u32le(vendor.length); vc.write(vendor, 0, vendor.length)
+      vc.u32le(tags.length)
       for ((k, v) <- tags) {
         val e = s"$k=$v".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        le32(e.length); vc.write(e, 0, e.length)
+        vc.u32le(e.length); vc.write(e, 0, e.length)
       }
       val body = vc.toByteArray
       out.write(0x80 | 4) // last block, type 4
-      out.write((body.length >> 16) & 0xff)
-      out.write((body.length >> 8) & 0xff)
-      out.write(body.length & 0xff)
+      out.u24be(body.length)
       out.write(body, 0, body.length)
     }
 

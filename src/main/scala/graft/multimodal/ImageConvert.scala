@@ -3,7 +3,7 @@ package graft.multimodal
 import java.io.ByteArrayOutputStream
 
 import graft.multimodal.MediaCodecs.{ImageMeta, PixelBuf}
-import graft.util.LsbWriter
+import graft.util.{ByteCursor, ByteSink, LsbWriter}
 
 /** Production image CONVERT surface — the reference's image direction
   * (/root/reference/src/converters/image_converters.py:118-137: open with
@@ -718,21 +718,21 @@ object ImageConvert {
       System.arraycopy(buf.data, y * rowBytes, raw, y * (1 + rowBytes) + 1, rowBytes)
       y += 1
     }
-    val out = new ByteArrayOutputStream(raw.length / 2 + 128)
+    val out = new ByteSink(raw.length / 2 + 128)
     out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte), 0, 8)
-    def be32(v: Long): Array[Byte] =
-      Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
     def chunk(tpe: String, body: Array[Byte]): Unit = {
-      out.write(be32(body.length), 0, 4)
+      out.u32be(body.length)
       val tb = tpe.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
       val crc = new java.util.zip.CRC32
       crc.update(tb); crc.update(body)
       out.write(tb, 0, 4)
       out.write(body, 0, body.length)
-      out.write(be32(crc.getValue), 0, 4)
+      out.u32be(crc.getValue)
     }
-    chunk("IHDR", be32(buf.width) ++ be32(buf.height) ++
-      Array[Byte](8, colorType.toByte, 0, 0, 0))
+    val ihdr = new ByteSink(13)
+    ihdr.u32be(buf.width); ihdr.u32be(buf.height)
+    ihdr.write(Array[Byte](8, colorType.toByte, 0, 0, 0))
+    chunk("IHDR", ihdr.toByteArray)
     if (colorType == 3) {
       requirePalette(buf)
       chunk("PLTE", buf.palette.clone())
@@ -859,16 +859,15 @@ object ImageConvert {
     require(buf.width >= 1 && buf.width <= 256 && buf.height >= 1 && buf.height <= 256,
       s"ICO dims ${buf.width}x${buf.height} out of the format's 1-256 range")
     val png = encodePng(buf)
-    val out = new ByteArrayOutputStream(22 + png.length)
-    def u16le(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    u16le(0); u16le(1); u16le(1)            // reserved / type=icon / count
-    out.write(buf.width & 0xff)             // 256 is coded as 0
+    val out = new ByteSink(22 + png.length)
+    out.u16le(0); out.u16le(1); out.u16le(1) // reserved / type=icon / count
+    out.write(buf.width & 0xff)              // 256 is coded as 0
     out.write(buf.height & 0xff)
-    out.write(0); out.write(0)              // no palette / reserved
-    u16le(1)                                // color planes
-    u16le(PixelBuf.channelsOf(buf.mode) * 8) // bit-depth hint
-    u16le(png.length & 0xffff); u16le(png.length >>> 16)
-    u16le(22); u16le(0)                     // data offset: ICONDIR(6)+entry(16)
+    out.write(0); out.write(0)               // no palette / reserved
+    out.u16le(1)                             // color planes
+    out.u16le(PixelBuf.channelsOf(buf.mode) * 8) // bit-depth hint
+    out.u32le(png.length)
+    out.u32le(22)                            // data offset: ICONDIR(6)+entry(16)
     out.write(png, 0, png.length)
     out.toByteArray
   }
@@ -901,19 +900,20 @@ object ImageConvert {
     * (BITMAPINFOHEADER + palette + XOR rows + AND rows, no BMP file
     * header). */
   private def decodeIcoDib(dib: Array[Byte], sink: PixelBuf): ImageMeta = {
-    require(dib.length >= 40 && graft.util.LittleEndian.i32(dib, 0) == 40,
+    val d = ByteCursor(dib)
+    require(dib.length >= 40 && d.i32le(0) == 40,
       "ICO entry is neither PNG nor a BITMAPINFOHEADER DIB")
-    val w = graft.util.LittleEndian.i32(dib, 4)
-    val h2 = graft.util.LittleEndian.i32(dib, 8)
-    val bpp = (dib(14) & 0xff) | ((dib(15) & 0xff) << 8)
-    val compression = graft.util.LittleEndian.i32(dib, 16)
+    val w = d.i32le(4)
+    val h2 = d.i32le(8)
+    val bpp = d.u16le(14)
+    val compression = d.i32le(16)
     require(compression == 0, s"ICO DIB compression $compression unsupported (BI_RGB only)")
     require(h2 > 0 && (h2 & 1) == 0,
       s"ICO DIB height $h2 is not the doubled XOR+AND convention")
     val h = h2 / 2
     require(w >= 1 && h >= 1 && bpp >= 1, s"ICO DIB geometry ${w}x$h @$bpp invalid")
     MediaCodecs.PixelBuf.checkCap("RGBA", w, h)
-    val clrUsed = graft.util.LittleEndian.i32(dib, 32)
+    val clrUsed = d.i32le(32)
     val paletteBytes =
       if (bpp <= 8) (if (clrUsed > 0) clrUsed else 1 << bpp) * 4 else 0
     val xorStride = ((w.toLong * bpp + 31) / 32 * 4).toInt
@@ -924,19 +924,18 @@ object ImageConvert {
       "ICO DIB XOR+AND data overruns the entry")
     // synthesize a BMP file around the XOR half so the shared (tested)
     // BMP decoder does the pixel work: height un-doubled, offsets rebuilt
-    val bmp = new Array[Byte](14 + 40 + paletteBytes + xorSize)
-    bmp(0) = 'B'; bmp(1) = 'M'
-    def putI32(at: Int, v: Int): Unit = {
-      bmp(at) = (v & 0xff).toByte; bmp(at + 1) = ((v >>> 8) & 0xff).toByte
-      bmp(at + 2) = ((v >>> 16) & 0xff).toByte; bmp(at + 3) = ((v >>> 24) & 0xff).toByte
-    }
-    putI32(2, bmp.length)
-    putI32(10, 14 + 40 + paletteBytes)
-    System.arraycopy(dib, 0, bmp, 14, 40 + paletteBytes + xorSize)
-    putI32(14 + 8, h)        // un-double the height
-    putI32(14 + 20, xorSize) // biSizeImage consistent with one bitmap
+    val bmpLength = 14 + 40 + paletteBytes + xorSize
+    val bmp = new ByteSink(bmpLength)
+    bmp.write('B'); bmp.write('M')
+    bmp.u32le(bmpLength); bmp.u32le(0)
+    bmp.u32le(14 + 40 + paletteBytes)
+    bmp.write(dib, 0, 8)
+    bmp.u32le(h)       // un-double the height
+    bmp.write(dib, 12, 8)
+    bmp.u32le(xorSize) // biSizeImage consistent with one bitmap
+    bmp.write(dib, 24, 16 + paletteBytes + xorSize)
     val buf = new PixelBuf
-    MediaCodecs.decodeBmp(bmp, buf)
+    MediaCodecs.decodeBmp(bmp.toByteArray, buf)
     // composite to RGBA (Pillow's ICO open mode)
     if (sink != null) sink.init("RGBA", w, h)
     val out = if (sink != null) sink.data else new Array[Byte](w * h * 4)
@@ -1110,15 +1109,14 @@ object ImageConvert {
         }
         (idx, pal)
     }
-    val out = new ByteArrayOutputStream(indices.length / 2 + 1024)
-    def u16le(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
+    val out = new ByteSink(indices.length / 2 + 1024)
     out.write("GIF89a".getBytes, 0, 6)
-    u16le(buf.width); u16le(buf.height)
+    out.u16le(buf.width); out.u16le(buf.height)
     out.write(0xf7) // global table, 256 entries, 8-bit color resolution
     out.write(0); out.write(0)
     out.write(palette, 0, 768)
     out.write(0x2c) // image descriptor
-    u16le(0); u16le(0); u16le(buf.width); u16le(buf.height)
+    out.u16le(0); out.u16le(0); out.u16le(buf.width); out.u16le(buf.height)
     out.write(0) // no local table, not interlaced
     out.write(8) // LZW min code size
     // chop into <=255-byte sub-blocks

@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import graft.util.ByteCursor
+
 /** Baseline-sequential JPEG (ITU T.81) decoder, pure JVM — the third
   * compressed image codec with a real decoder and again a different
   * decompression stack than PNG (DEFLATE) or GIF (LZW): canonical Huffman
@@ -268,16 +270,13 @@ object JpegCodec {
     def quant: Array[Int] = quants(0)
   }
 
-  private def u16be(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-
   /** Segment length field, validated against the payload: every marker
     * segment must carry its 2-byte length and fit inside the byte array —
     * truncated streams fail with a named error, not AIOOBE. */
-  private def segLen(bytes: Array[Byte], i: Int): Int = {
-    require(i + 2 <= bytes.length, "JPEG truncated in segment header")
-    val len = u16be(bytes, i)
-    require(len >= 2 && i + len <= bytes.length, "JPEG segment overruns payload")
+  private def segLen(in: ByteCursor, i: Int): Int = {
+    require(i + 2 <= in.length, "JPEG truncated in segment header")
+    val len = in.u16be(i)
+    require(len >= 2 && i + len <= in.length, "JPEG segment overruns payload")
     len
   }
 
@@ -294,12 +293,12 @@ object JpegCodec {
   /** SOF0/1/2 body: 8-bit precision, geometry, component list, the
     * 4:4:4/gray-or-4:2:0 sampling restriction, and the decompression-bomb
     * guard — one source of truth for both frame types. */
-  private def readSof(bytes: Array[Byte], i: Int, len: Int): SofInfo = {
+  private def readSof(in: ByteCursor, i: Int, len: Int): SofInfo = {
     require(len >= 8, "SOF segment truncated")
-    require(bytes(i + 2) == 8, "only 8-bit precision supported")
-    val height = u16be(bytes, i + 3)
-    val width = u16be(bytes, i + 5)
-    val nf = bytes(i + 7) & 0xff
+    require(in.u8(i + 2) == 8, "only 8-bit precision supported")
+    val height = in.u16be(i + 3)
+    val width = in.u16be(i + 5)
+    val nf = in.u8(i + 7)
     require(nf == 1 || nf == 3,
       s"only grayscale or 3-component (YCbCr) JPEG supported, got $nf")
     require(len >= 8 + 3 * nf, "SOF component list truncated")
@@ -309,11 +308,11 @@ object JpegCodec {
     val vSamp = new Array[Int](nf)
     var c = 0
     while (c < nf) {
-      compIds(c) = bytes(i + 8 + 3 * c) & 0xff
-      val sampling = bytes(i + 9 + 3 * c) & 0xff
+      compIds(c) = in.u8(i + 8 + 3 * c)
+      val sampling = in.u8(i + 9 + 3 * c)
       hSamp(c) = sampling >>> 4
       vSamp(c) = sampling & 0xf
-      compQuant(c) = bytes(i + 10 + 3 * c) & 0xff
+      compQuant(c) = in.u8(i + 10 + 3 * c)
       require(compQuant(c) <= 3, s"SOF quant table id ${compQuant(c)} out of range")
       c += 1
     }
@@ -368,6 +367,7 @@ object JpegCodec {
     * layer is testable coefficient-exactly, with no IDCT in the loop. */
   def parse(bytes: Array[Byte]): JpegParsed = {
     require(isJpeg(bytes), "not a JPEG payload")
+    val in = ByteCursor(bytes)
     var i = 2
     val quantTables = new Array[Array[Int]](4)
     val dcTables = new Array[HuffTable](4)
@@ -397,8 +397,8 @@ object JpegCodec {
         case 0xd8 => // SOI again (tolerated)
         case 0xd9 => throw new IllegalArgumentException("EOI before any scan")
         case 0xc0 | 0xc1 => // baseline / extended-sequential SOF
-          val len = segLen(bytes, i)
-          val sof = readSof(bytes, i, len)
+          val len = segLen(in, i)
+          val sof = readSof(in, i, len)
           width = sof.width
           height = sof.height
           nComps = sof.nComps
@@ -409,20 +409,20 @@ object JpegCodec {
           i += len
         case 0xc2 => return parseProgressive(bytes)
         case 0xc4 => // DHT: one or more tables
-          val len = segLen(bytes, i)
+          val len = segLen(in, i)
           readDht(bytes, i, len, dcTables, acTables)
           i += len
         case 0xdb => // DQT: entries arrive in zigzag order
-          val len = segLen(bytes, i)
+          val len = segLen(in, i)
           readDqt(bytes, i, len, quantTables)
           i += len
         case 0xdd => // DRI: MCUs between restart markers (0 disables)
-          val len = segLen(bytes, i)
+          val len = segLen(in, i)
           require(len >= 4, "DRI segment truncated")
-          restartInterval = u16be(bytes, i + 2)
+          restartInterval = in.u16be(i + 2)
           i += len
         case 0xda => // SOS: interleaved scan over all SOF components, in order
-          val len = segLen(bytes, i)
+          val len = segLen(in, i)
           require(len >= 3, "SOS segment truncated")
           val ns = bytes(i + 2) & 0xff
           require(nComps > 0, "SOS before SOF")
@@ -443,8 +443,8 @@ object JpegCodec {
           }
           scanAt = i + len
           i += len
-        case x if x >= 0xe0 && x <= 0xef => i += segLen(bytes, i) // APPn
-        case 0xfe => i += segLen(bytes, i) // COM
+        case x if x >= 0xe0 && x <= 0xef => i += segLen(in, i) // APPn
+        case 0xfe => i += segLen(in, i) // COM
         case o => throw new IllegalArgumentException(f"unsupported JPEG marker 0xff$o%02x")
       }
     }
@@ -530,6 +530,7 @@ object JpegCodec {
     * result is the same [[JpegParsed]] interleaved-MCU block layout the
     * baseline path produces, so reconstruction is shared. */
   private def parseProgressive(bytes: Array[Byte]): JpegParsed = {
+    val in = ByteCursor(bytes)
     var i = 2
     val quantTables = new Array[Array[Int]](4)
     val dcTables = new Array[HuffTable](4)
@@ -553,7 +554,7 @@ object JpegCodec {
     /** One SOS: header + entropy data; returns the offset of the next
       * marker's 0xFF. */
     def decodeScan(at: Int): Int = {
-      val len = segLen(bytes, at)
+      val len = segLen(in, at)
       require(len >= 3, "SOS segment truncated")
       val ns = bytes(at + 2) & 0xff
       require(ns >= 1 && ns <= nComps, s"SOS carries $ns components")
@@ -771,8 +772,8 @@ object JpegCodec {
         case 0xd9 => done = true
         case 0xc2 =>
           require(grids == null, "multiple SOF segments")
-          val len = segLen(bytes, i)
-          val sof = readSof(bytes, i, len)
+          val len = segLen(in, i)
+          val sof = readSof(in, i, len)
           width = sof.width
           height = sof.height
           nComps = sof.nComps
@@ -791,24 +792,24 @@ object JpegCodec {
         case 0xc0 | 0xc1 =>
           throw new IllegalArgumentException("sequential SOF inside progressive stream")
         case 0xc4 => // DHT
-          val len = segLen(bytes, i)
+          val len = segLen(in, i)
           readDht(bytes, i, len, dcTables, acTables)
           i += len
         case 0xdb => // DQT
-          val len = segLen(bytes, i)
+          val len = segLen(in, i)
           readDqt(bytes, i, len, quantTables)
           i += len
         case 0xdd =>
-          val len = segLen(bytes, i)
+          val len = segLen(in, i)
           require(len >= 4, "DRI segment truncated")
-          restartInterval = u16be(bytes, i + 2)
+          restartInterval = in.u16be(i + 2)
           i += len
         case 0xda =>
           require(grids != null, "SOS before SOF")
           i = decodeScan(i)
           scans += 1
-        case x if x >= 0xe0 && x <= 0xef => i += segLen(bytes, i)
-        case 0xfe => i += segLen(bytes, i)
+        case x if x >= 0xe0 && x <= 0xef => i += segLen(in, i)
+        case 0xfe => i += segLen(in, i)
         case o => throw new IllegalArgumentException(f"unsupported JPEG marker 0xff$o%02x")
       }
     }

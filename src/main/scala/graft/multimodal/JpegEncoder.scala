@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.multimodal.MediaCodecs.PixelBuf
+import graft.util.ByteSink
 
 /** Production baseline-JPEG ENCODER (the reference's `img.save(..., "JPEG",
   * quality=...)` direction, /root/reference/src/converters/
@@ -140,23 +141,22 @@ object JpegEncoder {
       y += 1
     }
 
-    val out = new java.io.ByteArrayOutputStream()
-    def u16be(v: Int): Unit = { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
+    val out = new ByteSink()
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
 
     marker(0xd8) // SOI
     marker(0xe0) // APP0 / JFIF
-    u16be(16)
+    out.u16be(16)
     out.write("JFIF".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
     out.write(0)
     out.write(1); out.write(1)
     out.write(0)
-    u16be(1); u16be(1)
+    out.u16be(1); out.u16be(1)
     out.write(0); out.write(0)
 
     def dqt(id: Int, q: Array[Int]): Unit = {
       marker(0xdb)
-      u16be(2 + 1 + 64)
+      out.u16be(2 + 1 + 64)
       out.write(id)
       for (k <- 0 until 64) out.write(q(JpegCodec.ZigZag(k))) // zigzag order
     }
@@ -164,9 +164,9 @@ object JpegEncoder {
     if (comps == 3) dqt(1, chromaQ)
 
     marker(0xc0) // SOF0, all components 1x1
-    u16be(2 + 6 + 3 * comps)
+    out.u16be(2 + 6 + 3 * comps)
     out.write(8)
-    u16be(h); u16be(w)
+    out.u16be(h); out.u16be(w)
     out.write(comps)
     for (c <- 1 to comps) {
       out.write(c)
@@ -176,7 +176,7 @@ object JpegEncoder {
 
     def dht(tcTh: Int, counts: Array[Int], vals: Array[Int]): Unit = {
       marker(0xc4)
-      u16be(2 + 1 + 16 + vals.length)
+      out.u16be(2 + 1 + 16 + vals.length)
       out.write(tcTh)
       counts.foreach(out.write)
       vals.foreach(out.write)
@@ -185,7 +185,7 @@ object JpegEncoder {
     dht(0x10, JpegCodec.StdAcCounts, JpegCodec.StdAcVals)
 
     marker(0xda) // SOS: every component on DC 0 / AC 0
-    u16be(2 + 1 + 2 * comps + 3)
+    out.u16be(2 + 1 + 2 * comps + 3)
     out.write(comps)
     for (c <- 1 to comps) { out.write(c); out.write(0x00) }
     out.write(0); out.write(63); out.write(0)

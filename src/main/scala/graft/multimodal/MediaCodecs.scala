@@ -18,8 +18,7 @@ package graft.multimodal
   */
 object MediaCodecs {
 
-  import graft.util.LittleEndian.{i32, u16}
-  import graft.util.{BigEndian, BitReader, LsbReader, MsbReader}
+  import graft.util.{BitReader, ByteCursor, LsbReader, MsbReader}
 
   /** `frames` > 1 for animated GIF and animated WebP. `pixelSum` covers
     * the FIRST frame (the Pillow convert-current-frame contract) for
@@ -105,18 +104,19 @@ object MediaCodecs {
     * pixelSum is row-order invariant but the walk honors |height|). */
   def decodeBmp(bytes: Array[Byte], sink: PixelBuf = null): ImageMeta = {
     require(isBmp(bytes) && bytes.length >= 54, "not a BMP payload")
+    val in = ByteCursor(bytes)
     // field offsets below assume the BITMAPINFOHEADER family (40/52/56/
     // 108/124 bytes share the first 40); the 12-byte BITMAPCOREHEADER lays
     // out width/height/bpp differently and would be read as garbage
-    val biSize = i32(bytes, 14)
+    val biSize = in.i32le(14)
     require(biSize == 40 || biSize == 52 || biSize == 56 || biSize == 108 || biSize == 124,
       s"unsupported BMP DIB header size $biSize")
-    val dataOffset = i32(bytes, 10)
-    val width = i32(bytes, 18)
-    val storedHeight = i32(bytes, 22)
+    val dataOffset = in.i32le(10)
+    val width = in.i32le(18)
+    val storedHeight = in.i32le(22)
     val height = math.abs(storedHeight)
-    val bpp = u16(bytes, 28)
-    val compression = i32(bytes, 30)
+    val bpp = in.u16le(28)
+    val compression = in.i32le(30)
     require(compression == 0 || (compression == 1 && bpp == 8) ||
       (compression == 3 && bpp == 32),
       s"unsupported BMP compression $compression at $bpp bpp " +
@@ -140,10 +140,10 @@ object MediaCodecs {
         // BI_BITFIELDS: only the standard BGRA layout is claimed; the
         // alpha mask (V3+ headers carry it in-header) decides RGBA vs RGB
         require(bytes.length >= 66, "BMP bitfields masks truncated")
-        val (rM, gM, bM) = (i32(bytes, 54), i32(bytes, 58), i32(bytes, 62))
+        val (rM, gM, bM) = (in.i32le(54), in.i32le(58), in.i32le(62))
         require(rM == 0x00ff0000 && gM == 0x0000ff00 && bM == 0x000000ff,
           f"unsupported BMP channel masks $rM%08x/$gM%08x/$bM%08x")
-        val aM = if (biSize >= 56 && bytes.length >= 70) i32(bytes, 66) else 0
+        val aM = if (biSize >= 56 && bytes.length >= 70) in.i32le(66) else 0
         require(aM == 0 || aM == 0xff000000,
           f"unsupported BMP alpha mask $aM%08x")
         if (aM != 0) "RGBA" else "RGB"
@@ -198,9 +198,10 @@ object MediaCodecs {
     * extensions as colors would be silently wrong pixels. biClrUsed
     * (offset 46) 0 means the full 256. */
   private def bmpPalette(bytes: Array[Byte], dataOffset: Int): Array[Byte] = {
-    val biSize = i32(bytes, 14) // whitelisted by decodeBmp
+    val in = ByteCursor(bytes)
+    val biSize = in.i32le(14) // whitelisted by decodeBmp
     val palAt = 14 + biSize
-    val clrUsed = i32(bytes, 46)
+    val clrUsed = in.i32le(46)
     require(clrUsed >= 0 && clrUsed <= 256, s"bad BMP biClrUsed $clrUsed")
     val entries = if (clrUsed == 0) 256 else clrUsed
     require(palAt + entries * 4 <= dataOffset && palAt + entries * 4 <= bytes.length,
@@ -334,6 +335,7 @@ object MediaCodecs {
     * caught arithmetically. */
   def decodePng(bytes: Array[Byte], sink: PixelBuf = null): ImageMeta = {
     require(isPng(bytes), "not a PNG payload")
+    val in = ByteCursor(bytes)
     val crc = new java.util.zip.CRC32
     var i = 8
     var width = 0
@@ -343,22 +345,18 @@ object MediaCodecs {
     val idat = scala.collection.mutable.ArrayBuffer[(Int, Int)]() // (offset, length)
     var sawEnd = false
     while (!sawEnd && i + 8 <= bytes.length) {
-      val len = ((bytes(i) & 0xff) << 24) | ((bytes(i + 1) & 0xff) << 16) |
-        ((bytes(i + 2) & 0xff) << 8) | (bytes(i + 3) & 0xff)
+      val len = in.i32be(i)
       require(len >= 0 && i + 12L + len <= bytes.length, "PNG chunk overruns payload")
       val tpe = new String(bytes, i + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
       crc.reset()
       crc.update(bytes, i + 4, 4 + len)
-      val want = ((bytes(i + 8 + len) & 0xffL) << 24) | ((bytes(i + 9 + len) & 0xffL) << 16) |
-        ((bytes(i + 10 + len) & 0xffL) << 8) | (bytes(i + 11 + len) & 0xffL)
+      val want = in.u32be(i + 8 + len)
       require(crc.getValue == want, s"PNG $tpe chunk CRC mismatch")
       tpe match {
         case "IHDR" =>
           require(len == 13, "bad IHDR length")
-          width = ((bytes(i + 8) & 0xff) << 24) | ((bytes(i + 9) & 0xff) << 16) |
-            ((bytes(i + 10) & 0xff) << 8) | (bytes(i + 11) & 0xff)
-          height = ((bytes(i + 12) & 0xff) << 24) | ((bytes(i + 13) & 0xff) << 16) |
-            ((bytes(i + 14) & 0xff) << 8) | (bytes(i + 15) & 0xff)
+          width = in.i32be(i + 8)
+          height = in.i32be(i + 12)
           val bitDepth = bytes(i + 16) & 0xff
           colorType = bytes(i + 17) & 0xff
           interlace = bytes(i + 20) & 0xff
@@ -487,12 +485,12 @@ object MediaCodecs {
     * without materializing the de-permuted raster. */
   def decodeGif(bytes: Array[Byte], sink: PixelBuf = null): ImageMeta = {
     require(isGif(bytes), "not a GIF payload")
-    def u16le(i: Int): Int = (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
+    val in = ByteCursor(bytes)
     require(bytes.length >= 13, "GIF truncated before logical screen descriptor")
     // Pillow/giflib semantics: the IMAGE is the logical screen; the first
     // frame composites at its (left, top) onto a background-color canvas
-    val screenW = u16le(6)
-    val screenH = u16le(8)
+    val screenW = in.u16le(6)
+    val screenH = in.u16le(8)
     val packed = bytes(10) & 0xff
     val bgIndex = if ((packed & 0x80) != 0) bytes(11) & 0xff else 0
     var i = 13
@@ -515,8 +513,8 @@ object MediaCodecs {
       (bytes(i) & 0xff) match {
         case 0x2c => // image descriptor
           require(i + 10 <= bytes.length, "GIF image descriptor truncated")
-          frameLeft = u16le(i + 1); frameTop = u16le(i + 3)
-          width = u16le(i + 5); height = u16le(i + 7)
+          frameLeft = in.u16le(i + 1); frameTop = in.u16le(i + 3)
+          width = in.u16le(i + 5); height = in.u16le(i + 7)
           val ipacked = bytes(i + 9) & 0xff
           interlaced = (ipacked & 0x40) != 0 // sum-invariant; sinks de-permute
           i += 10
@@ -760,18 +758,9 @@ object MediaCodecs {
   def decodeTiff(bytes: Array[Byte], sink: PixelBuf = null): ImageMeta = {
     require(isTiff(bytes), "not a TIFF payload")
     val le = bytes(0) == 'I'
-    def u16at(i: Int): Int = {
-      require(i >= 0 && i + 2 <= bytes.length, s"TIFF read at $i out of bounds")
-      if (le) (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
-      else ((bytes(i) & 0xff) << 8) | (bytes(i + 1) & 0xff)
-    }
-    def u32at(i: Int): Long = {
-      require(i >= 0 && i + 4 <= bytes.length, s"TIFF read at $i out of bounds")
-      if (le) (bytes(i) & 0xffL) | ((bytes(i + 1) & 0xffL) << 8) |
-        ((bytes(i + 2) & 0xffL) << 16) | ((bytes(i + 3) & 0xffL) << 24)
-      else ((bytes(i) & 0xffL) << 24) | ((bytes(i + 1) & 0xffL) << 16) |
-        ((bytes(i + 2) & 0xffL) << 8) | (bytes(i + 3) & 0xffL)
-    }
+    val in = ByteCursor(bytes)
+    def u16at(i: Int): Int = if (le) in.u16le(i) else in.u16be(i)
+    def u32at(i: Int): Long = if (le) in.u32le(i) else in.u32be(i)
     val ifdAt = u32at(4)
     require(ifdAt >= 8 && ifdAt + 2 <= bytes.length, s"TIFF IFD offset $ifdAt out of bounds")
     val n = u16at(ifdAt.toInt)
@@ -955,10 +944,7 @@ object MediaCodecs {
     * compressed audio) is not decoded. */
   def parseFlac(bytes: Array[Byte]): FlacMeta = {
     require(isFlac(bytes), "not a FLAC payload")
-    def u24be(i: Int): Int = {
-      require(i + 3 <= bytes.length, s"FLAC read at $i out of bounds")
-      ((bytes(i) & 0xff) << 16) | ((bytes(i + 1) & 0xff) << 8) | (bytes(i + 2) & 0xff)
-    }
+    val in = ByteCursor(bytes)
     var i = 4
     var sampleRate = 0
     var channels = 0
@@ -972,7 +958,7 @@ object MediaCodecs {
       val hdr = bytes(i) & 0xff
       last = (hdr & 0x80) != 0
       val tpe = hdr & 0x7f
-      val len = u24be(i + 1)
+      val len = in.u24be(i + 1)
       val body = i + 4
       require(body + len <= bytes.length, s"FLAC block $tpe overruns payload")
       tpe match {
@@ -980,8 +966,7 @@ object MediaCodecs {
           require(len >= 34, "STREAMINFO too short")
           val at = body + 10 // skip block/frame size bounds
           // 64 bits: rate(20) | chan-1(3) | bps-1(5) | totalSamples(36)
-          var v = 0L
-          for (k <- 0 until 8) v = (v << 8) | (bytes(at + k) & 0xffL)
+          val v = in.u64be(at)
           sampleRate = (v >>> 44).toInt
           channels = ((v >>> 41) & 0x7).toInt + 1
           bps = ((v >>> 36) & 0x1f).toInt + 1
@@ -1007,14 +992,11 @@ object MediaCodecs {
     * sign AND containment are validated before use, or a negative value
     * would walk the cursor backward past every downstream bounds check. */
   private def readVorbisComments(bytes: Array[Byte], from: Int, until: Int): Map[String, String] = {
-    def u32le(i: Int): Int = {
-      require(i + 4 <= bytes.length, s"vorbis read at $i out of bounds")
-      i32(bytes, i)
-    }
+    val in = ByteCursor(bytes)
     var p = from
     def readLen(what: String): Int = {
       require(p + 4 <= until, s"vorbis $what length overruns block")
-      val v = u32le(p)
+      val v = in.i32le(p)
       require(v >= 0 && v <= until - (p + 4), s"vorbis $what length $v out of bounds")
       p += 4
       v
@@ -1024,7 +1006,7 @@ object MediaCodecs {
     val vendorLen = readLen("vendor")
     p += vendorLen
     require(p + 4 <= until, "vorbis comment count overruns block")
-    val n = u32le(p); p += 4
+    val n = in.i32le(p); p += 4
     require(n >= 0, s"negative vorbis comment count $n")
     var tags = Map.empty[String, String]
     var k = 0
@@ -1094,8 +1076,9 @@ object MediaCodecs {
     vorbisPacket(id, 1, "identification")
     require(id.length >= 30, "Vorbis identification header too short")
     val channels = id(11) & 0xff
-    val rate = i32(id, 12)
-    val brNominal = i32(id, 20)
+    val idFields = ByteCursor(id)
+    val rate = idFields.i32le(12)
+    val brNominal = idFields.i32le(20)
     require(channels > 0 && rate > 0, "bad Vorbis audio parameters")
     val comment = packets(1)
     vorbisPacket(comment, 3, "comment")
@@ -1120,9 +1103,7 @@ object MediaCodecs {
     def syncsafe(i: Int): Int =
       ((bytes(i) & 0x7f) << 21) | ((bytes(i + 1) & 0x7f) << 14) |
         ((bytes(i + 2) & 0x7f) << 7) | (bytes(i + 3) & 0x7f)
-    def u32be(i: Int): Long =
-      ((bytes(i) & 0xffL) << 24) | ((bytes(i + 1) & 0xffL) << 16) |
-        ((bytes(i + 2) & 0xffL) << 8) | (bytes(i + 3) & 0xffL)
+    val in = ByteCursor(bytes)
     val tagEnd = 10 + syncsafe(6)
     require(tagEnd <= bytes.length, "ID3v2 size field overruns payload")
     var tags = Map.empty[String, String]
@@ -1132,7 +1113,7 @@ object MediaCodecs {
       if (bytes(i) == 0) done = true // padding reached
       else {
         val id = new String(bytes, i, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-        val size = if (v24) syncsafe(i + 4).toLong else u32be(i + 4)
+        val size = if (v24) syncsafe(i + 4).toLong else in.u32be(i + 4)
         require(size >= 0 && i + 10 + size <= tagEnd, s"ID3 frame $id overruns tag")
         // TXXX has its own layout (description NUL value) — not a plain
         // text frame; multi-value v2.4 frames keep their interior NUL
@@ -1177,8 +1158,7 @@ object MediaCodecs {
   def isMp4(b: Array[Byte]): Boolean = {
     if (b.length < 12 || b(4) != 'f' || b(5) != 't' || b(6) != 'y' || b(7) != 'p')
       return false
-    val size = ((b(0) & 0xffL) << 24) | ((b(1) & 0xffL) << 16) |
-      ((b(2) & 0xffL) << 8) | (b(3) & 0xffL)
+    val size = ByteCursor(b).u32be(0)
     size >= 12 && size <= b.length
   }
 
@@ -1189,15 +1169,15 @@ object MediaCodecs {
     * METADATA only — sample decode would need the actual video codecs. */
   /** Shared ISO-BMFF box walk (parseMp4 AND parseHeif walk the same box
     * grammar): size + fourcc headers incl. 64-bit largesize and size-0
-    * to-enclosure-end, read with the bounds-checked [[BigEndian]]. */
-  private def bmffWalk(bytes: Array[Byte], from: Int, until: Int)
+    * to-enclosure-end. */
+  private def bmffWalk(in: ByteCursor, from: Int, until: Int)
                       (f: (String, Int, Int) => Unit): Unit = {
     var i = from
     while (i + 8 <= until) {
-      var size = BigEndian.u32(bytes, i)
-      val tpe = new String(bytes, i + 4, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
+      var size = in.u32be(i)
+      val tpe = in.string(i + 4, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
       var hdr = 8L
-      if (size == 1) { size = (BigEndian.u32(bytes, i + 8) << 32) | BigEndian.u32(bytes, i + 12); hdr = 16 }
+      if (size == 1) { size = in.u64be(i + 8); hdr = 16 }
       else if (size == 0) size = until - i // box extends to the enclosure end
       require(size >= hdr && i + size <= until, s"ISO-BMFF box $tpe overruns enclosure")
       f(tpe, (i + hdr).toInt, (i + size).toInt)
@@ -1207,10 +1187,9 @@ object MediaCodecs {
 
   def parseMp4(bytes: Array[Byte]): Mp4Meta = {
     require(isMp4(bytes), "not an ISO-BMFF payload")
-    def u32(i: Int): Long = BigEndian.u32(bytes, i)
-    def u64(i: Int): Long = (u32(i) << 32) | u32(i + 4)
+    val in = ByteCursor(bytes)
     def walk(from: Int, until: Int)(f: (String, Int, Int) => Unit): Unit =
-      bmffWalk(bytes, from, until)(f)
+      bmffWalk(in, from, until)(f)
     var timescale = 0L
     var duration = -1L
     var w = 0
@@ -1225,7 +1204,7 @@ object MediaCodecs {
         walk(is, ie) {
           case ("data", ds, de) =>
             require(de - ds >= 8, s"ilst data box for $item too short")
-            val typeIndicator = u32(ds) & 0xffffff
+            val typeIndicator = in.u24be(ds + 1)
             if (typeIndicator == 1) // UTF-8 text atom (trkn/disk are binary)
               tags += item -> new String(bytes, ds + 8, de - ds - 8,
                 java.nio.charset.StandardCharsets.UTF_8)
@@ -1240,8 +1219,8 @@ object MediaCodecs {
           // field reads must stay inside the DECLARED box, not just the
           // payload — a short box must fail, not read sibling bytes
           require(me - ms >= (if (ver == 1) 32 else 20), "mvhd box too short")
-          if (ver == 1) { timescale = u32(ms + 20); duration = u64(ms + 24) }
-          else { timescale = u32(ms + 12); duration = u32(ms + 16) }
+          if (ver == 1) { timescale = in.u32be(ms + 20); duration = in.u64be(ms + 24) }
+          else { timescale = in.u32be(ms + 12); duration = in.u32be(ms + 16) }
         case ("trak", ts, te) =>
           tracks += 1
           walk(ts, te) {
@@ -1252,8 +1231,8 @@ object MediaCodecs {
               // volume block (16), matrix (36), then 16.16 width/height
               val at = ks + 4 + (if (ver == 1) 32 else 20) + 16 + 36
               require(at + 8 <= ke, "tkhd box too short")
-              val tw = (u32(at) >>> 16).toInt
-              val th = (u32(at + 4) >>> 16).toInt
+              val tw = in.u16be(at)
+              val th = in.u16be(at + 4)
               if (w == 0 && tw > 0 && th > 0) { w = tw; h = th }
             case _ => ()
           }
@@ -1294,6 +1273,7 @@ object MediaCodecs {
   def parseHeif(bytes: Array[Byte]): HeifMeta = {
     require(isHeif(bytes), "not a HEIF/AVIF payload")
     val brand = new String(bytes, 8, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
+    val in = ByteCursor(bytes)
     var primary = -1L
     var items = 0
     // ipco children in declaration order; 1-based property indices.
@@ -1303,23 +1283,23 @@ object MediaCodecs {
     val propTypes = scala.collection.mutable.ArrayBuffer[String]()
     val ispeDims = scala.collection.mutable.HashMap[Int, (Int, Int)]()
     val assoc = scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[Int]]()
-    bmffWalk(bytes, 0, bytes.length) {
-      case ("meta", ms, me) => bmffWalk(bytes, ms + 4, me) { // meta is a FullBox
+    bmffWalk(in, 0, bytes.length) {
+      case ("meta", ms, me) => bmffWalk(in, ms + 4, me) { // meta is a FullBox
         case ("pitm", ps, pe) =>
           val ver = bytes(ps) & 0xff
           require(pe - ps >= (if (ver == 0) 6 else 8), "pitm box too short")
-          primary = if (ver == 0) BigEndian.u16(bytes, ps + 4) else BigEndian.u32(bytes, ps + 4)
+          primary = if (ver == 0) in.u16be(ps + 4) else in.u32be(ps + 4)
         case ("iinf", is, ie) =>
           val ver = bytes(is) & 0xff
           require(ie - is >= (if (ver == 0) 6 else 8), "iinf box too short")
-          items = (if (ver == 0) BigEndian.u16(bytes, is + 4) else BigEndian.u32(bytes, is + 4)).toInt
-        case ("iprp", is, ie) => bmffWalk(bytes, is, ie) {
-          case ("ipco", cs, ce) => bmffWalk(bytes, cs, ce) { (t, s2, e2) =>
+          items = (if (ver == 0) in.u16be(is + 4) else in.u32be(is + 4)).toInt
+        case ("iprp", is, ie) => bmffWalk(in, is, ie) {
+          case ("ipco", cs, ce) => bmffWalk(in, cs, ce) { (t, s2, e2) =>
             propTypes += t
             if (t == "ispe") {
               require(e2 - s2 >= 12, "ispe box too short")
-              val w = BigEndian.u32(bytes, s2 + 4)
-              val h = BigEndian.u32(bytes, s2 + 8)
+              val w = in.u32be(s2 + 4)
+              val h = in.u32be(s2 + 8)
               require(w > 0 && h > 0 && w <= 0x7fffffffL && h <= 0x7fffffffL,
                 s"bad ispe dimensions ${w}x$h")
               ispeDims(propTypes.length) = (w.toInt, h.toInt)
@@ -1329,27 +1309,24 @@ object MediaCodecs {
             require(ae - as0 >= 8, "ipma box too short")
             val ver = bytes(as0) & 0xff
             val wideIdx = (bytes(as0 + 3) & 0x01) != 0 // flags bit 0: 15-bit indices
-            val entries = BigEndian.u32(bytes, as0 + 4)
-            var p = as0 + 8
+            val entries = in.u32be(as0 + 4)
+            in.seek(as0 + 8)
             var e = 0L
             while (e < entries) {
               // every read bounded by the BOX end, not the payload end: a
               // lying entry_count must fail named, never read sibling-box
               // bytes as associations (and maybe a thumbnail's property)
               val idWidth = if (ver < 1) 2 else 4
-              require(p + idWidth + 1 <= ae, "ipma truncated (entry_count overruns box)")
-              val itemId = if (ver < 1) { val v = BigEndian.u16(bytes, p); p += 2; v.toLong }
-                           else { val v = BigEndian.u32(bytes, p); p += 4; v }
-              val n = bytes(p) & 0xff
-              p += 1
-              require(p + n * (if (wideIdx) 2 else 1) <= ae,
+              require(in.position + idWidth + 1 <= ae, "ipma truncated (entry_count overruns box)")
+              val itemId = if (ver < 1) in.u16be().toLong else in.u32be()
+              val n = in.u8()
+              require(in.position + n * (if (wideIdx) 2 else 1) <= ae,
                 "ipma truncated (associations overrun box)")
               val props = assoc.getOrElseUpdate(itemId,
                 scala.collection.mutable.ArrayBuffer[Int]())
               var a = 0
               while (a < n) {
-                val idx = if (wideIdx) { val v = BigEndian.u16(bytes, p) & 0x7fff; p += 2; v }
-                          else { val v = bytes(p) & 0x7f; p += 1; v }
+                val idx = if (wideIdx) in.u16be() & 0x7fff else in.u8() & 0x7f
                 props += idx
                 a += 1
               }
@@ -1388,10 +1365,11 @@ object MediaCodecs {
     var byteRate = 0
     var dataBytes = -1L
     var dataOffset = -1L
+    val in = ByteCursor(bytes)
     while (i + 8 <= bytes.length && (channels == 0 || dataBytes < 0)) {
       val at = i.toInt
       val id = new String(bytes, at, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      val size = i32(bytes, at + 4)
+      val size = in.i32le(at + 4)
       // a crafted/corrupt negative size would advance the cursor by <= 0 and
       // hang the executor task — fail contained instead (non-termination is
       // the one thing the per-row try/catch cannot contain)
@@ -1400,12 +1378,12 @@ object MediaCodecs {
         // gate on the chunk's OWN declared size too: a short fmt chunk must
         // not have its parameters read from the next chunk's header bytes
         require(size >= 16, s"WAV fmt chunk of $size bytes too short")
-        val audioFormat = u16(bytes, at + 8)
+        val audioFormat = in.u16le(at + 8)
         require(audioFormat == 1, s"unsupported WAV audio format $audioFormat (PCM only)")
-        channels = u16(bytes, at + 10)
-        rate = i32(bytes, at + 12)
-        byteRate = i32(bytes, at + 16)
-        bits = u16(bytes, at + 22)
+        channels = in.u16le(at + 10)
+        rate = in.i32le(at + 12)
+        byteRate = in.i32le(at + 16)
+        bits = in.u16le(at + 22)
       } else if (id == "data") {
         require(i + 8 + size.toLong <= bytes.length, "WAV data chunk overruns payload")
         dataBytes = size.toLong
@@ -1490,12 +1468,10 @@ object MediaCodecs {
   /** 80-bit IEEE 754 extended float → integer sample rate (the COMM chunk's
     * sampleRate field). Non-integer or out-of-range rates are named errors:
     * a deterministic engine has no business resampling to 44100.5 Hz. */
-  private def extendedToRate(b: Array[Byte], at: Int): Int = {
-    val se = ((b(at) & 0xff) << 8) | (b(at + 1) & 0xff)
+  private def extendedToRate(b: ByteCursor, at: Int): Int = {
+    val se = b.u16be(at)
     require((se & 0x8000) == 0, "negative AIFF sample rate")
-    var m = 0L
-    var i = 0
-    while (i < 8) { m = (m << 8) | (b(at + 2 + i) & 0xff); i += 1 }
+    val m = b.u64be(at + 2)
     val shift = 63 - (se - 16383)
     require(shift >= 0 && shift <= 63, s"AIFF sample-rate exponent $se out of range")
     val rate = m >>> shift
@@ -1534,24 +1510,22 @@ object MediaCodecs {
     var rate = 0
     var ssndAt = -1L
     var ssndBytes = -1L
+    val in = ByteCursor(bytes)
     while (i + 8 <= bytes.length) {
       val at = i.toInt
       val id = new String(bytes, at, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      val size = ((bytes(at + 4) & 0xff) << 24) | ((bytes(at + 5) & 0xff) << 16) |
-        ((bytes(at + 6) & 0xff) << 8) | (bytes(at + 7) & 0xff)
+      val size = in.i32be(at + 4)
       require(size >= 0, s"negative AIFF chunk size $size")
       if (id == "COMM") {
         require(size >= 18 && i + 8 + 18 <= bytes.length, "AIFF COMM chunk too short")
-        channels = ((bytes(at + 8) & 0xff) << 8) | (bytes(at + 9) & 0xff)
-        frames = ((bytes(at + 10) & 0xffL) << 24) | ((bytes(at + 11) & 0xffL) << 16) |
-          ((bytes(at + 12) & 0xffL) << 8) | (bytes(at + 13) & 0xffL)
-        bits = ((bytes(at + 14) & 0xff) << 8) | (bytes(at + 15) & 0xff)
-        rate = extendedToRate(bytes, at + 16)
+        channels = in.u16be(at + 8)
+        frames = in.u32be(at + 10)
+        bits = in.u16be(at + 14)
+        rate = extendedToRate(in, at + 16)
       } else if (id == "SSND") {
         require(size >= 8 && i + 8 + size.toLong <= bytes.length,
           "AIFF SSND chunk overruns payload")
-        val offset = ((bytes(at + 8) & 0xffL) << 24) | ((bytes(at + 9) & 0xffL) << 16) |
-          ((bytes(at + 10) & 0xffL) << 8) | (bytes(at + 11) & 0xffL)
+        val offset = in.u32be(at + 8)
         require(offset <= size - 8, "AIFF SSND offset overruns its chunk")
         ssndAt = i + 16 + offset
         ssndBytes = size - 8 - offset
@@ -1711,12 +1685,10 @@ object MediaCodecs {
   }
 
   def imageHeader(bytes: Array[Byte]): Option[HeaderMeta] = {
-    def u16be(i: Int) = BigEndian.u16(bytes, i)
-    def u32be(i: Int) = BigEndian.u32(bytes, i)
-    def u16le(i: Int) = (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
-    if (asciiAt(bytes, 0, "8BPS") && bytes.length >= 26 && u16be(4) == 1) {
+    val in = ByteCursor(bytes)
+    if (asciiAt(bytes, 0, "8BPS") && bytes.length >= 26 && in.u16be(4) == 1) {
       // PSD: height then width, u32be, at 14/18
-      val h = u32be(14); val w = u32be(18)
+      val h = in.u32be(14); val w = in.u32be(18)
       if (w > 0 && h > 0 && w <= 300000 && h <= 300000)
         Some(HeaderMeta("image/vnd.adobe.photoshop", w.toInt, h.toInt)) else None
     } else if (asciiAt(bytes, 0, "icns") && bytes.length >= 16) {
@@ -1726,7 +1698,7 @@ object MediaCodecs {
       var best = 0
       while (i + 8 <= bytes.length) {
         val tpe = new String(bytes, i, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-        val len = u32be(i + 4)
+        val len = in.u32be(i + 4)
         require(len >= 8 && i + len <= bytes.length, s"icns entry $tpe overruns payload")
         IcnsDims.get(tpe).foreach(d => best = math.max(best, d))
         i += len.toInt
@@ -1735,17 +1707,17 @@ object MediaCodecs {
     } else if (bytes.length >= 128 && (bytes(0) & 0xff) == 0x0a &&
                PcxVersions(bytes(1) & 0xff) && (bytes(2) & 0xff) == 1) {
       // PCX: RLE-encoded (encoding byte 1); window xmin/ymin/xmax/ymax u16le
-      val w = u16le(8) - u16le(4) + 1
-      val h = u16le(10) - u16le(6) + 1
+      val w = in.u16le(8) - in.u16le(4) + 1
+      val h = in.u16le(10) - in.u16le(6) + 1
       if (w > 0 && h > 0) Some(HeaderMeta("image/x-pcx", w, h)) else None
-    } else if (bytes.length >= 32 && u32be(0) == 12 && asciiAt(bytes, 4, "jP  ") &&
-               u32be(8) == 0x0d0a870aL) {
+    } else if (bytes.length >= 32 && in.u32be(0) == 12 && asciiAt(bytes, 4, "jP  ") &&
+               in.u32be(8) == 0x0d0a870aL) {
       // JP2: signature box, then the jp2h superbox's ihdr (height, width u32be)
       var dims: Option[HeaderMeta] = None
-      bmffWalk(bytes, 12, bytes.length) {
-        case ("jp2h", hs, he) => bmffWalk(bytes, hs, he) {
+      bmffWalk(in, 12, bytes.length) {
+        case ("jp2h", hs, he) => bmffWalk(in, hs, he) {
           case ("ihdr", is, ie) if ie - is >= 8 && dims.isEmpty =>
-            val h = u32be(is); val w = u32be(is + 4)
+            val h = in.u32be(is); val w = in.u32be(is + 4)
             if (w > 0 && h > 0 && w <= 300000 && h <= 300000)
               dims = Some(HeaderMeta("image/jp2", w.toInt, h.toInt))
           case _ => ()
@@ -1757,7 +1729,7 @@ object MediaCodecs {
                asciiAt(bytes, bytes.length - 18, "TRUEVISION-XFILE.")) {
       // TGA 2.0: no leading magic — the footer signature identifies it;
       // dims at 12/14 u16le in the 18-byte header
-      val w = u16le(12); val h = u16le(14)
+      val w = in.u16le(12); val h = in.u16le(14)
       if (w > 0 && h > 0) Some(HeaderMeta("image/x-tga", w, h)) else None
     } else if (asciiAt(bytes, 0, "%!PS")) {
       // EPS: %%BoundingBox: x0 y0 x1 y1 (points; the reference's Pillow
@@ -1841,9 +1813,10 @@ object MediaCodecs {
     var frames = 0
     var variant = ""
     var animated = false
+    val in = ByteCursor(bytes)
     while (i + 8 <= bytes.length) {
       val fourcc = new String(bytes, i, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-      val size = i32(bytes, i + 4)
+      val size = in.i32le(i + 4)
       require(size >= 0 && i + 8 + size.toLong <= bytes.length,
         s"WebP chunk $fourcc overruns payload")
       val d = i + 8
@@ -1851,22 +1824,20 @@ object MediaCodecs {
         case "VP8X" =>
           require(size >= 10, "VP8X chunk too short")
           animated = (bytes(d) & 0x02) != 0
-          width = ((bytes(d + 4) & 0xff) | ((bytes(d + 5) & 0xff) << 8) |
-            ((bytes(d + 6) & 0xff) << 16)) + 1
-          height = ((bytes(d + 7) & 0xff) | ((bytes(d + 8) & 0xff) << 8) |
-            ((bytes(d + 9) & 0xff) << 16)) + 1
+          width = in.u24le(d + 4) + 1
+          height = in.u24le(d + 7) + 1
           variant = "vp8x"
         case "VP8 " if variant.isEmpty =>
           require(size >= 10, "VP8 chunk too short")
           require((bytes(d + 3) & 0xff) == 0x9d && (bytes(d + 4) & 0xff) == 0x01 &&
             (bytes(d + 5) & 0xff) == 0x2a, "VP8 sync code missing")
-          width = u16(bytes, d + 6) & 0x3fff
-          height = u16(bytes, d + 8) & 0x3fff
+          width = in.u16le(d + 6) & 0x3fff
+          height = in.u16le(d + 8) & 0x3fff
           variant = "vp8"
         case "VP8L" if variant.isEmpty =>
           require(size >= 5, "VP8L chunk too short")
           require((bytes(d) & 0xff) == 0x2f, "VP8L signature missing")
-          val dims = i32(bytes, d + 1)
+          val dims = in.i32le(d + 1)
           width = (dims & 0x3fff) + 1
           height = ((dims >>> 14) & 0x3fff) + 1
           variant = "vp8l"
@@ -1890,11 +1861,12 @@ object MediaCodecs {
 
   def isIco(b: Array[Byte]): Boolean =
     b.length >= 6 && b(0) == 0 && b(1) == 0 && b(2) == 1 && b(3) == 0 &&
-      ((b(4) & 0xff) | ((b(5) & 0xff) << 8)) >= 1
+      ByteCursor(b).u16le(4) >= 1
 
   def parseIco(bytes: Array[Byte]): IcoMeta = {
     require(isIco(bytes), "not an ICO payload")
-    val count = u16(bytes, 4)
+    val in = ByteCursor(bytes)
+    val count = in.u16le(4)
     require(6 + count * 16 <= bytes.length, "ICONDIR overruns payload")
     var bestW = 0
     var bestH = 0
@@ -1905,8 +1877,8 @@ object MediaCodecs {
       val at = 6 + k * 16
       val w = { val v = bytes(at) & 0xff; if (v == 0) 256 else v }
       val h = { val v = bytes(at + 1) & 0xff; if (v == 0) 256 else v }
-      val sizeInRes = i32(bytes, at + 8)
-      val offset = i32(bytes, at + 12)
+      val sizeInRes = in.i32le(at + 8)
+      val offset = in.i32le(at + 12)
       require(sizeInRes >= 0 && offset >= 0 && offset.toLong + sizeInRes <= bytes.length,
         s"ICO entry $k image data overruns payload")
       if (w.toLong * h > bestW.toLong * bestH) {
@@ -1931,17 +1903,6 @@ object MediaCodecs {
   // (extension-routing territory, like TGA v1). Frame/entropy data is never
   // decoded here; CRCs are not verified.
   // ==========================================================================
-
-  // bounds-checked wrappers over the shared little-endian readers
-  // (graft.util.LittleEndian owns the decoding in one copy)
-  private def le32(b: Array[Byte], i: Int): Long = {
-    require(i >= 0 && i + 4 <= b.length, s"little-endian u32 read at $i out of bounds")
-    graft.util.LittleEndian.i32(b, i).toLong & 0xffffffffL
-  }
-  private def le64(b: Array[Byte], i: Int): Long = {
-    require(i >= 0 && i + 8 <= b.length, s"little-endian u64 read at $i out of bounds")
-    graft.util.LittleEndian.i64(b, i)
-  }
 
   /** End of data for the framed-audio header bit walks (AC-3/E-AC-3/DTS
     * pack fields at bit granularity). */
@@ -1971,11 +1932,12 @@ object MediaCodecs {
     * variants are named errors), sample rate, channels. */
   def parseAu(bytes: Array[Byte]): AuMeta = {
     require(isAu(bytes), "not a .au payload")
-    val off = BigEndian.u32(bytes, 4)
-    val size = BigEndian.u32(bytes, 8)
-    val enc = BigEndian.u32(bytes, 12).toInt
-    val rate = BigEndian.u32(bytes, 16).toInt
-    val ch = BigEndian.u32(bytes, 20).toInt
+    val in = ByteCursor(bytes)
+    val off = in.u32be(4)
+    val size = in.u32be(8)
+    val enc = in.i32be(12)
+    val rate = in.i32be(16)
+    val ch = in.i32be(20)
     require(off >= 24 && off <= bytes.length, s"AU data offset $off out of range")
     val data = if (size == 0xffffffffL) bytes.length - off else size
     require(data >= 0 && off + data <= bytes.length, "AU data size overruns payload")
@@ -2026,7 +1988,7 @@ object MediaCodecs {
 
   def isCaf(b: Array[Byte]): Boolean =
     b.length >= 8 && b(0) == 'c' && b(1) == 'a' && b(2) == 'f' && b(3) == 'f' &&
-      BigEndian.u16(b, 4) == 1 && BigEndian.u16(b, 6) == 0
+      ByteCursor(b).u32be(4) == 0x00010000L // u16 version 1, u16 flags 0
 
   /** CAF chunk walk: `desc` (f64be sample rate, 'lpcm' fourcc, format
     * flags — bit0 float, bit1 little-endian — and the packet/channel/bit
@@ -2038,28 +2000,29 @@ object MediaCodecs {
     var i = 8L
     var channels = 0; var rate = 0; var bits = 0; var little = false
     var dataOffset = -1L; var dataBytes = -1L
+    val in = ByteCursor(bytes)
     while (i + 12 <= bytes.length && (channels == 0 || dataBytes < 0)) {
       val at = i.toInt
       val tpe = new String(bytes, at, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-      val size = BigEndian.i64(bytes, at + 4)
+      val size = in.u64be(at + 4)
       require(size >= -1L, s"bad CAF chunk size $size")
       val bodyAt = i + 12
       if (tpe == "desc") {
         require(size >= 32 && bodyAt + 32 <= bytes.length, "CAF desc chunk truncated")
-        val rateBits = BigEndian.i64(bytes, at + 12)
+        val rateBits = in.u64be(at + 12)
         val rateD = java.lang.Double.longBitsToDouble(rateBits)
         require(rateD > 0 && rateD <= 768000 && rateD == math.rint(rateD),
           s"bad CAF sample rate $rateD")
         rate = rateD.toInt
         val fmt = new String(bytes, at + 20, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
         require(fmt == "lpcm", s"CAF format '$fmt' unsupported (lpcm only)")
-        val flags = BigEndian.u32(bytes, at + 24)
+        val flags = in.u32be(at + 24)
         require((flags & 1L) == 0, "CAF float LPCM unsupported")
         little = (flags & 2L) != 0
-        val bytesPerPacket = BigEndian.u32(bytes, at + 28)
-        val framesPerPacket = BigEndian.u32(bytes, at + 32)
-        channels = BigEndian.u32(bytes, at + 36).toInt
-        bits = BigEndian.u32(bytes, at + 40).toInt
+        val bytesPerPacket = in.u32be(at + 28)
+        val framesPerPacket = in.u32be(at + 32)
+        channels = in.i32be(at + 36)
+        bits = in.i32be(at + 40)
         require(channels >= 1 && channels <= 64, s"bad CAF channel count $channels")
         require(bits == 8 || bits == 16, s"CAF $bits-bit LPCM unsupported (8/16)")
         require(framesPerPacket == 1 && bytesPerPacket == channels.toLong * (bits / 8),
@@ -2104,11 +2067,12 @@ object MediaCodecs {
 
   def parseTta(bytes: Array[Byte]): AudioHeaderMeta = {
     require(isTta(bytes), "not a TTA1 payload")
-    val format = u16(bytes, 4)
+    val in = ByteCursor(bytes)
+    val format = in.u16le(4)
     require(format == 1, s"TTA format $format unsupported (integer PCM only)")
-    val channels = u16(bytes, 6)
-    val rate = le32(bytes, 10).toInt
-    val samples = le32(bytes, 14) // per channel
+    val channels = in.u16le(6)
+    val rate = in.i32le(10)
+    val samples = in.u32le(14) // per channel
     require(channels >= 1 && channels <= 64, s"bad TTA channel count $channels")
     require(rate > 0 && rate <= 768000, s"bad TTA sample rate $rate")
     AudioHeaderMeta("audio/x-tta", channels, rate, samples * 1000L / rate)
@@ -2120,17 +2084,18 @@ object MediaCodecs {
 
   def parseApe(bytes: Array[Byte]): AudioHeaderMeta = {
     require(isApe(bytes), "not an APE payload")
-    val version = u16(bytes, 4)
+    val in = ByteCursor(bytes)
+    val version = in.u16le(4)
     require(version >= 3980, s"APE version $version pre-3.98 layout unsupported")
-    val descriptorBytes = le32(bytes, 8)
+    val descriptorBytes = in.u32le(8)
     require(descriptorBytes >= 52 && descriptorBytes + 24 <= bytes.length,
       "APE descriptor overruns payload")
     val h = descriptorBytes.toInt
-    val blocksPerFrame = le32(bytes, h + 4)
-    val finalFrameBlocks = le32(bytes, h + 8)
-    val totalFrames = le32(bytes, h + 12)
-    val channels = u16(bytes, h + 18)
-    val rate = le32(bytes, h + 20).toInt
+    val blocksPerFrame = in.u32le(h + 4)
+    val finalFrameBlocks = in.u32le(h + 8)
+    val totalFrames = in.u32le(h + 12)
+    val channels = in.u16le(h + 18)
+    val rate = in.i32le(h + 20)
     require(channels >= 1 && channels <= 32, s"bad APE channel count $channels")
     require(rate > 0 && rate <= 768000, s"bad APE sample rate $rate")
     // bound the u32 fields BEFORE multiplying: hostile values near 2^32
@@ -2153,13 +2118,14 @@ object MediaCodecs {
 
   def parseWavpack(bytes: Array[Byte]): AudioHeaderMeta = {
     require(isWavpack(bytes), "not a WavPack payload")
-    val version = u16(bytes, 8)
+    val in = ByteCursor(bytes)
+    val version = in.u16le(8)
     require(version >= 0x402 && version <= 0x410,
       f"WavPack stream version 0x$version%x unsupported")
-    val totalSamples = le32(bytes, 12)
+    val totalSamples = in.u32le(12)
     require(totalSamples != 0xffffffffL,
       "WavPack total sample count unknown in this block")
-    val flags = le32(bytes, 24)
+    val flags = in.u32le(24)
     val rateIdx = ((flags >> 23) & 0xf).toInt
     require(rateIdx < 15, "WavPack custom sample rate unsupported")
     val rate = WavpackRates(rateIdx)
@@ -2524,7 +2490,8 @@ object MediaCodecs {
     * audio parameters. */
   def parseAsf(bytes: Array[Byte]): AudioHeaderMeta = {
     require(isAsf(bytes), "not an ASF payload")
-    val headerSize = le64(bytes, 16)
+    val in = ByteCursor(bytes)
+    val headerSize = in.u64le(16)
     require(headerSize >= 30 && headerSize <= bytes.length,
       "ASF header object overruns payload")
     var durationMs = 0L
@@ -2532,19 +2499,19 @@ object MediaCodecs {
     var i = 30L
     while (i + 24 <= headerSize) {
       val at = i.toInt
-      val size = le64(bytes, at + 16)
+      val size = in.u64le(at + 16)
       require(size >= 24 && i + size <= headerSize, s"ASF sub-object at $at overruns header")
       if (guidAt(bytes, at, AsfFilePropsGuid)) {
         require(size >= 96, "ASF File Properties object truncated")
-        val play100ns = le64(bytes, at + 64)
-        val prerollMs = le64(bytes, at + 80)
+        val play100ns = in.u64le(at + 64)
+        val prerollMs = in.u64le(at + 80)
         durationMs = play100ns / 10000L - prerollMs
         require(durationMs >= 0, "negative ASF play duration")
       } else if (guidAt(bytes, at, AsfStreamPropsGuid) && channels == 0 &&
                  guidAt(bytes, at + 24, AsfAudioMediaGuid)) {
         require(size >= 24 + 54 + 8, "ASF audio Stream Properties truncated")
-        channels = u16(bytes, at + 24 + 56)
-        rate = le32(bytes, at + 24 + 58).toInt
+        channels = in.u16le(at + 24 + 56)
+        rate = in.i32le(at + 24 + 58)
         require(channels >= 1 && channels <= 64 && rate > 0 && rate <= 768000,
           "bad ASF WAVEFORMATEX audio parameters")
       }
@@ -2604,8 +2571,8 @@ object MediaCodecs {
       v
     }
     def floatAt(i: Int, len: Int): Double = len match {
-      case 4 => java.lang.Float.intBitsToFloat(BigEndian.u32(bytes, i).toInt).toDouble
-      case 8 => java.lang.Double.longBitsToDouble(BigEndian.i64(bytes, i))
+      case 4 => java.lang.Float.intBitsToFloat(ByteCursor(bytes).i32be(i)).toDouble
+      case 8 => java.lang.Double.longBitsToDouble(ByteCursor(bytes).u64be(i))
       case n => throw new IllegalArgumentException(s"EBML float of width $n")
     }
     var docType = "matroska" // the EBML default when DocType is absent
@@ -2712,13 +2679,14 @@ object MediaCodecs {
 
   private def walkAvi(bytes: Array[Byte])(
       onChunk: (String, Int, Int) => Unit): Unit = {
+    val in = ByteCursor(bytes)
     def walk(start: Long, end: Long, depth: Int): Unit = {
       require(depth <= 4, "AVI LIST nesting too deep")
       var i = start
       while (i + 8 <= end) {
         val at = i.toInt
         val id = new String(bytes, at, 4, java.nio.charset.StandardCharsets.US_ASCII)
-        val size = i32(bytes, at + 4)
+        val size = in.i32le(at + 4)
         require(size >= 0, s"negative RIFF chunk size $size")
         require(i + 8 + size.toLong <= end, s"AVI chunk '$id' overruns container")
         if (id == "LIST") {
@@ -2732,7 +2700,7 @@ object MediaCodecs {
         i += 8L + size + (size & 1) // RIFF chunks are 2-byte aligned
       }
     }
-    val total = i32(bytes, 4)
+    val total = in.i32le(4)
     require(total >= 4 && 8L + total <= bytes.length, "RIFF size overruns payload")
     walk(12L, 8L + total, 0)
   }
@@ -2749,13 +2717,14 @@ object MediaCodecs {
     var height = 0
     var inVideoStream = false
     var videoFourcc: String = null
+    val in = ByteCursor(bytes)
     walkAvi(bytes) { (id, body, size) =>
       id match {
         case "avih" =>
           require(size >= 40, s"avih chunk of $size bytes is too small")
-          usecPerFrame = i32(bytes, body)
-          width = i32(bytes, body + 32)
-          height = i32(bytes, body + 36)
+          usecPerFrame = in.i32le(body)
+          width = in.i32le(body + 32)
+          height = in.i32le(body + 36)
           require(usecPerFrame > 0, s"bad AVI frame clock $usecPerFrame us")
           require(width > 0 && height > 0, s"bad AVI canvas ${width}x$height")
         case "strh" if size >= 8 =>
@@ -2826,12 +2795,13 @@ object MediaCodecs {
     * count at the stream's nominal clock (48 kHz for Opus, the audio rate
     * for Vorbis). 0 when no page carries a granule. */
   def lastOggGranule(bytes: Array[Byte]): Long = {
+    val in = ByteCursor(bytes)
     var i = 0
     var last = 0L
     while (i + 27 <= bytes.length) {
       require(bytes(i) == 'O' && bytes(i + 1) == 'g' && bytes(i + 2) == 'g' &&
         bytes(i + 3) == 'S', s"Ogg page capture pattern missing at $i")
-      val g = le64(bytes, i + 6)
+      val g = in.u64le(i + 6)
       if (g != -1L) last = g // keep the LAST granule (continuation pages carry -1)
       val nsegs = bytes(i + 26) & 0xff
       require(i + 27 + nsegs <= bytes.length, "Ogg segment table truncated")
@@ -2875,7 +2845,7 @@ object MediaCodecs {
       require((p1(8) & 0xf0) == 0, s"Opus version ${p1(8)} unsupported")
       val channels = p1(9) & 0xff
       require(channels >= 1, "bad Opus channel count")
-      val preSkip = (p1(10) & 0xff) | ((p1(11) & 0xff) << 8)
+      val preSkip = ByteCursor(p1).u16le(10)
       val granule = lastOggGranule(bytes)
       val samples = math.max(0L, granule - preSkip)
       AudioHeaderMeta("audio/opus", channels, 48000, samples * 1000L / 48000)

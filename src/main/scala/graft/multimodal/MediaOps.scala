@@ -124,10 +124,6 @@ object MediaOps {
 
   // ---- audio duration accounting (audio_converters.py:70-92) ---------------
 
-  /** volume/fade change loudness, not duration (audio_converters.py:70-78). */
-  def volumeChange(df: DataFrame, db: Double): DataFrame =
-    df.withColumn("volume_db", coalesce(col("volume_db"), lit(0.0)) + db)
-
   /** speedup divides duration (audio_converters.py:80-82). */
   def speedup(df: DataFrame, speed: Double): DataFrame = {
     require(speed > 0, s"speed $speed")

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import scala.collection.mutable
 
-import graft.util.MsbReader
+import graft.util.{ByteCursor, MsbReader}
 
 /** From-scratch MPEG-1/2 Layer III (mp3) sample decoder.
   *
@@ -54,10 +54,9 @@ object Mp3Codec {
 
   /** null when `off` holds no syncword / a reserved combination; throws the
     * named errors for recognized-but-unsupported streams. */
-  private def parseHeader(b: Array[Byte], off: Int): Hdr = {
+  private def parseHeader(b: ByteCursor, off: Int): Hdr = {
     if (off + 4 > b.length) return null
-    val h = ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
+    val h = b.i32be(off)
     if (((h >>> 21) & 0x7ff) != 0x7ff) return null
     val ver = (h >>> 19) & 3
     val layer = (h >>> 17) & 3
@@ -667,9 +666,10 @@ object Mp3Codec {
   /** true when the payload walks as a Layer III MPEG-1/2 stream. */
   def isMp3(bytes: Array[Byte]): Boolean = {
     var pos = skipId3(bytes)
+    val in = ByteCursor(bytes)
     try {
-      while (pos + 4 <= bytes.length && parseHeader(bytes, pos) == null) pos += 1
-      val hd = parseHeader(bytes, pos)
+      while (pos + 4 <= bytes.length && parseHeader(in, pos) == null) pos += 1
+      val hd = parseHeader(in, pos)
       hd != null && pos + hd.frameLen <= bytes.length
     } catch { case _: IllegalArgumentException => false }
   }
@@ -696,9 +696,10 @@ object Mp3Codec {
     val prevSf = Array.fill(2)(new Array[Int](22))
     var frames = 0
     var done = false
+    val in = ByteCursor(data)
     while (!done) {
-      while (pos + 4 <= data.length && parseHeader(data, pos) == null) pos += 1
-      val hd = parseHeader(data, pos)
+      while (pos + 4 <= data.length && parseHeader(in, pos) == null) pos += 1
+      val hd = parseHeader(in, pos)
       if (hd == null || pos + hd.frameLen > data.length) done = true
       else {
         if (sr < 0) { sr = hd.sampleRate; nch = hd.channels }

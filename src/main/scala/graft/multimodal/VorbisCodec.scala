@@ -2,7 +2,7 @@ package graft.multimodal
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import graft.util.{Crc, LittleEndian, LsbReader}
+import graft.util.{ByteCursor, Crc, LsbReader}
 
 /** Pure-JVM Ogg Vorbis DECODER (Vorbis I + RFC 3533 Ogg framing).
   *
@@ -164,6 +164,7 @@ object VorbisCodec {
     var pendingOpen = false
     var expectPage = 0
     var sawEos = false
+    val ogg = ByteCursor(data)
     while (pos < data.length) {
       need(pos + 27 <= data.length, "ogg: truncated page header")
       need(data(pos) == 'O' && data(pos + 1) == 'g' &&
@@ -171,10 +172,10 @@ object VorbisCodec {
         "ogg: capture pattern missing")
       need(data(pos + 4) == 0, "ogg: stream structure version != 0")
       val htype = data(pos + 5) & 0xFF
-      val granule = LittleEndian.i64(data, pos + 6)
-      val ser = LittleEndian.i32(data, pos + 14)
-      val seq = LittleEndian.i32(data, pos + 18)
-      val crc = LittleEndian.i32(data, pos + 22)
+      val granule = ogg.u64le(pos + 6)
+      val ser = ogg.i32le(pos + 14)
+      val seq = ogg.i32le(pos + 18)
+      val crc = ogg.i32le(pos + 22)
       val nsegs = data(pos + 26) & 0xFF
       need(pos + 27 + nsegs <= data.length, "ogg: segment table truncated")
       var bodyLen = 0

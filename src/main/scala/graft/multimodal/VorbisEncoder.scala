@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.util.{Crc, LsbWriter}
+import graft.util.{ByteSink, Crc, LsbWriter}
 
 import VorbisCodec.{Codebook, Floor1, Tables, assignCodewords, dct4,
   highNeighbor, ilog, lookup1Values, lowNeighbor, packetBits, renderPoint}
@@ -447,13 +447,6 @@ object VorbisEncoder {
   }
 
   // -------------------------------------------------------------- ogg --
-  private def le32At(b: Array[Byte], at: Int, v: Int): Unit = {
-    b(at) = (v & 0xFF).toByte
-    b(at + 1) = ((v >>> 8) & 0xFF).toByte
-    b(at + 2) = ((v >>> 16) & 0xFF).toByte
-    b(at + 3) = ((v >>> 24) & 0xFF).toByte
-  }
-
   /** One Ogg page (RFC 3533): `chunks` are the packet byte-chunks on
     * this page; `lastComplete` false means the final chunk continues
     * on the next page (all its lacing values 255). */
@@ -475,23 +468,20 @@ object VorbisEncoder {
     require(lace.length <= 255, "too many lacing values for one page")
     var bodyLen = 0
     chunks.foreach(c => bodyLen += c.length)
-    val page = new Array[Byte](27 + lace.length + bodyLen)
-    page(0) = 'O'; page(1) = 'g'; page(2) = 'g'; page(3) = 'S'
-    page(4) = 0
-    page(5) = flags.toByte
-    var g = granule
-    var i = 0
-    while (i < 8) { page(6 + i) = (g & 0xFF).toByte; g >>= 8; i += 1 }
-    le32At(page, 14, SERIAL)
-    le32At(page, 18, seq)
-    // crc at 22 stays zero for the computation
-    page(26) = lace.length.toByte
-    System.arraycopy(lace, 0, page, 27, lace.length)
-    var off = 27 + lace.length
-    chunks.foreach { c =>
-      System.arraycopy(c, 0, page, off, c.length); off += c.length
-    }
-    le32At(page, 22, Crc.ogg(page, 0, page.length))
+    val out = new ByteSink(27 + lace.length + bodyLen)
+    out.write('O'); out.write('g'); out.write('g'); out.write('S')
+    out.write(0)
+    out.write(flags)
+    out.u32le(granule); out.u32le(granule >>> 32)
+    out.u32le(SERIAL)
+    out.u32le(seq)
+    out.u32le(0) // crc: zero for the computation, set below
+    out.write(lace.length)
+    out.write(lace, 0, lace.length)
+    chunks.foreach(c => out.write(c, 0, c.length))
+    val page = out.toByteArray
+    java.nio.ByteBuffer.wrap(page).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(22, Crc.ogg(page, 0, page.length))
     page
   }
 

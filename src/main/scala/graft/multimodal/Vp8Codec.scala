@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.multimodal.MediaCodecs.PixelBuf
+import graft.util.ByteCursor
 
 /** VP8 key-frame decoder (RFC 6386) — the LOSSY half of WebP, the shape
   * the reference's Pillow whitelist decodes
@@ -108,16 +109,16 @@ private[graft] object Vp8Codec {
   /** Decode the VP8 chunk payload at bytes[off, off+len). */
   def decode(bytes: Array[Byte], off: Int, len: Int): Frame = {
     require(len >= 10, "VP8 chunk too short for frame header")
-    val tag = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-      ((bytes(off + 2) & 0xff) << 16)
+    val in = ByteCursor(bytes)
+    val tag = in.u24le(off)
     require((tag & 1) == 0,
       "VP8 inter frame — still-image decoder handles key frames only")
     require(((tag >> 1) & 7) <= 3, s"unknown VP8 profile ${(tag >> 1) & 7}")
     val firstPartSize = tag >>> 5
     require((bytes(off + 3) & 0xff) == 0x9d && (bytes(off + 4) & 0xff) == 0x01 &&
       (bytes(off + 5) & 0xff) == 0x2a, "VP8 key-frame sync code missing")
-    val width = ((bytes(off + 6) & 0xff) | ((bytes(off + 7) & 0xff) << 8)) & 0x3fff
-    val height = ((bytes(off + 8) & 0xff) | ((bytes(off + 9) & 0xff) << 8)) & 0x3fff
+    val width = in.u16le(off + 6) & 0x3fff
+    val height = in.u16le(off + 8) & 0x3fff
     require(width > 0 && height > 0, "VP8 frame has zero dimension")
     val dataOff = off + 10
     require(firstPartSize > 0 && dataOff + firstPartSize.toLong <= off + len,
@@ -185,10 +186,7 @@ private[graft] object Vp8Codec {
       val pEnd =
         if (pi == nParts - 1) off + len
         else {
-          val s = (bytes(sizesAt + 3 * pi) & 0xff) |
-            ((bytes(sizesAt + 3 * pi + 1) & 0xff) << 8) |
-            ((bytes(sizesAt + 3 * pi + 2) & 0xff) << 16)
-          pCur + s
+          pCur + in.u24le(sizesAt + 3 * pi)
         }
       require(pCur <= pEnd && pEnd <= off + len, s"VP8 token partition $pi overruns chunk")
       partBd(pi) = new BoolDecoder(bytes, pCur, pEnd)

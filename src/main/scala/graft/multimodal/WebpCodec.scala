@@ -3,7 +3,7 @@ package graft.multimodal
 import java.io.ByteArrayOutputStream
 
 import graft.multimodal.MediaCodecs.{ImageMeta, PixelBuf}
-import graft.util.{BitReader, LsbReader, LsbWriter}
+import graft.util.{BitReader, ByteCursor, ByteSink, LsbReader, LsbWriter}
 
 /** WebP VP8L (lossless) codec — the `.webp` arm of the reference's image
   * output whitelist (/root/reference/src/converters/image_converters.py:50-52
@@ -228,16 +228,12 @@ object WebpCodec {
       i += 1
     }
     val payload = w.toBytes
-    val out = new ByteArrayOutputStream(payload.length + 20)
-    def u32le(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-      out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
-    }
+    val out = new ByteSink(payload.length + 20)
     out.write("RIFF".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    u32le(4 + 8 + payload.length + (payload.length & 1))
+    out.u32le(4 + 8 + payload.length + (payload.length & 1))
     out.write("WEBP".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
     out.write("VP8L".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    u32le(payload.length)
+    out.u32le(payload.length)
     out.write(payload, 0, payload.length)
     if ((payload.length & 1) == 1) out.write(0) // RIFF 2-byte alignment
     out.toByteArray
@@ -703,9 +699,10 @@ object WebpCodec {
     var vp8Size = -1
     var alphAt = -1
     var alphEnd = -1
+    val riff = ByteCursor(bytes)
     while (i + 8 <= bytes.length) {
       val fourcc = new String(bytes, i.toInt, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-      val size = graft.util.LittleEndian.i32(bytes, i.toInt + 4)
+      val size = riff.i32le(i.toInt + 4)
       require(size >= 0 && i + 8 + size.toLong <= bytes.length,
         s"RIFF chunk $fourcc overruns payload")
       fourcc match {
@@ -869,10 +866,9 @@ object WebpCodec {
   def decodeAnimation(bytes: Array[Byte], sink: PixelBuf): ImageMeta = {
     require(isAnimation(bytes), "not an animated WebP payload")
     require(bytes.length >= 30, "VP8X chunk truncated")
-    def u24(p: Int): Int =
-      (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8) | ((bytes(p + 2) & 0xff) << 16)
-    val cw = u24(24) + 1
-    val ch = u24(27) + 1
+    val riff = ByteCursor(bytes)
+    val cw = riff.u24le(24) + 1
+    val ch = riff.u24le(27) + 1
     if (sink != null) sink.init("RGBA", cw, ch)
     else MediaCodecs.PixelBuf.checkCap("RGBA", cw, ch)
     val canvas = new Array[Byte](cw * ch * 4)
@@ -885,16 +881,16 @@ object WebpCodec {
     var i = 12L
     while (i + 8 <= bytes.length) {
       val fourcc = new String(bytes, i.toInt, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-      val size = graft.util.LittleEndian.i32(bytes, i.toInt + 4)
+      val size = riff.i32le(i.toInt + 4)
       require(size >= 0 && i + 8 + size.toLong <= bytes.length,
         s"RIFF chunk $fourcc overruns payload")
       if (fourcc == "ANMF") {
         require(size >= 16, "ANMF chunk shorter than its 16-byte frame header")
         val p = i.toInt + 8
-        val fx = u24(p) * 2
-        val fy = u24(p + 3) * 2
-        val fw = u24(p + 6) + 1
-        val fh = u24(p + 9) + 1
+        val fx = riff.u24le(p) * 2
+        val fy = riff.u24le(p + 3) * 2
+        val fw = riff.u24le(p + 6) + 1
+        val fh = riff.u24le(p + 9) + 1
         val flags = bytes(p + 15) & 0xff
         require(fx.toLong + fw <= cw && fy.toLong + fh <= ch,
           s"ANMF frame ${fw}x$fh at ($fx,$fy) exceeds the ${cw}x$ch canvas")
@@ -914,7 +910,7 @@ object WebpCodec {
         val end = p.toLong + size
         while (j + 8 <= end) {
           val fc = new String(bytes, j.toInt, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-          val sz = graft.util.LittleEndian.i32(bytes, j.toInt + 4)
+          val sz = riff.i32le(j.toInt + 4)
           require(sz >= 0 && j + 8 + sz.toLong <= end,
             s"ANMF sub-chunk $fc overruns its frame")
           fc match {
@@ -1008,12 +1004,11 @@ object WebpCodec {
     * degrade to an error row. Malformed/truncated headers return true so
     * [[decode]] names the actual parse error. */
   def rasterWithinCap(bytes: Array[Byte]): Boolean = {
+    val riff = ByteCursor(bytes)
     if (isAnimation(bytes)) {
       if (bytes.length < 30) return true // truncated — let decode name it
-      val cw = ((bytes(24) & 0xff) | ((bytes(25) & 0xff) << 8) |
-        ((bytes(26) & 0xff) << 16)) + 1
-      val ch = ((bytes(27) & 0xff) | ((bytes(28) & 0xff) << 8) |
-        ((bytes(29) & 0xff) << 16)) + 1
+      val cw = riff.u24le(24) + 1
+      val ch = riff.u24le(27) + 1
       if (!MediaCodecs.PixelBuf.fitsCap("RGBA", cw, ch)) return false
       // cumulative frame-pixel gate (the 16M cap decodeAnimation enforces),
       // read from the ANMF headers only — a LEGAL long animation should
@@ -1021,16 +1016,14 @@ object WebpCodec {
       var px = 0L
       var i = 12L
       while (i + 8 <= bytes.length) {
-        val size = graft.util.LittleEndian.i32(bytes, i.toInt + 4)
+        val size = riff.i32le(i.toInt + 4)
         if (size < 0 || i + 8 + size.toLong > bytes.length)
           return true // malformed — let decode name it
         if (bytes(i.toInt) == 'A' && bytes(i.toInt + 1) == 'N' &&
           bytes(i.toInt + 2) == 'M' && bytes(i.toInt + 3) == 'F' && size >= 16) {
           val p = i.toInt + 8
-          val fw = ((bytes(p + 6) & 0xff) | ((bytes(p + 7) & 0xff) << 8) |
-            ((bytes(p + 8) & 0xff) << 16)) + 1
-          val fh = ((bytes(p + 9) & 0xff) | ((bytes(p + 10) & 0xff) << 8) |
-            ((bytes(p + 11) & 0xff) << 16)) + 1
+          val fw = riff.u24le(p + 6) + 1
+          val fh = riff.u24le(p + 9) + 1
           // mirror decodeAnimation's cap exactly (frame + canvas pixels
           // per frame): legal-but-over files keep the header path
           px += fw.toLong * fh + cw.toLong * ch
@@ -1043,27 +1036,25 @@ object WebpCodec {
     if (isExtendedStill(bytes)) {
       // VP8X canvas dims: 24-bit LE minus-one fields after flags+reserved
       if (bytes.length < 30) return true // truncated — let decode name it
-      val w = ((bytes(24) & 0xff) | ((bytes(25) & 0xff) << 8) |
-        ((bytes(26) & 0xff) << 16)) + 1
-      val h = ((bytes(27) & 0xff) | ((bytes(28) & 0xff) << 8) |
-        ((bytes(29) & 0xff) << 16)) + 1
+      val w = riff.u24le(24) + 1
+      val h = riff.u24le(27) + 1
       return MediaCodecs.PixelBuf.fitsCap("RGBA", (w + 15) & ~15, (h + 15) & ~15)
     }
     if (isSimpleLossy(bytes)) {
       // VP8 key frame: dims live in the 10-byte uncompressed frame header;
       // the gate decode applies is on the PADDED MB grid (16-px multiples)
       if (bytes.length < 30) return true // truncated — let decode name it
-      val size = graft.util.LittleEndian.i32(bytes, 16)
+      val size = riff.i32le(16)
       if (size < 10) return true // malformed — let decode name it
-      val w = ((bytes(26) & 0xff) | ((bytes(27) & 0xff) << 8)) & 0x3fff
-      val h = ((bytes(28) & 0xff) | ((bytes(29) & 0xff) << 8)) & 0x3fff
+      val w = riff.u16le(26) & 0x3fff
+      val h = riff.u16le(28) & 0x3fff
       if (w == 0 || h == 0) return true // malformed — let decode name it
       return MediaCodecs.PixelBuf.fitsCap("RGB", (w + 15) & ~15, (h + 15) & ~15)
     }
     if (bytes.length < 25) return true // truncated — let decode name it
     // honor the declared VP8L chunk size: a short chunk must not have its
     // dims read from whatever bytes follow it
-    val size = graft.util.LittleEndian.i32(bytes, 16)
+    val size = riff.i32le(16)
     if (size < 5) return true // malformed — let decode name it
     val in = new LsbReader(bytes, 20, 25, truncated) // VP8L chunk data starts at 20
     if (in.read(8) != 0x2f) return true

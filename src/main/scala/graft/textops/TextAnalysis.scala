@@ -44,19 +44,6 @@ object TextAnalysis {
       array_max(transform(tokens(t), w => length(w))).cast("int").as("max_word_len"))
   }
 
-  /** Quality score in [0,1] as a double (for filtering, not oracle-compared):
-    * penalizes extreme mean word length and very short docs, rewards
-    * a natural stopword ratio. */
-  def qualityScore(text: Column): Column = {
-    val n = tokenCount(text).cast("double")
-    val meanLen = (length(text) - (n - 1)) / greatest(n, lit(1.0))
-    val stopRatio = stopwordCount(text).cast("double") / greatest(n, lit(1.0))
-    val lenOk = when(n >= 20 && n <= 100000, lit(1.0)).otherwise(lit(0.5))
-    val wordOk = when(meanLen >= 2.5 && meanLen <= 12.0, lit(1.0)).otherwise(lit(0.4))
-    val stopOk = when(stopRatio >= 0.05 && stopRatio <= 0.7, lit(1.0)).otherwise(lit(0.6))
-    lenOk * wordOk * stopOk
-  }
-
   /** Deterministic 64-bit document fingerprint as a hex string: first 16 hex
     * chars of md5 — content-addressed identity for exact dedup and lineage
     * (reference analog: md5 file hash,

@@ -27,8 +27,10 @@ import scala.jdk.CollectionConverters._
   *  - of duplicate names, the first entry wins;
   *  - an indexed size is trusted only up to [[Inflate]]'s ratio bound, and
   *    the inflated size and CRC-32 must match the index. */
-final class ZipReader private (bytes: Array[Byte], byName: ZipReader.Index) {
+final class ZipReader private (c: ByteCursor, byName: ZipReader.Index) {
   import ZipReader._
+
+  private val bytes = c.array
 
   private var total = 0L
 
@@ -48,18 +50,18 @@ final class ZipReader private (bytes: Array[Byte], byName: ZipReader.Index) {
 
   private def load(e: Entry): Array[Byte] = {
     val at = e.offset
-    require(at >= 0 && at <= bytes.length - 30L && i32(bytes, at.toInt) == Loc,
+    require(at >= 0 && at <= bytes.length - 30L && c.i32le(at.toInt) == Loc,
       s"${e.name}: no local header at offset $at")
     val p = at.toInt
-    val method = u16(bytes, p + 8)
+    val method = c.u16le(p + 8)
     require(method == e.method,
       s"${e.name}: local header method $method disagrees with the central directory's ${e.method}")
-    val nameLen = u16(bytes, p + 26)
-    val extraLen = u16(bytes, p + 28)
+    val nameLen = c.u16le(p + 26)
+    val extraLen = c.u16le(p + 28)
     val data = p + 30L + nameLen + extraLen
-    if ((u16(bytes, p + 6) & 8) == 0) {
-      val (size, csize, _) = zip64(bytes, p + 30 + nameLen, extraLen,
-        u32(bytes, p + 22), u32(bytes, p + 18), 0L)
+    if ((c.u16le(p + 6) & 8) == 0) {
+      val (size, csize, _) = zip64(c, p + 30 + nameLen, extraLen,
+        c.u32le(p + 22), c.u32le(p + 18), 0L)
       require(size == e.size && csize == e.csize,
         s"${e.name}: local header sizes $csize/$size disagree with the central directory's ${e.csize}/${e.size}")
     }
@@ -102,42 +104,30 @@ object ZipReader {
     * duplicate names. */
   private type Index = java.util.LinkedHashMap[String, Entry]
 
-  def apply(bytes: Array[Byte]): ZipReader =
-    new ZipReader(bytes, centralDirectory(bytes).getOrElse(localScan(bytes)))
-
-  private def u16(b: Array[Byte], i: Int): Int = {
-    require(i >= 0 && i <= b.length - 2, s"zip field at $i out of bounds")
-    LittleEndian.u16(b, i)
+  def apply(bytes: Array[Byte]): ZipReader = {
+    val c = ByteCursor(bytes)
+    new ZipReader(c, centralDirectory(c).getOrElse(localScan(c)))
   }
-
-  private def u32(b: Array[Byte], i: Int): Long = {
-    require(i >= 0 && i <= b.length - 4, s"zip field at $i out of bounds")
-    LittleEndian.i32(b, i) & 0xffffffffL
-  }
-
-  private def i32(b: Array[Byte], i: Int): Int = u32(b, i).toInt
-
-  private def i64(b: Array[Byte], i: Int): Long = u32(b, i) | (u32(b, i + 4) << 32)
 
   /** (size, compressed size, offset) with each saturated 32-bit field
     * replaced, in that order, from the ZIP64 extra field in
     * `b[extra, extra + len)`; a saturated field with no value there is a
     * named error. */
-  private def zip64(b: Array[Byte], extra: Int, len: Int,
+  private def zip64(b: ByteCursor, extra: Int, len: Int,
                     size: Long, csize: Long, offset: Long): (Long, Long, Long) = {
     val sat = 0xffffffffL
     if (size != sat && csize != sat && offset != sat) return (size, csize, offset)
-    var p = extra
-    val end = extra + len
-    while (p <= end - 4 && u16(b, p) != 1) p += 4 + u16(b, p + 2)
-    require(p <= end - 4, "zip64 sizes without a zip64 extra field")
+    val x = b.slice(extra, len)
+    var p = 0
+    while (p <= len - 4 && x.u16le(p) != 1) p += 4 + x.u16le(p + 2)
+    require(p <= len - 4, "zip64 sizes without a zip64 extra field")
     var at = p + 4
-    val fieldEnd = math.min(end, at + u16(b, p + 2))
+    val fieldEnd = math.min(len, at + x.u16le(p + 2))
     def next(v: Long): Long =
       if (v != sat) v
       else {
         require(at + 8 <= fieldEnd, "zip64 extra field too short")
-        val r = i64(b, at)
+        val r = x.u64le(at)
         at += 8
         r
       }
@@ -148,36 +138,36 @@ object ZipReader {
 
   /** The index from the end-of-central-directory record, or None when
     * there is none or the directory it points at does not parse. */
-  private def centralDirectory(b: Array[Byte]): Option[Index] = {
+  private def centralDirectory(b: ByteCursor): Option[Index] = {
     val n = b.length
     var eocd = n - 22
     val stop = math.max(0, n - 22 - 0xffff)
-    while (eocd >= stop && LittleEndian.i32(b, eocd) != End) eocd -= 1
+    while (eocd >= stop && b.i32le(eocd) != End) eocd -= 1
     if (eocd < stop) return None
     try {
-      var cdOffset = u32(b, eocd + 16)
-      var cdSize = u32(b, eocd + 12)
+      var cdOffset = b.u32le(eocd + 16)
+      var cdSize = b.u32le(eocd + 12)
       if (cdOffset == 0xffffffffL || cdSize == 0xffffffffL) {
-        require(eocd >= 20 && i32(b, eocd - 20) == End64Locator, "zip64 end locator missing")
-        val rec = i64(b, eocd - 12)
-        require(rec <= eocd - 56 && i32(b, rec.toInt) == End64, "zip64 end record missing")
-        cdSize = i64(b, rec.toInt + 40)
-        cdOffset = i64(b, rec.toInt + 48)
+        require(eocd >= 20 && b.i32le(eocd - 20) == End64Locator, "zip64 end locator missing")
+        val rec = b.u64le(eocd - 12)
+        require(rec <= eocd - 56 && b.i32le(rec.toInt) == End64, "zip64 end record missing")
+        cdSize = b.u64le(rec.toInt + 40)
+        cdOffset = b.u64le(rec.toInt + 48)
       }
       require(cdOffset >= 0 && cdSize >= 0 && cdOffset + cdSize <= eocd, "central directory past its end record")
       val end = (cdOffset + cdSize).toInt
       val out = new Index()
       var p = cdOffset.toInt
       while (p < end) {
-        require(p <= end - 46 && i32(b, p) == Cen, s"bad central header at $p")
-        val nameLen = u16(b, p + 28)
-        val extraLen = u16(b, p + 30)
+        require(p <= end - 46 && b.i32le(p) == Cen, s"bad central header at $p")
+        val nameLen = b.u16le(p + 28)
+        val extraLen = b.u16le(p + 30)
         require(p + 46L + nameLen + extraLen <= end, s"central header at $p runs past the directory")
-        val name = new String(b, p + 46, nameLen, UTF_8)
+        val name = b.string(p + 46, nameLen, UTF_8)
         val (size, csize, offset) = zip64(b, p + 46 + nameLen, extraLen,
-          u32(b, p + 24), u32(b, p + 20), u32(b, p + 42))
-        out.putIfAbsent(name, new Entry(name, u16(b, p + 10), u32(b, p + 16), csize, size, offset))
-        p += 46 + nameLen + extraLen + u16(b, p + 32)
+          b.u32le(p + 24), b.u32le(p + 20), b.u32le(p + 42))
+        out.putIfAbsent(name, new Entry(name, b.u16le(p + 10), b.u32le(p + 16), csize, size, offset))
+        p += 46 + nameLen + extraLen + b.u16le(p + 32)
       }
       Some(out)
     } catch { case _: IllegalArgumentException => None }
@@ -188,29 +178,29 @@ object ZipReader {
     * ends at the first signed data descriptor whose compressed size equals
     * its distance from the data; with none, the entry is indexed with an
     * unknown size and the walk ends. */
-  private def localScan(b: Array[Byte]): Index = {
+  private def localScan(b: ByteCursor): Index = {
     val out = new Index()
     var p = 0
     try {
-      while (p <= b.length - 30 && i32(b, p) == Loc) {
-        val flags = u16(b, p + 6)
-        val method = u16(b, p + 8)
-        val nameLen = u16(b, p + 26)
-        val extraLen = u16(b, p + 28)
+      while (p <= b.length - 30 && b.i32le(p) == Loc) {
+        val flags = b.u16le(p + 6)
+        val method = b.u16le(p + 8)
+        val nameLen = b.u16le(p + 26)
+        val extraLen = b.u16le(p + 28)
         val data = p + 30 + nameLen + extraLen
         require(data <= b.length, "local header cut short")
-        val name = new String(b, p + 30, nameLen, UTF_8)
+        val name = b.string(p + 30, nameLen, UTF_8)
         val (e, next) =
           if ((flags & 8) == 0) {
             val (size, csize, _) = zip64(b, p + 30 + nameLen, extraLen,
-              u32(b, p + 22), u32(b, p + 18), 0L)
-            (new Entry(name, method, u32(b, p + 14), csize, size, p), data + csize)
+              b.u32le(p + 22), b.u32le(p + 18), 0L)
+            (new Entry(name, method, b.u32le(p + 14), csize, size, p), data + csize)
           } else {
             var d = data
             while (d <= b.length - 16 &&
-                   (LittleEndian.i32(b, d) != Descriptor || u32(b, d + 8) != d - data)) d += 1
+                   (b.i32le(d) != Descriptor || b.u32le(d + 8) != d - data)) d += 1
             if (d <= b.length - 16)
-              (new Entry(name, method, u32(b, d + 4), d - data, u32(b, d + 12), p), d + 16L)
+              (new Entry(name, method, b.u32le(d + 4), d - data, b.u32le(d + 12), p), d + 16L)
             else (new Entry(name, method, 0L, b.length - data, -1L, p), -1L)
           }
         out.putIfAbsent(name, e)

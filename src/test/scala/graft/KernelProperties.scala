@@ -2,8 +2,9 @@ package graft
 
 import java.nio.charset.StandardCharsets
 
-import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.Prop.{forAll, forAllNoShrink}
+import org.scalacheck.rng.Seed
 
 import graft.dedup.Dedup
 import graft.extract.Extractor
@@ -28,6 +29,43 @@ object KernelProperties extends Properties("kernels") {
   private val text: Gen[String] =
     Gen.chooseNum(1, 150).flatMap(n => Gen.listOfN(n, word).map(_.mkString(" ")))
   private val docId: Gen[Long] = Gen.chooseNum(0L, 1000000L)
+
+  /** What a hostile payload must never surface as: a raw index (array,
+    * string or collection), a negative size, or a memory blow-up. */
+  private val forbidden = Seq("IndexOutOfBounds", "NegativeArraySize", "OutOfMemory")
+  private def named(error: String): Boolean = !forbidden.exists(error.contains)
+
+  /** A value for an overwritten length, offset or sector-id field: the
+    * CFB special sector ids (-4 to -1), small ids and lengths, large and
+    * arbitrary ones. */
+  private val fieldValue: Gen[Int] = Gen.oneOf(Gen.chooseNum(-4, -1), Gen.chooseNum(0, 16),
+    Gen.const(60 << 20), Gen.chooseNum(0, 1 << 16), Gen.chooseNum(Int.MinValue, Int.MaxValue))
+
+  private def putI32le(m: Array[Byte], at: Int, v: Int): Unit =
+    if (at >= 0 && at + 4 <= m.length)
+      java.nio.ByteBuffer.wrap(m).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(at, v)
+
+  /** `n` mutants of `d`: cut short, one byte flipped, or a 4-byte field
+    * set by `overwrite(mutant, r, value)`, `r` a free non-negative draw. */
+  private def mutants(d: Array[Byte], n: Int)(
+      overwrite: (Array[Byte], Int, Int) => Unit): Gen[List[Array[Byte]]] =
+    Gen.listOfN(n, for {
+      how <- Gen.chooseNum(0, 2)
+      r1 <- Gen.chooseNum(0, Int.MaxValue)
+      r2 <- Gen.chooseNum(0, Int.MaxValue)
+      value <- fieldValue
+    } yield {
+      val m = d.clone()
+      how match {
+        case 0 => m.take(r1 % (m.length + 1))
+        case 1 =>
+          m(r1 % m.length) = (m(r1 % m.length) ^ (1 + r2 % 255)).toByte
+          m
+        case _ =>
+          overwrite(m, r1, value)
+          m
+      }
+    })
 
   property("corpus roundtrip: any word text x any template/encoding/pdf variant extracts byte-identically") =
     forAll(docId, text) { (id, t) =>
@@ -94,7 +132,7 @@ object KernelProperties extends Properties("kernels") {
     // size and offset)
     val sizeField = Map(0x04034b50 -> 18, 0x02014b50 -> 20, 0x06054b50 -> 12)
     def headers(z: Array[Byte]): IndexedSeq[(Int, Int)] =
-      (0 to z.length - 4).flatMap(i => sizeField.get(graft.util.LittleEndian.i32(z, i)).map(i -> _))
+      (0 to z.length - 4).flatMap(i => sizeField.get(graft.util.ByteCursor(z).i32le(i)).map(i -> _))
     val mutant = for {
       z <- seed
       how <- Gen.chooseNum(0, 2)
@@ -113,17 +151,80 @@ object KernelProperties extends Properties("kernels") {
           m(at) = (m(at) ^ (1 + r2 % 255)).toByte
           m
         case _ =>
-          val at = h + size + 4 * (r2 % 2)
-          if (at + 4 <= m.length)
-            java.nio.ByteBuffer.wrap(m).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(at, value)
+          putI32le(m, h + size + 4 * (r2 % 2), value)
           m
       }
     }
     forAll(mutant) { bytes =>
       val r = Extractor.extractOne(WebPage("u", ts, bytes, "", "en"), 0)
-      r != null && (r.success || r.error.nonEmpty) &&
-        !Seq("ArrayIndexOutOfBounds", "NegativeArraySize", "OutOfMemory").exists(r.error.contains)
+      r != null && (r.success || r.error.nonEmpty) && named(r.error)
     }
+  }
+
+  property("cfb mutants (cut, flipped byte, overwritten header/FAT/directory field) yield a named row") = {
+    import graft.serialize.LegacyOfficeWriters.{DocWriter, PptWriter, PubWriter, XlsWriter}
+    val seed = for {
+      ps <- Gen.chooseNum(1, 4).flatMap(n => Gen.listOfN(n, text))
+      v <- Gen.chooseNum(0, 3)
+      doc <- Gen.oneOf[() => Array[Byte]](() => DocWriter.generate(ps, v),
+        () => XlsWriter.generate(ps, v), () => PptWriter.generate(ps, v),
+        () => PubWriter.generate(ps, v % PubWriter.numVariants))
+    } yield doc()
+    // the 512-byte header, every FAT sector it lists and the first
+    // directory sector ([MS-CFB] §2.2: sector s starts at (s + 1) * 512)
+    def fieldSectors(d: Array[Byte]): IndexedSeq[Int] = {
+      val c = graft.util.ByteCursor(d)
+      val fat = (0 until c.i32le(44)).map(k => (c.i32le(76 + 4 * k) + 1) * 512)
+      (0 +: fat :+ (c.i32le(48) + 1) * 512).filter(_ + 512 <= d.length)
+    }
+    val cfbMutants = seed.flatMap(d => mutants(d, 20) { (m, r, value) =>
+      val sectors = fieldSectors(m)
+      putI32le(m, sectors(r % sectors.length) + 4 * (r / sectors.length % 128), value)
+    })
+    def row(bytes: Array[Byte]): Prop = {
+      val r = Extractor.extractOne(WebPage("u", ts, bytes, "", "en"), 0)
+      Prop(r != null && (r.success || r.error.nonEmpty) && named(r.error)) :| s"$r"
+    }
+    forAllNoShrink(cfbMutants)(ms => Prop.all(ms.map(row): _*)).useSeed(Seed(0x0cfb))
+  }
+
+  property("media mutants decode, header-probe and parse to a value or a named IllegalArgument/IllegalState error") = {
+    import graft.fixtures.MediaFixtures
+    import graft.multimodal.MediaCodecs
+    // each seed with the parse* that claims it (None: decodeImage alone)
+    val seed = Gen.chooseNum(0, 3).flatMap { s =>
+      Gen.oneOf[(Array[Byte], Option[Array[Byte] => Any])](
+        (MediaFixtures.gif(5 + s, 4, s), None),
+        (MediaFixtures.tiff(4, 3 + s, rgb = s % 2 == 0, bigEndian = s > 1, s), None),
+        (MediaFixtures.webp(9, 7, s % 3), Some(MediaCodecs.parseWebp(_))),
+        (MediaFixtures.webp(9, 7, 2, frames = 3), Some(MediaCodecs.parseWebp(_))),
+        (MediaFixtures.ico(16, 12, 1 + s % 2, s), Some(MediaCodecs.parseIco(_))),
+        (MediaFixtures.mp4(64, 48, 5000, 1000, v1 = s % 2 == 1, Seq("desc" -> "t")),
+          Some(MediaCodecs.parseMp4(_))),
+        (MediaFixtures.wav(1 + s % 2, 8000, 40, s), Some(MediaCodecs.parseWav(_))),
+        (MediaFixtures.aiff(1 + s % 2, 8000, 40, s), Some(MediaCodecs.parseAiff(_))),
+        (MediaFixtures.oggVorbis(2, 44100, 128000, Seq("TITLE" -> "x" * 300),
+          splitComment = s % 2 == 1),
+          Some(MediaCodecs.parseOggVorbis(_))),
+        (MediaFixtures.mp3Id3(Seq("TIT2" -> "t", "TPE1" -> "a"), v24 = s % 2 == 0),
+          Some(MediaCodecs.parseId3v2(_))))
+    }
+    // either byte order: the seeds mix little- and big-endian containers
+    val mediaMutants = for {
+      (d, parse) <- seed
+      ms <- mutants(d, 10) { (m, r, value) =>
+        putI32le(m, r % m.length, if (r / m.length % 2 == 0) value else Integer.reverseBytes(value))
+      }
+    } yield (ms, parse)
+    def outcome(f: => Any): Prop =
+      try { f; Prop.passed } catch {
+        case e @ (_: IllegalArgumentException | _: IllegalStateException) =>
+          Prop(named(e.toString)) :| e.toString
+      }
+    forAllNoShrink(mediaMutants) { case (ms, parse) =>
+      Prop.all(ms.flatMap(m => Seq(outcome(MediaCodecs.decodeImage(m)),
+        outcome(MediaCodecs.imageHeader(m))) ++ parse.map(p => outcome(p(m)))): _*)
+    }.useSeed(Seed(0x3ed1a))
   }
 
   property("charset decode is total on arbitrary bytes") =

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.{AudioConvert, VorbisCodec, VorbisEncoder}
-import graft.util.{Crc, LittleEndian}
+import graft.util.{ByteCursor, Crc}
 
 /** Ogg framing of the Vorbis encoder: the page CRC rule and header
   * packets that end exactly on a full page of lacing values. */
@@ -19,7 +19,7 @@ class VorbisPagingSpec extends AnyFunSuite {
       var len = 27 + nsegs
       for (s <- 0 until nsegs) len += ogg(pos + 27 + s) & 0xff
       val page = java.util.Arrays.copyOfRange(ogg, pos, pos + len)
-      val stored = LittleEndian.i32(page, 22)
+      val stored = ByteCursor(page).i32le(22)
       java.util.Arrays.fill(page, 22, 26, 0.toByte)
       assert(Crc.ogg(page, 0, page.length) == stored, s"page $pages")
       pos += len

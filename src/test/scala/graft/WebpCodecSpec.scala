@@ -359,13 +359,13 @@ class WebpCodecSpec extends AnyFunSuite {
       assert(!WebpCodec.isLossless(bytes), name)
       // raw 4:2:0 reconstruction of the VP8 key frame
       val (vp8At, vp8Size) =
-        if (WebpCodec.isSimpleLossy(bytes)) (20, graft.util.LittleEndian.i32(bytes, 16))
+        if (WebpCodec.isSimpleLossy(bytes)) (20, graft.util.ByteCursor(bytes).i32le(16))
         else { // VP8X+ALPH: locate the VP8 chunk
           assert(WebpCodec.isExtendedStill(bytes), name)
           var i = 12; var at = -1; var sz = -1
           while (at < 0 && i + 8 <= bytes.length) {
             val fcc = new String(bytes, i, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-            val s = graft.util.LittleEndian.i32(bytes, i + 4)
+            val s = graft.util.ByteCursor(bytes).i32le(i + 4)
             if (fcc == "VP8 ") { at = i + 8; sz = s }
             i += 8 + s + (s & 1)
           }
@@ -461,7 +461,7 @@ class WebpCodecSpec extends AnyFunSuite {
     def findAnmf(b: Array[Byte]): Int = {
       var i = 12
       while (!(b(i) == 'A' && b(i + 1) == 'N' && b(i + 2) == 'M' && b(i + 3) == 'F'))
-        i += 8 + graft.util.LittleEndian.i32(b, i + 4) + (graft.util.LittleEndian.i32(b, i + 4) & 1)
+        i += 8 + graft.util.ByteCursor(b).i32le(i + 4) + (graft.util.ByteCursor(b).i32le(i + 4) & 1)
       i
     }
     // frame rect pushed outside the canvas: bump frame_x of the first ANMF
