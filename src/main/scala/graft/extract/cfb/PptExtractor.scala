@@ -124,30 +124,57 @@ object PptExtractor {
     render(texts.result())
   }
 
-  /** Walk the ONE record at `at` (containers recurse), collecting text
-    * atoms and SlidePersistAtom references in document order. */
-  private def walkRecord(ppt: ByteCursor, at: Int,
+  /** Container ends still open during a walk, innermost on top: the walks
+    * descend through an explicit stack, so nesting depth costs heap, not
+    * JVM stack frames. */
+  private final class EndStack {
+    private var ends = new Array[Int](16)
+    private var n = 0
+    def nonEmpty: Boolean = n > 0
+    def push(end: Int): Unit = {
+      if (n == ends.length) ends = java.util.Arrays.copyOf(ends, n * 2)
+      ends(n) = end
+      n += 1
+    }
+    def top: Int = ends(n - 1)
+    def pop(): Int = { n -= 1; ends(n) }
+  }
+
+  /** Walk the ONE record at `at` and, for a container, every record nested
+    * in it, collecting text atoms and SlidePersistAtom references in
+    * document order. */
+  private def walkRecord(ppt: ByteCursor, at0: Int,
                          texts: scala.collection.mutable.Builder[String, Vector[String]],
                          refs: scala.collection.mutable.Builder[Long, Vector[Long]]): Unit = {
-    val (verInst, recType, len) = header(ppt, at, "record")
-    val body = at + 8
-    if ((verInst & 0xf) == 0xf) {
-      var p = body
-      while (p + 8 <= body + len) {
-        // children must END inside this container too — a corrupt child
-        // length must not read into stale post-container stream regions
-        val childLen = ppt.i32le(p + 4)
-        require(childLen >= 0 && p + 8L + childLen <= body + len,
-          s"PPT child record at $p overruns its container")
-        walkRecord(ppt, p, texts, refs)
-        p = p + 8 + childLen
+    val open = new EndStack
+    var at = at0
+    var more = true
+    while (more) {
+      val (verInst, recType, len) = header(ppt, at, "record")
+      val body = at + 8
+      if ((verInst & 0xf) == 0xf) {
+        open.push(body + len)
+        at = body
+      } else {
+        if (recType == TextCharsAtom) texts += ppt.string(body, len, StandardCharsets.UTF_16LE)
+        else if (recType == TextBytesAtom) texts += ppt.string(body, len, cp1252)
+        else if (recType == SlidePersistAtom && len >= 4) refs += ppt.u32le(body)
+        at = body + len
       }
-    } else if (recType == TextCharsAtom) {
-      texts += ppt.string(body, len, StandardCharsets.UTF_16LE)
-    } else if (recType == TextBytesAtom) {
-      texts += ppt.string(body, len, cp1252)
-    } else if (recType == SlidePersistAtom && len >= 4) {
-      refs += ppt.u32le(body)
+      // the next child of the innermost open container, closing the ones
+      // that are done
+      more = false
+      while (!more && open.nonEmpty) {
+        val end = open.top
+        if (at + 8 <= end) {
+          // children must END inside their container too — a corrupt child
+          // length must not read into stale post-container stream regions
+          val childLen = ppt.i32le(at + 4)
+          require(childLen >= 0 && at + 8L + childLen <= end,
+            s"PPT child record at $at overruns its container")
+          more = true
+        } else at = open.pop()
+      }
     }
   }
 
@@ -156,10 +183,12 @@ object PptExtractor {
   private def streamOrder(ppt: ByteCursor): String = {
     val out = Vector.newBuilder[String]
     var sawRecord = false
-
-    def walk(at0: Int, end: Int): Unit = {
-      var at = at0
-      while (at + 8 <= end) {
+    val open = new EndStack
+    open.push(ppt.length)
+    var at = 0
+    while (open.nonEmpty) {
+      val end = open.top
+      if (at + 8 <= end) {
         val verInst = ppt.u16le(at)
         val recType = ppt.u16le(at + 2)
         val len = ppt.i32le(at + 4)
@@ -167,16 +196,15 @@ object PptExtractor {
         sawRecord = true
         val body = at + 8
         if ((verInst & 0xf) == 0xf) {
-          walk(body, body + len) // container: descend
-        } else if (recType == TextCharsAtom) {
-          out += ppt.string(body, len, StandardCharsets.UTF_16LE)
-        } else if (recType == TextBytesAtom) {
-          out += ppt.string(body, len, cp1252)
+          open.push(body + len) // container: descend
+          at = body
+        } else {
+          if (recType == TextCharsAtom) out += ppt.string(body, len, StandardCharsets.UTF_16LE)
+          else if (recType == TextBytesAtom) out += ppt.string(body, len, cp1252)
+          at = body + len
         }
-        at = body + len
-      }
+      } else at = open.pop() // past the container's end
     }
-    walk(0, ppt.length)
     require(sawRecord, "PowerPoint Document stream has no records")
     render(out.result())
   }

@@ -7,8 +7,7 @@ import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, sum, when}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.model.{ExtractionResult, WebPage}
@@ -42,9 +41,9 @@ import graft.model.{ExtractionResult, WebPage}
   * at a time, never the inflated file), so a multi-GB segment costs one
   * record's worth of heap per task; a single record larger than ~2 GiB is
   * a named error (the JVM cannot hold one byte array past that, and real
-  * crawls cap records far below it). Here `roundTrip` / `extractionRollup`
-  * synthesize file groups from the documents table so the oracle can
-  * recompute every parsed field from SQL.
+  * crawls cap records far below it). The `src_warc_*` queries
+  * (`graft.queries.SourceQueries`) write the documents table through this
+  * writer so the oracle can recompute every parsed field from SQL.
   */
 object WarcSource {
 
@@ -272,85 +271,6 @@ object WarcSource {
   /** Whole-buffer convenience over [[parseStream]] (fixtures / tests). */
   def parse(bytes: Array[Byte]): Seq[ParsedResponse] =
     parseStream(new ByteArrayInputStream(bytes)).toSeq
-
-  private def md5Hex(b: Array[Byte]): String =
-    java.security.MessageDigest.getInstance("MD5").digest(b)
-      .map(x => f"$x%02x").mkString
-
-  /** Write-then-parse round trip over the documents table: pages are
-    * grouped `docsPerFile` per synthetic WARC file (odd file ids gzip'd
-    * per record), each file is built and re-parsed executor-locally, and
-    * every parsed field is surfaced for the oracle to recompute. The
-    * group-by-file shuffle stands in for production's file-per-task read. */
-  def roundTrip(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .groupByKey { case (id, _) => id / docsPerFile }
-      .flatMapGroups { (fileId, it) =>
-        val pages = it.toSeq.sortBy(_._1)
-        val bytes = buildFile(fileId, pages, gzipPerRecord = fileId % 2 == 1)
-        parse(bytes).map { r =>
-          val id = r.url.substring(r.url.lastIndexOf("doc") + 3).toLong
-          (id, r.url, r.status, r.contentType,
-            r.payload.length.toLong, md5Hex(r.payload))
-        }.iterator
-      }
-      .toDF("doc_id", "url", "status", "mime", "payload_octets", "payload_md5")
-  }
-
-  /** Write the documents table as deterministic .warc(.gz) segment FILES
-    * under a fresh temp dir (`docsPerFile` per segment, odd file ids gzip'd
-    * per record) and return the dir — the on-disk fixture for the
-    * DataSource V2 read path ([[WarcDataSource]]). Segment writes happen
-    * executor-side (local-mode shared FS); the O(numFiles) collect() only
-    * barriers the writes before a load() can plan over them. */
-  def segmentsToDisk(docs: DataFrame): String = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_segments").toString
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .groupByKey(_._1 / docsPerFile)
-      .mapGroups { (fileId, it) =>
-        val pages = it.toSeq.sortBy(_._1)
-        val gz = fileId % 2 == 1
-        val bytes = buildFile(fileId, pages, gzipPerRecord = gz)
-        val name = f"seg$fileId%05d.warc" + (if (gz) ".gz" else "")
-        java.nio.file.Files.write(java.nio.file.Paths.get(dir, name), bytes)
-        fileId
-      }.collect()
-    dir
-  }
-
-  /** The crawl ingest shape END-TO-END: corpus pages → .warc(.gz) segments
-    * → parse → sniff/dispatch → extract → per-format metrics rollup. Each
-    * group of `docsPerFile` pages becomes one synthetic WARC segment (odd
-    * file ids gzip'd per record) holding the REAL format-wheel payloads;
-    * the segment is re-parsed and every payload runs the full extraction
-    * kernel. The WARC leg is byte-transparent, so the rollup must equal the
-    * batch pipeline's (`extract_metrics` shares the oracle). */
-  def extractionRollup(pages: Dataset[WebPage]): DataFrame = {
-    val s = pages.sparkSession
-    import s.implicits._
-    val results = pages
-      .map(p => (p.url.substring(p.url.lastIndexOf("doc") + 3).toLong, p.url, p.html))
-      .groupByKey(_._1 / docsPerFile)
-      .flatMapGroups { (fileId, it) =>
-        val recs = it.toSeq.sortBy(_._1)
-        val bytes = buildBinaryFile(fileId,
-          recs.map(r => (r._2, r._3)), gzipPerRecord = fileId % 2 == 1)
-        parseStream(new ByteArrayInputStream(bytes)).map { r =>
-          graft.extract.Extractor.extractOne(
-            WebPage(r.url, new java.sql.Timestamp(0), r.payload, "", ""), fileId.toInt)
-        }
-      }
-    results.toDF()
-      .groupBy(col("format_from"))
-      .agg(count(lit(1)).cast("bigint").as("docs"),
-        sum(col("new_size")).cast("bigint").as("bytes_out"),
-        sum(when(!col("success"), 1L).otherwise(0L)).cast("bigint").as("failures"))
-      .orderBy("format_from")
-  }
 
   /** One segment off the Hadoop FS as a record iterator over a 64 KiB
     * buffer (works on HDFS/S3A, not just file://). Closing the iterator

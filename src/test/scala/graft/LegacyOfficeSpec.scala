@@ -255,6 +255,31 @@ class LegacyOfficeSpec extends AnyFunSuite {
     assert(!r.success && r.error.contains("encrypted"), r.toString)
   }
 
+  test("ppt nested 20,000 containers deep still yields its text, on both record walks") {
+    val depth = 20000
+    val text = "deep slide text"
+    def rec(verInst: Int, tpe: Int, len: Int, body: Array[Byte] = Array.emptyByteArray) = {
+      val b = java.nio.ByteBuffer.allocate(8 + body.length).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.putShort(verInst.toShort).putShort(tpe.toShort).putInt(len).put(body).array()
+    }
+    val atom = rec(0, 0x0fa0, text.length * 2, text.getBytes(java.nio.charset.StandardCharsets.UTF_16LE))
+    val doc = (0 until depth).toArray.flatMap(k => rec(0xf, 0x03e8, 8 * (depth - 1 - k) + atom.length)) ++ atom
+    // stream order: no "Current User" stream
+    val flat = Extractor.extractOne(page(CfbWriter.write(Seq("PowerPoint Document" -> doc))), 0)
+    assert(flat.success && flat.format_from == "ppt" && flat.text == text, flat.copy(text = flat.text.take(80)))
+    // persist directory {1 -> the document at offset 0}, then one UserEditAtom
+    def le(ints: Int*) = {
+      val b = java.nio.ByteBuffer.allocate(4 * ints.length).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      ints.foreach(b.putInt); b.array()
+    }
+    val pd = rec(0, 0x1772, 8, le((1 << 20) | 1, 0))
+    val edit = rec(0, 0x0ff5, 28, le(256, 0x03000000, 0, doc.length, 1, 2, 1))
+    val currentUser = rec(0, 0x0ff6, 20, le(20, 0xe391c05f, doc.length + pd.length, 0x03f40000, 3))
+    val persisted = Extractor.extractOne(page(CfbWriter.write(Seq(
+      "Current User" -> currentUser, "PowerPoint Document" -> (doc ++ pd ++ edit)))), 0)
+    assert(persisted.success && persisted.text == text, persisted.copy(text = persisted.text.take(80)))
+  }
+
   // ---- containment ---------------------------------------------------------
 
   test("truncated legacy payloads become failure rows, never mojibake successes") {

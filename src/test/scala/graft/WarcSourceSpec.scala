@@ -146,7 +146,7 @@ class WarcSourceSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = (0L until 120L).map(i => (i, s"document $i body " + ("x" * (i % 7).toInt)))
       .toDF("doc_id", "text")
-    val out = WarcSource.roundTrip(docs)
+    val out = graft.queries.SourceQueries.roundTrip(docs)
       .as[(Long, String, Int, String, Long, String)].collect().sortBy(_._1)
     assert(out.length === 120)
     out.foreach { case (id, url, status, mime, octets, md5) =>
