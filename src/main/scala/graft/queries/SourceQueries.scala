@@ -45,7 +45,7 @@ object SourceQueries {
   }
 
   /** Write the documents table as .warc(.gz) segment files into `dir` — the
-    * on-disk fixture for the DataSource V2 read path. Segment writes happen
+    * on-disk fixture for the `format("warc")` read path. Segment writes happen
     * executor-side (local-mode shared FS); the O(numFiles) collect() only
     * barriers the writes before a load() can plan over them. */
   private def segmentsToDisk(docs: DataFrame, dir: String): String = {
@@ -97,10 +97,10 @@ object SourceQueries {
       roundTrip(docs(s, dir)).orderBy("doc_id")
     },
 
-    // The same round trip through the DataSource V2 read surface: segments
+    // The same round trip through the file-format read surface: segments
     // written to disk, read back via spark.read.format("warc") — shares
-    // src_warc_roundtrip's oracle (the connector must surface exactly
-    // what the parser does).
+    // src_warc_roundtrip's oracle (the format must surface exactly what
+    // the parser does).
     Query("src_warc_dsv2", recordSql) { (s, dir) =>
       val seg = segmentsToDisk(docs(s, dir), freshScratchDir("graft_q_warc", dir))
       s.read.format("warc").load(seg)

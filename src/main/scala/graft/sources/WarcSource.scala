@@ -7,7 +7,13 @@ import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.Path
+
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.classic.ClassicConversions
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.model.{ExtractionResult, WebPage}
@@ -34,16 +40,18 @@ import graft.model.{ExtractionResult, WebPage}
   * [[extractFromWarcFiles]]) and streams records out of it — a segment is
   * never split, because record-gzip members are not independently
   * seekable without an index; smaller segments are packed several to a
-  * task by one size-balanced plan ([[WarcDataSource.planSegments]]). Both
+  * task by Spark's own small-file rule, the same on both read paths. Both
   * read paths open objects through a broadcast Hadoop conf, so a task's
   * closure stays a few KB however large the cluster's conf is.
   * `parseStream` holds only the CURRENT record in memory (one record body
   * at a time, never the inflated file), so a multi-GB segment costs one
-  * record's worth of heap per task; a single record larger than ~2 GiB is
-  * a named error (the JVM cannot hold one byte array past that, and real
-  * crawls cap records far below it). The `src_warc_*` queries
-  * (`graft.queries.SourceQueries`) write the documents table through this
-  * writer so the oracle can recompute every parsed field from SQL.
+  * record's worth of heap per task, and a record's buffer grows with the
+  * bytes that arrive, not with the length its header claims; a single
+  * record larger than ~2 GiB is a named error (the JVM cannot hold one
+  * byte array past that, and real crawls cap records far below it). The
+  * `src_warc_*` queries (`graft.queries.SourceQueries`) write the
+  * documents table through this writer so the oracle can recompute every
+  * parsed field from SQL.
   */
 object WarcSource {
 
@@ -152,11 +160,16 @@ object WarcSource {
     out.result()
   }
 
+  /** `n` bytes off `in`. The buffer starts at 64 KiB at most and doubles as
+    * bytes arrive, so a header claiming more than the stream holds costs
+    * what was read before the named truncation error, not the claim. */
   private def readFully(in: InputStream, n: Int, what: String): Array[Byte] = {
-    val buf = new Array[Byte](n)
+    var buf = new Array[Byte](math.min(n, 64 * 1024))
     var off = 0
     while (off < n) {
-      val r = in.read(buf, off, n - off)
+      if (off == buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.min(n.toLong, 2L * off).toInt)
+      val r = in.read(buf, off, buf.length - off)
       require(r >= 0, s"WARC stream truncated reading $what (${n - off} bytes short)")
       off += r
     }
@@ -278,7 +291,7 @@ object WarcSource {
     * the stream before it propagates. */
   private[sources] def openSegment(path: String, conf: org.apache.hadoop.conf.Configuration)
       : Iterator[ParsedResponse] with Closeable = {
-    val hp = new org.apache.hadoop.fs.Path(path)
+    val hp = new Path(path)
     val stream = new BufferedInputStream(hp.getFileSystem(conf).open(hp), 64 * 1024)
     try parseStream(stream)
     catch {
@@ -290,8 +303,9 @@ object WarcSource {
 
   /** PRODUCTION ingest entry: stream-extract every HTTP response record of
     * every listed .warc(.gz) object. Tasks take whole segments, grouped by
-    * the same size-balanced plan as the `format("warc")` scan
-    * ([[WarcDataSource.planSegments]]; a segment is never split, because
+    * Spark's file-scan packing (`FilePartition.maxSplitBytes` and
+    * `getFilePartitions` over the segments, largest first), as the
+    * `format("warc")` scan plans them (a segment is never split, because
     * per-record gzip members are not independently seekable), with no
     * shuffle, and stream their segments one after another with O(one
     * record) heap: each object is consumed as a Hadoop FS stream through
@@ -308,11 +322,15 @@ object WarcSource {
     val sc = spark.sparkContext
     // a path that cannot be listed plans as empty; its task names the error
     val segments = paths.map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      p -> (try hp.getFileSystem(sc.hadoopConfiguration).getFileStatus(hp).getLen
-            catch { case NonFatal(_) => 0L })
-    }
-    val groups = WarcDataSource.planSegments(spark, segments)
+      val hp = new Path(p)
+      val len = try hp.getFileSystem(sc.hadoopConfiguration).getFileStatus(hp).getLen
+                catch { case NonFatal(_) => 0L }
+      PartitionedFile(InternalRow.empty, SparkPath.fromPath(hp), 0L, len)
+    }.sortBy(f => (-f.length, f.filePath.toString))
+    val openCost = ClassicConversions.castToImpl(spark).sessionState.conf.filesOpenCostInBytes
+    val groups = FilePartition.getFilePartitions(spark, segments,
+      FilePartition.maxSplitBytes(spark, segments.map(_.length + openCost).sum))
+      .map(_.files.map(_.toPath.toString).toSeq)
     val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
     spark.createDataset(sc.parallelize(groups, math.max(groups.size, 1)).mapPartitions { group =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
@@ -338,7 +356,7 @@ object WarcSource {
     // a task that stops pulling early (limit/take, kill, downstream throw)
     // never drains the iterator, so hasNext's close-on-exhaustion path
     // would leak the fd/S3A connection — close at task end regardless
-    // (the DSV2 path gets this from Spark calling PartitionReader.close())
+    // (the format("warc") reader registers the same listener)
     Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] {
       _ => closeQuietly()
     })

@@ -14,6 +14,7 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSupport.withTempDir
 import graft.model.WebPage
 import graft.pipeline.ResumableRunner
 import graft.util.NioLocalFileSystem
@@ -64,32 +65,36 @@ class LocalWriteSpec extends AnyFunSuite {
     // Hadoop's Shell probes `setsid` in a process once per JVM, when the
     // class loads: load it before recording
     Class.forName("org.apache.hadoop.util.Shell")
-    val out = Files.createTempDirectory("graft_noforks").toString
+    withTempDir("graft_noforks") { outDir =>
+      val out = outDir.toString
 
-    val fresh = processStarts {
-      val s = ResumableRunner.run(spark, pages, out, "f1", numBuckets)
-      assert(s.bucketsRun == numBuckets)
-    }
-    assert(fresh.isEmpty, s"${fresh.size} processes started: ${describe(fresh)}")
+      val fresh = processStarts {
+        val s = ResumableRunner.run(spark, pages, out, "f1", numBuckets)
+        assert(s.bucketsRun == numBuckets)
+      }
+      assert(fresh.isEmpty, s"${fresh.size} processes started: ${describe(fresh)}")
 
-    // a crash after half the buckets: their manifest rows survive
-    val manifest = spark.read.parquet(s"$out/manifest")
-    val kept = manifest.filter(col("partition_id") < numBuckets / 2).collect()
-    spark.createDataFrame(spark.sparkContext.parallelize(kept.toSeq), manifest.schema)
-      .write.mode("overwrite").options(NioLocalFileSystem.writeOptions).parquet(s"$out/manifest")
-    val resume = processStarts {
-      val s = ResumableRunner.run(spark, pages, out, "f1r", numBuckets)
-      assert(s.bucketsRun == numBuckets / 2)
-    }
-    assert(resume.isEmpty, s"${resume.size} processes started: ${describe(resume)}")
+      // a crash after half the buckets: their manifest rows survive
+      val manifest = spark.read.parquet(s"$out/manifest")
+      val kept = manifest.filter(col("partition_id") < numBuckets / 2).collect()
+      spark.createDataFrame(spark.sparkContext.parallelize(kept.toSeq), manifest.schema)
+        .write.mode("overwrite").options(NioLocalFileSystem.writeOptions).parquet(s"$out/manifest")
+      val resume = processStarts {
+        val s = ResumableRunner.run(spark, pages, out, "f1r", numBuckets)
+        assert(s.bucketsRun == numBuckets / 2)
+      }
+      assert(resume.isEmpty, s"${resume.size} processes started: ${describe(resume)}")
 
-    // the check can fail here: without libhadoop, stock Hadoop forks chmod
-    assume(!NativeIO.isAvailable, "libhadoop is loaded: stock Hadoop forks nothing either")
-    val stockOut = Files.createTempDirectory("graft_forks").toString
-    val stock = processStarts {
-      ResumableRunner.run(spark, pages, stockOut, "f1", numBuckets, writeOptions = Map.empty)
+      // the check can fail here: without libhadoop, stock Hadoop forks chmod
+      assume(!NativeIO.isAvailable, "libhadoop is loaded: stock Hadoop forks nothing either")
+      withTempDir("graft_forks") { stockOutDir =>
+        val stockOut = stockOutDir.toString
+        val stock = processStarts {
+          ResumableRunner.run(spark, pages, stockOut, "f1", numBuckets, writeOptions = Map.empty)
+        }
+        assert(stock.nonEmpty, "the stock write started no process")
+      }
     }
-    assert(stock.nonEmpty, "the stock write started no process")
   }
 
   /** Every file and directory under `root/sub`: its path relative to `root`
@@ -105,22 +110,26 @@ class LocalWriteSpec extends AnyFunSuite {
   }
 
   test("the output tree is unchanged: same files (.crc and _SUCCESS too), permissions and rows") {
-    val nio = Files.createTempDirectory("graft_tree_nio").toString
-    val stock = Files.createTempDirectory("graft_tree_stock").toString
-    ResumableRunner.run(spark, pages, nio, "t", numBuckets)
-    ResumableRunner.run(spark, pages, stock, "t", numBuckets, writeOptions = Map.empty)
+    withTempDir("graft_tree_nio") { nioDir =>
+      val nio = nioDir.toString
+      withTempDir("graft_tree_stock") { stockDir =>
+        val stock = stockDir.toString
+        ResumableRunner.run(spark, pages, nio, "t", numBuckets)
+        ResumableRunner.run(spark, pages, stock, "t", numBuckets, writeOptions = Map.empty)
 
-    for (sub <- Seq("results", "manifest")) {
-      val files = tree(nio, sub)
-      assert(files == tree(stock, sub), s"$sub/ differs")
-      val names = files.map(_._1)
-      assert(names.exists(_.endsWith(".parquet")) && names.exists(_.endsWith(".parquet.crc")))
-      // the dynamic partition overwrite of results/ leaves no marker
-      if (sub == "manifest")
-        assert(names.contains("manifest/_SUCCESS") && names.contains("manifest/._SUCCESS.crc"))
-      def rows(dir: String) = spark.read.parquet(s"$dir/$sub").orderBy(col(
-        if (sub == "results") "url" else "partition_id")).collect().map(_.toSeq)
-      assert(rows(nio).sameElements(rows(stock)), s"$sub/ rows differ")
+        for (sub <- Seq("results", "manifest")) {
+          val files = tree(nio, sub)
+          assert(files == tree(stock, sub), s"$sub/ differs")
+          val names = files.map(_._1)
+          assert(names.exists(_.endsWith(".parquet")) && names.exists(_.endsWith(".parquet.crc")))
+          // the dynamic partition overwrite of results/ leaves no marker
+          if (sub == "manifest")
+            assert(names.contains("manifest/_SUCCESS") && names.contains("manifest/._SUCCESS.crc"))
+          def rows(dir: String) = spark.read.parquet(s"$dir/$sub").orderBy(col(
+            if (sub == "results") "url" else "partition_id")).collect().map(_.toSeq)
+          assert(rows(nio).sameElements(rows(stock)), s"$sub/ rows differ")
+        }
+      }
     }
   }
 }

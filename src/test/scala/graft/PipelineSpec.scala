@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSupport.withTempDir
 import graft.fixtures.Corpus
 import graft.pipeline.{ExtractionPipeline, ResumableRunner}
 
@@ -18,108 +17,116 @@ class PipelineSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("full run is byte-identical per url; rerun is a no-op (bucketsRun == 0)") {
-    val out = Files.createTempDirectory("graft_resume").toString
-    val pages = Corpus.materialize(spark, sfDir)
-    val s1 = ResumableRunner.run(spark, pages, out, "t1", numBuckets = 16)
-    assert(s1.bucketsRun == 16 && s1.failures == 0)
+    withTempDir("graft_resume") { outDir =>
+      val out = outDir.toString
+      val pages = Corpus.materialize(spark, sfDir)
+      val s1 = ResumableRunner.run(spark, pages, out, "t1", numBuckets = 16)
+      assert(s1.bucketsRun == 16 && s1.failures == 0)
 
-    val results = spark.read.parquet(s"$out/results")
-    val golden = pages.select(col("url"), col("text").as("expected"))
-    val bad = results.join(golden, Seq("url"))
-      .filter(!col("success") || col("text") =!= col("expected")).count()
-    assert(bad == 0)
-    assert(results.count() == pages.count())
+      val results = spark.read.parquet(s"$out/results")
+      val golden = pages.select(col("url"), col("text").as("expected"))
+      val bad = results.join(golden, Seq("url"))
+        .filter(!col("success") || col("text") =!= col("expected")).count()
+      assert(bad == 0)
+      assert(results.count() == pages.count())
 
-    val s2 = ResumableRunner.run(spark, pages, out, "t1b", numBuckets = 16)
-    assert(s2.bucketsRun == 0, s"rerun must skip all buckets, got $s2")
+      val s2 = ResumableRunner.run(spark, pages, out, "t1b", numBuckets = 16)
+      assert(s2.bucketsRun == 0, s"rerun must skip all buckets, got $s2")
+    }
   }
 
   test("crash-resume: truncated manifest reprocesses only missing buckets, output complete") {
-    val out = Files.createTempDirectory("graft_crash").toString
-    val pages = Corpus.materialize(spark, sfDir)
-    ResumableRunner.run(spark, pages, out, "t2", numBuckets = 16)
-    val full = spark.read.parquet(s"$out/results")
-      .select("url", "text", "success").orderBy("url").collect()
+    withTempDir("graft_crash") { outDir =>
+      val out = outDir.toString
+      val pages = Corpus.materialize(spark, sfDir)
+      ResumableRunner.run(spark, pages, out, "t2", numBuckets = 16)
+      val full = spark.read.parquet(s"$out/results")
+        .select("url", "text", "success").orderBy("url").collect()
 
-    // simulate a crash: keep only manifest rows for buckets < 8
-    val kept = spark.read.parquet(s"$out/manifest").filter(col("partition_id") < 8)
-      .collect()
-    val keptDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(kept.toSeq), spark.read.parquet(s"$out/manifest").schema)
-    keptDf.write.mode("overwrite").parquet(s"$out/manifest")
+      // simulate a crash: keep only manifest rows for buckets < 8
+      val kept = spark.read.parquet(s"$out/manifest").filter(col("partition_id") < 8)
+        .collect()
+      val keptDf = spark.createDataFrame(
+        spark.sparkContext.parallelize(kept.toSeq), spark.read.parquet(s"$out/manifest").schema)
+      keptDf.write.mode("overwrite").parquet(s"$out/manifest")
 
-    val s = ResumableRunner.run(spark, pages, out, "t2r", numBuckets = 16)
-    assert(s.bucketsRun == 8, s"expected 8 reprocessed buckets, got $s")
-    val resumed = spark.read.parquet(s"$out/results")
-      .select("url", "text", "success").orderBy("url").collect()
-    assert(resumed.sameElements(full), "resumed output differs from uninterrupted run")
+      val s = ResumableRunner.run(spark, pages, out, "t2r", numBuckets = 16)
+      assert(s.bucketsRun == 8, s"expected 8 reprocessed buckets, got $s")
+      val resumed = spark.read.parquet(s"$out/results")
+        .select("url", "text", "success").orderBy("url").collect()
+      assert(resumed.sameElements(full), "resumed output differs from uninterrupted run")
+    }
   }
 
   test("resume does not re-read finished buckets' output") {
-    val out = Files.createTempDirectory("graft_noreread").toString
-    val pages = Corpus.materialize(spark, sfDir)
-    ResumableRunner.run(spark, pages, out, "t3", numBuckets = 16)
+    withTempDir("graft_noreread") { outDir =>
+      val out = outDir.toString
+      val pages = Corpus.materialize(spark, sfDir)
+      ResumableRunner.run(spark, pages, out, "t3", numBuckets = 16)
 
-    // keep manifest rows for buckets < 8, then corrupt the DATA FILES of
-    // those finished buckets: if the resumed run read any of them (for the
-    // manifest rebuild or otherwise), it would throw on the bad footer
-    val kept = spark.read.parquet(s"$out/manifest").filter(col("partition_id") < 8).collect()
-    val schema = spark.read.parquet(s"$out/manifest").schema
-    spark.createDataFrame(spark.sparkContext.parallelize(kept.toSeq), schema)
-      .write.mode("overwrite").parquet(s"$out/manifest")
-    for (b <- 0 until 8) {
-      val dir = new java.io.File(s"$out/results/partition_id=$b")
-      assert(dir.isDirectory, s"expected $dir")
-      dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        java.nio.file.Files.write(f.toPath, "not a parquet file".getBytes)
+      // keep manifest rows for buckets < 8, then corrupt the DATA FILES of
+      // those finished buckets: if the resumed run read any of them (for the
+      // manifest rebuild or otherwise), it would throw on the bad footer
+      val kept = spark.read.parquet(s"$out/manifest").filter(col("partition_id") < 8).collect()
+      val schema = spark.read.parquet(s"$out/manifest").schema
+      spark.createDataFrame(spark.sparkContext.parallelize(kept.toSeq), schema)
+        .write.mode("overwrite").parquet(s"$out/manifest")
+      for (b <- 0 until 8) {
+        val dir = new java.io.File(s"$out/results/partition_id=$b")
+        assert(dir.isDirectory, s"expected $dir")
+        dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+          java.nio.file.Files.write(f.toPath, "not a parquet file".getBytes)
+        }
       }
-    }
 
-    val s = ResumableRunner.run(spark, pages, out, "t3r", numBuckets = 16)
-    assert(s.bucketsRun == 8, s"expected 8 reprocessed buckets, got $s")
-    // and the manifest is complete again (prior rows carried forward)
-    val manifest = spark.read.parquet(s"$out/manifest")
-      .select("partition_id").distinct().count()
-    assert(manifest == 16)
+      val s = ResumableRunner.run(spark, pages, out, "t3r", numBuckets = 16)
+      assert(s.bucketsRun == 8, s"expected 8 reprocessed buckets, got $s")
+      // and the manifest is complete again (prior rows carried forward)
+      val manifest = spark.read.parquet(s"$out/manifest")
+        .select("partition_id").distinct().count()
+      assert(manifest == 16)
+    }
   }
 
   test("manifest docs and RunSummary counts equal a recount of results/, failures included") {
-    val out = Files.createTempDirectory("graft_counts").toString
-    val ts = new java.sql.Timestamp(0)
-    val poisoned = (1 to 6).map { i =>
-      graft.model.WebPage(s"https://p.example.org/en/doc$i",
-        ts, s"%PDF-1.4 then garbage $i".getBytes("ISO-8859-1"), "", "en")
+    withTempDir("graft_counts") { outDir =>
+      val out = outDir.toString
+      val ts = new java.sql.Timestamp(0)
+      val poisoned = (1 to 6).map { i =>
+        graft.model.WebPage(s"https://p.example.org/en/doc$i",
+          ts, s"%PDF-1.4 then garbage $i".getBytes("ISO-8859-1"), "", "en")
+      }
+      val pages = Corpus.materialize(spark, sfDir).unionByName(poisoned.toDS())
+
+      def recount(): Map[Int, (Long, Long)] =
+        spark.read.parquet(s"$out/results")
+          .groupBy(col("partition_id").cast("int"))
+          .agg(count(lit(1)), sum(when(!col("success"), 1L).otherwise(0L)))
+          .as[(Int, Long, Long)].collect().map { case (b, d, f) => b -> ((d, f)) }.toMap
+      def manifest(): Map[Int, Long] =
+        spark.read.parquet(s"$out/manifest").select(col("partition_id"), col("docs"))
+          .as[(Int, Long)].collect().toMap
+
+      val s1 = ResumableRunner.run(spark, pages, out, "c1", numBuckets = 16)
+      val all = recount()
+      assert(s1.failures > 0, s"poisoned payloads must fail: $s1")
+      assert(s1.failures == all.values.map(_._2).sum && s1.docs == all.values.map(_._1).sum, s"$s1")
+      assert(s1.bucketsRun == all.size && s1.docsTotal == s1.docs)
+      assert(manifest() == all.map { case (b, (d, _)) => b -> d })
+
+      // resume half the buckets: the redone ones are counted again, the rest
+      // carried forward from the prior manifest
+      val schema = spark.read.parquet(s"$out/manifest").schema
+      val kept = spark.read.parquet(s"$out/manifest").filter(col("partition_id") < 8).collect()
+      spark.createDataFrame(spark.sparkContext.parallelize(kept.toSeq), schema)
+        .write.mode("overwrite").parquet(s"$out/manifest")
+      val s2 = ResumableRunner.run(spark, pages, out, "c2", numBuckets = 16)
+      val redone = recount().filter(_._1 >= 8)
+      assert(s2.bucketsRun == redone.size && s2.docs == redone.values.map(_._1).sum &&
+        s2.failures == redone.values.map(_._2).sum, s"$s2 vs $redone")
+      assert(s2.docsTotal == s1.docs)
+      assert(manifest() == recount().map { case (b, (d, _)) => b -> d })
     }
-    val pages = Corpus.materialize(spark, sfDir).unionByName(poisoned.toDS())
-
-    def recount(): Map[Int, (Long, Long)] =
-      spark.read.parquet(s"$out/results")
-        .groupBy(col("partition_id").cast("int"))
-        .agg(count(lit(1)), sum(when(!col("success"), 1L).otherwise(0L)))
-        .as[(Int, Long, Long)].collect().map { case (b, d, f) => b -> ((d, f)) }.toMap
-    def manifest(): Map[Int, Long] =
-      spark.read.parquet(s"$out/manifest").select(col("partition_id"), col("docs"))
-        .as[(Int, Long)].collect().toMap
-
-    val s1 = ResumableRunner.run(spark, pages, out, "c1", numBuckets = 16)
-    val all = recount()
-    assert(s1.failures > 0, s"poisoned payloads must fail: $s1")
-    assert(s1.failures == all.values.map(_._2).sum && s1.docs == all.values.map(_._1).sum, s"$s1")
-    assert(s1.bucketsRun == all.size && s1.docsTotal == s1.docs)
-    assert(manifest() == all.map { case (b, (d, _)) => b -> d })
-
-    // resume half the buckets: the redone ones are counted again, the rest
-    // carried forward from the prior manifest
-    val schema = spark.read.parquet(s"$out/manifest").schema
-    val kept = spark.read.parquet(s"$out/manifest").filter(col("partition_id") < 8).collect()
-    spark.createDataFrame(spark.sparkContext.parallelize(kept.toSeq), schema)
-      .write.mode("overwrite").parquet(s"$out/manifest")
-    val s2 = ResumableRunner.run(spark, pages, out, "c2", numBuckets = 16)
-    val redone = recount().filter(_._1 >= 8)
-    assert(s2.bucketsRun == redone.size && s2.docs == redone.values.map(_._1).sum &&
-      s2.failures == redone.values.map(_._2).sum, s"$s2 vs $redone")
-    assert(s2.docsTotal == s1.docs)
-    assert(manifest() == recount().map { case (b, (d, _)) => b -> d })
   }
 
   test("a fresh run never scans results/: one extraction job plus the manifest write") {
@@ -127,40 +134,42 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     import org.apache.spark.sql.execution.datasources.v2.FileScan
-    val out = Files.createTempDirectory("graft_noscan").toString
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = plans.add(qe.executedPlan)
-      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = plans.add(qe.executedPlan)
-    }
-    spark.listenerManager.register(listener)
-    try {
-      ResumableRunner.run(spark, Corpus.materialize(spark, sfDir), out, "n1", numBuckets = 16)
-      // listener events arrive in order: once the manifest write is seen,
-      // every query the run executed has been seen
-      val manifestWrite = s"InsertIntoHadoopFsRelationCommand file:$out/manifest"
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!plans.toArray.exists(_.toString.contains(manifestWrite)) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val seen = plans.toArray(Array.empty[SparkPlan]).toSeq
-      assert(seen.exists(_.toString.contains(manifestWrite)), seen.mkString("\n\n"))
-      assert(seen.exists(_.toString.contains(s"InsertIntoHadoopFsRelationCommand file:$out/results")))
-
-      val helper = new AdaptiveSparkPlanHelper {}
-      val scanned: Seq[String] = seen.flatMap { p =>
-        helper.collectWithSubqueries(p) {
-          case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
-          case b: BatchScanExec => b.scan match {
-            case f: FileScan => f.fileIndex.rootPaths.map(_.toString)
-            case _ => Nil
-          }
-        }.flatten
+    withTempDir("graft_noscan") { outDir =>
+      val out = outDir.toString
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                               durationNs: Long): Unit = plans.add(qe.executedPlan)
+        override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                               exception: Exception): Unit = plans.add(qe.executedPlan)
       }
-      val underResults = scanned.filter(_.contains(s"$out/results"))
-      assert(underResults.isEmpty, s"fresh run scanned its own output: ${underResults.take(4)}")
-    } finally spark.listenerManager.unregister(listener)
+      spark.listenerManager.register(listener)
+      try {
+        ResumableRunner.run(spark, Corpus.materialize(spark, sfDir), out, "n1", numBuckets = 16)
+        // listener events arrive in order: once the manifest write is seen,
+        // every query the run executed has been seen
+        val manifestWrite = s"InsertIntoHadoopFsRelationCommand file:$out/manifest"
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!plans.toArray.exists(_.toString.contains(manifestWrite)) && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        val seen = plans.toArray(Array.empty[SparkPlan]).toSeq
+        assert(seen.exists(_.toString.contains(manifestWrite)), seen.mkString("\n\n"))
+        assert(seen.exists(_.toString.contains(s"InsertIntoHadoopFsRelationCommand file:$out/results")))
+
+        val helper = new AdaptiveSparkPlanHelper {}
+        val scanned: Seq[String] = seen.flatMap { p =>
+          helper.collectWithSubqueries(p) {
+            case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+            case b: BatchScanExec => b.scan match {
+              case f: FileScan => f.fileIndex.rootPaths.map(_.toString)
+              case _ => Nil
+            }
+          }.flatten
+        }
+        val underResults = scanned.filter(_.contains(s"$out/results"))
+        assert(underResults.isEmpty, s"fresh run scanned its own output: ${underResults.take(4)}")
+      } finally spark.listenerManager.unregister(listener)
+    }
   }
 
   test("skewed hot host is spread across shuffle partitions by salting") {

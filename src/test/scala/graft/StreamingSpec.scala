@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSupport.withTempDir
 import graft.fixtures.Corpus
 import graft.streaming.StreamingExtraction
 
@@ -16,28 +15,32 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("file-stream extraction drains the directory and matches batch byte-identically") {
-    val in = Files.createTempDirectory("graft_stream_in").toString
-    val out = Files.createTempDirectory("graft_stream_out").toString
-    val ckpt = s"$out/ckpt"
+    withTempDir("graft_stream_in") { inDir =>
+      val in = inDir.toString
+      withTempDir("graft_stream_out") { outDir =>
+        val out = outDir.toString
+        val ckpt = s"$out/ckpt"
 
-    val pages = Corpus.materialize(spark, "/root/testdata/sf0.001")
-    // first arrival: half the corpus
-    pages.filter(xxhash64(col("url")) % 2 === 0)
-      .write.mode("append").parquet(in)
-    StreamingExtraction.run(spark, in, out, ckpt).awaitTermination()
-    val n1 = spark.read.parquet(s"$out/results").count()
-    assert(n1 > 0 && n1 < 500)
+        val pages = Corpus.materialize(spark, "/root/testdata/sf0.001")
+        // first arrival: half the corpus
+        pages.filter(xxhash64(col("url")) % 2 === 0)
+          .write.mode("append").parquet(in)
+        StreamingExtraction.run(spark, in, out, ckpt).awaitTermination()
+        val n1 = spark.read.parquet(s"$out/results").count()
+        assert(n1 > 0 && n1 < 500)
 
-    // second arrival: the rest; checkpoint must process only the new files
-    pages.filter(xxhash64(col("url")) % 2 =!= 0)
-      .write.mode("append").parquet(in)
-    StreamingExtraction.run(spark, in, out, ckpt).awaitTermination()
+        // second arrival: the rest; checkpoint must process only the new files
+        pages.filter(xxhash64(col("url")) % 2 =!= 0)
+          .write.mode("append").parquet(in)
+        StreamingExtraction.run(spark, in, out, ckpt).awaitTermination()
 
-    val results = spark.read.parquet(s"$out/results")
-    assert(results.count() == 500, "each doc processed exactly once across restarts")
-    val bad = results.join(pages.select(col("url"), col("text").as("expected")), Seq("url"))
-      .filter(!col("success") || col("text") =!= col("expected")).count()
-    assert(bad == 0)
+        val results = spark.read.parquet(s"$out/results")
+        assert(results.count() == 500, "each doc processed exactly once across restarts")
+        val bad = results.join(pages.select(col("url"), col("text").as("expected")), Seq("url"))
+          .filter(!col("success") || col("text") =!= col("expected")).count()
+        assert(bad == 0)
+      }
+    }
   }
 
   test("flatMapGroupsWithState sessionization: state carries across micro-batches") {

@@ -1,13 +1,15 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSupport.withTempDir
 import graft.sources.{WarcDataSource, WarcSource}
 
-/** DataSource V2 WARC connector: spark.read.format("warc") over segment
-  * objects — schema, size-balanced packing of whole segments into
-  * partitions, column pruning pushdown, glob resolution, FAILFAST on
-  * malformed framing. */
+/** The WARC file format: spark.read.format("warc") over segment objects —
+  * schema, size-balanced packing of whole segments into partitions, column
+  * pruning, glob resolution, `_metadata` pruning and scan metrics, FAILFAST
+  * on malformed framing. */
 class WarcDataSourceSpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
@@ -23,78 +25,84 @@ class WarcDataSourceSpec extends AnyFunSuite {
   }
 
   test("format(\"warc\") reads every response record of every segment, one partition per file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2").toFile
-    writeSegments(dir)
-    val df = spark.read.format("warc").load(dir.getAbsolutePath)
-    assert(df.schema == WarcDataSource.schema)
-    val rows = df.select("file", "url", "status", "content_type", "payload")
-      .as[(String, String, Int, String, Array[Byte])].collect()
-      .sortBy(r => (r._2.length, r._2))
-    assert(rows.length == 12)
-    assert(rows.forall(_._3 == 200))
-    assert(rows.forall(_._5.nonEmpty))
-    assert(rows.count(_._1.endsWith("seg1.warc.gz")) == 5)
-    val r0 = rows.find(_._2 == WarcSource.targetUri(0)).get
-    assert(new String(r0._5, java.nio.charset.StandardCharsets.UTF_8) == "alpha doc 0")
-    // two tiny segments: each counts the 4 MB open cost, so they plan apart
-    assert(df.rdd.getNumPartitions == 2)
+    withTempDir("graft_dsv2") { dir =>
+      writeSegments(dir)
+      val df = spark.read.format("warc").load(dir.getAbsolutePath)
+      assert(df.schema == WarcDataSource.schema)
+      val rows = df.select("file", "url", "status", "content_type", "payload")
+        .as[(String, String, Int, String, Array[Byte])].collect()
+        .sortBy(r => (r._2.length, r._2))
+      assert(rows.length == 12)
+      assert(rows.forall(_._3 == 200))
+      assert(rows.forall(_._5.nonEmpty))
+      assert(rows.count(_._1.endsWith("seg1.warc.gz")) == 5)
+      val r0 = rows.find(_._2 == WarcSource.targetUri(0)).get
+      assert(new String(r0._5, java.nio.charset.StandardCharsets.UTF_8) == "alpha doc 0")
+      // two tiny segments: each counts the 4 MB open cost, so they plan apart
+      assert(df.rdd.getNumPartitions == 2)
+    }
   }
 
   test("column pruning reaches the scan: select(url) reads no payload column") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_prune").toFile
-    writeSegments(dir)
-    val pruned = spark.read.format("warc").load(dir.getAbsolutePath).select("url")
-    val scans = pruned.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    withTempDir("graft_dsv2_prune") { dir =>
+      writeSegments(dir)
+      val pruned = spark.read.format("warc").load(dir.getAbsolutePath).select("url")
+      val scans = pruned.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+      assert(scans.nonEmpty, pruned.queryExecution.executedPlan.toString)
+      assert(scans.head.requiredSchema.fieldNames.toSeq == Seq("url"),
+        scans.head.requiredSchema.treeString)
+      assert(pruned.as[String].collect().toSet ==
+        (0L until 12L).map(WarcSource.targetUri).toSet)
     }
-    assert(scans.nonEmpty, pruned.queryExecution.executedPlan.toString)
-    assert(scans.head.scan.readSchema().fieldNames.toSeq == Seq("url"),
-      scans.head.scan.readSchema().treeString)
-    assert(pruned.as[String].collect().toSet ==
-      (0L until 12L).map(WarcSource.targetUri).toSet)
   }
 
   test("the reader factory every task deserializes carries the Hadoop conf by broadcast (< 16 KiB)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_factory").toFile
-    writeSegments(dir)
-    val df = spark.read.format("warc").load(dir.getAbsolutePath)
-    val scan = df.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.head
-    val bytes = new java.io.ByteArrayOutputStream()
-    val oos = new java.io.ObjectOutputStream(bytes)
-    oos.writeObject(scan.readerFactory)
-    oos.close()
-    assert(bytes.size < 16 * 1024, s"serialized reader factory is ${bytes.size} bytes")
-    assert(df.count() == 12)
+    withTempDir("graft_dsv2_factory") { dir =>
+      writeSegments(dir)
+      val df = spark.read.format("warc").load(dir.getAbsolutePath)
+      val scan = df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }.head
+      // the reader function the scan builds and ships in every task
+      val relation = scan.relation
+      val readFunction = relation.fileFormat.buildReaderWithPartitionValues(spark,
+        relation.dataSchema, relation.partitionSchema, scan.requiredSchema, Nil,
+        relation.options, spark.sparkContext.hadoopConfiguration)
+      val bytes = new java.io.ByteArrayOutputStream()
+      val oos = new java.io.ObjectOutputStream(bytes)
+      oos.writeObject(readFunction)
+      oos.close()
+      assert(bytes.size < 16 * 1024, s"serialized reader function is ${bytes.size} bytes")
+      assert(df.count() == 12)
+    }
   }
 
   test("glob paths and multi-path load resolve deterministically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_glob").toFile
-    writeSegments(dir)
-    val viaGlob = spark.read.format("warc")
-      .load(dir.getAbsolutePath + "/*.warc*").count()
-    assert(viaGlob == 12)
-    val viaPaths = spark.read.format("warc").load(
-      new java.io.File(dir, "seg0.warc").getAbsolutePath,
-      new java.io.File(dir, "seg1.warc.gz").getAbsolutePath).count()
-    assert(viaPaths == 12)
-    intercept[Exception] {
-      spark.read.format("warc").load(dir.getAbsolutePath + "/nope*").count()
+    withTempDir("graft_dsv2_glob") { dir =>
+      writeSegments(dir)
+      val viaGlob = spark.read.format("warc")
+        .load(dir.getAbsolutePath + "/*.warc*").count()
+      assert(viaGlob == 12)
+      val viaPaths = spark.read.format("warc").load(
+        new java.io.File(dir, "seg0.warc").getAbsolutePath,
+        new java.io.File(dir, "seg1.warc.gz").getAbsolutePath).count()
+      assert(viaPaths == 12)
+      intercept[Exception] {
+        spark.read.format("warc").load(dir.getAbsolutePath + "/nope*").count()
+      }
     }
   }
 
   test("malformed framing FAILFASTs the task with the parser's named error") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_bad").toFile
-    val full = WarcSource.buildFile(0, Seq((1L, "doc one")), gzipPerRecord = false)
-    java.nio.file.Files.write(new java.io.File(dir, "bad.warc").toPath,
-      full.take(full.length - 3))
-    val e = intercept[Exception] {
-      spark.read.format("warc").load(dir.getAbsolutePath).count()
+    withTempDir("graft_dsv2_bad") { dir =>
+      val full = WarcSource.buildFile(0, Seq((1L, "doc one")), gzipPerRecord = false)
+      java.nio.file.Files.write(new java.io.File(dir, "bad.warc").toPath,
+        full.take(full.length - 3))
+      val e = intercept[Exception] {
+        spark.read.format("warc").load(dir.getAbsolutePath).count()
+      }
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+      assert(messages(e).exists(_.contains("truncated")), messages(e).mkString(" | "))
     }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("truncated")), messages(e).mkString(" | "))
   }
 
   /** Runs `body` with session confs set, restoring their previous values. */
@@ -119,56 +127,75 @@ class WarcDataSourceSpec extends AnyFunSuite {
     }
 
   test("32 equal small segments plan 4 partitions of 8; each segment in one, each record read once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_pack").toFile
-    val files = writeEqualSegments(dir, 10L until 42L)
-    assert(files.map(_.length).distinct.size == 1, files.map(_.length))
-    val df = spark.read.format("warc").load(dir.getAbsolutePath)
-    assert(df.rdd.getNumPartitions == 4)
-    val rows = df.select(org.apache.spark.sql.functions.spark_partition_id(), $"file", $"url")
-      .as[(Int, String, String)].collect()
-    val partitionOf = rows.groupBy(_._2).map { case (f, rs) => f -> rs.map(_._1).distinct.toSeq }
-    assert(partitionOf.size == 32)
-    assert(partitionOf.values.forall(_.size == 1), partitionOf)
-    assert(partitionOf.values.map(_.head).groupBy(identity).values.map(_.size).toSeq == Seq(8, 8, 8, 8),
-      partitionOf)
-    assert(rows.length == 160)
-    assert(rows.map(_._3).distinct.length == 160)
+    withTempDir("graft_dsv2_pack") { dir =>
+      val files = writeEqualSegments(dir, 10L until 42L)
+      assert(files.map(_.length).distinct.size == 1, files.map(_.length))
+      val df = spark.read.format("warc").load(dir.getAbsolutePath)
+      assert(df.rdd.getNumPartitions == 4)
+      val rows = df.select(org.apache.spark.sql.functions.spark_partition_id(), $"file", $"url")
+        .as[(Int, String, String)].collect()
+      val partitionOf = rows.groupBy(_._2).map { case (f, rs) => f -> rs.map(_._1).distinct.toSeq }
+      assert(partitionOf.size == 32)
+      assert(partitionOf.values.forall(_.size == 1), partitionOf)
+      assert(partitionOf.values.map(_.head).groupBy(identity).values.map(_.size).toSeq == Seq(8, 8, 8, 8),
+        partitionOf)
+      assert(rows.length == 160)
+      assert(rows.map(_._3).distinct.length == 160)
+    }
   }
 
   test("a segment larger than spark.sql.files.maxPartitionBytes plans alone; small ones still pack") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_big").toFile
-    val small = writeEqualSegments(dir, 10L until 16L)
-    val big = new java.io.File(dir, "big.warc")
-    java.nio.file.Files.write(big.toPath, WarcSource.buildFile(99L,
-      (0L until 40L).map(i => (i, "x" * 2000)), gzipPerRecord = false))
-    val maxBytes = big.length / 2
-    assert(small.map(_.length).sum + small.size * 1024L < maxBytes)
-    withConf("spark.sql.files.maxPartitionBytes" -> maxBytes.toString,
-      "spark.sql.files.openCostInBytes" -> "1024") {
-      val df = spark.read.format("warc").load(dir.getAbsolutePath)
-      assert(df.rdd.getNumPartitions == 2)
-      val namesPerPartition = df.select(org.apache.spark.sql.functions.spark_partition_id(), $"file")
-        .distinct().as[(Int, String)].collect().groupBy(_._1).values
-        .map(_.map(r => r._2.substring(r._2.lastIndexOf('/') + 1)).toSet).toSet
-      assert(namesPerPartition == Set(Set(big.getName), small.map(_.getName).toSet), namesPerPartition)
-      assert(df.count() == 40 + 6 * 5)
+    withTempDir("graft_dsv2_big") { dir =>
+      val small = writeEqualSegments(dir, 10L until 16L)
+      val big = new java.io.File(dir, "big.warc")
+      java.nio.file.Files.write(big.toPath, WarcSource.buildFile(99L,
+        (0L until 40L).map(i => (i, "x" * 2000)), gzipPerRecord = false))
+      val maxBytes = big.length / 2
+      assert(small.map(_.length).sum + small.size * 1024L < maxBytes)
+      withConf("spark.sql.files.maxPartitionBytes" -> maxBytes.toString,
+        "spark.sql.files.openCostInBytes" -> "1024") {
+        val df = spark.read.format("warc").load(dir.getAbsolutePath)
+        assert(df.rdd.getNumPartitions == 2)
+        val namesPerPartition = df.select(org.apache.spark.sql.functions.spark_partition_id(), $"file")
+          .distinct().as[(Int, String)].collect().groupBy(_._1).values
+          .map(_.map(r => r._2.substring(r._2.lastIndexOf('/') + 1)).toSet).toSet
+        assert(namesPerPartition == Set(Set(big.getName), small.map(_.getName).toSet), namesPerPartition)
+        assert(df.count() == 40 + 6 * 5)
+      }
     }
   }
 
   test("a framing error in a packed partition names the failing segment") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_packed_bad").toFile
-    java.nio.file.Files.write(new java.io.File(dir, "good.warc").toPath,
-      WarcSource.buildFile(0, (0L until 6L).map(i => (i, s"doc $i")), gzipPerRecord = false))
-    val full = WarcSource.buildFile(1, Seq((9L, "doc nine")), gzipPerRecord = false)
-    java.nio.file.Files.write(new java.io.File(dir, "rotten.warc").toPath, full.take(full.length - 3))
-    withConf("spark.sql.files.minPartitionNum" -> "1") {
+    withTempDir("graft_dsv2_packed_bad") { dir =>
+      java.nio.file.Files.write(new java.io.File(dir, "good.warc").toPath,
+        WarcSource.buildFile(0, (0L until 6L).map(i => (i, s"doc $i")), gzipPerRecord = false))
+      val full = WarcSource.buildFile(1, Seq((9L, "doc nine")), gzipPerRecord = false)
+      java.nio.file.Files.write(new java.io.File(dir, "rotten.warc").toPath, full.take(full.length - 3))
+      withConf("spark.sql.files.minPartitionNum" -> "1") {
+        val df = spark.read.format("warc").load(dir.getAbsolutePath)
+        assert(df.rdd.getNumPartitions == 1)
+        val e = intercept[Exception](df.count())
+        def messages(t: Throwable): Seq[String] =
+          Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+        assert(messages(e).exists(m => m.contains("truncated") && m.contains("rotten.warc")),
+          messages(e).mkString(" | "))
+      }
+    }
+  }
+  test("a _metadata.file_name filter skips the excluded segments; the scan meters files and rows") {
+    withTempDir("graft_warc_meta") { dir =>
+      val files = writeEqualSegments(dir, 10L until 16L)
+      val kept = files.take(2)
       val df = spark.read.format("warc").load(dir.getAbsolutePath)
-      assert(df.rdd.getNumPartitions == 1)
-      val e = intercept[Exception](df.count())
-      def messages(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-      assert(messages(e).exists(m => m.contains("truncated") && m.contains("rotten.warc")),
-        messages(e).mkString(" | "))
+        .filter(org.apache.spark.sql.functions.col("_metadata.file_name").isin(kept.map(_.getName): _*))
+        .select("url")
+      val urls = df.collect().map(_.getString(0))
+      assert(urls.length == 10)
+      assert(urls.toSet == Seq(10L, 11L).flatMap(f => (0L until 5L).map(j => WarcSource.targetUri(f * 10 + j))).toSet)
+      val scan = df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }.head
+      assert(scan.metrics("numFiles").value == 2, scan.metrics)
+      assert(scan.metrics("filesSize").value == kept.map(_.length).sum, scan.metrics)
+      assert(scan.metrics("numOutputRows").value == 10, scan.metrics)
     }
   }
 }

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSupport.withTempDir
 import graft.sources.WarcSource
 
 /** WARC writer/parser contract: framing, per-record gzip, containment. */
@@ -75,6 +76,27 @@ class WarcSourceSpec extends AnyFunSuite {
     assert(e4.getMessage.contains("trailer is not CRLFCRLF"))
   }
 
+  test("a record claiming more bytes than its segment holds costs what was read (< 4 MiB allocated)") {
+    // a 1.5 GB Content-Length over a ~100-byte body: the buffer must grow
+    // with the bytes that arrive, not be allocated at the claimed size
+    val http = "HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\nonly a few bytes"
+    val segment = ("WARC/1.1\r\nWARC-Type: response\r\nContent-Length: 1500000000\r\n\r\n" + http)
+      .getBytes(UTF_8)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    intercept[IllegalArgumentException](WarcSource.parse(segment)) // load classes outside the measurement
+    val before = mx.getCurrentThreadAllocatedBytes
+    val e = intercept[IllegalArgumentException](WarcSource.parse(segment))
+    val allocated = mx.getCurrentThreadAllocatedBytes - before
+    assert(e.getMessage.contains("truncated"), e.getMessage)
+    assert(allocated < (4L << 20), s"allocated $allocated bytes")
+    // a record past the first 64 KiB chunk still arrives byte-exact
+    val big = Array.tabulate[Byte](300 * 1024)(i => ('a' + i % 26).toByte)
+    val parsed = WarcSource.parse(WarcSource.buildBinaryFile(0L, Seq("https://ex.com/big" -> big),
+      gzipPerRecord = false))
+    assert(parsed.map(_.payload.toSeq) == Seq(big.toSeq))
+  }
+
   test("parseStream walks records incrementally — one record of memory, not the file") {
     // build 200 records, stream them off a one-byte-at-a-time InputStream
     // (the adversarial read() shape), and confirm lazy per-record iteration
@@ -93,53 +115,55 @@ class WarcSourceSpec extends AnyFunSuite {
   }
 
   test("extractFromWarcFiles streams segments; a rotten file is ONE failure row, not a dead job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warcfiles").toFile
-    val paras = Vector("alpha bravo charlie delta echo", "foxtrot golf hotel india juliet")
-    val pages = (0 until 20).map { i =>
-      (s"https://ex.com/d$i", graft.serialize.DocxWriter.generate(paras, 0))
+    withTempDir("graft_warcfiles") { dir =>
+      val paras = Vector("alpha bravo charlie delta echo", "foxtrot golf hotel india juliet")
+      val pages = (0 until 20).map { i =>
+        (s"https://ex.com/d$i", graft.serialize.DocxWriter.generate(paras, 0))
+      }
+      val good = new java.io.File(dir, "seg1.warc.gz")
+      java.nio.file.Files.write(good.toPath,
+        WarcSource.buildBinaryFile(1, pages, gzipPerRecord = true))
+      // same content, last gzip member truncated mid-trailer: records BEFORE
+      // the cut must still extract, then exactly one contained failure row
+      val full = WarcSource.buildBinaryFile(2, pages, gzipPerRecord = true)
+      val bad = new java.io.File(dir, "seg2.warc.gz")
+      java.nio.file.Files.write(bad.toPath, full.take(full.length - 7))
+      val out = WarcSource.extractFromWarcFiles(
+        spark, Seq(good, bad).map(_.getAbsolutePath)).collect()
+      val (ok, failed) = out.partition(_.success)
+      assert(ok.length >= 20, s"good-segment records missing: ${ok.length}")
+      assert(ok.forall(r => r.format_from == "docx" && r.text == paras.mkString("\n")),
+        ok.map(r => (r.format_from, r.text)).take(2).mkString)
+      assert(failed.length === 1, failed.mkString("\n"))
+      assert(failed.head.url.endsWith("seg2.warc.gz") && failed.head.format_from == "warc" &&
+        failed.head.error.contains("WARC segment unreadable"), failed.head.toString)
     }
-    val good = new java.io.File(dir, "seg1.warc.gz")
-    java.nio.file.Files.write(good.toPath,
-      WarcSource.buildBinaryFile(1, pages, gzipPerRecord = true))
-    // same content, last gzip member truncated mid-trailer: records BEFORE
-    // the cut must still extract, then exactly one contained failure row
-    val full = WarcSource.buildBinaryFile(2, pages, gzipPerRecord = true)
-    val bad = new java.io.File(dir, "seg2.warc.gz")
-    java.nio.file.Files.write(bad.toPath, full.take(full.length - 7))
-    val out = WarcSource.extractFromWarcFiles(
-      spark, Seq(good, bad).map(_.getAbsolutePath)).collect()
-    val (ok, failed) = out.partition(_.success)
-    assert(ok.length >= 20, s"good-segment records missing: ${ok.length}")
-    assert(ok.forall(r => r.format_from == "docx" && r.text == paras.mkString("\n")),
-      ok.map(r => (r.format_from, r.text)).take(2).mkString)
-    assert(failed.length === 1, failed.mkString("\n"))
-    assert(failed.head.url.endsWith("seg2.warc.gz") && failed.head.format_from == "warc" &&
-      failed.head.error.contains("WARC segment unreadable"), failed.head.toString)
   }
 
   test("extractFromWarcFiles takes its tasks from the segment plan, with no shuffle") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warcplan").toFile
-    val paths = (10L until 18L).map { f =>
-      val file = new java.io.File(dir, s"seg$f.warc")
-      val pages = (0L until 5L).map(j => (f * 10 + j, s"page ${f * 10 + j}"))
-      java.nio.file.Files.write(file.toPath, WarcSource.buildFile(f, pages, gzipPerRecord = false))
-      file.getAbsolutePath
+    withTempDir("graft_warcplan") { dir =>
+      val paths = (10L until 18L).map { f =>
+        val file = new java.io.File(dir, s"seg$f.warc")
+        val pages = (0L until 5L).map(j => (f * 10 + j, s"page ${f * 10 + j}"))
+        java.nio.file.Files.write(file.toPath, WarcSource.buildFile(f, pages, gzipPerRecord = false))
+        file.getAbsolutePath
+      }
+      val ds = WarcSource.extractFromWarcFiles(spark, paths)
+      // 8 equal small segments at 4 cores: 4 tasks of 2, as format("warc") plans them
+      assert(ds.rdd.getNumPartitions == 4)
+      assert(spark.read.format("warc").load(paths: _*).rdd.getNumPartitions == 4)
+      assert(!ds.queryExecution.executedPlan.toString.contains("Exchange"),
+        ds.queryExecution.executedPlan.toString)
+      val out = ds.collect()
+      assert(out.length == 40 && out.forall(_.success))
+      assert(out.map(_.url).toSet == (10L until 18L).flatMap(f => (0L until 5L).map(j => WarcSource.targetUri(f * 10 + j))).toSet)
+      assert(out.map(_.partition_id).distinct.length == 4)
+      // a path that cannot even be listed still plans, and is one failure row
+      val missing = new java.io.File(dir, "missing.warc").getAbsolutePath
+      val failed = WarcSource.extractFromWarcFiles(spark, Seq(missing)).collect()
+      assert(failed.length == 1 && !failed.head.success && failed.head.url == s"warc:$missing",
+        failed.mkString("\n"))
     }
-    val ds = WarcSource.extractFromWarcFiles(spark, paths)
-    // 8 equal small segments at 4 cores: 4 tasks of 2, as format("warc") plans them
-    assert(ds.rdd.getNumPartitions == 4)
-    assert(spark.read.format("warc").load(paths: _*).rdd.getNumPartitions == 4)
-    assert(!ds.queryExecution.executedPlan.toString.contains("Exchange"),
-      ds.queryExecution.executedPlan.toString)
-    val out = ds.collect()
-    assert(out.length == 40 && out.forall(_.success))
-    assert(out.map(_.url).toSet == (10L until 18L).flatMap(f => (0L until 5L).map(j => WarcSource.targetUri(f * 10 + j))).toSet)
-    assert(out.map(_.partition_id).distinct.length == 4)
-    // a path that cannot even be listed still plans, and is one failure row
-    val missing = new java.io.File(dir, "missing.warc").getAbsolutePath
-    val failed = WarcSource.extractFromWarcFiles(spark, Seq(missing)).collect()
-    assert(failed.length == 1 && !failed.head.success && failed.head.url == s"warc:$missing",
-      failed.mkString("\n"))
   }
 
   test("roundTrip surfaces every doc once with the parsed fields recomputable from text") {
