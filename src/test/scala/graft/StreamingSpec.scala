@@ -15,13 +15,13 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("file-stream extraction drains the directory and matches batch byte-identically") {
+    val pages = Corpus.materialize(spark, "/root/testdata/sf0.001")
     withTempDir("graft_stream_in") { inDir =>
       val in = inDir.toString
       withTempDir("graft_stream_out") { outDir =>
         val out = outDir.toString
         val ckpt = s"$out/ckpt"
 
-        val pages = Corpus.materialize(spark, "/root/testdata/sf0.001")
         // first arrival: half the corpus
         pages.filter(xxhash64(col("url")) % 2 === 0)
           .write.mode("append").parquet(in)
