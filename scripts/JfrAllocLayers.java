@@ -30,7 +30,6 @@ public final class JfrAllocLayers {
     {"kernel", "graft.extract."},
     {"source read", "graft.sources.",
       "org.apache.spark.sql.execution.datasources.FileScanRDD",
-      "org.apache.spark.sql.execution.datasources.v2.DataSourceRDD",
       "org.apache.parquet.hadoop.ParquetFileReader",
       "org.apache.spark.sql.execution.datasources.parquet.Vectorized"},
     {"shuffle read", "org.apache.spark.shuffle.BlockStoreShuffleReader",

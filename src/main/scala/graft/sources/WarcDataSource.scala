@@ -1,14 +1,9 @@
 package graft.sources
 
-import java.io.IOException
-
-import scala.util.control.NonFatal
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.Job
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -41,12 +36,14 @@ import org.apache.spark.util.SerializableConfiguration
   * Hadoop conf reaches the readers as one broadcast per scan, as in
   * Spark's own formats, so a task ships only its files.
   *
-  * Error semantics are FAILFAST like Spark's file sources: malformed
-  * framing fails the task with the parser's NAMED error, rethrown with the
-  * failing segment's path. The extraction pipeline's per-file CONTAINMENT
-  * path (one failure row per rotten segment, job survives) is
-  * [[WarcSource.extractFromWarcFiles]] — use that for production ingest;
-  * this format is the queryable relational view of raw segments.
+  * This is the read path of the resumable WARC job (`perfbench`'s
+  * `warc_resume` feeds it to `ResumableRunner`) and of ad-hoc queries over
+  * raw segments. Error semantics are FAILFAST like Spark's file sources:
+  * malformed framing fails the task with the parser's NAMED error,
+  * rethrown with the failing segment's path, so a rotten segment stops the
+  * job. [[WarcSource.extractFromWarcFiles]] is the CONTAINED path instead
+  * (one failure row per rotten segment, the job survives). Both read
+  * segments through [[WarcSource.segmentRecords]].
   */
 class WarcDataSource extends FileFormat with DataSourceRegister {
   override def shortName(): String = "warc"
@@ -88,43 +85,26 @@ object WarcDataSource {
     StructField("payload", BinaryType)))
 
   /** The response records of one segment as rows of `columns` (an
-    * unselected payload column is never copied). The segment closes at
-    * exhaustion and at task end; a failure is rethrown naming it. */
+    * unselected payload column is never copied). A failure is rethrown
+    * naming the segment: FAILFAST. */
   private def readSegment(path: String, conf: Configuration,
                           columns: Array[String]): Iterator[InternalRow] = {
-    def inSegment[T](body: => T): T =
-      try body catch {
-        case NonFatal(e) => throw new IOException(s"WARC segment $path: ${e.getMessage}", e)
-      }
-    val records = inSegment(WarcSource.openSegment(path, conf))
-    var open = true
-    def close(): Unit = if (open) { open = false; records.close() }
-    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
-
     val fileUtf8 = UTF8String.fromString(path)
-    val getters: Array[WarcSource.ParsedResponse => Any] =
-      columns.map[WarcSource.ParsedResponse => Any] {
-        case "file" => _ => fileUtf8
-        case "url" => r => UTF8String.fromString(r.url)
-        case "date" => r => UTF8String.fromString(r.date)
-        case "status" => r => r.status
-        case "content_type" => r => UTF8String.fromString(r.contentType)
-        case "payload" => r => r.payload
-        case other => throw new IllegalArgumentException(s"unknown warc column $other")
-      }
+    val getters = columns.map[WarcSource.ParsedResponse => Any] {
+      case "file" => _ => fileUtf8
+      case "url" => r => UTF8String.fromString(r.url)
+      case "date" => r => UTF8String.fromString(r.date)
+      case "status" => r => r.status
+      case "content_type" => r => UTF8String.fromString(r.contentType)
+      case "payload" => r => r.payload
+      case other => throw new IllegalArgumentException(s"unknown warc column $other")
+    }
     val row = new GenericInternalRow(getters.length)
-    new Iterator[InternalRow] {
-      def hasNext: Boolean = open && {
-        val more = inSegment(records.hasNext)
-        if (!more) close()
-        more
-      }
-      def next(): InternalRow = {
-        val r = inSegment(records.next())
-        var i = 0
-        while (i < getters.length) { row.update(i, getters(i)(r)); i += 1 }
-        row
-      }
+    WarcSource.segmentRecords(path, conf,
+      e => throw new java.io.IOException(s"WARC segment $path: ${e.getMessage}", e)).map { r =>
+      var i = 0
+      while (i < getters.length) { row.update(i, getters(i)(r)); i += 1 }
+      row
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, ByteArrayInputStream, ByteArrayOutputStream, Closeable, InputStream,
-  PushbackInputStream}
+import java.io.{BufferedInputStream, ByteArrayInputStream, ByteArrayOutputStream, Closeable, EOFException,
+  InputStream, PushbackInputStream}
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
@@ -9,6 +9,7 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.TaskContext
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -36,13 +37,18 @@ import graft.model.{ExtractionResult, WebPage}
   *    response payloads with status / Content-Type.
   *
   * Scale shape: in production each task reads ONE ~1 GB .warc.gz object
-  * (`spark.read.format("warc")`, [[WarcDataSource]], or
-  * [[extractFromWarcFiles]]) and streams records out of it — a segment is
-  * never split, because record-gzip members are not independently
-  * seekable without an index; smaller segments are packed several to a
-  * task by Spark's own small-file rule, the same on both read paths. Both
-  * read paths open objects through a broadcast Hadoop conf, so a task's
-  * closure stays a few KB however large the cluster's conf is.
+  * and streams records out of it — a segment is never split, because
+  * record-gzip members are not independently seekable without an index;
+  * smaller segments are packed several to a task by Spark's own small-file
+  * rule. There are two read paths, and both open, close and report a
+  * segment's failure through [[segmentRecords]] over a broadcast Hadoop
+  * conf (a task's closure stays a few KB however large the cluster's conf
+  * is); they differ only in what a failure does:
+  *  - `spark.read.format("warc")` ([[WarcDataSource]]) is FAILFAST: a
+  *    rotten segment fails the job, naming it. The resumable WARC job
+  *    reads this way;
+  *  - [[extractFromWarcFiles]] CONTAINS it: a rotten segment is one
+  *    failure row and the job goes on.
   * `parseStream` holds only the CURRENT record in memory (one record body
   * at a time, never the inflated file), so a multi-GB segment costs one
   * record's worth of heap per task, and a record's buffer grows with the
@@ -223,11 +229,11 @@ object WarcSource {
     new Iterator[ParsedResponse] with Closeable {
       def close(): Unit = in.close()
 
-      private var pending: Option[ParsedResponse] = None
+      private var pending: ParsedResponse = null
       private var eof = b0 < 0
 
       private def advance(): Unit =
-        while (pending.isEmpty && !eof) {
+        try while (pending == null && !eof) {
           val head = readHeaderBlock(in)
           if (head == null) { eof = true }
           else {
@@ -239,24 +245,25 @@ object WarcSource {
               throw new IllegalArgumentException("WARC record lacks Content-Length"))
             require(lenStr.nonEmpty && lenStr.forall(_.isDigit),
               s"malformed WARC Content-Length '$lenStr'")
-            val len = lenStr.toLong
+            // all digits, so only a value past the Long range fails to parse
+            val len = try lenStr.toLong catch { case _: NumberFormatException => Long.MaxValue }
             require(len <= maxRecordBytes,
-              s"WARC record of $len bytes exceeds the $maxRecordBytes-byte per-record limit")
+              s"WARC record of $lenStr bytes exceeds the $maxRecordBytes-byte per-record limit")
             val body = readFully(in, len.toInt, "record body")
             val t = readFully(in, 4, "record trailer")
             require(t(0) == '\r' && t(1) == '\n' && t(2) == '\r' && t(3) == '\n',
               "WARC record trailer is not CRLFCRLF")
             if (headers.get("WARC-Type").contains("response"))
-              pending = Some(parseHttpResponse(headers, body))
+              pending = parseHttpResponse(headers, body)
           }
+        } catch { // GZIPInputStream reports a cut member as an EOFException, often with no message
+          case e: EOFException => throw new IllegalArgumentException("WARC stream truncated inside a gzip member", e)
         }
 
-      def hasNext: Boolean = { advance(); pending.isDefined }
+      def hasNext: Boolean = { advance(); pending != null }
       def next(): ParsedResponse = {
-        advance()
-        val r = pending.getOrElse(throw new NoSuchElementException("past WARC EOF"))
-        pending = None
-        r
+        if (!hasNext) throw new NoSuchElementException("past WARC EOF")
+        try pending finally pending = null
       }
     }
   }
@@ -269,14 +276,15 @@ object WarcSource {
     val eol = httpHead.indexOf(CRLF)
     val statusLine = if (eol < 0) httpHead else httpHead.substring(0, eol)
     val parts = statusLine.split(" ")
-    require(parts.length >= 2 && parts(0).startsWith("HTTP/") &&
-      parts(1).nonEmpty && parts(1).forall(_.isDigit),
-      s"malformed HTTP status line '$statusLine'")
+    // -1 for a missing, empty, non-numeric or past-Int status code
+    val status = if (parts.length < 2 || !parts(1).forall(_.isDigit)) -1
+      else try parts(1).toInt catch { case _: NumberFormatException => -1 }
+    require(status >= 0 && parts(0).startsWith("HTTP/"), s"malformed HTTP status line '$statusLine'")
     val httpHeaders = parseHeaders(httpHead)
     ParsedResponse(
       url = warcHeaders.getOrElse("WARC-Target-URI", ""),
       date = warcHeaders.getOrElse("WARC-Date", ""),
-      status = parts(1).toInt,
+      status = status,
       contentType = httpHeaders.getOrElse("Content-Type", ""),
       payload = java.util.Arrays.copyOfRange(body, httpHdrEnd + 4, body.length))
   }
@@ -285,24 +293,48 @@ object WarcSource {
   def parse(bytes: Array[Byte]): Seq[ParsedResponse] =
     parseStream(new ByteArrayInputStream(bytes)).toSeq
 
-  /** One segment off the Hadoop FS as a record iterator over a 64 KiB
-    * buffer (works on HDFS/S3A, not just file://). Closing the iterator
-    * closes the stream and the inflater; a failure while opening closes
-    * the stream before it propagates. */
-  private[sources] def openSegment(path: String, conf: org.apache.hadoop.conf.Configuration)
-      : Iterator[ParsedResponse] with Closeable = {
-    val hp = new Path(path)
-    val stream = new BufferedInputStream(hp.getFileSystem(conf).open(hp), 64 * 1024)
-    try parseStream(stream)
-    catch {
-      case NonFatal(e) =>
-        try stream.close() catch { case NonFatal(c) => e.addSuppressed(c) }
-        throw e
+  /** The response records of the segment at `path`, streamed off its Hadoop
+    * FS (HDFS, S3A, file://) over a 64 KiB buffer. The segment closes
+    * exactly once: at exhaustion, at the first failure, or at task end when
+    * the task stops pulling early (limit, kill, a downstream throw), which
+    * would otherwise leak the fd or S3A connection. The first failure,
+    * opening included, goes to `onFailure` (which may rethrow), and the
+    * records end there. */
+  def segmentRecords(path: String, conf: org.apache.hadoop.conf.Configuration,
+                     onFailure: Throwable => Unit): Iterator[ParsedResponse] = {
+    // the open stream, then the records over it (closing them also ends the
+    // inflater); null once closed, so a task's listeners do not keep one
+    // segment's buffers each until the task ends
+    var source: Closeable = null
+    def close(): Unit = if (source != null) {
+      try source.close() catch { case NonFatal(_) => () }
+      source = null
+    }
+    def fail(e: Throwable): Boolean = { close(); onFailure(e); false }
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+    val records: Iterator[ParsedResponse] = try {
+      val hp = new Path(path)
+      val stream = new BufferedInputStream(hp.getFileSystem(conf).open(hp), 64 * 1024)
+      source = stream
+      val parsed = parseStream(stream)
+      source = parsed
+      parsed
+    } catch { case NonFatal(e) => fail(e); Iterator.empty }
+    new Iterator[ParsedResponse] {
+      def hasNext: Boolean = source != null && {
+        val more = try records.hasNext catch { case NonFatal(e) => fail(e) }
+        if (!more) close()
+        more
+      }
+      def next(): ParsedResponse = if (hasNext) records.next() else Iterator.empty.next()
     }
   }
 
-  /** PRODUCTION ingest entry: stream-extract every HTTP response record of
-    * every listed .warc(.gz) object. Tasks take whole segments, grouped by
+  /** The CONTAINED extraction path: stream-extract every HTTP response
+    * record of every listed .warc(.gz) object, for a crawl in which one
+    * rotten segment must not stop the job (no job in this repo calls it
+    * yet; the resumable WARC job reads the FAILFAST `format("warc")`
+    * scan). Tasks take whole segments, grouped by
     * Spark's file-scan packing (`FilePartition.maxSplitBytes` and
     * `getFilePartitions` over the segments, largest first), as the
     * `format("warc")` scan plans them (a segment is never split, because
@@ -333,61 +365,22 @@ object WarcSource {
       .map(_.files.map(_.toPath.toString).toSeq)
     val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
     spark.createDataset(sc.parallelize(groups, math.max(groups.size, 1)).mapPartitions { group =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      group.flatMap(_.iterator.flatMap(p => containedFileRecords(p, pid, conf.value.value)))
-    })
-  }
-
-  /** Extraction iterator over one WARC object with per-FILE containment:
-    * any throw — opening, a record's framing, mid-stream truncation —
-    * yields one failure row for the file and ends it. (Per-RECORD payload
-    * errors are already contained inside Extractor.extractOne as ordinary
-    * failure rows.) */
-  private def containedFileRecords(p: String, pid: Int,
-      conf: org.apache.hadoop.conf.Configuration): Iterator[ExtractionResult] = {
-    def failRow(e: Throwable) = ExtractionResult(
-      url = s"warc:$p", success = false, text = "", format_from = "warc",
-      original_size = 0L, new_size = 0L,
-      error = s"WARC segment unreadable: ${e.getMessage}", partition_id = pid)
-    // the record iterator, which closes the file stream and the inflater
-    var open: Closeable = null
-    def closeQuietly(): Unit =
-      try { if (open != null) open.close() } catch { case NonFatal(_) => () }
-    // a task that stops pulling early (limit/take, kill, downstream throw)
-    // never drains the iterator, so hasNext's close-on-exhaustion path
-    // would leak the fd/S3A connection — close at task end regardless
-    // (the format("warc") reader registers the same listener)
-    Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] {
-      _ => closeQuietly()
-    })
-    val underlying: Iterator[ExtractionResult] =
-      try {
-        val records = openSegment(p, conf)
-        open = records
-        records.map { r =>
+      val pid = TaskContext.getPartitionId()
+      // per-FILE containment: a segment's first failure (opening, framing,
+      // truncation) is one row after its records; per-RECORD payload errors
+      // are failure rows of Extractor.extractOne already. `++` takes the row
+      // by name, so it is built once the records are exhausted.
+      group.flatMap(_.iterator.flatMap { p =>
+        var failure: Throwable = null
+        segmentRecords(p, conf.value.value, e => failure = e).map { r =>
           graft.extract.Extractor.extractOne(
             WebPage(r.url, new java.sql.Timestamp(0L), r.payload, "", ""), pid)
+        } ++ Option(failure).map { e =>
+          ExtractionResult(url = s"warc:$p", success = false, text = "", format_from = "warc",
+            original_size = 0L, new_size = 0L,
+            error = s"WARC segment unreadable: ${e.getMessage}", partition_id = pid)
         }
-      } catch {
-        case NonFatal(e) => return Iterator.single(failRow(e))
-      }
-    new Iterator[ExtractionResult] {
-      private var pendingFail: Option[ExtractionResult] = None
-      private var done = false
-      def hasNext: Boolean = pendingFail.isDefined || (!done && {
-        val h = try underlying.hasNext catch {
-          case NonFatal(e) => pendingFail = Some(failRow(e)); true
-        }
-        if (!h) { done = true; closeQuietly() }
-        h
       })
-      def next(): ExtractionResult = pendingFail match {
-        case Some(f) => pendingFail = None; done = true; closeQuietly(); f
-        case None =>
-          try underlying.next() catch {
-            case NonFatal(e) => done = true; closeQuietly(); failRow(e)
-          }
-      }
-    }
+    })
   }
 }

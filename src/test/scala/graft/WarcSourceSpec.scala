@@ -67,6 +67,17 @@ class WarcSourceSpec extends AnyFunSuite {
         "WARC/1.1\r\nWARC-Type: response\r\nContent-Length: 12abc\r\n\r\n".getBytes(UTF_8))
     }
     assert(e3.getMessage.contains("malformed WARC Content-Length"))
+    // numbers past the Long / Int range are named errors too, not a bare
+    // NumberFormatException
+    val e3b = intercept[IllegalArgumentException] {
+      WarcSource.parse(
+        "WARC/1.1\r\nWARC-Type: response\r\nContent-Length: 99999999999999999999\r\n\r\n".getBytes(UTF_8))
+    }
+    assert(e3b.getMessage.contains("per-record limit"), e3b.getMessage)
+    val e3c = intercept[IllegalArgumentException] {
+      WarcSource.parse(respond("HTTP/1.1 99999999999 OK", null))
+    }
+    assert(e3c.getMessage.contains("malformed HTTP status line"), e3c.getMessage)
     // a record whose 4 trailer bytes are not CRLFCRLF (next record's data
     // would silently misalign): body 'abcd' followed by 'XXXX'
     val e4 = intercept[IllegalArgumentException] {
@@ -136,7 +147,8 @@ class WarcSourceSpec extends AnyFunSuite {
         ok.map(r => (r.format_from, r.text)).take(2).mkString)
       assert(failed.length === 1, failed.mkString("\n"))
       assert(failed.head.url.endsWith("seg2.warc.gz") && failed.head.format_from == "warc" &&
-        failed.head.error.contains("WARC segment unreadable"), failed.head.toString)
+        failed.head.error == "WARC segment unreadable: WARC stream truncated inside a gzip member",
+        failed.head.toString)
     }
   }
 
@@ -161,8 +173,34 @@ class WarcSourceSpec extends AnyFunSuite {
       // a path that cannot even be listed still plans, and is one failure row
       val missing = new java.io.File(dir, "missing.warc").getAbsolutePath
       val failed = WarcSource.extractFromWarcFiles(spark, Seq(missing)).collect()
-      assert(failed.length == 1 && !failed.head.success && failed.head.url == s"warc:$missing",
-        failed.mkString("\n"))
+      assert(failed.length == 1 && !failed.head.success && failed.head.url == s"warc:$missing" &&
+        failed.head.error == s"WARC segment unreadable: File $missing does not exist", failed.mkString("\n"))
+    }
+  }
+
+  test("a task that stops early closes every segment it opened, on both read paths") {
+    val fds = java.nio.file.Paths.get("/proc/self/fd")
+    assume(java.nio.file.Files.isDirectory(fds), "counts open files through /proc/self/fd")
+    withTempDir("graft_warcclose") { dir =>
+      val paths = (0L until 4L).map { f =>
+        val file = new java.io.File(dir, s"seg$f.warc.gz")
+        val pages = (0L until 20L).map(j => (f * 100 + j, s"page ${f * 100 + j}"))
+        java.nio.file.Files.write(file.toPath, WarcSource.buildFile(f, pages, gzipPerRecord = true))
+        file.getAbsolutePath
+      }
+      val root = dir.getCanonicalFile.toPath
+      // descriptors this JVM holds on files under the temp dir
+      def openFilesInDir(): Int = {
+        val links = java.nio.file.Files.list(fds)
+        try links.toArray.count { l =>
+          scala.util.Try(java.nio.file.Files.readSymbolicLink(l.asInstanceOf[java.nio.file.Path]))
+            .toOption.exists(_.startsWith(root))
+        } finally links.close()
+      }
+      assert(spark.read.format("warc").load(paths: _*).limit(1).collect().length == 1)
+      assert(openFilesInDir() == 0)
+      assert(WarcSource.extractFromWarcFiles(spark, paths).limit(1).collect().length == 1)
+      assert(openFilesInDir() == 0)
     }
   }
 
