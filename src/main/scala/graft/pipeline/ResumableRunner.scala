@@ -118,12 +118,22 @@ object ResumableRunner {
 
   private val manifestSchema = Encoders.product[ManifestEntry].schema
 
+  /** Parquet's page size for both writes: 64 KiB, not the 1 MiB default.
+    * parquet-mr sizes each file's compressor output buffer up front at the
+    * page size, so at 1 MiB every bucket file (about a hundred rows on a
+    * small run) allocated 1 MiB, a humongous object under G1's 1 MiB
+    * regions. Snappy compresses in 64 KiB blocks, so the smaller pages
+    * compress as well. Per write, like [[NioLocalFileSystem.writeOptions]],
+    * never a session conf. */
+  private val smallPages = Map("parquet.page.size" -> (64 * 1024).toString)
+
   def run(spark: SparkSession, pages: Dataset[WebPage], outDir: String,
           runId: String, numBuckets: Int): RunSummary =
     run(spark, pages, outDir, runId, numBuckets, NioLocalFileSystem.writeOptions)
 
   /** [[run]] with the results and manifest writes given `writeOptions` (the
-    * tests compare [[NioLocalFileSystem.writeOptions]] with none). */
+    * tests compare [[NioLocalFileSystem.writeOptions]] with none) on top of
+    * the runner's page size. */
   private[graft] def run(spark: SparkSession, pages: Dataset[WebPage], outDir: String,
                          runId: String, numBuckets: Int,
                          writeOptions: Map[String, String]): RunSummary = {
@@ -158,7 +168,9 @@ object ResumableRunner {
     val results: Dataset[ExtractionResult] = remaining
       .withColumn("text", lit(""))
       .repartition(col("bucket"))
-      .select(col("bucket"), col("url"), col("warc_ts"), col("html"), col("text"), col("lang"))
+      // `as` binds columns by name: a `select` here would put a Project
+      // between the shuffle read and the deserializer, one more copy of
+      // every row and its payload
       .as[BucketedPage]
       .mapPartitions { it =>
         it.map { p =>
@@ -171,7 +183,7 @@ object ResumableRunner {
     // per-WRITE dynamic overwrite (only the buckets this run produced are
     // replaced) — scoped to this writer, not a session-wide conf mutation
     // that would silently change overwrite semantics for caller code
-    results.write.mode(SaveMode.Overwrite).options(writeOptions)
+    results.write.mode(SaveMode.Overwrite).options(writeOptions ++ smallPages)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("partition_id").parquet(resultsDir)
 
@@ -179,7 +191,7 @@ object ResumableRunner {
     val manifest: Seq[ManifestEntry] =
       prior.toSeq ++ fresh.map { case (b, (docs, _)) => ManifestEntry(runId, b, "done", docs) }
     // O(numBuckets) rows: one task, one file
-    manifest.toDS().coalesce(1).write.mode(SaveMode.Overwrite).options(writeOptions)
+    manifest.toDS().coalesce(1).write.mode(SaveMode.Overwrite).options(writeOptions ++ smallPages)
       .parquet(manifestDir)
 
     RunSummary(runId, numBuckets,

@@ -49,15 +49,17 @@ import graft.model.{ExtractionResult, WebPage}
   *    reads this way;
   *  - [[extractFromWarcFiles]] CONTAINS it: a rotten segment is one
   *    failure row and the job goes on.
-  * `parseStream` holds only the CURRENT record in memory (one record body
-  * at a time, never the inflated file), so a multi-GB segment costs one
-  * record's worth of heap per task, and a record's buffer grows with the
-  * bytes that arrive, not with the length its header claims; a single
-  * record larger than ~2 GiB is a named error (the JVM cannot hold one
-  * byte array past that, and real crawls cap records far below it). The
-  * `src_warc_*` queries (`graft.queries.SourceQueries`) write the
-  * documents table through this writer so the oracle can recompute every
-  * parsed field from SQL.
+  * `parseStream` holds only the CURRENT record in memory, never the
+  * inflated file: it reads a response's HTTP head, then the rest of the
+  * block straight into the payload array (each payload is read once), and
+  * reads past the bodies of other records without keeping them. So a
+  * multi-GB segment costs one record's worth of heap per task, and a
+  * payload's buffer grows with the bytes that arrive, not with the length
+  * its header claims; a single record larger than ~2 GiB is a named
+  * error (the JVM cannot hold one byte array past that, and real crawls
+  * cap records far below it). The `src_warc_*` queries
+  * (`graft.queries.SourceQueries`) write the documents table through this
+  * writer so the oracle can recompute every parsed field from SQL.
   */
 object WarcSource {
 
@@ -71,7 +73,7 @@ object WarcSource {
   val docsPerFile = 50
 
   /** Framing guards: WARC named headers are small (64 KiB is far past any
-    * spec'd field), and one record body must fit a JVM byte array. */
+    * spec'd field), and one payload must fit a JVM byte array. */
   private val maxHeaderBytes = 64 * 1024
   private val maxRecordBytes: Long = Int.MaxValue.toLong - 16
 
@@ -141,15 +143,6 @@ object WarcSource {
   final case class ParsedResponse(url: String, date: String, status: Int,
                                   contentType: String, payload: Array[Byte])
 
-  private def indexOfCrlfCrlf(b: Array[Byte], from: Int): Int = {
-    var i = from
-    while (i + 3 < b.length) {
-      if (b(i) == '\r' && b(i + 1) == '\n' && b(i + 2) == '\r' && b(i + 3) == '\n') return i
-      i += 1
-    }
-    -1
-  }
-
   /** The `Name: value` lines after a block's first line (version or status
     * line). Blocks end before their CRLFCRLF, so no line is empty. */
   private def parseHeaders(block: String): Map[String, String] = {
@@ -182,36 +175,81 @@ object WarcSource {
     buf
   }
 
-  /** Bytes up to (excluding) the first CRLFCRLF, or null at a clean EOF on
-    * a record boundary. Reads byte-at-a-time off a buffered stream (the
-    * caller's buffer, or the one over the inflater) — the header block is
-    * tiny and capped. */
-  private def readHeaderBlock(in: InputStream): Array[Byte] = {
-    var c = in.read()
-    if (c < 0) return null
-    val out = new ByteArrayOutputStream(256)
-    var matched = 0 // prefix of \r\n\r\n seen
-    while (matched < 4) {
-      require(c >= 0, "WARC stream truncated inside a record header")
-      require(out.size < maxHeaderBytes, s"WARC header block exceeds $maxHeaderBytes bytes")
-      out.write(c)
-      matched = c match {
-        case '\r' => if (matched == 2) 3 else 1
-        case '\n' => if (matched == 1) 2 else if (matched == 3) 4 else 0
-        case _ => 0
+  /** The framing bytes of one segment, read off `in` (the caller's buffered
+    * stream, or the buffer over the inflater) through one scratch buffer
+    * that every record reuses: header blocks byte at a time (they are tiny),
+    * bodies that are not kept in chunks. */
+  private final class Framing(in: InputStream) {
+    private var buf = new Array[Byte](8 * 1024)
+    /** Bytes the last [[block]] read. */
+    var taken = 0
+
+    /** Reads to the first CRLFCRLF, at most `limit` bytes. Returns the
+      * length of the block before its terminator (its bytes are
+      * [[text]]), -1 if the stream ended first, -2 if `limit` bytes held no
+      * terminator. */
+    def block(limit: Int): Int = {
+      taken = 0
+      var matched = 0 // prefix of \r\n\r\n seen
+      while (matched < 4) {
+        if (taken == limit) return -2
+        val c = in.read()
+        if (c < 0) return -1
+        if (taken == buf.length) buf = java.util.Arrays.copyOf(buf, math.min(limit.toLong, 2L * taken).toInt)
+        buf(taken) = c.toByte
+        taken += 1
+        matched = c match {
+          case '\r' => if (matched == 2) 3 else 1
+          case '\n' => if (matched == 1) 2 else if (matched == 3) 4 else 0
+          case _ => 0
+        }
       }
-      if (matched < 4) c = in.read()
+      taken - 4
     }
-    val b = out.toByteArray
-    java.util.Arrays.copyOf(b, b.length - 4) // strip the CRLFCRLF terminator
+
+    def text(length: Int): String = new String(buf, 0, length, ISO_8859_1)
+
+    /** Reads and drops `n` bytes. The stream is read, not skipped:
+      * `InputStream.skip` may seek past the end of a local file, and a
+      * truncated record would go unnoticed. */
+    def drop(n: Long, what: String): Unit = {
+      var left = n
+      while (left > 0) {
+        val chunk = math.min(left, buf.length.toLong).toInt
+        var off = 0
+        while (off < chunk) {
+          val r = in.read(buf, off, chunk - off)
+          require(r >= 0, s"WARC stream truncated reading $what (${left - off} bytes short)")
+          off += r
+        }
+        left -= chunk
+      }
+    }
+
+    /** The record trailer, which must be CRLFCRLF. */
+    def trailer(): Unit = {
+      drop(4, "record trailer")
+      require(buf(0) == '\r' && buf(1) == '\n' && buf(2) == '\r' && buf(3) == '\n',
+        "WARC record trailer is not CRLFCRLF")
+    }
   }
+
+  /** GZIPInputStream reports a cut member as an EOFException, often with no
+    * message: in the record loop, and in its constructor when the first
+    * member's 10-byte header is cut. */
+  private def truncatedMember(e: EOFException) =
+    new IllegalArgumentException("WARC stream truncated inside a gzip member", e)
 
   /** Stream records off `raw` one at a time (plain or .warc.gz — sniffed;
     * GZIPInputStream walks concatenated members transparently), yielding
-    * the HTTP response records (warcinfo/request records are framing).
-    * Memory is O(one record); malformed framing — bad version line, missing
-    * or non-numeric Content-Length, truncation, a trailer that is not
-    * CRLFCRLF, a malformed HTTP status line — throws a NAMED error,
+    * the HTTP response records (warcinfo/request records are framing, and
+    * their bodies are read past, never held). A response's HTTP head is
+    * read up to its CRLFCRLF, within the record's Content-Length, and the
+    * rest of the block straight into the payload array, so a payload is
+    * read once and copied nowhere. Memory is O(one record); malformed
+    * framing — bad version line, missing or non-numeric Content-Length,
+    * truncation, a trailer that is not CRLFCRLF, an HTTP block with no
+    * header terminator or a malformed status line — throws a NAMED error,
     * contained per-file upstream. Closing the iterator closes `raw` and,
     * on a .warc.gz, ends the inflater's native zlib state at once. */
   def parseStream(raw: InputStream): Iterator[ParsedResponse] with Closeable = {
@@ -223,8 +261,11 @@ object WarcSource {
     // header bytes are read one at a time: buffered, one inflate call serves
     // many of them
     val in: InputStream =
-      if (b0 == 0x1f && b1 == 0x8b) new BufferedInputStream(new GZIPInputStream(pb, 64 * 1024))
+      if (b0 == 0x1f && b1 == 0x8b)
+        try new BufferedInputStream(new GZIPInputStream(pb, 64 * 1024))
+        catch { case e: EOFException => throw truncatedMember(e) }
       else pb
+    val framing = new Framing(in)
 
     new Iterator[ParsedResponse] with Closeable {
       def close(): Unit = in.close()
@@ -234,10 +275,15 @@ object WarcSource {
 
       private def advance(): Unit =
         try while (pending == null && !eof) {
-          val head = readHeaderBlock(in)
-          if (head == null) { eof = true }
+          val headLen = framing.block(maxHeaderBytes)
+          if (headLen == -1 && framing.taken == 0) { eof = true }
           else {
-            val headStr = new String(head, ISO_8859_1)
+            // the stream's end comes first: a full block followed by EOF is
+            // a truncation, not an oversized block
+            require(headLen != -1 && (headLen != -2 || in.read() >= 0),
+              "WARC stream truncated inside a record header")
+            require(headLen != -2, s"WARC header block exceeds $maxHeaderBytes bytes")
+            val headStr = framing.text(headLen)
             require(headStr.startsWith("WARC/"),
               s"not a WARC record (version line reads '${headStr.take(16)}')")
             val headers = parseHeaders(headStr)
@@ -249,16 +295,24 @@ object WarcSource {
             val len = try lenStr.toLong catch { case _: NumberFormatException => Long.MaxValue }
             require(len <= maxRecordBytes,
               s"WARC record of $lenStr bytes exceeds the $maxRecordBytes-byte per-record limit")
-            val body = readFully(in, len.toInt, "record body")
-            val t = readFully(in, 4, "record trailer")
-            require(t(0) == '\r' && t(1) == '\n' && t(2) == '\r' && t(3) == '\n',
-              "WARC record trailer is not CRLFCRLF")
-            if (headers.get("WARC-Type").contains("response"))
-              pending = parseHttpResponse(headers, body)
+            if (headers.get("WARC-Type").contains("response")) {
+              val httpLen = framing.block(len.toInt)
+              require(httpLen != -1,
+                s"WARC stream truncated reading record body (${len - framing.taken} bytes short)")
+              // errors keep the order of a whole-body read: truncation and
+              // the trailer come before the HTTP block's own checks
+              val httpHead = if (httpLen < 0) null else framing.text(httpLen)
+              val payload =
+                if (httpLen < 0) null else readFully(in, len.toInt - framing.taken, "record body")
+              framing.trailer()
+              require(httpHead != null, "HTTP response block has no header terminator")
+              pending = parseHttpResponse(headers, httpHead, payload)
+            } else {
+              framing.drop(len, "record body")
+              framing.trailer()
+            }
           }
-        } catch { // GZIPInputStream reports a cut member as an EOFException, often with no message
-          case e: EOFException => throw new IllegalArgumentException("WARC stream truncated inside a gzip member", e)
-        }
+        } catch { case e: EOFException => throw truncatedMember(e) }
 
       def hasNext: Boolean = { advance(); pending != null }
       def next(): ParsedResponse = {
@@ -268,11 +322,8 @@ object WarcSource {
     }
   }
 
-  private def parseHttpResponse(warcHeaders: Map[String, String],
-                                body: Array[Byte]): ParsedResponse = {
-    val httpHdrEnd = indexOfCrlfCrlf(body, 0)
-    require(httpHdrEnd >= 0, "HTTP response block has no header terminator")
-    val httpHead = new String(body, 0, httpHdrEnd, ISO_8859_1)
+  private def parseHttpResponse(warcHeaders: Map[String, String], httpHead: String,
+                                payload: Array[Byte]): ParsedResponse = {
     val eol = httpHead.indexOf(CRLF)
     val statusLine = if (eol < 0) httpHead else httpHead.substring(0, eol)
     val parts = statusLine.split(" ")
@@ -286,7 +337,7 @@ object WarcSource {
       date = warcHeaders.getOrElse("WARC-Date", ""),
       status = status,
       contentType = httpHeaders.getOrElse("Content-Type", ""),
-      payload = java.util.Arrays.copyOfRange(body, httpHdrEnd + 4, body.length))
+      payload = payload)
   }
 
   /** Whole-buffer convenience over [[parseStream]] (fixtures / tests). */

@@ -1,6 +1,14 @@
 package graft
 
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, FileSourceScanExec, InputAdapter,
+  QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper,
+  ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ObjectType
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSupport.withTempDir
@@ -129,46 +137,77 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  /** The executed plans of the queries a [[ResumableRunner.run]] into `out`
+    * starts, in order. Listener events arrive in order, so once the manifest
+    * write (the run's last query) is seen, every query the run executed has
+    * been seen. */
+  private def runPlans(out: String)(run: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        plans.add(qe.executedPlan)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run
+      val manifestWrite = s"InsertIntoHadoopFsRelationCommand file:$out/manifest"
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!plans.toArray.exists(_.toString.contains(manifestWrite)) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val seen = plans.toArray(Array.empty[SparkPlan]).toSeq
+      assert(seen.exists(_.toString.contains(manifestWrite)), seen.mkString("\n\n"))
+      seen
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private val helper = new AdaptiveSparkPlanHelper {}
+
   test("a fresh run never scans results/: one extraction job plus the manifest write") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import org.apache.spark.sql.execution.datasources.v2.FileScan
     withTempDir("graft_noscan") { outDir =>
       val out = outDir.toString
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                               durationNs: Long): Unit = plans.add(qe.executedPlan)
-        override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                               exception: Exception): Unit = plans.add(qe.executedPlan)
-      }
-      spark.listenerManager.register(listener)
-      try {
+      val seen = runPlans(out) {
         ResumableRunner.run(spark, Corpus.materialize(spark, sfDir), out, "n1", numBuckets = 16)
-        // listener events arrive in order: once the manifest write is seen,
-        // every query the run executed has been seen
-        val manifestWrite = s"InsertIntoHadoopFsRelationCommand file:$out/manifest"
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (!plans.toArray.exists(_.toString.contains(manifestWrite)) && System.nanoTime() < deadline)
-          Thread.sleep(20)
-        val seen = plans.toArray(Array.empty[SparkPlan]).toSeq
-        assert(seen.exists(_.toString.contains(manifestWrite)), seen.mkString("\n\n"))
-        assert(seen.exists(_.toString.contains(s"InsertIntoHadoopFsRelationCommand file:$out/results")))
+      }
+      assert(seen.exists(_.toString.contains(s"InsertIntoHadoopFsRelationCommand file:$out/results")))
+      val scanned: Seq[String] = seen.flatMap { p =>
+        helper.collectWithSubqueries(p) {
+          case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+          case b: BatchScanExec => b.scan match {
+            case f: FileScan => f.fileIndex.rootPaths.map(_.toString)
+            case _ => Nil
+          }
+        }.flatten
+      }
+      val underResults = scanned.filter(_.contains(s"$out/results"))
+      assert(underResults.isEmpty, s"fresh run scanned its own output: ${underResults.take(4)}")
+    }
+  }
 
-        val helper = new AdaptiveSparkPlanHelper {}
-        val scanned: Seq[String] = seen.flatMap { p =>
-          helper.collectWithSubqueries(p) {
-            case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
-            case b: BatchScanExec => b.scan match {
-              case f: FileScan => f.fileIndex.rootPaths.map(_.toString)
-              case _ => Nil
-            }
-          }.flatten
-        }
-        val underResults = scanned.filter(_.contains(s"$out/results"))
-        assert(underResults.isEmpty, s"fresh run scanned its own output: ${underResults.take(4)}")
-      } finally spark.listenerManager.unregister(listener)
+  test("the results write's kernel deserializes rows straight off the shuffle read, with no Project") {
+    withTempDir("graft_noproject") { outDir =>
+      val out = outDir.toString
+      val seen = runPlans(out) {
+        ResumableRunner.run(spark, Corpus.materialize(spark, sfDir), out, "p1", numBuckets = 16)
+      }
+      val write = seen.find(_.toString.contains(s"InsertIntoHadoopFsRelationCommand file:$out/results"))
+      assert(write.nonEmpty, seen.mkString("\n\n"))
+      val kernelInput = helper.collect(write.get) {
+        case d: DeserializeToObjectExec
+            if d.deserializer.dataType == ObjectType(classOf[ResumableRunner.BucketedPage]) => d
+      }
+      assert(kernelInput.size == 1, write.get.toString)
+      // the nodes from the deserializer down to the shuffle read
+      def toShuffleRead(p: SparkPlan): Seq[SparkPlan] = p match {
+        case _: AQEShuffleReadExec | _: ShuffleQueryStageExec | _: ShuffleExchangeExec => Nil
+        case other =>
+          assert(other.children.size == 1, s"no shuffle read under the deserializer: ${write.get}")
+          other +: toShuffleRead(other.children.head)
+      }
+      val between = toShuffleRead(kernelInput.head.child)
+      assert(between.forall(_.isInstanceOf[InputAdapter]),
+        s"between the shuffle read and the deserializer: ${between.map(_.nodeName).mkString(" <- ")}")
     }
   }
 

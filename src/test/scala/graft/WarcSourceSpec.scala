@@ -87,25 +87,82 @@ class WarcSourceSpec extends AnyFunSuite {
     assert(e4.getMessage.contains("trailer is not CRLFCRLF"))
   }
 
+  /** One WARC record of type `kind` over `block` (Content-Length its size),
+    * with its CRLFCRLF trailer. */
+  private def warcRecord(kind: String, block: String): Array[Byte] =
+    (s"WARC/1.1\r\nWARC-Type: $kind\r\nContent-Length: ${block.getBytes(UTF_8).length}\r\n\r\n" +
+      block + "\r\n\r\n").getBytes(UTF_8)
+
+  private def parseError(segment: Array[Byte]): String =
+    intercept[IllegalArgumentException](WarcSource.parse(segment)).getMessage
+
   test("a record claiming more bytes than its segment holds costs what was read (< 4 MiB allocated)") {
-    // a 1.5 GB Content-Length over a ~100-byte body: the buffer must grow
-    // with the bytes that arrive, not be allocated at the claimed size
+    // a 1.5 GB Content-Length over a ~100-byte body: the payload buffer must
+    // grow with the bytes that arrive, not be allocated at the claimed size,
+    // and a warcinfo body is read past, not kept
     val http = "HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\nonly a few bytes"
-    val segment = ("WARC/1.1\r\nWARC-Type: response\r\nContent-Length: 1500000000\r\n\r\n" + http)
-      .getBytes(UTF_8)
     val mx = java.lang.management.ManagementFactory.getThreadMXBean
       .asInstanceOf[com.sun.management.ThreadMXBean]
-    intercept[IllegalArgumentException](WarcSource.parse(segment)) // load classes outside the measurement
-    val before = mx.getCurrentThreadAllocatedBytes
-    val e = intercept[IllegalArgumentException](WarcSource.parse(segment))
-    val allocated = mx.getCurrentThreadAllocatedBytes - before
-    assert(e.getMessage.contains("truncated"), e.getMessage)
-    assert(allocated < (4L << 20), s"allocated $allocated bytes")
+    for ((kind, block) <- Seq("response" -> http, "warcinfo" -> "software: graft\r\n")) {
+      val segment = (s"WARC/1.1\r\nWARC-Type: $kind\r\nContent-Length: 1500000000\r\n\r\n" + block)
+        .getBytes(UTF_8)
+      parseError(segment) // load classes outside the measurement
+      val before = mx.getCurrentThreadAllocatedBytes
+      val message = parseError(segment)
+      val allocated = mx.getCurrentThreadAllocatedBytes - before
+      assert(message == "requirement failed: WARC stream truncated reading record body " +
+        s"(${1500000000L - block.length} bytes short)", kind)
+      assert(allocated < (4L << 20), s"$kind: allocated $allocated bytes")
+    }
     // a record past the first 64 KiB chunk still arrives byte-exact
     val big = Array.tabulate[Byte](300 * 1024)(i => ('a' + i % 26).toByte)
     val parsed = WarcSource.parse(WarcSource.buildBinaryFile(0L, Seq("https://ex.com/big" -> big),
       gzipPerRecord = false))
     assert(parsed.map(_.payload.toSeq) == Seq(big.toSeq))
+  }
+
+  test("an HTTP block is framed by its Content-Length: head, payload and the cuts inside each") {
+    // the block ends in one CRLF, so its CRLF and the trailer's first two
+    // bytes spell a CRLFCRLF: a head search past the Content-Length finds it
+    assert(parseError(warcRecord("response", "HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n")) ==
+      "requirement failed: HTTP response block has no header terminator")
+    val full = warcRecord("response", "HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\npayload bytes")
+    val text = new String(full, UTF_8)
+    // a cut `at` leaves the record body (everything before the 4 trailer bytes) short by the rest
+    def cut(at: Int): String = parseError(full.take(at))
+    def short(at: Int) =
+      s"requirement failed: WARC stream truncated reading record body (${full.length - 4 - at} bytes short)"
+    val inHead = text.indexOf("Content-Type") + 5
+    assert(cut(inHead) == short(inHead))
+    val inPayload = text.indexOf("payload") + 3
+    assert(cut(inPayload) == short(inPayload))
+    assert(cut(full.length - 2) ==
+      "requirement failed: WARC stream truncated reading record trailer (2 bytes short)")
+    assert(WarcSource.parse(full).map(r => new String(r.payload, UTF_8)) == Seq("payload bytes"))
+  }
+
+  test("a .warc.gz cut inside its first gzip member's header is a named truncation on every path") {
+    val gz = WarcSource.buildFile(0L, Seq(1L -> "x"), gzipPerRecord = true)
+    val truncated = "WARC stream truncated inside a gzip member"
+    for (n <- Seq(3, 5)) assert(parseError(gz.take(n)) == truncated, s"cut at $n")
+    withTempDir("graft_warcgzhead") { dir =>
+      val paths = Seq(3, 5).map { n =>
+        val f = new java.io.File(dir, s"cut$n.warc.gz")
+        java.nio.file.Files.write(f.toPath, gz.take(n))
+        f.getAbsolutePath
+      }
+      // contained: one failure row per segment
+      val rows = WarcSource.extractFromWarcFiles(spark, paths).collect()
+      assert(rows.map(r => (r.url, r.success, r.error)).sorted.toSeq ==
+        paths.map(p => (s"warc:$p", false, s"WARC segment unreadable: $truncated")), rows.mkString("\n"))
+      // FAILFAST: the job fails naming the segment
+      for (p <- paths) {
+        val e = intercept[Exception](spark.read.format("warc").load(p).count())
+        def messages(t: Throwable): Seq[String] =
+          Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+        assert(messages(e).contains(s"WARC segment file:$p: $truncated"), messages(e).mkString(" | "))
+      }
+    }
   }
 
   test("parseStream walks records incrementally — one record of memory, not the file") {
