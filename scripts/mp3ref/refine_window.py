@@ -12,8 +12,9 @@ transcription errors; the fixpoint on the grid is the spec window up to
 grid-rounding of the least-squares solution (exactness unverifiable in this
 sandbox - recorded in the fixture manifest).
 
-Writes the refined half-table to refined_window.py for tables.py to import
-(or prints a diff if it matches the current transcription).
+Prints the entries that moved and writes the refined table to
+refined_window.py (an output, not checked in: tables.py's D_REFINED_65536 is
+the pinned table the codecs use).
 """
 import math
 import sys
@@ -25,10 +26,32 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import tables
 import decoder as dec
 import encoder as enc
-import probe
 
 
 DELAY = 481
+
+
+def snr_db(ref, test):
+    es = sum(r * r for r in ref)
+    en = sum((r - t) * (r - t) for r, t in zip(ref, test))
+    if en == 0:
+        return float("inf")
+    return 10.0 * math.log10(es / en)
+
+
+def gen_signal(n, seed=12345):
+    # deterministic multi-tone + LCG noise floor
+    s = []
+    state = seed
+    for i in range(n):
+        state = (state * 1103515245 + 12345) & 0x7FFFFFFF
+        noise = (state / 0x7FFFFFFF - 0.5) * 0.02
+        v = (0.35 * math.sin(2 * math.pi * 441.0 * i / 44100.0)
+             + 0.25 * math.sin(2 * math.pi * 1320.0 * i / 44100.0 + 0.3)
+             + 0.15 * math.sin(2 * math.pi * 5512.5 * i / 44100.0 + 1.1)
+             + noise)
+        s.append(v)
+    return s
 
 
 def analysis_V_sequence(x, c_window):
@@ -79,7 +102,7 @@ def solve_window(x, c_window):
 def pr_snr(d_window):
     dec.SYNTH_D = list(d_window)
     enc.ANA_C = [w / 32.0 for w in d_window]
-    x = probe.gen_signal(4096, seed=999)
+    x = gen_signal(4096, seed=999)
     ana = enc.Analysis()
     v = [0.0] * 1024
     off = 0
@@ -90,11 +113,11 @@ def pr_snr(d_window):
         y.extend(pcm)
     ref = x[:4096 - DELAY]
     tst = y[DELAY:4096]
-    return probe.snr_db(ref, tst)
+    return snr_db(ref, tst)
 
 
 def main():
-    x = probe.gen_signal(12288, seed=4242)
+    x = gen_signal(12288, seed=4242)
     d = list(tables.synth_window())
     print(f"start: PR snr = {pr_snr(d):.1f} dB")
     for it in range(6):

@@ -74,8 +74,4 @@ object PrettyJson {
     val f = udf((r: Row) => render(r))
     f(c)
   }
-
-  /** The reference's whole-document form: the full record LIST serialized
-    * as one string (server._stringify_data("json")). */
-  def renderRecords(rows: Seq[Row]): String = render(rows)
 }

@@ -161,18 +161,6 @@ object DocFunctions {
   def isoTimestamp(ts: Column): Column =
     date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
 
-  // ---- file-info record (base_converter.py:38-59) --------------------------
-
-  /** Per-document file-info struct: the reference's get_file_info dict as
-    * derived columns — identity, size, hash, mime, binariness. */
-  def fileInfo(url: Column, html: Column, warcTs: Column): Column = struct(
-    url.as("name"),
-    length(html).as("size_bytes"),
-    bytesReadable(length(html)).as("size_readable"),
-    isoTimestamp(warcTs).as("modified"),
-    md5(html).as("md5_hash"),
-    mimeGuess(html).as("mime_type"))
-
   // ---- §2.9: SQL registration ----------------------------------------------
 
   /** Register the kernel + probe functions for the SQL surface:

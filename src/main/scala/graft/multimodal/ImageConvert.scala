@@ -459,8 +459,6 @@ object ImageConvert {
     "sharpen" -> ((3, 16, 0, Array(-2, -2, -2, -2, 32, -2, -2, -2, -2))),
     "smooth" -> ((3, 13, 0, Array(1, 1, 1, 1, 5, 1, 1, 1, 1))))
 
-  val convolutionFilters: Set[String] = kernels.keySet
-
   /** Real convolution for the registry filters: per channel,
     * out = clamp((Σ kᵢ·pᵢ) / scale + offset) with truncating integer
     * division (our pinned rounding — Pillow's float path may differ by ±1

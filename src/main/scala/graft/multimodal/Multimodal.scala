@@ -1,7 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 
 import graft.util.Containment
 
@@ -240,14 +239,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Frame sampling plan for video-ish payloads: every `stride`-th frame
-    * index — pure metadata op (the real frame grab is behind the stub). */
-  def sampleFrames(features: DataFrame, stride: Int): DataFrame =
-    features.select(col("doc_id"), col("n_frames"),
-      // guard n_frames <= 0 (e.g. mp4 metadata rows): sequence(0, -1)
-      // would count DOWN and sample a phantom frame
-      when(col("n_frames") <= 0, array().cast("array<int>"))
-        .otherwise(filter(sequence(lit(0), col("n_frames") - 1),
-          i => i % stride === 0)).as("sampled_frames"))
 }

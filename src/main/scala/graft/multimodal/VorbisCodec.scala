@@ -891,18 +891,12 @@ object VorbisCodec {
   }
 
   // --------------------------------------------------------------- decode --
-  /** Ogg Vorbis header metadata (parsed without decoding audio). */
-  final case class VorbisMeta(channels: Int, sampleRate: Int,
-                              bitrateNominal: Int, vendor: String,
-                              comments: Seq[String])
-
   private final class Stream(data: Array[Byte]) {
     val (packets, pageGranules) = oggPackets(data)
     need(packets.length >= 4, "need 3 headers + >=1 audio packet")
     // ident (spec 4.2.2)
     var channels = 0
     var rate = 0
-    var bitrateNominal = 0
     var n0 = 0
     var n1 = 0
     locally {
@@ -915,8 +909,8 @@ object VorbisCodec {
       channels = br.read(8)
       rate = br.readLong(32).toInt
       need(channels > 0 && rate > 0, "bad channels/rate")
+      br.readLong(32) // bitrate maximum, nominal, minimum
       br.readLong(32)
-      bitrateNominal = br.readLong(32).toInt
       br.readLong(32)
       val b0 = br.read(4)
       val b1 = br.read(4)
@@ -929,9 +923,7 @@ object VorbisCodec {
     private def hasMagic(p: Array[Byte]): Boolean =
       p.length >= 7 && p(1) == 'v' && p(2) == 'o' && p(3) == 'r' &&
         p(4) == 'b' && p(5) == 'i' && p(6) == 's'
-    // comment (spec 5)
-    var vendor = ""
-    var comments: Vector[String] = Vector.empty
+    // comment (spec 5): checked for framing, its text is not kept
     locally {
       val p = packets(1)
       val br = packetBits(p)
@@ -940,21 +932,17 @@ object VorbisCodec {
       br.bitPos = 7 * 8
       val vlen = br.readLong(32).toInt
       need(vlen >= 0 && 11 + vlen <= p.length, "comment vendor overruns")
-      vendor = new String(p, 11, vlen, "UTF-8")
       br.bitPos = (11 + vlen) * 8
       val ncom = br.readLong(32).toInt
       need(ncom >= 0, "negative comment count")
-      val b = Vector.newBuilder[String]
       var i = 0
       while (i < ncom) {
         val ln = br.readLong(32).toInt
         val at = br.bitPos / 8
         need(ln >= 0 && at + ln <= p.length, "comment overruns packet")
-        b += new String(p, at, ln, "UTF-8")
         br.bitPos = (at + ln) * 8
         i += 1
       }
-      comments = b.result()
       need(br.bit() == 1, "comment framing bit unset")
     }
     // setup (spec 4.2.4)
@@ -1118,13 +1106,6 @@ object VorbisCodec {
       i += 1
     }
     AudioConvert.AudioBuf(ch, st.rate, 16, pcm)
-  }
-
-  /** Header metadata only (no audio decode). */
-  def parseMeta(data: Array[Byte]): VorbisMeta = {
-    val st = new Stream(data)
-    VorbisMeta(st.channels, st.rate, st.bitrateNominal, st.vendor,
-      st.comments)
   }
 
   private def decodeSpectra(st: Stream, br: LsbReader, mapI: Int,

@@ -1,9 +1,14 @@
 package graft.sources
 
+import java.io.{BufferedInputStream, Closeable, IOException}
+
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.Job
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -38,12 +43,11 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * This is the read path of the resumable WARC job (`perfbench`'s
   * `warc_resume` feeds it to `ResumableRunner`) and of ad-hoc queries over
-  * raw segments. Error semantics are FAILFAST like Spark's file sources:
-  * malformed framing fails the task with the parser's NAMED error,
-  * rethrown with the failing segment's path, so a rotten segment stops the
-  * job. [[WarcSource.extractFromWarcFiles]] is the CONTAINED path instead
-  * (one failure row per rotten segment, the job survives). Both read
-  * segments through [[WarcSource.segmentRecords]].
+  * raw segments, and the only code that opens a segment. Error semantics
+  * are FAILFAST like Spark's file sources: malformed framing fails the task
+  * with the parser's NAMED error, rethrown with the failing segment's path,
+  * so a rotten segment stops the job. No job reads WARC in a containing
+  * way, so there is no `mode` option.
   */
 class WarcDataSource extends FileFormat with DataSourceRegister {
   override def shortName(): String = "warc"
@@ -85,8 +89,7 @@ object WarcDataSource {
     StructField("payload", BinaryType)))
 
   /** The response records of one segment as rows of `columns` (an
-    * unselected payload column is never copied). A failure is rethrown
-    * naming the segment: FAILFAST. */
+    * unselected payload column is never copied). */
   private def readSegment(path: String, conf: Configuration,
                           columns: Array[String]): Iterator[InternalRow] = {
     val fileUtf8 = UTF8String.fromString(path)
@@ -100,11 +103,48 @@ object WarcDataSource {
       case other => throw new IllegalArgumentException(s"unknown warc column $other")
     }
     val row = new GenericInternalRow(getters.length)
-    WarcSource.segmentRecords(path, conf,
-      e => throw new java.io.IOException(s"WARC segment $path: ${e.getMessage}", e)).map { r =>
+    segmentRecords(path, conf).map { r =>
       var i = 0
       while (i < getters.length) { row.update(i, getters(i)(r)); i += 1 }
       row
+    }
+  }
+
+  /** The response records of the segment at `path`, streamed off its Hadoop
+    * FS (HDFS, S3A, file://) over a 64 KiB buffer. The segment closes
+    * exactly once: at exhaustion, at the first failure, or at task end when
+    * the task stops pulling early (limit, kill, a downstream throw), which
+    * would otherwise leak the fd or S3A connection. The first failure,
+    * opening included, is rethrown naming the segment: FAILFAST. */
+  private def segmentRecords(path: String, conf: Configuration): Iterator[WarcSource.ParsedResponse] = {
+    // the open stream, then the records over it (closing them also ends the
+    // inflater); null once closed, so a task's listeners do not keep one
+    // segment's buffers each until the task ends
+    var source: Closeable = null
+    def close(): Unit = if (source != null) {
+      try source.close() catch { case NonFatal(_) => () }
+      source = null
+    }
+    def fail(e: Throwable): Nothing = {
+      close()
+      throw new IOException(s"WARC segment $path: ${e.getMessage}", e)
+    }
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+    val records = try {
+      val hp = new Path(path)
+      val stream = new BufferedInputStream(hp.getFileSystem(conf).open(hp), 64 * 1024)
+      source = stream
+      val parsed = WarcSource.parseStream(stream)
+      source = parsed
+      parsed
+    } catch { case NonFatal(e) => fail(e) }
+    new Iterator[WarcSource.ParsedResponse] {
+      def hasNext: Boolean = source != null && {
+        val more = try records.hasNext catch { case NonFatal(e) => fail(e) }
+        if (!more) close()
+        more
+      }
+      def next(): WarcSource.ParsedResponse = if (hasNext) records.next() else Iterator.empty.next()
     }
   }
 }

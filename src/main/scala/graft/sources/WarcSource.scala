@@ -5,20 +5,6 @@ import java.io.{BufferedInputStream, ByteArrayInputStream, ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
-import scala.util.control.NonFatal
-
-import org.apache.hadoop.fs.Path
-
-import org.apache.spark.TaskContext
-import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.classic.ClassicConversions
-import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
-import org.apache.spark.util.SerializableConfiguration
-
-import graft.model.{ExtractionResult, WebPage}
-
 /** WARC (ISO 28500) source: the container format Common Crawl ships web
   * pages in, and the natural ingest format for the extraction pipeline
   * (reference analog: the repo ingests one uploaded file per request,
@@ -40,15 +26,10 @@ import graft.model.{ExtractionResult, WebPage}
   * and streams records out of it — a segment is never split, because
   * record-gzip members are not independently seekable without an index;
   * smaller segments are packed several to a task by Spark's own small-file
-  * rule. There are two read paths, and both open, close and report a
-  * segment's failure through [[segmentRecords]] over a broadcast Hadoop
-  * conf (a task's closure stays a few KB however large the cluster's conf
-  * is); they differ only in what a failure does:
-  *  - `spark.read.format("warc")` ([[WarcDataSource]]) is FAILFAST: a
-  *    rotten segment fails the job, naming it. The resumable WARC job
-  *    reads this way;
-  *  - [[extractFromWarcFiles]] CONTAINS it: a rotten segment is one
-  *    failure row and the job goes on.
+  * rule. There is one read path, `spark.read.format("warc")`
+  * ([[WarcDataSource]]), which opens and closes each segment over a
+  * broadcast Hadoop conf and is FAILFAST: a rotten segment fails the job,
+  * naming it. The resumable WARC job reads this way.
   * `parseStream` holds only the CURRENT record in memory, never the
   * inflated file: it reads a response's HTTP head, then the rest of the
   * block straight into the payload array (each payload is read once), and
@@ -250,7 +231,8 @@ object WarcSource {
     * framing — bad version line, missing or non-numeric Content-Length,
     * truncation, a trailer that is not CRLFCRLF, an HTTP block with no
     * header terminator or a malformed status line — throws a NAMED error,
-    * contained per-file upstream. Closing the iterator closes `raw` and,
+    * which the `format("warc")` reader rethrows naming the segment.
+    * Closing the iterator closes `raw` and,
     * on a .warc.gz, ends the inflater's native zlib state at once. */
   def parseStream(raw: InputStream): Iterator[ParsedResponse] with Closeable = {
     val pb = new PushbackInputStream(raw, 2)
@@ -340,98 +322,7 @@ object WarcSource {
       payload = payload)
   }
 
-  /** Whole-buffer convenience over [[parseStream]] (fixtures / tests). */
+  /** Whole-buffer convenience over [[parseStream]] (the `src_warc_roundtrip` query, tests). */
   def parse(bytes: Array[Byte]): Seq[ParsedResponse] =
     parseStream(new ByteArrayInputStream(bytes)).toSeq
-
-  /** The response records of the segment at `path`, streamed off its Hadoop
-    * FS (HDFS, S3A, file://) over a 64 KiB buffer. The segment closes
-    * exactly once: at exhaustion, at the first failure, or at task end when
-    * the task stops pulling early (limit, kill, a downstream throw), which
-    * would otherwise leak the fd or S3A connection. The first failure,
-    * opening included, goes to `onFailure` (which may rethrow), and the
-    * records end there. */
-  def segmentRecords(path: String, conf: org.apache.hadoop.conf.Configuration,
-                     onFailure: Throwable => Unit): Iterator[ParsedResponse] = {
-    // the open stream, then the records over it (closing them also ends the
-    // inflater); null once closed, so a task's listeners do not keep one
-    // segment's buffers each until the task ends
-    var source: Closeable = null
-    def close(): Unit = if (source != null) {
-      try source.close() catch { case NonFatal(_) => () }
-      source = null
-    }
-    def fail(e: Throwable): Boolean = { close(); onFailure(e); false }
-    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
-    val records: Iterator[ParsedResponse] = try {
-      val hp = new Path(path)
-      val stream = new BufferedInputStream(hp.getFileSystem(conf).open(hp), 64 * 1024)
-      source = stream
-      val parsed = parseStream(stream)
-      source = parsed
-      parsed
-    } catch { case NonFatal(e) => fail(e); Iterator.empty }
-    new Iterator[ParsedResponse] {
-      def hasNext: Boolean = source != null && {
-        val more = try records.hasNext catch { case NonFatal(e) => fail(e) }
-        if (!more) close()
-        more
-      }
-      def next(): ParsedResponse = if (hasNext) records.next() else Iterator.empty.next()
-    }
-  }
-
-  /** The CONTAINED extraction path: stream-extract every HTTP response
-    * record of every listed .warc(.gz) object, for a crawl in which one
-    * rotten segment must not stop the job (no job in this repo calls it
-    * yet; the resumable WARC job reads the FAILFAST `format("warc")`
-    * scan). Tasks take whole segments, grouped by
-    * Spark's file-scan packing (`FilePartition.maxSplitBytes` and
-    * `getFilePartitions` over the segments, largest first), as the
-    * `format("warc")` scan plans them (a segment is never split, because
-    * per-record gzip members are not independently seekable), with no
-    * shuffle, and stream their segments one after another with O(one
-    * record) heap: each object is consumed as a Hadoop FS stream through
-    * [[parseStream]], NEVER materialized as one byte array, so multi-GB
-    * segments cost one record's worth of memory. A malformed segment —
-    * unreadable path, framing error, truncated gzip member, bad HTTP block
-    * — is CONTAINED as one failure row naming the file: one rotten object
-    * in a 100k-segment crawl must not kill the job. The driver's Hadoop
-    * conf (fs.* credentials etc.) reaches the tasks as one broadcast, as in
-    * Spark's own file scans: each executor fetches and deserializes it
-    * once, instead of every task closure carrying ~100 KB of conf. */
-  def extractFromWarcFiles(spark: SparkSession, paths: Seq[String]): Dataset[ExtractionResult] = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    // a path that cannot be listed plans as empty; its task names the error
-    val segments = paths.map { p =>
-      val hp = new Path(p)
-      val len = try hp.getFileSystem(sc.hadoopConfiguration).getFileStatus(hp).getLen
-                catch { case NonFatal(_) => 0L }
-      PartitionedFile(InternalRow.empty, SparkPath.fromPath(hp), 0L, len)
-    }.sortBy(f => (-f.length, f.filePath.toString))
-    val openCost = ClassicConversions.castToImpl(spark).sessionState.conf.filesOpenCostInBytes
-    val groups = FilePartition.getFilePartitions(spark, segments,
-      FilePartition.maxSplitBytes(spark, segments.map(_.length + openCost).sum))
-      .map(_.files.map(_.toPath.toString).toSeq)
-    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
-    spark.createDataset(sc.parallelize(groups, math.max(groups.size, 1)).mapPartitions { group =>
-      val pid = TaskContext.getPartitionId()
-      // per-FILE containment: a segment's first failure (opening, framing,
-      // truncation) is one row after its records; per-RECORD payload errors
-      // are failure rows of Extractor.extractOne already. `++` takes the row
-      // by name, so it is built once the records are exhausted.
-      group.flatMap(_.iterator.flatMap { p =>
-        var failure: Throwable = null
-        segmentRecords(p, conf.value.value, e => failure = e).map { r =>
-          graft.extract.Extractor.extractOne(
-            WebPage(r.url, new java.sql.Timestamp(0L), r.payload, "", ""), pid)
-        } ++ Option(failure).map { e =>
-          ExtractionResult(url = s"warc:$p", success = false, text = "", format_from = "warc",
-            original_size = 0L, new_size = 0L,
-            error = s"WARC segment unreadable: ${e.getMessage}", partition_id = pid)
-        }
-      })
-    })
-  }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.model.WebPage
@@ -17,10 +16,7 @@ import graft.pipeline.ExtractionPipeline
   *    files = new documents; an Iceberg/Kafka source drops in unchanged);
   *  - exactly-once: the checkpoint dir tracks processed files — the
   *    streaming analog of the batch partition manifest;
-  *  - the kernel is stateless per document, so no state store is involved in
-  *    extraction itself; windowed ingest metrics use a watermark so state is
-  *    bounded (late pages beyond 1 hour are dropped from the rollup, not
-  *    from extraction).
+  *  - the kernel is stateless per document, so no state store is involved.
   */
 object StreamingExtraction {
 
@@ -40,14 +36,5 @@ object StreamingExtraction {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .start()
-  }
-
-  /** Watermarked ingest metrics: docs/bytes per (1h event-time window, lang)
-    * — bounded state, append output past the watermark. */
-  def windowedIngestMetrics(pages: Dataset[WebPage]): Dataset[org.apache.spark.sql.Row] = {
-    pages.toDF()
-      .withWatermark("warc_ts", "1 hour")
-      .groupBy(window(col("warc_ts"), "1 hour"), col("lang"))
-      .agg(count(lit(1)).as("docs"), sum(length(col("html"))).as("bytes"))
   }
 }

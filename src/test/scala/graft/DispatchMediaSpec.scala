@@ -790,16 +790,6 @@ class DispatchMediaSpec extends AnyFunSuite {
     assert(e.getMessage.contains("too short"), s"moovAt=$moovAt: ${e.getMessage}")
   }
 
-  test("sampleFrames yields an empty plan for zero-frame (mp4 metadata) rows") {
-    val spark = SparkTestSession.spark
-    import spark.implicits._
-    val feats = Seq((1L, 0), (2L, 5)).toDF("doc_id", "n_frames")
-    val out = graft.multimodal.Multimodal.sampleFrames(feats, stride = 2)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](2)).toMap
-    assert(out(1L).isEmpty, out(1L))
-    assert(out(2L) == Seq(0, 2, 4), out(2L))
-  }
-
   test("wav parse: channels, rate, bits, floor-division duration") {
     val bytes = MediaFixtures.wav(channels = 2, sampleRate = 22050, frames = 777, seed = 3)
     val m = MediaCodecs.parseWav(bytes)

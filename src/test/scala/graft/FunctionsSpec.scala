@@ -50,17 +50,16 @@ class FunctionsSpec extends AnyFunSuite {
     assert(!DocFunctions.isBinaryBytes(cut))
   }
 
-  test("mimeGuess + fileInfo struct") {
+  test("mimeGuess + isoTimestamp columns") {
     val rows = Seq(
       ("u1", "%PDF-1.4 x".getBytes(StandardCharsets.ISO_8859_1)),
       ("u2", "<html><body>x</body></html>".getBytes(StandardCharsets.UTF_8)),
       ("u3", Array[Byte](1, 2, 3)))
       .toDF("url", "html").withColumn("warc_ts", lit("2024-01-01 00:00:00").cast("timestamp"))
-    val out = rows.select(DocFunctions.fileInfo(col("url"), col("html"), col("warc_ts")).as("fi"))
-      .select(col("fi.name"), col("fi.mime_type"), col("fi.size_bytes"), col("fi.modified"))
-      .as[(String, String, Long, String)].collect().toSeq
-    assert(out.map(_._2) == Seq("application/pdf", "text/html", "application/octet-stream"))
-    assert(out.head._4 == "2024-01-01T00:00:00.000000")
+    val out = rows.select(DocFunctions.mimeGuess(col("html")), DocFunctions.isoTimestamp(col("warc_ts")))
+      .as[(String, String)].collect().toSeq
+    assert(out.map(_._1) == Seq("application/pdf", "text/html", "application/octet-stream"))
+    assert(out.head._2 == "2024-01-01T00:00:00.000000")
   }
 
   test("SQL surface: registered kernels work end-to-end from spark.sql") {

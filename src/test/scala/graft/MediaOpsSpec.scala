@@ -5,77 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.MediaOps
 
-/** K5/K6 conversion semantics over metadata (geometry, durations, params). */
+/** K6 conversion semantics over audio metadata (durations, tags). */
 class MediaOpsSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  private def img(w: Int, h: Int, mode: String = "RGBA") =
-    Seq((1L, w, h, mode)).toDF("id", "width", "height", "mode")
-
-  test("resize applies only when both dims given; crop uses reference defaults") {
-    val r1 = MediaOps.resize(img(100, 50), Some(30), Some(40))
-      .select("width", "height").as[(Int, Int)].head()
-    assert(r1 == ((30, 40)))
-    val r2 = MediaOps.resize(img(100, 50), Some(30), None)
-      .select("width", "height").as[(Int, Int)].head()
-    assert(r2 == ((100, 50)))
-    val c = MediaOps.crop(img(100, 50), left = 10, top = 5)
-      .select("width", "height").as[(Int, Int)].head()
-    assert(c == ((90, 45))) // right/bottom default to full frame
-  }
-
-  test("rotate expand: right angles swap dims exactly; flip keeps them") {
-    val r90 = MediaOps.rotate(img(100, 50), 90)
-      .select("width", "height").as[(Int, Int)].head()
-    assert(r90 == ((50, 100)))
-    val r180 = MediaOps.rotate(img(100, 50), 180)
-      .select("width", "height").as[(Int, Int)].head()
-    assert(r180 == ((100, 50)))
-    val f = MediaOps.flip(img(100, 50), "horizontal")
-      .select("width", "height").as[(Int, Int)].head()
-    assert(f == ((100, 50)))
-    intercept[IllegalArgumentException](MediaOps.flip(img(1, 1), "diagonal"))
-  }
-
-  test("jpeg output forces RGB for RGBA/P; grayscale is mode L; result has WxH string") {
-    val m = MediaOps.forOutputFormat(img(10, 10, "RGBA"), ".jpg")
-      .select("mode").as[String].head()
-    assert(m == "RGB")
-    val g = MediaOps.grayscale(img(10, 10)).select("mode").as[String].head()
-    assert(g == "L")
-    val res = MediaOps.imageResult(
-        MediaOps.rotate(img(100, 50), 90), "id", ".png")
-      .select("dimensions").as[String].head()
-    assert(res == "50x100")
-  }
-
-  test("quality gate: default 95, range 1-100 enforced") {
-    assert(MediaOps.quality(None) == 95)
-    assert(MediaOps.quality(Some(80)) == 80)
-    intercept[IllegalArgumentException](MediaOps.quality(Some(0)))
-    intercept[IllegalArgumentException](MediaOps.quality(Some(101)))
-  }
-
-  test("filters: convolution keeps mode/dims, grayscale -> L, invert keeps RGBA, unknown fails") {
-    val base = Seq((1L, 100, 50, "RGBA")).toDF("id", "width", "height", "mode")
-    for (f <- MediaOps.convolutionFilters) {
-      val r = MediaOps.applyFilter(base, f)
-        .select("success", "mode", "width", "height", "filter", "message")
-        .as[(Boolean, String, Int, Int, String, String)].head()
-      assert(r == ((true, "RGBA", 100, 50, f, s"Applied $f filter")))
-    }
-    val g = MediaOps.applyFilter(base, "grayscale")
-      .select("success", "mode").as[(Boolean, String)].head()
-    assert(g == ((true, "L")))
-    val inv = MediaOps.applyFilter(base, "invert")
-      .select("success", "mode").as[(Boolean, String)].head()
-    assert(inv == ((true, "RGBA"))) // alpha preserved, mode unchanged
-    val bad = MediaOps.applyFilter(base, "posterize")
-      .select("success", "error", "message").as[(Boolean, String, String)].head()
-    assert(bad == ((false, "Unknown filter: posterize", "Filter 'posterize' not found")))
-  }
 
   test("audio tag metadata normalizes per container, missing tags default empty") {
     val rows = Seq(
@@ -117,20 +51,14 @@ class MediaOpsSpec extends AnyFunSuite {
       meta(1L)("genre") == "" && meta(1L)("sample_rate") == "44100")
   }
 
-  test("audio: slice clamps, speedup divides, merge fold sums durations") {
+  test("audio: speedup divides, merge fold sums durations") {
     val a = Seq((1L, 90000L, 2, 44100), (1L, 30000L, 2, 44100), (2L, 10000L, 1, 22050))
       .toDF("id", "duration_ms", "channels", "frame_rate")
-    val sliced = MediaOps.slice(a.filter(col("duration_ms") === 90000), 10.0, Some(200.0))
-      .select("duration_ms").as[Long].head()
-    assert(sliced == 80000L) // end clamped to len
     val sped = MediaOps.speedup(a.filter(col("duration_ms") === 90000), 1.5)
       .select("duration_ms").as[Long].head()
     assert(sped == 60000L)
     val merged = MediaOps.mergeDurations(a, "id")
       .orderBy("id").as[(Long, Int, Double)].collect().toSeq
     assert(merged == Seq((1L, 2, 120.0), (2L, 1, 10.0)))
-    val res = MediaOps.audioResult(a.limit(1), "id", ".mp3")
-      .select("duration", "channels").as[(Double, Int)].head()
-    assert(res == ((90.0, 2)))
   }
 }

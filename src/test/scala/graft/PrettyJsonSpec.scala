@@ -29,7 +29,7 @@ class PrettyJsonSpec extends AnyFunSuite {
       "\"active\": true\n  },\n  {\n    \"firstName\": \"Alan\",\n    " +
       "\"lastName\": \"Turing\",\n    \"email\": \"alan@example.com\",\n    " +
       "\"createdAt\": \"1936-06-01\",\n    \"active\": false\n  }\n]"
-    assert(PrettyJson.renderRecords(recs) == want)
+    assert(PrettyJson.render(recs) == want)
   }
 
   test("nesting, ensure_ascii escapes, ints, arrays, null, empties") {

@@ -150,13 +150,4 @@ class StreamingSpec extends AnyFunSuite {
     assert(step("d", Iterator(KeyedDoc(11, "d")), back).toSeq
       .map(_.doc_id) == Seq(11L))
   }
-
-  test("windowed ingest metrics aggregate by event-time window and lang") {
-    val pages = Corpus.materialize(spark, "/root/testdata/sf0.001")
-    // batch execution of the same streaming aggregation plan
-    val m = StreamingExtraction.windowedIngestMetrics(pages)
-      .agg(sum("docs"), sum("bytes")).head()
-    assert(m.getLong(0) == 500)
-    assert(m.getLong(1) > 0)
-  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.multimodal.{AudioConvert, VorbisCodec}
+import graft.multimodal.{AudioConvert, MediaCodecs, VorbisCodec}
 
 /** Pins [[VorbisCodec]] bit-exactly to the committed reference decodes.
   *
@@ -77,11 +77,12 @@ class VorbisCodecSpec extends AnyFunSuite {
   }
 
   test("header metadata parses without audio decode") {
-    val meta = VorbisCodec.parseMeta(resource("v_longcomment"))
+    // the comment packet spans Ogg pages: 200 entries of LYRICS%03d=la*190
+    val meta = MediaCodecs.parseOggVorbis(resource("v_longcomment"))
     assert(meta.channels == 1 && meta.sampleRate == 8000)
-    assert(meta.vendor == "graft vorbisref")
-    assert(meta.comments.size == 200)
-    assert(meta.comments.head.startsWith("LYRICS000="))
+    assert(meta.tags.size == 200)
+    assert(meta.tags.keySet == (0 until 200).map(i => f"lyrics$i%03d").toSet)
+    assert(meta.tags.values.forall(_ == "la" * 190))
   }
 
   test("floor type 0 and malformed streams are named errors") {

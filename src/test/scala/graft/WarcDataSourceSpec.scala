@@ -1,15 +1,21 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.functions.{lit, to_timestamp}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSupport.withTempDir
+import graft.fixtures.Corpus
+import graft.model.WebPage
+import graft.pipeline.ResumableRunner
 import graft.sources.{WarcDataSource, WarcSource}
 
 /** The WARC file format: spark.read.format("warc") over segment objects —
   * schema, size-balanced packing of whole segments into partitions, column
   * pruning, glob resolution, `_metadata` pruning and scan metrics, FAILFAST
-  * on malformed framing. */
+  * on malformed framing, and the resumable job reading its rows. */
 class WarcDataSourceSpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
@@ -196,6 +202,49 @@ class WarcDataSourceSpec extends AnyFunSuite {
       assert(scan.metrics("numFiles").value == 2, scan.metrics)
       assert(scan.metrics("filesSize").value == kept.map(_.length).sum, scan.metrics)
       assert(scan.metrics("numOutputRows").value == 10, scan.metrics)
+    }
+  }
+
+  test("format(\"warc\") segments feed the resumable job: text byte-identical per url, exact RunSummary") {
+    withTempDir("graft_warc_resume") { dir =>
+      // two periods of the corpus format wheel: html (a third gzip-wrapped),
+      // docx, pdf and the other binary kernels, with golden text per url
+      val words = Vector("alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf", "hotel")
+      val ids = 0L until 48L
+      val pages = ids.map { id =>
+        val text = (0 until 20 + (id % 11).toInt).map(k => words(((id + 3 * k) % words.length).toInt))
+          .mkString(" ")
+        Corpus.buildPage(Corpus.Doc(id, text, "en", s"src${id % 3}", text.length.toLong), skewHost = false)
+      }
+      val kinds = ids.zip(pages).map { case (id, p) =>
+        if (p.html(0) == 0x1f.toByte && p.html(1) == 0x8b.toByte) "html_gz" else Corpus.formatOf(id)
+      }
+      assert(Set("html", "html_gz", "docx", "pdf").subsetOf(kinds.toSet), kinds)
+      // four segments of twelve records, odd ones gzip'd per record
+      val segDir = new java.io.File(dir, "warc")
+      assert(segDir.mkdir())
+      pages.grouped(12).zipWithIndex.foreach { case (seg, f) =>
+        val gz = f % 2 == 1
+        java.nio.file.Files.write(new java.io.File(segDir, s"seg$f.warc" + (if (gz) ".gz" else "")).toPath,
+          WarcSource.buildBinaryFile(f, seg.map(p => (p.url, p.html)), gzipPerRecord = gz))
+      }
+      val warcPages = spark.read.format("warc").load(segDir.getAbsolutePath)
+        .select($"url", to_timestamp($"date").as("warc_ts"), $"payload".as("html"),
+          lit("").as("text"), lit("").as("lang"))
+        .as[WebPage]
+      val out = new java.io.File(dir, "run").getAbsolutePath
+      assert(ResumableRunner.run(spark, warcPages, out, "w1", numBuckets = 4) ==
+        ResumableRunner.RunSummary("w1", 4, 4, 48, 0, 48))
+      val results = spark.read.parquet(s"$out/results").select("url", "success", "format_from", "text")
+        .as[(String, Boolean, String, String)].collect()
+      assert(results.map(_._1).sorted.toSeq == pages.map(_.url).sorted)
+      val golden = pages.map(p => p.url -> p.text).toMap
+      for ((url, ok, format, text) <- results)
+        assert(ok && java.util.Arrays.equals(text.getBytes(UTF_8), golden(url).getBytes(UTF_8)),
+          s"$url ($format): '$text'")
+      // a rerun over the same segments finds every bucket done
+      assert(ResumableRunner.run(spark, warcPages, out, "w2", numBuckets = 4) ==
+        ResumableRunner.RunSummary("w2", 4, 0, 0, 0, 48))
     }
   }
 }

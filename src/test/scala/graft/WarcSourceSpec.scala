@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSupport.withTempDir
 import graft.sources.WarcSource
 
-/** WARC writer/parser contract: framing, per-record gzip, containment. */
+/** WARC writer/parser contract: framing, per-record gzip, and the
+  * `format("warc")` reader closing every segment it opens. */
 class WarcSourceSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -146,21 +147,12 @@ class WarcSourceSpec extends AnyFunSuite {
     val truncated = "WARC stream truncated inside a gzip member"
     for (n <- Seq(3, 5)) assert(parseError(gz.take(n)) == truncated, s"cut at $n")
     withTempDir("graft_warcgzhead") { dir =>
-      val paths = Seq(3, 5).map { n =>
-        val f = new java.io.File(dir, s"cut$n.warc.gz")
-        java.nio.file.Files.write(f.toPath, gz.take(n))
-        f.getAbsolutePath
-      }
-      // contained: one failure row per segment
-      val rows = WarcSource.extractFromWarcFiles(spark, paths).collect()
-      assert(rows.map(r => (r.url, r.success, r.error)).sorted.toSeq ==
-        paths.map(p => (s"warc:$p", false, s"WARC segment unreadable: $truncated")), rows.mkString("\n"))
-      // FAILFAST: the job fails naming the segment
-      for (p <- paths) {
-        val e = intercept[Exception](spark.read.format("warc").load(p).count())
-        def messages(t: Throwable): Seq[String] =
-          Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-        assert(messages(e).contains(s"WARC segment file:$p: $truncated"), messages(e).mkString(" | "))
+      for (n <- Seq(3, 5)) {
+        val p = new java.io.File(dir, s"cut$n.warc.gz").getAbsolutePath
+        java.nio.file.Files.write(java.nio.file.Paths.get(p), gz.take(n))
+        // FAILFAST: the job fails naming the segment
+        val messages = failFastMessages(p)
+        assert(messages.contains(s"WARC segment file:$p: $truncated"), messages)
       }
     }
   }
@@ -182,61 +174,27 @@ class WarcSourceSpec extends AnyFunSuite {
     assert(it.toSeq.length === 199)
   }
 
-  test("extractFromWarcFiles streams segments; a rotten file is ONE failure row, not a dead job") {
-    withTempDir("graft_warcfiles") { dir =>
-      val paras = Vector("alpha bravo charlie delta echo", "foxtrot golf hotel india juliet")
-      val pages = (0 until 20).map { i =>
-        (s"https://ex.com/d$i", graft.serialize.DocxWriter.generate(paras, 0))
-      }
-      val good = new java.io.File(dir, "seg1.warc.gz")
-      java.nio.file.Files.write(good.toPath,
-        WarcSource.buildBinaryFile(1, pages, gzipPerRecord = true))
-      // same content, last gzip member truncated mid-trailer: records BEFORE
-      // the cut must still extract, then exactly one contained failure row
-      val full = WarcSource.buildBinaryFile(2, pages, gzipPerRecord = true)
-      val bad = new java.io.File(dir, "seg2.warc.gz")
-      java.nio.file.Files.write(bad.toPath, full.take(full.length - 7))
-      val out = WarcSource.extractFromWarcFiles(
-        spark, Seq(good, bad).map(_.getAbsolutePath)).collect()
-      val (ok, failed) = out.partition(_.success)
-      assert(ok.length >= 20, s"good-segment records missing: ${ok.length}")
-      assert(ok.forall(r => r.format_from == "docx" && r.text == paras.mkString("\n")),
-        ok.map(r => (r.format_from, r.text)).take(2).mkString)
-      assert(failed.length === 1, failed.mkString("\n"))
-      assert(failed.head.url.endsWith("seg2.warc.gz") && failed.head.format_from == "warc" &&
-        failed.head.error == "WARC segment unreadable: WARC stream truncated inside a gzip member",
-        failed.head.toString)
-    }
+  private val fds = java.nio.file.Paths.get("/proc/self/fd")
+
+  /** Descriptors this JVM holds on files under `dir`. */
+  private def openFilesIn(dir: java.io.File): Int = {
+    val root = dir.getCanonicalFile.toPath
+    val links = java.nio.file.Files.list(fds)
+    try links.toArray.count { l =>
+      scala.util.Try(java.nio.file.Files.readSymbolicLink(l.asInstanceOf[java.nio.file.Path]))
+        .toOption.exists(_.startsWith(root))
+    } finally links.close()
   }
 
-  test("extractFromWarcFiles takes its tasks from the segment plan, with no shuffle") {
-    withTempDir("graft_warcplan") { dir =>
-      val paths = (10L until 18L).map { f =>
-        val file = new java.io.File(dir, s"seg$f.warc")
-        val pages = (0L until 5L).map(j => (f * 10 + j, s"page ${f * 10 + j}"))
-        java.nio.file.Files.write(file.toPath, WarcSource.buildFile(f, pages, gzipPerRecord = false))
-        file.getAbsolutePath
-      }
-      val ds = WarcSource.extractFromWarcFiles(spark, paths)
-      // 8 equal small segments at 4 cores: 4 tasks of 2, as format("warc") plans them
-      assert(ds.rdd.getNumPartitions == 4)
-      assert(spark.read.format("warc").load(paths: _*).rdd.getNumPartitions == 4)
-      assert(!ds.queryExecution.executedPlan.toString.contains("Exchange"),
-        ds.queryExecution.executedPlan.toString)
-      val out = ds.collect()
-      assert(out.length == 40 && out.forall(_.success))
-      assert(out.map(_.url).toSet == (10L until 18L).flatMap(f => (0L until 5L).map(j => WarcSource.targetUri(f * 10 + j))).toSet)
-      assert(out.map(_.partition_id).distinct.length == 4)
-      // a path that cannot even be listed still plans, and is one failure row
-      val missing = new java.io.File(dir, "missing.warc").getAbsolutePath
-      val failed = WarcSource.extractFromWarcFiles(spark, Seq(missing)).collect()
-      assert(failed.length == 1 && !failed.head.success && failed.head.url == s"warc:$missing" &&
-        failed.head.error == s"WARC segment unreadable: File $missing does not exist", failed.mkString("\n"))
-    }
+  /** The messages down the cause chain of the failure of a `format("warc")`
+    * scan of `path`. */
+  private def failFastMessages(path: String): Seq[String] = {
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    messages(intercept[Exception](spark.read.format("warc").load(path).count()))
   }
 
-  test("a task that stops early closes every segment it opened, on both read paths") {
-    val fds = java.nio.file.Paths.get("/proc/self/fd")
+  test("a task that stops early closes every segment it opened") {
     assume(java.nio.file.Files.isDirectory(fds), "counts open files through /proc/self/fd")
     withTempDir("graft_warcclose") { dir =>
       val paths = (0L until 4L).map { f =>
@@ -245,19 +203,27 @@ class WarcSourceSpec extends AnyFunSuite {
         java.nio.file.Files.write(file.toPath, WarcSource.buildFile(f, pages, gzipPerRecord = true))
         file.getAbsolutePath
       }
-      val root = dir.getCanonicalFile.toPath
-      // descriptors this JVM holds on files under the temp dir
-      def openFilesInDir(): Int = {
-        val links = java.nio.file.Files.list(fds)
-        try links.toArray.count { l =>
-          scala.util.Try(java.nio.file.Files.readSymbolicLink(l.asInstanceOf[java.nio.file.Path]))
-            .toOption.exists(_.startsWith(root))
-        } finally links.close()
-      }
       assert(spark.read.format("warc").load(paths: _*).limit(1).collect().length == 1)
-      assert(openFilesInDir() == 0)
-      assert(WarcSource.extractFromWarcFiles(spark, paths).limit(1).collect().length == 1)
-      assert(openFilesInDir() == 0)
+      assert(openFilesIn(dir) == 0)
+    }
+  }
+
+  test("a segment cut mid-record fails the job naming it, and is closed") {
+    assume(java.nio.file.Files.isDirectory(fds), "counts open files through /proc/self/fd")
+    withTempDir("graft_warcfailclose") { dir =>
+      val pages = (0L until 6L).map(i => i -> s"page $i of a segment that is cut short")
+      for (gz <- Seq(false, true)) {
+        val full = WarcSource.buildFile(7L, pages, gzipPerRecord = gz)
+        // cut mid-record, after the first records parse
+        val cut = full.take(full.length / 2)
+        val p = new java.io.File(dir, "cut.warc" + (if (gz) ".gz" else "")).getAbsolutePath
+        java.nio.file.Files.write(java.nio.file.Paths.get(p), cut)
+        val parserMessage = parseError(cut)
+        assert(parserMessage.contains("truncated"), parserMessage)
+        val messages = failFastMessages(p)
+        assert(messages.contains(s"WARC segment file:$p: $parserMessage"), messages)
+        assert(openFilesIn(dir) == 0, s"gzip=$gz")
+      }
     }
   }
 
