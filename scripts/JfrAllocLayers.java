@@ -46,6 +46,9 @@ public final class JfrAllocLayers {
       "org.apache.spark.broadcast.TorrentBroadcast",
       "org.apache.spark.executor.Executor$TaskRunner.obtainSession"},
     {"codegen", "org.apache.spark.sql.catalyst.expressions.codegen.", "org.codehaus.janino."},
+    // parquet-mr's page compressor, wherever the page is flushed: at a
+    // writer's close, or mid-write when a page fills
+    {"page compression", "org.apache.parquet.hadoop.CodecFactory$HeapBytesCompressor.compress"},
     {"write open/close",
       "org.apache.spark.sql.execution.datasources.parquet.ParquetOutputWriter.<init>",
       "org.apache.spark.sql.execution.datasources.parquet.ParquetOutputWriter.close"},

@@ -1,10 +1,18 @@
 package graft.pipeline
 
+import java.io.IOException
 import java.security.MessageDigest
+import java.util.UUID
 
 import scala.collection.mutable
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.AccumulatorV2
@@ -21,17 +29,21 @@ import graft.util.NioLocalFileSystem
   *   outDir/results/ partitioned by bucket (dynamic partition overwrite, so
   *     a re-run of a bucket is idempotent — rewrite-safe per SURVEY §7.3.4);
   *   outDir/manifest/ one row per completed bucket.
-  * Resume = left-anti join of input buckets against the manifest: only
-  * unfinished buckets are re-read, re-extracted, re-written.
+  * Resume = left-anti join of the input's buckets against the manifest:
+  * every input row is still scanned and bucketed, and the join drops the
+  * rows of finished buckets after the scan, so only unfinished buckets are
+  * shuffled, re-extracted and re-written.
   *
   * Scale properties: no driver-side per-document state — the only driver
   * materialization is the manifest, O(numBuckets). All filesystem access
   * goes through the Hadoop FileSystem API (works on HDFS/S3A, not just
-  * file://). A run is one extraction job plus an O(numBuckets) manifest
-  * write; it never reads `results/` back, so a fresh run costs no O(docs)
-  * re-scan and a resumed one never touches finished buckets' output. Both
-  * writes carry [[NioLocalFileSystem.writeOptions]], so a `file:` output
-  * starts no `chmod` process per file.
+  * file://). A run is one Spark job that extracts and writes `results/`;
+  * the driver then writes the O(numBuckets) manifest rows itself with
+  * parquet-mr, with no Spark job. A run never reads `results/` back, so a
+  * fresh run costs no O(docs) re-scan and a resumed one never touches
+  * finished buckets' output. Both writes carry
+  * [[NioLocalFileSystem.writeOptions]], so a `file:` output starts no
+  * `chmod` process per file.
   *
   * Exactly-once counts: the per-bucket docs and failures come from a
   * [[BucketCounts]] accumulator fed by the kernel inside the write job.
@@ -118,22 +130,87 @@ object ResumableRunner {
 
   private val manifestSchema = Encoders.product[ManifestEntry].schema
 
+  /** The parquet schema Spark writes for [[ManifestEntry]]. */
+  private val manifestParquetSchema = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary run_id (STRING);
+      |  required int32 partition_id;
+      |  optional binary status (STRING);
+      |  required int64 docs;
+      |}""".stripMargin)
+
   /** Parquet's page size for both writes: 64 KiB, not the 1 MiB default.
     * parquet-mr sizes each file's compressor output buffer up front at the
     * page size, so at 1 MiB every bucket file (about a hundred rows on a
     * small run) allocated 1 MiB, a humongous object under G1's 1 MiB
     * regions. Snappy compresses in 64 KiB blocks, so the smaller pages
-    * compress as well. Per write, like [[NioLocalFileSystem.writeOptions]],
-    * never a session conf. */
-  private val smallPages = Map("parquet.page.size" -> (64 * 1024).toString)
+    * compress as well. */
+  private val pageSize = 64 * 1024
+
+  /** Parquet settings of the results write, per write like
+    * [[NioLocalFileSystem.writeOptions]], never a session conf: small pages,
+    * and no dictionary pages. `url` and `text` are unique per row, so a
+    * dictionary only costs one more compressed page per column chunk and a
+    * copy of every value into it. */
+  private val resultsParquet = Map(
+    "parquet.page.size" -> pageSize.toString,
+    "parquet.enable.dictionary" -> "false")
+
+  /** A parquet file Spark's reader reads: it skips names that start with `_`
+    * or `.`, so a leftover `_tmp-` file or a `.crc` is no manifest. */
+  private def visibleParquet(p: Path): Boolean = {
+    val n = p.getName
+    n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  /** Replace the manifest under `dir` with `rows`, written by the driver with
+    * no Spark job, in the layout a Spark overwrite leaves: one
+    * `part-00000-<uuid>-c000.snappy.parquet`, `_SUCCESS`, and their `.crc`
+    * files on a checksummed filesystem. The rows go in full to a hidden
+    * `_tmp-<uuid>.parquet` first; then every other entry of `dir` is
+    * deleted, the temp file renamed into place, and `_SUCCESS` created. A
+    * crash before the rename leaves no visible manifest, so the next run
+    * redoes every bucket, as after a crash inside Spark's overwrite (which
+    * deletes the dir first); renaming before the delete could leave two
+    * part files, and the prior rows would be counted twice. */
+  private def writeManifest(conf: Configuration, dir: Path, rows: Seq[ManifestEntry]): Unit = {
+    val uuid = UUID.randomUUID()
+    val tmp = new Path(dir, s"_tmp-$uuid.parquet")
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(manifestParquetSchema).withPageSize(pageSize)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try {
+      val groups = new SimpleGroupFactory(manifestParquetSchema)
+      rows.foreach { e =>
+        val g = groups.newGroup()
+        if (e.run_id != null) g.append("run_id", e.run_id)
+        g.append("partition_id", e.partition_id)
+        g.append("status", e.status)
+        g.append("docs", e.docs)
+        writer.write(g)
+      }
+    } finally writer.close()
+
+    val fs = dir.getFileSystem(conf)
+    try {
+      fs.listStatus(dir).map(_.getPath).filter(_.getName != tmp.getName)
+        .foreach(fs.delete(_, true))
+      val part = new Path(dir, s"part-00000-$uuid-c000.snappy.parquet")
+      if (!fs.rename(tmp, part)) throw new IOException(s"could not rename $tmp to $part")
+      fs.create(new Path(dir, "_SUCCESS"), true).close()
+    } finally {
+      // an uncached instance is this write's own; the cached one is shared
+      if (conf.getBoolean(s"fs.${fs.getUri.getScheme}.impl.disable.cache", false)) fs.close()
+    }
+  }
 
   def run(spark: SparkSession, pages: Dataset[WebPage], outDir: String,
           runId: String, numBuckets: Int): RunSummary =
     run(spark, pages, outDir, runId, numBuckets, NioLocalFileSystem.writeOptions)
 
   /** [[run]] with the results and manifest writes given `writeOptions` (the
-    * tests compare [[NioLocalFileSystem.writeOptions]] with none) on top of
-    * the runner's page size. */
+    * tests compare [[NioLocalFileSystem.writeOptions]] with none); the
+    * results write also gets [[resultsParquet]]. */
   private[graft] def run(spark: SparkSession, pages: Dataset[WebPage], outDir: String,
                          runId: String, numBuckets: Int,
                          writeOptions: Map[String, String]): RunSummary = {
@@ -151,7 +228,7 @@ object ResumableRunner {
     val manifestPath = new Path(manifestDir)
     val prior: Array[ManifestEntry] =
       if (fs.exists(manifestPath) &&
-          fs.listStatus(manifestPath).exists(_.getPath.getName.endsWith(".parquet"))) {
+          fs.listStatus(manifestPath).exists(s => visibleParquet(s.getPath))) {
         spark.read.schema(manifestSchema).parquet(manifestDir)
           .filter(col("status") === "done").as[ManifestEntry].collect()
       } else Array.empty[ManifestEntry]
@@ -183,16 +260,16 @@ object ResumableRunner {
     // per-WRITE dynamic overwrite (only the buckets this run produced are
     // replaced) — scoped to this writer, not a session-wide conf mutation
     // that would silently change overwrite semantics for caller code
-    results.write.mode(SaveMode.Overwrite).options(writeOptions ++ smallPages)
+    results.write.mode(SaveMode.Overwrite).options(writeOptions ++ resultsParquet)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("partition_id").parquet(resultsDir)
 
     val fresh: Seq[(Int, (Long, Long))] = counts.value.toSeq.sortBy(_._1)
     val manifest: Seq[ManifestEntry] =
       prior.toSeq ++ fresh.map { case (b, (docs, _)) => ManifestEntry(runId, b, "done", docs) }
-    // O(numBuckets) rows: one task, one file
-    manifest.toDS().coalesce(1).write.mode(SaveMode.Overwrite).options(writeOptions ++ smallPages)
-      .parquet(manifestDir)
+    val writeConf = new Configuration(hconf)
+    writeOptions.foreach { case (k, v) => writeConf.set(k, v) }
+    writeManifest(writeConf, manifestPath, manifest)
 
     RunSummary(runId, numBuckets,
       bucketsRun = fresh.size,

@@ -16,8 +16,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * The engine installs it per write, never per session: [[writeOptions]] go
   * on a `DataFrameWriter`, which puts them in that write's Hadoop conf on
-  * the driver (job setup and commit) and in every write task. `hdfs:` and
-  * `s3a:` outputs ignore them. */
+  * the driver (job setup and commit) and in every write task, or into the
+  * copied Hadoop conf of a write the driver makes itself (the resumable
+  * run's manifest). `hdfs:` and `s3a:` outputs ignore them. */
 class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw)
 
 object NioLocalFileSystem {

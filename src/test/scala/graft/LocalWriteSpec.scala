@@ -10,18 +10,22 @@ import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
 import org.apache.hadoop.io.nativeio.NativeIO
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSupport.withTempDir
-import graft.model.WebPage
+import graft.extract.Extractor
+import graft.model.{ExtractionResult, WebPage}
 import graft.pipeline.ResumableRunner
 import graft.util.NioLocalFileSystem
 
 /** The runner's parquet writes go through [[NioLocalFileSystem]]: they start
   * no process, and they leave the same files, permissions and rows as
-  * Hadoop's stock local filesystem. */
+  * Hadoop's stock local filesystem. The results files carry no dictionary
+  * pages. */
 class LocalWriteSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -130,6 +134,36 @@ class LocalWriteSpec extends AnyFunSuite {
           assert(rows(nio).sameElements(rows(stock)), s"$sub/ rows differ")
         }
       }
+    }
+  }
+
+  test("results part files carry no dictionary pages, and their rows read back unchanged") {
+    withTempDir("graft_nodict") { outDir =>
+      val out = outDir.toString
+      ResumableRunner.run(spark, pages, out, "d", numBuckets)
+
+      val conf = spark.sparkContext.hadoopConfiguration
+      val walk = Files.walk(Path.of(out, "results"))
+      val files = try walk.iterator.asScala.filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith(".")
+      }.toSeq finally walk.close()
+      assert(files.size == numBuckets, files.mkString(", "))
+      for (f <- files) {
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+        val chunks = try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq
+          finally reader.close()
+        assert(chunks.nonEmpty)
+        val withDict = chunks.filter(_.hasDictionaryPage).map(_.getPath.toDotString)
+        assert(withDict.isEmpty, s"$f: dictionary pages in ${withDict.mkString(", ")}")
+      }
+
+      import spark.implicits._
+      val expected = pages.collect().map(p =>
+        Extractor.extractOne(p, ResumableRunner.bucketOf(p.url, numBuckets))).sortBy(_.url).toSeq
+      val got = spark.read.parquet(s"$out/results").as[ExtractionResult].collect().sortBy(_.url).toSeq
+      assert(got == expected)
     }
   }
 }

@@ -46,10 +46,16 @@ class PipelineSpec extends AnyFunSuite {
   test("crash-resume: truncated manifest reprocesses only missing buckets, output complete") {
     withTempDir("graft_crash") { outDir =>
       val out = outDir.toString
+      val manifestDir = new java.io.File(s"$out/manifest")
       val pages = Corpus.materialize(spark, sfDir)
       ResumableRunner.run(spark, pages, out, "t2", numBuckets = 16)
       val full = spark.read.parquet(s"$out/results")
         .select("url", "text", "success").orderBy("url").collect()
+      // the full manifest (all 16 buckets), for a crashed driver write below
+      val fullPart = manifestDir.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+      assert(fullPart.size == 1, manifestDir.list().mkString(", "))
+      val leftover = Seq(fullPart.head.toPath, new java.io.File(manifestDir,
+        s".${fullPart.head.getName}.crc").toPath).map(java.nio.file.Files.readAllBytes)
 
       // simulate a crash: keep only manifest rows for buckets < 8
       val kept = spark.read.parquet(s"$out/manifest").filter(col("partition_id") < 8)
@@ -57,12 +63,29 @@ class PipelineSpec extends AnyFunSuite {
       val keptDf = spark.createDataFrame(
         spark.sparkContext.parallelize(kept.toSeq), spark.read.parquet(s"$out/manifest").schema)
       keptDf.write.mode("overwrite").parquet(s"$out/manifest")
+      // and a driver write that died before its rename: a hidden temp file
+      // holding every bucket, which the next run must not read
+      val tmp = s"_tmp-${java.util.UUID.randomUUID()}.parquet"
+      java.nio.file.Files.write(new java.io.File(manifestDir, tmp).toPath, leftover(0))
+      java.nio.file.Files.write(new java.io.File(manifestDir, s".$tmp.crc").toPath, leftover(1))
 
       val s = ResumableRunner.run(spark, pages, out, "t2r", numBuckets = 16)
       assert(s.bucketsRun == 8, s"expected 8 reprocessed buckets, got $s")
       val resumed = spark.read.parquet(s"$out/results")
         .select("url", "text", "success").orderBy("url").collect()
       assert(resumed.sameElements(full), "resumed output differs from uninterrupted run")
+
+      // the manifest was replaced whole: one part file, _SUCCESS and their
+      // checksums, and one row per bucket
+      val names = manifestDir.list().toSeq.sorted
+      val part = names.filter(_.endsWith(".parquet"))
+      assert(part.size == 1 && part.head.matches("part-00000-[0-9a-f-]{36}-c000\\.snappy\\.parquet"),
+        names.mkString(", "))
+      assert(names == Seq(s".${part.head}.crc", "._SUCCESS.crc", part.head, "_SUCCESS").sorted,
+        names.mkString(", "))
+      val perBucket = spark.read.parquet(s"$out/manifest").groupBy("partition_id").count()
+        .as[(Int, Long)].collect().toMap
+      assert(perBucket == (0 until 16).map(_ -> 1L).toMap, s"$perBucket")
     }
   }
 
@@ -138,9 +161,9 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   /** The executed plans of the queries a [[ResumableRunner.run]] into `out`
-    * starts, in order. Listener events arrive in order, so once the manifest
-    * write (the run's last query) is seen, every query the run executed has
-    * been seen. */
+    * starts, in order; the results write must be among them. Listener events
+    * arrive in order, so once a query started after the run returns is seen,
+    * every query the run executed has been seen; that query is left out. */
   private def runPlans(out: String)(run: => Unit): Seq[SparkPlan] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
@@ -152,25 +175,31 @@ class PipelineSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       run
-      val manifestWrite = s"InsertIntoHadoopFsRelationCommand file:$out/manifest"
+      val fence = s"graft_fence_${System.nanoTime()}"
+      spark.range(1).select(col("id").as(fence)).collect()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!plans.toArray.exists(_.toString.contains(manifestWrite)) && System.nanoTime() < deadline)
+      while (!plans.toArray.exists(_.toString.contains(fence)) && System.nanoTime() < deadline)
         Thread.sleep(20)
       val seen = plans.toArray(Array.empty[SparkPlan]).toSeq
-      assert(seen.exists(_.toString.contains(manifestWrite)), seen.mkString("\n\n"))
-      seen
+      assert(seen.exists(_.toString.contains(fence)), seen.mkString("\n\n"))
+      val runs = seen.filterNot(_.toString.contains(fence))
+      assert(runs.exists(_.toString.contains(s"InsertIntoHadoopFsRelationCommand file:$out/results")),
+        runs.mkString("\n\n"))
+      runs
     } finally spark.listenerManager.unregister(listener)
   }
 
   private val helper = new AdaptiveSparkPlanHelper {}
 
-  test("a fresh run never scans results/: one extraction job plus the manifest write") {
+  test("a fresh run never scans results/ and starts no manifest job: one extraction job") {
     withTempDir("graft_noscan") { outDir =>
       val out = outDir.toString
       val seen = runPlans(out) {
         ResumableRunner.run(spark, Corpus.materialize(spark, sfDir), out, "n1", numBuckets = 16)
       }
-      assert(seen.exists(_.toString.contains(s"InsertIntoHadoopFsRelationCommand file:$out/results")))
+      val manifestWrites =
+        seen.filter(_.toString.contains(s"InsertIntoHadoopFsRelationCommand file:$out/manifest"))
+      assert(manifestWrites.isEmpty, s"a query wrote the manifest: ${manifestWrites.mkString("\n\n")}")
       val scanned: Seq[String] = seen.flatMap { p =>
         helper.collectWithSubqueries(p) {
           case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
